@@ -23,9 +23,8 @@ import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
   *
   * All filesystem probes go through the Hadoop FileSystem of the path, so
   * the same code runs on file:, hdfs:, or s3a: URIs — on an object store
-  * without atomic directory rename, swap the commit step back to a
-  * dynamic-partition overwrite (both former copies of this logic carried
-  * that caveat; now it lives in one place).
+  * without atomic directory rename, swap the commit step for a
+  * dynamic-partition overwrite.
   */
 private[streaming] object BucketCommit {
 

@@ -26,9 +26,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Replay discipline — the additive merge is NOT idempotent (re-adding a
   * delta double-counts), so exactly-once is enforced structurally:
-  *   1. W commits FIRST as a versioned `W/batch=<id>` snapshot computed
-  *      from the still-untouched pre-batch A/B (group-cardinality —
-  *      tiny, full rewrite is the cheap and atomic choice);
+  *   1. W commits FIRST as a [[SnapshotCommit]] version under `W/`,
+  *      computed from the still-untouched pre-batch A/B (group-
+  *      cardinality — tiny, full rewrite is the cheap and atomic choice);
   *   2. each staged A/B bucket carries an `_applied-<batchId>` marker
   *      file that travels with the atomic directory rename;
   *   3. a replayed batch (same batchId, same data — the Structured
@@ -52,14 +52,12 @@ object BucketedJoinView {
       batchId: Long, path: String, nBuckets: Int = 64): Unit = {
     val spark = factEv.sparkSession
     val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    pinGeometry(fs, path, nBuckets)
+    BucketCommit.pinGeometry(fs, path, nBuckets)
     BucketCommit.recover(fs, s"$path/A")
     BucketCommit.recover(fs, s"$path/B")
-    val wIds = committedW(fs, path)
-    require(wIds.isEmpty || batchId >= wIds.last,
-      s"batchId $batchId is behind committed W snapshot ${wIds.last} at " +
-        s"$path — resume with the original checkpoint or a new path")
-    val wCommitted = wIds.contains(batchId)
+    val wRoot = s"$path/W"
+    val wPrevId = SnapshotCommit.predecessor(spark, wRoot, batchId)
+    val wCommitted = SnapshotCommit.isCommitted(spark, wRoot, batchId)
 
     // each delta feeds the touched-bucket probe, two bilinear terms and
     // its state merge — persist so dedup + groupBy run once per batch
@@ -119,22 +117,19 @@ object BucketedJoinView {
       if (!wCommitted) {
         // W from the PRE-batch states (all markers < batchId here — a
         // crash can only have happened before any bucket advanced,
-        // because W commits first). term/merge are IncrementalJoinView's
-        // own — the algebra is shared, only the state layout differs.
-        val dW = term(dA, bPrev.select(col("k"), col("seg"),
+        // because W commits first)
+        val dW = SignedDelta.term(dA, bPrev.select(col("k"), col("seg"),
             col("m").as("d_m")))
-          .unionByName(term(aPrev.select(col("k"), col("cents").as("d_cents"),
-            col("rows").as("d_rows")), dB))
-          .unionByName(term(dA, dB))
+          .unionByName(SignedDelta.term(aPrev.select(col("k"),
+            col("cents").as("d_cents"), col("rows").as("d_rows")), dB))
+          .unionByName(SignedDelta.term(dA, dB))
           .groupBy("seg")
           .agg(sum("c").as("d_cents"), sum("r").as("d_rows"))
-        val wPrev = readW(spark, fs, path, before = batchId)
-        val wNew = merge(wPrev, dW, Seq("seg"),
+        val wPrev = wPrevId.map(SnapshotCommit.read(spark, wRoot, _, wSchema))
+        val wNew = SignedDelta.merge(wPrev, dW, Seq("seg"),
           Seq("revenue_cents" -> "d_cents", "n_orders" -> "d_rows"))
           .filter(col("revenue_cents") =!= 0L || col("n_orders") =!= 0L)
-        wNew.write.mode(SaveMode.Overwrite)
-          .parquet(s"$path/W/batch=$batchId")
-        pruneW(fs, path, keep = 2)
+        SnapshotCommit.write(wNew, wRoot, batchId)
       }
 
       // publishes: rename-only swaps of the already-staged buckets whose
@@ -183,7 +178,7 @@ object BucketedJoinView {
     // recompute the bucket from the key (the hash is stable) rather than
     // thread it through the outer merge's null-padding; one staged file
     // per bucket (hash-colocate THEN partitionBy — the Sinks layout)
-    val out = merge(Some(inApply(prevAll).drop("_bucket")),
+    val out = SignedDelta.merge(Some(inApply(prevAll).drop("_bucket")),
         inApply(delta).drop("_bucket"), keys, cols)
       .filter(live)
       .withColumn("_bucket", BucketCommit.bucketOf(col(keys.head), nBuckets))
@@ -194,28 +189,15 @@ object BucketedJoinView {
     Some((toApply, stage))
   }
 
-  // -- helpers ---------------------------------------------------------
-
-  // the bilinear term and the additive merge are IncrementalJoinView's
-  // (private[streaming]) — one definition of the algebra for both layouts
-  private def term(a: DataFrame, b: DataFrame) = IncrementalJoinView.term(a, b)
-  private def merge(prev: Option[DataFrame], delta: DataFrame,
-      keys: Seq[String], cols: Seq[(String, String)]): DataFrame =
-    IncrementalJoinView.merge(prev, delta, keys, cols)
-
-  // geometry pinning is the shared BucketCommit.pinGeometry — one
-  // definition for every hash-bucketed store (this one and the upsert sink)
-  private def pinGeometry(fs: FileSystem, path: String, nBuckets: Int): Unit =
-    BucketCommit.pinGeometry(fs, path, nBuckets)
-
-  /** OFFLINE geometry migration — the real form of [[pinGeometry]]'s
-    * "rebuild under the new geometry": rebuild the quiescent store at
-    * `src` under `newNBuckets` buckets at `dst`. `nBuckets` sizes
-    * per-batch I/O, and as state grows the original choice goes stale
-    * exactly like an under-sharded search index or an under-partitioned
-    * topic (the reference resizes both the same way —
-    * values-prod.yaml:22-28, prod-resources.yaml:94); the cure is the
-    * same too: reshard offline, then point the consumer at the new path.
+  /** OFFLINE geometry migration — the real form of
+    * [[BucketCommit.pinGeometry]]'s "rebuild under the new geometry":
+    * rebuild the quiescent store at `src` under `newNBuckets` buckets at
+    * `dst`. `nBuckets` sizes per-batch I/O, and as state grows the
+    * original choice goes stale exactly like an under-sharded search
+    * index or an under-partitioned topic (the reference resizes both the
+    * same way — values-prod.yaml:22-28, prod-resources.yaml:94); the
+    * cure is the same too: reshard offline, then point the consumer at
+    * the new path.
     *
     * Safety gates — a reshard must not launder a half-applied batch into
     * "committed":
@@ -253,7 +235,8 @@ object BucketedJoinView {
           s"(${Option(g).toSeq.flatten.map(_.getPath.getName).mkString(", ")}) " +
           "— resume its stream once to heal it, then rebucket")
     }
-    val wIds = committedW(fs, src)
+    val wSrc = s"$src/W"
+    val wIds = SnapshotCommit.committed(spark, wSrc)
     // each side feeds the consistency aggregate AND the reshard rewrite —
     // persist so the whole-store read happens once per side, not twice
     val (a, b) = readStates(spark, src) match {
@@ -266,7 +249,7 @@ object BucketedJoinView {
       .filter(col("revenue_cents") =!= 0L || col("n_orders") =!= 0L)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     val w = wIds.lastOption.map(id =>
-      spark.read.schema(wSchema).parquet(s"$src/W/batch=$id")
+      SnapshotCommit.read(spark, wSrc, id, wSchema)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
         .toSet).getOrElse(Set.empty)
     require(w == agg,
@@ -293,9 +276,8 @@ object BucketedJoinView {
     // W snapshots keep their batch ids — the migrated store resumes from
     // the same checkpoint frontier as the original
     wIds.foreach { id =>
-      spark.read.schema(wSchema).parquet(s"$src/W/batch=$id")
-        .write.mode(SaveMode.Overwrite)
-        .parquet(new Path(tmp, s"W/batch=$id").toString)
+      SnapshotCommit.write(SnapshotCommit.read(spark, wSrc, id, wSchema),
+        new Path(tmp, "W").toString, id)
     }
     BucketCommit.pinGeometry(fs, tmp.toString, newNBuckets)
     val parent = dstPath.getParent
@@ -329,26 +311,6 @@ object BucketedJoinView {
     StructField("revenue_cents", LongType),
     StructField("n_orders", LongType)))
 
-  private def readW(spark: SparkSession, fs: FileSystem, path: String,
-      before: Long): Option[DataFrame] =
-    committedW(fs, path).filter(_ < before).lastOption.map(id =>
-      spark.read.schema(wSchema).parquet(s"$path/W/batch=$id"))
-
-  private def committedW(fs: FileSystem, path: String): Seq[Long] = {
-    val root = new Path(s"$path/W")
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch=") &&
-        fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong).sorted
-  }
-
-  private def pruneW(fs: FileSystem, path: String, keep: Int): Unit = {
-    val ids = committedW(fs, path)
-    ids.dropRight(keep).foreach(id =>
-      fs.delete(new Path(s"$path/W/batch=$id"), true))
-  }
-
   /** Last batchId applied to a bucket (−1 when the bucket is absent). */
   private def appliedId(fs: FileSystem, bucketDir: Path): Long =
     if (!fs.exists(bucketDir)) -1L
@@ -379,11 +341,8 @@ object BucketedJoinView {
   }
 
   /** The current view (highest committed W snapshot), if any. */
-  def readView(spark: SparkSession, path: String): Option[DataFrame] = {
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    committedW(fs, path).lastOption.map(id =>
-      spark.read.schema(wSchema).parquet(s"$path/W/batch=$id"))
-  }
+  def readView(spark: SparkSession, path: String): Option[DataFrame] =
+    SnapshotCommit.readLatest(spark, s"$path/W", wSchema)
 
   /** Current A/B states (all buckets) — for the spec's invariant check. */
   def readStates(spark: SparkSession, path: String): (DataFrame, DataFrame) = {

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType, StringType}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Incremental maintenance of a TWO-TABLE equi-join view — the
   * reference's declared "enriched data" path (reference README.md:77:
@@ -28,9 +27,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * back once by ΔA ⋈ ΔB — signed multiplicities cancel to exactly one
   * removal.
   *
-  * State per commit — ONE versioned `batch=<id>` snapshot holding all
-  * three tables as a part-partitioned parquet write under a single
-  * `_SUCCESS` marker, so A, B and W commit atomically together (same
+  * State per commit — ONE [[SnapshotCommit]] version holding all three
+  * tables as a part-partitioned parquet write under a single commit
+  * marker, so A, B and W commit atomically together (same
   * replay/overwrite discipline as [[IncrementalView]]):
   *   - `A`: custkey → (signed cents sum, signed row count) — key-
   *     cardinality partial aggregate of the fact side;
@@ -39,11 +38,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *   - `W`: seg → (revenue_cents, n_orders) — the group-cardinality
   *     view itself.
   * A batch reads state ∝ |keys| and shuffles only delta-sized and
-  * key-cardinality frames on custkey; nothing is ever row²-sized. At
-  * 100 TB the A/B snapshot REWRITE per batch is the piece to swap out:
-  * compose with [[Sinks.upsertByKey]]'s hash-bucket layout so a batch
-  * rewrites only its dirty buckets — the merge algebra is unchanged,
-  * only the storage layout of A and B.
+  * key-cardinality frames on custkey; nothing is ever row²-sized. It
+  * does REWRITE the whole A/B snapshot every batch; [[BucketedJoinView]]
+  * keeps A and B in [[Sinks.upsertByKey]]'s hash-bucket layout instead,
+  * so a batch rewrites only its dirty buckets — same merge algebra,
+  * different storage layout.
   *
   * Measures are exact integers (price cents as long, signed counts), so
   * merge order can never perturb the result: the maintained view is
@@ -52,85 +51,40 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object IncrementalJoinView {
 
-  private def cents(row: org.apache.spark.sql.Column) =
-    (row.getField("o_totalprice").cast(DecimalType(12, 2)) * 100)
-      .cast(LongType)
-
   /** The narrow deduped fact-side event projection — exposed (like
     * [[IncrementalView.eventsOf]]) so a caller replaying several
     * op-sliced batches out of one parsed changelog computes the
     * projection + dedup ONCE and slices it per batch; `op` is in the
     * dedup key, so global dedup equals per-slice dedup. */
   def factEvents(parsed: DataFrame): DataFrame =
-    dedup(parsed, before = Seq(
-      col("env.before.o_custkey").as("b_k"), cents(col("env.before")).as("b_c")),
-      after = Seq(
-        col("env.after.o_custkey").as("a_k"), cents(col("env.after")).as("a_c")))
+    SignedDelta.events(parsed, "o_orderkey")(r => Seq(
+      "k" -> r.getField("o_custkey"), "c" -> SignedDelta.cents(r)))
 
   /** The deduped dimension-side event projection (same sharing contract
     * as [[factEvents]]). */
   def dimEvents(parsed: DataFrame): DataFrame =
-    dedup(parsed, before = Seq(
-      col("env.before.c_custkey").as("b_k"),
-      col("env.before.c_mktsegment").as("b_s")),
-      after = Seq(
-        col("env.after.c_custkey").as("a_k"),
-        col("env.after.c_mktsegment").as("a_s")))
+    SignedDelta.events(parsed, "c_custkey")(r => Seq(
+      "k" -> r.getField("c_custkey"), "s" -> r.getField("c_mktsegment")))
 
-  /** Signed per-custkey fact deltas `(k, d_cents, d_rows)` of one parsed
-    * orders micro-batch (replay-deduped like [[IncrementalView.eventsOf]];
-    * a status-only update nets to zero here and is dropped — the join
-    * view keys on custkey, so it genuinely contributes nothing). */
-  def factDelta(parsed: DataFrame): DataFrame =
-    factDeltaOfEvents(factEvents(parsed))
+  /** Signed per-custkey fact deltas `(k, d_cents, d_rows)` over a
+    * [[factEvents]] projection (a status-only update nets to zero here
+    * and is dropped — the join view keys on custkey, so it genuinely
+    * contributes nothing). */
+  def factDeltaOfEvents(ev: DataFrame): DataFrame =
+    SignedDelta.fold(ev, _("k").isNotNull, "k")(s => Seq(
+      s("k").as("k"), s.signed("c").as("d_cents"), s.unit.as("d_rows")))
 
-  /** [[factDelta]] over a pre-deduped [[factEvents]] projection. */
-  def factDeltaOfEvents(ev: DataFrame): DataFrame = {
-    val minus = ev.filter(col("op").isin("u", "d") && col("b_k").isNotNull)
-      .select(col("b_k").as("k"), (-col("b_c")).as("d_cents"),
-        lit(-1L).as("d_rows"))
-    val plus = ev.filter(col("op").isin("c", "r", "u") && col("a_k").isNotNull)
-      .select(col("a_k").as("k"), col("a_c").as("d_cents"),
-        lit(1L).as("d_rows"))
-    plus.unionByName(minus).groupBy("k")
-      .agg(sum("d_cents").as("d_cents"), sum("d_rows").as("d_rows"))
-      .filter(col("d_cents") =!= 0L || col("d_rows") =!= 0L)
-  }
-
-  /** Signed dimension deltas `(k, seg, d_m)` of one parsed customer
-    * micro-batch: an update contributes −(old seg) +(new seg), moving
+  /** Signed dimension deltas `(k, seg, d_m)` over a [[dimEvents]]
+    * projection: an update contributes −(old seg) +(new seg), moving
     * every joined fact row's measures across groups. */
-  def dimDelta(parsed: DataFrame): DataFrame =
-    dimDeltaOfEvents(dimEvents(parsed))
-
-  /** [[dimDelta]] over a pre-deduped [[dimEvents]] projection. */
-  def dimDeltaOfEvents(ev: DataFrame): DataFrame = {
-    val minus = ev.filter(col("op").isin("u", "d") && col("b_k").isNotNull)
-      .select(col("b_k").as("k"), col("b_s").as("seg"), lit(-1L).as("d_m"))
-    val plus = ev.filter(col("op").isin("c", "r", "u") && col("a_k").isNotNull)
-      .select(col("a_k").as("k"), col("a_s").as("seg"), lit(1L).as("d_m"))
-    plus.unionByName(minus).groupBy("k", "seg")
-      .agg(sum("d_m").as("d_m")).filter(col("d_m") =!= 0L)
-  }
-
-  /** Narrow projection + batch-local at-least-once dedup, shared by both
-    * delta builders — the same (key, position, op) identity
-    * [[IncrementalView.eventsOf]] documents. */
-  private def dedup(parsed: DataFrame,
-      before: Seq[org.apache.spark.sql.Column],
-      after: Seq[org.apache.spark.sql.Column]): DataFrame =
-    parsed
-      .filter(!col("_corrupt") && !col("_tombstone"))
-      .select(col("env.op").as("op") +: (before ++ after) :+
-        col("env.source.lsn").as("lsn") :+ col("env.source.file").as("file") :+
-        col("env.source.pos").as("pos") :+ col("env.source.ts_ms").as("ts"): _*)
-      .dropDuplicates("op", "lsn", "file", "pos", "ts", "b_k", "a_k")
+  def dimDeltaOfEvents(ev: DataFrame): DataFrame =
+    SignedDelta.fold(ev, _("k").isNotNull, "k", "seg")(s => Seq(
+      s("k").as("k"), s("s").as("seg"), s.unit.as("d_m")))
 
   /** Apply one micro-batch of both changelogs: previous committed
-    * (A, B, W) ⊎ deltas → snapshot `batch=<batchId>`. Replay-safe: a
-    * re-run of an already-committed batchId recomputes the identical
-    * snapshot from the same predecessor (deterministic overwrite, never
-    * a double-apply). */
+    * (A, B, W) ⊎ deltas → version `batchId`. Replay-safe: a re-run of an
+    * already-committed batchId recomputes the identical snapshot from the
+    * same predecessor (deterministic overwrite, never a double-apply). */
   def applyBatch(parsedOrders: DataFrame, parsedCustomers: DataFrame,
       batchId: Long, path: String): Unit =
     applyBatchEvents(factEvents(parsedOrders), dimEvents(parsedCustomers),
@@ -142,14 +96,10 @@ object IncrementalJoinView {
   def applyBatchEvents(factEv: DataFrame, dimEv: DataFrame,
       batchId: Long, path: String): Unit = {
     val spark = factEv.sparkSession
-    val snaps = committed(spark, path)
-    require(snaps.isEmpty || batchId >= snaps.last._1,
-      s"batchId $batchId is behind committed snapshot ${snaps.last._1} " +
-        s"at $path — resume with the original checkpoint or a new path")
-    val prev = snaps.filter(_._1 < batchId).lastOption
-    val aPrev = prev.map(p => read(spark, p._2, "A", aSchema))
-    val bPrev = prev.map(p => read(spark, p._2, "B", bSchema))
-    val wPrev = prev.map(p => read(spark, p._2, "W", wSchema))
+    val prev = SnapshotCommit.predecessor(spark, path, batchId)
+    val aPrev = prev.map(part(spark, path, _, "A", aCols))
+    val bPrev = prev.map(part(spark, path, _, "B", bCols))
+    val wPrev = prev.map(part(spark, path, _, "W", wCols))
     // each delta feeds THREE consumers inside the one commit action (two
     // bilinear terms + its state merge); persist so the dedup + groupBy
     // pipeline behind it runs once per batch, not once per consumer
@@ -166,91 +116,60 @@ object IncrementalJoinView {
     val bAsDelta = bPrev.map(_.select(col("k"), col("seg"),
       col("m").as("d_m")))
     val terms = Seq(
-      bAsDelta.map(b => term(dA, b)),            // ΔA ⋈ B
-      aAsDelta.map(a => term(a, dB)),            // A ⋈ ΔB
-      Some(term(dA, dB))                         // ΔA ⋈ ΔB
+      bAsDelta.map(b => SignedDelta.term(dA, b)),  // ΔA ⋈ B
+      aAsDelta.map(a => SignedDelta.term(a, dB)),  // A ⋈ ΔB
+      Some(SignedDelta.term(dA, dB))               // ΔA ⋈ ΔB
     ).flatten
     val dW = terms.reduce(_ unionByName _)
       .groupBy("seg")
       .agg(sum("c").as("d_cents"), sum("r").as("d_rows"))
 
-    val aNew = merge(aPrev, dA.select(col("k"), col("d_cents"), col("d_rows")),
-      Seq("k"), Seq("cents" -> "d_cents", "rows" -> "d_rows"))
+    val aNew = SignedDelta.merge(aPrev, dA, Seq("k"),
+      Seq("cents" -> "d_cents", "rows" -> "d_rows"))
       .filter(col("cents") =!= 0L || col("rows") =!= 0L)
-    val bNew = merge(bPrev, dB.select(col("k"), col("seg"), col("d_m")),
-      Seq("k", "seg"), Seq("m" -> "d_m"))
+    val bNew = SignedDelta.merge(bPrev, dB, Seq("k", "seg"), Seq("m" -> "d_m"))
       .filter(col("m") =!= 0L)
-    val wNew = merge(wPrev, dW,
-      Seq("seg"), Seq("revenue_cents" -> "d_cents", "n_orders" -> "d_rows"))
+    val wNew = SignedDelta.merge(wPrev, dW, Seq("seg"),
+      Seq("revenue_cents" -> "d_cents", "n_orders" -> "d_rows"))
       .filter(col("revenue_cents") =!= 0L || col("n_orders") =!= 0L)
 
     // ONE partitioned write commits A, B and W together under a single
-    // `_SUCCESS` — the three states are one atomic version (a 3-marker
-    // protocol would admit a torn snapshot with A committed and W not),
-    // and one job replaces three (the write itself is shuffle-free:
-    // partitionBy fans rows into part=A/B/W subdirs per task). Schemas
-    // are harmonized into (part, k, seg, v1, v2); `read` projects back.
-    val dir = s"$path/batch=$batchId"
+    // commit marker — the three states are one atomic version (a
+    // 3-marker protocol would admit a torn snapshot with A committed and
+    // W not), and one job replaces three (the write itself is
+    // shuffle-free: partitionBy fans rows into part=A/B/W subdirs per
+    // task). Schemas are harmonized into (part, k, seg, v1, v2); `part`
+    // projects back.
     val nulS = lit(null).cast(StringType)
     val nulL = lit(null).cast(LongType)
-    aNew.select(lit("A").as("part"), col("k"), nulS.as("seg"),
+    SnapshotCommit.write(
+      aNew.select(lit("A").as("part"), col("k"), nulS.as("seg"),
         col("cents").as("v1"), col("rows").as("v2"))
       .unionByName(bNew.select(lit("B").as("part"), col("k"), col("seg"),
         col("m").as("v1"), nulL.as("v2")))
       .unionByName(wNew.select(lit("W").as("part"), nulL.as("k"),
-        col("seg"), col("revenue_cents").as("v1"), col("n_orders").as("v2")))
-      .write.mode(SaveMode.Overwrite).partitionBy("part").parquet(dir)
-    prune(spark, path, keep = 2)
+        col("seg"), col("revenue_cents").as("v1"), col("n_orders").as("v2"))),
+      path, batchId, "part")
     } finally { dA.unpersist(false); dB.unpersist(false) }
   }
 
-  /** One bilinear term: a signed fact stream (k, d_cents, d_rows) joined
-    * to a signed dimension stream (k, seg, d_m) → signed (seg, c, r)
-    * contributions. Shared with [[BucketedJoinView]] — the algebra is
-    * identical across state layouts, only the storage differs. */
-  private[streaming] def term(aSide: DataFrame, bSide: DataFrame): DataFrame =
-    aSide.join(bSide, "k").select(col("seg"),
-      (col("d_cents") * col("d_m")).as("c"),
-      (col("d_rows") * col("d_m")).as("r"))
-
-  /** Additive outer merge `prev ⊎ delta` on `keys`; `cols` maps each
-    * output measure to its delta column (shared with
-    * [[BucketedJoinView]]). */
-  private[streaming] def merge(prev: Option[DataFrame], delta: DataFrame,
-      keys: Seq[String], cols: Seq[(String, String)]): DataFrame =
-    prev match {
-      case None =>
-        delta.select(keys.map(col) ++
-          cols.map { case (o, d) => col(d).as(o) }: _*)
-      case Some(p) =>
-        p.join(delta, keys, "full")
-          .select(keys.map(col) ++ cols.map { case (o, d) =>
-            (coalesce(col(o), lit(0L)) + coalesce(col(d), lit(0L))).as(o)
-          }: _*)
-    }
-
   // projection back out of the harmonized (part, k, seg, v1, v2) layout
-  private val aSchema = Seq("k" -> "k", "v1" -> "cents", "v2" -> "rows")
-  private val bSchema = Seq("k" -> "k", "seg" -> "seg", "v1" -> "m")
-  private val wSchema = Seq("seg" -> "seg", "v1" -> "revenue_cents",
+  private val aCols = Seq("k" -> "k", "v1" -> "cents", "v2" -> "rows")
+  private val bCols = Seq("k" -> "k", "seg" -> "seg", "v1" -> "m")
+  private val wCols = Seq("seg" -> "seg", "v1" -> "revenue_cents",
     "v2" -> "n_orders")
 
-  // explicit store schema: a legitimately EMPTY snapshot (every key
-  // deleted) has no parquet footer to infer from, and must still read
-  // back as an empty state rather than fail analysis
-  private val storeSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("k", LongType),
-    org.apache.spark.sql.types.StructField("seg", StringType),
-    org.apache.spark.sql.types.StructField("v1", LongType),
-    org.apache.spark.sql.types.StructField("v2", LongType),
-    org.apache.spark.sql.types.StructField("part", StringType)))
+  private val storeSchema = StructType(Seq(
+    StructField("k", LongType), StructField("seg", StringType),
+    StructField("v1", LongType), StructField("v2", LongType),
+    StructField("part", StringType)))
 
-  private def read(spark: SparkSession, p: Path, part: String,
-      schema: Seq[(String, String)]): DataFrame =
-    spark.read.schema(storeSchema).parquet(p.toString)
+  private def part(spark: SparkSession, path: String, id: Long, name: String,
+      cols: Seq[(String, String)]): DataFrame =
+    SnapshotCommit.read(spark, path, id, storeSchema)
       // partition filter → only the part=<X> subdir is ever listed/read
-      .filter(col("part") === part)
-      .select(schema.map { case (f, n) => col(f).as(n) }: _*)
+      .filter(col("part") === name)
+      .select(cols.map { case (f, n) => col(f).as(n) }: _*)
 
   /** Versioned-snapshot maintenance as a streaming sink over the RAW
     * multi-topic stream (the production shape: one Kafka subscription
@@ -286,34 +205,13 @@ object IncrementalJoinView {
 
   /** The current view (highest fully-committed snapshot), if any. */
   def readView(spark: SparkSession, path: String): Option[DataFrame] =
-    committed(spark, path).lastOption.map(p => read(spark, p._2, "W", wSchema))
+    SnapshotCommit.committed(spark, path).lastOption
+      .map(part(spark, path, _, "W", wCols))
 
   /** The current A/B states — exposed for the spec's invariant check
     * (W must equal the aggregate of A ⋈ B at every commit). */
   def readStates(spark: SparkSession, path: String)
       : Option[(DataFrame, DataFrame)] =
-    committed(spark, path).lastOption.map(p =>
-      (read(spark, p._2, "A", aSchema), read(spark, p._2, "B", bSchema)))
-
-  /** Committed snapshot ids, ascending — the single `_SUCCESS` of the
-    * unified partitioned write covers A, B and W atomically. */
-  private def committed(spark: SparkSession, path: String): Seq[(Long, Path)] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) Seq.empty
-    else
-      fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        .filter(s => fs.exists(new Path(s.getPath, "_SUCCESS")))
-        .map(s => (s.getPath.getName.stripPrefix("batch=").toLong, s.getPath))
-        .sortBy(_._1)
-  }
-
-  private def prune(spark: SparkSession, path: String, keep: Int): Unit = {
-    val all = committed(spark, path)
-    if (all.size > keep) {
-      val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-      all.dropRight(keep).foreach { case (_, p) => fs.delete(p, true) }
-    }
-  }
+    SnapshotCommit.committed(spark, path).lastOption.map(id =>
+      (part(spark, path, id, "A", aCols), part(spark, path, id, "B", bCols)))
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Incremental maintenance of MIN/MAX (+count) per group under a CDC
   * changelog WITH DELETES — the non-distributive case plain delta
@@ -19,8 +19,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * practice far smaller (prices repeat), and the merge per batch is one
   * keyed outer join of delta-sized against state-sized frames on
   * (group, value). The read-side aggregate is one shuffle over the
-  * support. Same versioned `batch=<id>` + `_SUCCESS` commit discipline
-  * as [[IncrementalView]] (replay recomputes the same snapshot from the
+  * support. Same [[SnapshotCommit]] versioned-snapshot discipline as
+  * [[IncrementalView]] (replay recomputes the same snapshot from the
   * same predecessor — overwrite, never double-apply).
   *
   * Uses [[IncrementalView.eventsOf]]'s projection/dedup (status + exact
@@ -31,46 +31,24 @@ object IncrementalMinMax {
 
   /** Signed value-multiset deltas `(o_orderstatus, cents, d_n)` of one
     * deduped [[IncrementalView.eventsOf]] micro-batch. */
-  def deltaOfEvents(events: DataFrame): DataFrame = {
-    val minus = events.filter(col("op").isin("u", "d") && col("b_def"))
-      .select(col("b_status").as("o_orderstatus"),
-        col("b_cents").as("cents"), lit(-1L).as("d_n"))
-    val plus = events.filter(col("op").isin("c", "r", "u") && col("a_def"))
-      .select(col("a_status").as("o_orderstatus"),
-        col("a_cents").as("cents"), lit(1L).as("d_n"))
-    plus.unionByName(minus)
-      .groupBy("o_orderstatus", "cents")
-      .agg(sum("d_n").as("d_n"))
-      .filter(col("d_n") =!= 0L)
-  }
+  def deltaOfEvents(events: DataFrame): DataFrame =
+    SignedDelta.fold(events, _("def"), "o_orderstatus", "cents")(s => Seq(
+      s("status").as("o_orderstatus"), s("cents").as("cents"),
+      s.unit.as("d_n")))
 
   /** Apply one micro-batch of deduped events: previous committed support
-    * ⊎ batch delta → snapshot `batch=<batchId>`, zero-count values
-    * dropped from the support. */
+    * ⊎ batch delta → version `batchId`, zero-count values dropped from
+    * the support. */
   def applyBatchEvents(
       events: DataFrame, batchId: Long, path: String): Unit = {
     val spark = events.sparkSession
-    val snaps = committed(spark, path)
-    require(snaps.isEmpty || batchId >= snaps.last._1,
-      s"batchId $batchId is behind committed snapshot ${snaps.last._1} " +
-        s"at $path — resume with the original checkpoint or a new path")
-    val prev = snaps.filter(_._1 < batchId).lastOption
-      .map(p => readSupport(spark, p._2))
-    val d = deltaOfEvents(events)
-    val merged = prev match {
-      case Some(p) =>
-        p.join(d, Seq("o_orderstatus", "cents"), "full")
-          .select(col("o_orderstatus"), col("cents"),
-            (coalesce(col("n"), lit(0L)) + coalesce(col("d_n"), lit(0L)))
-              .as("n"))
-      case None =>
-        d.select(col("o_orderstatus"), col("cents"), col("d_n").as("n"))
-    }
+    val prev = SnapshotCommit.predecessor(spark, path, batchId)
+      .map(SnapshotCommit.read(spark, path, _, supportSchema))
+    val merged = SignedDelta.merge(prev, deltaOfEvents(events),
+      Seq("o_orderstatus", "cents"), Seq("n" -> "d_n"))
     // a value whose signed count cancels to zero LEAVES the support —
     // that removal is exactly what lets a deleted minimum recover
-    merged.filter(col("n") =!= 0L)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/batch=$batchId")
-    prune(spark, path, keep = 2)
+    SnapshotCommit.write(merged.filter(col("n") =!= 0L), path, batchId)
   }
 
   /** The current view — min/max cents + row count per group, aggregated
@@ -78,13 +56,11 @@ object IncrementalMinMax {
     * this alongside the support in the same commit; the algebra is
     * unchanged). */
   def readView(spark: SparkSession, path: String): Option[DataFrame] =
-    committed(spark, path).lastOption.map { case (_, p) =>
-      readSupport(spark, p)
-        .groupBy("o_orderstatus")
+    SnapshotCommit.readLatest(spark, path, supportSchema).map(
+      _.groupBy("o_orderstatus")
         .agg(min(col("cents")).as("min_cents"),
           max(col("cents")).as("max_cents"),
-          sum(col("n")).as("n_orders"))
-    }
+          sum(col("n")).as("n_orders")))
 
   /** Exact order statistics from the SAME support state — the payoff of
     * keeping the value multiset rather than scalar min/max: any quantile
@@ -96,54 +72,25 @@ object IncrementalMinMax {
   def readQuantile(spark: SparkSession, path: String, q: Double)
       : Option[DataFrame] = {
     require(q > 0 && q <= 1, s"quantile must be in (0, 1], got $q")
-    committed(spark, path).lastOption.map { case (_, p) =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_orderstatus").orderBy("cents")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      val wAll = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_orderstatus")
-      // rank target computed in DECIMAL, not double: ceil(q·total) in
-      // binary floats bumps the rank by one whenever the exact product
-      // is an integer whose double form rounds up (q=0.07, total=100 →
-      // 7.000000000000001 → ceil 8). BigDecimal(q.toString) is the
-      // decimal the caller wrote, so the product and ceil are exact.
-      val qd = BigDecimal(q.toString)
-      readSupport(spark, p)
-        .withColumn("_cum", sum(col("n")).over(w))
+    val w = Window.partitionBy("o_orderstatus").orderBy("cents")
+      .rowsBetween(Window.unboundedPreceding, 0)
+    val wAll = Window.partitionBy("o_orderstatus")
+    // rank target computed in DECIMAL, not double: ceil(q·total) in
+    // binary floats bumps the rank by one whenever the exact product
+    // is an integer whose double form rounds up (q=0.07, total=100 →
+    // 7.000000000000001 → ceil 8). BigDecimal(q.toString) is the
+    // decimal the caller wrote, so the product and ceil are exact.
+    val qd = BigDecimal(q.toString)
+    SnapshotCommit.readLatest(spark, path, supportSchema).map(
+      _.withColumn("_cum", sum(col("n")).over(w))
         .withColumn("_tot", sum(col("n")).over(wAll))
         .filter(col("_cum") >= ceil(col("_tot").cast("decimal(20,0)") * lit(qd)))
         .groupBy("o_orderstatus")
-        .agg(min(col("cents")).as("q_cents"))
-    }
+        .agg(min(col("cents")).as("q_cents")))
   }
 
   private val supportSchema = StructType(Seq(
     StructField("o_orderstatus", StringType),
     StructField("cents", LongType),
     StructField("n", LongType)))
-
-  private def readSupport(spark: SparkSession, p: Path): DataFrame =
-    // explicit schema: an all-deleted group can leave an EMPTY support
-    // snapshot with no footer to infer from
-    spark.read.schema(supportSchema).parquet(p.toString)
-
-  private def committed(spark: SparkSession, path: String): Seq[(Long, Path)] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) Seq.empty
-    else
-      fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        .filter(s => fs.exists(new Path(s.getPath, "_SUCCESS")))
-        .map(s => (s.getPath.getName.stripPrefix("batch=").toLong, s.getPath))
-        .sortBy(_._1)
-  }
-
-  private def prune(spark: SparkSession, path: String, keep: Int): Unit = {
-    val all = committed(spark, path)
-    if (all.size > keep) {
-      val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-      all.dropRight(keep).foreach { case (_, p) => fs.delete(p, true) }
-    }
-  }
 }

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import org.apache.spark.sql.types.{DecimalType, LongType, StringType}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Incremental view maintenance (IVM) over a CDC change log — the
   * canonical "what is CDC actually FOR" consumer: keep a downstream
@@ -28,12 +27,11 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
   *      ([[StreamOps]] / `stream_dedup`) — position-keyed dedup is its
   *      job, and composing it in front keeps this operator stateless
   *      w.r.t. event identity.
-  *   2. batch-level: state is published as versioned snapshots
-  *      `batch=<id>` with parquet's `_SUCCESS` as the commit marker; a
-  *      replayed micro-batch (same batchId after restart) recomputes the
-  *      SAME deterministic snapshot from the previous version — an
-  *      overwrite, not a double-apply — and readers only ever see the
-  *      highest COMMITTED version.
+  *   2. batch-level: state is published through [[SnapshotCommit]]'s
+  *      versioned snapshots; a replayed micro-batch (same batchId after
+  *      restart) recomputes the SAME deterministic snapshot from the
+  *      previous version — an overwrite, not a double-apply — and
+  *      readers only ever see the highest COMMITTED version.
   *
   * Scale: per batch this reads view-sized state (group cardinality, not
   * corpus cardinality — aggregate views are small by construction), one
@@ -49,18 +47,8 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
   */
 object IncrementalView {
 
-  /** Signed per-group deltas of one parsed micro-batch (cents + rows).
-    *
-    * The measures each side contributes (group key, cents, presence) are
-    * projected BEFORE the dedup shuffle: duplicated deliveries are
-    * identical rows, so deduping the narrow projection equals deduping
-    * the wide envelope — and the shuffle then carries four scalar
-    * columns instead of two full row structs (at changelog scale the
-    * dedup exchange is this operator's dominant cost). */
-  def delta(parsed: DataFrame): DataFrame = deltaOfEvents(eventsOf(parsed))
-
-  /** The narrow deduped event projection [[delta]] folds — exposed so a
-    * caller replaying SEVERAL batches out of one parsed changelog (the
+  /** The narrow deduped event projection [[applyBatch]] folds — exposed so
+    * a caller replaying SEVERAL batches out of one parsed changelog (the
     * backfill shape: `cdc_ivm_view` slices one archive into three
     * micro-batches by op) can compute the projection + dedup ONCE and
     * slice it per batch, instead of paying the dedup exchange per batch.
@@ -68,106 +56,45 @@ object IncrementalView {
     * includes `op`: global dedup over the changelog is row-identical to
     * per-slice dedup whenever the slices partition by any dedup-key
     * column. A caller slicing by something OUTSIDE the key must dedup
-    * per batch (use [[delta]]). */
+    * per batch (use [[applyBatch]]). */
   def eventsOf(parsed: DataFrame): DataFrame =
-    parsed
-      .filter(!col("_corrupt") && !col("_tombstone"))
-      .select(col("env.op").as("op"),
-        col("env.before.o_orderstatus").as("b_status"),
-        cents(col("env.before")).as("b_cents"),
-        col("env.before").isNotNull.as("b_def"),
-        col("env.after.o_orderstatus").as("a_status"),
-        cents(col("env.after")).as("a_cents"),
-        col("env.after").isNotNull.as("a_def"),
-        // the full source-position tuple, not just lsn: MySQL logs carry
-        // (file, pos) and Mongo (ts_ms, ord→pos) with lsn NULL, and
-        // dropDuplicates treats NULLs as equal — keying on lsn alone
-        // would collapse DISTINCT same-key events from those sources
-        col("env.source.lsn").as("lsn"), col("env.source.file").as("file"),
-        col("env.source.pos").as("pos"), col("env.source.ts_ms").as("ts"),
-        coalesce(col("env.after.o_orderkey"), col("env.before.o_orderkey"))
-          .as("k"))
-      // batch-local at-least-once dedup: a duplicated delivery has an
-      // identical (key, position, op) triple
-      .dropDuplicates("k", "op", "lsn", "file", "pos", "ts")
+    SignedDelta.events(parsed, "o_orderkey")(r => Seq(
+      "status" -> r.getField("o_orderstatus"),
+      "cents" -> SignedDelta.cents(r), "def" -> r.isNotNull))
 
-  /** Signed per-group deltas over an [[eventsOf]] projection. */
-  def deltaOfEvents(events: DataFrame): DataFrame = {
-    val minus = events.filter(col("op").isin("u", "d") && col("b_def"))
-      .select(col("b_status").as("o_orderstatus"),
-        (-col("b_cents")).as("d_cents"), lit(-1L).as("d_rows"))
-    val plus = events.filter(col("op").isin("c", "r", "u") && col("a_def"))
-      .select(col("a_status").as("o_orderstatus"),
-        col("a_cents").as("d_cents"), lit(1L).as("d_rows"))
-    plus.unionByName(minus)
-      .groupBy("o_orderstatus")
-      .agg(sum("d_cents").as("d_cents"), sum("d_rows").as("d_rows"))
-  }
-
-  private def cents(row: org.apache.spark.sql.Column) =
-    (row.getField("o_totalprice").cast(DecimalType(12, 2)) * 100)
-      .cast(LongType)
+  /** Signed per-group deltas (cents + rows) over an [[eventsOf]]
+    * projection. */
+  def deltaOfEvents(events: DataFrame): DataFrame =
+    SignedDelta.fold(events, _("def"), "o_orderstatus")(s => Seq(
+      s("status").as("o_orderstatus"), s.signed("cents").as("d_cents"),
+      s.unit.as("d_rows")))
 
   /** Apply one micro-batch: previous committed snapshot ⊎ batch delta →
-    * snapshot `batch=<batchId>`. Replay-safe (see class doc); prunes all
-    * but the latest two committed versions. */
-  /** @param writePartitions snapshot writer count. An aggregate view is
-    *   group-cardinality (small by construction), so ONE sequential file
-    *   per version is the right layout — 32 shuffle partitions would
-    *   write 32 near-empty files per batch and the reader would pay the
-    *   listing every merge. A caller maintaining an unusually wide view
-    *   raises it. */
-  def applyBatch(parsed: DataFrame, batchId: Long, path: String,
-      writePartitions: Int = 1): Unit =
-    applyBatchEvents(eventsOf(parsed), batchId, path, writePartitions)
+    * version `batchId` (replay-safe, see [[SnapshotCommit]]). */
+  def applyBatch(parsed: DataFrame, batchId: Long, path: String): Unit =
+    applyBatchEvents(eventsOf(parsed), batchId, path)
 
   /** [[applyBatch]] over a pre-projected [[eventsOf]] frame — the batch
     * must already be deduped (see the [[eventsOf]] sharing contract). */
-  def applyBatchEvents(events: DataFrame, batchId: Long, path: String,
-      writePartitions: Int = 1): Unit = {
+  def applyBatchEvents(events: DataFrame, batchId: Long, path: String): Unit = {
     val spark = events.sparkSession
-    val snaps = committed(spark, path)
-    // a batchId BELOW the highest committed snapshot means the stream
-    // restarted against this view path with a fresh/missing checkpoint
-    // (foreachBatch ids restart at 0) — continuing would write a
-    // snapshot that prune() immediately deletes while readers keep
-    // serving stale data, a silent-data-loss mode; fail loudly instead
-    require(snaps.isEmpty || batchId >= snaps.last._1,
-      s"batchId $batchId is behind committed snapshot ${snaps.last._1} " +
-        s"at $path — the streaming checkpoint does not match this view " +
-        "path; resume with the original checkpointLocation or start a " +
-        "new view path")
-    // merge from the latest snapshot STRICTLY BELOW this batchId — on a
-    // replay the batch's own earlier snapshot is the highest committed
-    // version, and merging on top of it would double-apply the delta
-    val prev = snaps.filter(_._1 < batchId).lastOption
-      .map { case (_, p) => readSnapshot(spark, p) }
-    val d = deltaOfEvents(events)
-    val merged = prev match {
-      case Some(p) =>
-        p.join(d, Seq("o_orderstatus"), "full")
-          .select(col("o_orderstatus"),
-            (coalesce(col("revenue_cents"), lit(0L))
-              + coalesce(col("d_cents"), lit(0L))).as("revenue_cents"),
-            (coalesce(col("n_orders"), lit(0L))
-              + coalesce(col("d_rows"), lit(0L))).as("n_orders"))
-      case None =>
-        d.select(col("o_orderstatus"), col("d_cents").as("revenue_cents"),
-          col("d_rows").as("n_orders"))
-    }
+    val prev = SnapshotCommit.predecessor(spark, path, batchId)
+      .map(SnapshotCommit.read(spark, path, _, schema))
+    val merged = SignedDelta.merge(prev, deltaOfEvents(events),
+      Seq("o_orderstatus"),
+      Seq("revenue_cents" -> "d_cents", "n_orders" -> "d_rows"))
     // groups where EVERY measure cancels to zero leave the view entirely.
     // Row count alone is not enough: with out-of-order cross-batch
     // delivery an intermediate snapshot can legitimately hold a group at
     // 0 rows but nonzero cents (two keys passing through a status with
     // different prices), and dropping it would silently lose the cents
-    // from every later merge (the IVM property test caught exactly this)
-    merged.filter(col("n_orders") =!= 0L || col("revenue_cents") =!= 0L)
-      .coalesce(writePartitions)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/batch=$batchId")
-    // keep = 2 covers the replay window: Structured Streaming re-delivers
-    // at most the last in-flight batch after a restart, which merges from
-    // its immediate predecessor — the one older snapshot retained
-    prune(spark, path, keep = 2)
+    // from every later merge (the IVM property test caught exactly this).
+    // An aggregate view is group-cardinality, so ONE file per version:
+    // shuffle-width writers would write near-empty files every batch.
+    SnapshotCommit.write(
+      merged.filter(col("n_orders") =!= 0L || col("revenue_cents") =!= 0L)
+        .coalesce(1),
+      path, batchId)
   }
 
   /** Versioned-snapshot maintenance as a streaming sink. Production
@@ -185,37 +112,12 @@ object IncrementalView {
     checkpoint.fold(w)(c => w.option("checkpointLocation", c))
   }
 
-  /** Committed snapshot ids, ascending ( `_SUCCESS` present). */
-  private def committed(spark: SparkSession, path: String): Seq[(Long, Path)] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) Seq.empty
-    else
-      fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        .filter(s => fs.exists(new Path(s.getPath, "_SUCCESS")))
-        .map(s => (s.getPath.getName.stripPrefix("batch=").toLong, s.getPath))
-        .sortBy(_._1)
-  }
-
   /** The current view: highest committed snapshot, if any. */
   def readView(spark: SparkSession, path: String): Option[DataFrame] =
-    committed(spark, path).lastOption.map { case (_, p) =>
-      readSnapshot(spark, p)
-    }
+    SnapshotCommit.readLatest(spark, path, schema)
 
-  private def readSnapshot(spark: SparkSession, p: Path): DataFrame =
-    spark.read.parquet(p.toString)
-      .select(col("o_orderstatus").cast(StringType),
-        col("revenue_cents").cast(LongType),
-        col("n_orders").cast(LongType))
-
-  private def prune(spark: SparkSession, path: String, keep: Int): Unit = {
-    val all = committed(spark, path)
-    if (all.size > keep) {
-      val fs = new Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      all.dropRight(keep).foreach { case (_, p) => fs.delete(p, true) }
-    }
-  }
+  private val schema = StructType(Seq(
+    StructField("o_orderstatus", StringType),
+    StructField("revenue_cents", LongType),
+    StructField("n_orders", LongType)))
 }

@@ -32,8 +32,9 @@ object Sinks {
     *   3. merges batch rows in by (key, max ordering) — replays and
     *      out-of-order events are no-ops, so the sink stays idempotent
     *      under at-least-once delivery;
-    *   4. rewrites ONLY the touched buckets (dynamic partition overwrite);
-    *      untouched buckets are never read or written.
+    *   4. rewrites ONLY the touched buckets: staged, then swapped in by
+    *      [[BucketCommit]]'s rename commit; untouched buckets are never
+    *      read or written.
     * Per-batch I/O is O(state in touched buckets), not O(total state) —
     * the property that survives unbounded state growth; at 100 TB
     * `nBuckets` scales with state size exactly like ES shards / Redis
@@ -62,11 +63,10 @@ object Sinks {
     * dir, one parquet file per touched bucket) and then swapped into the
     * live table with two directory renames per bucket — live→trash, then
     * stage→live. Renames are O(1) metadata ops on file:/hdfs:, so per-batch
-    * write volume is exactly the merged touched-bucket data, not 2× it
-    * (the previous stage + dynamic-partition-overwrite protocol re-read and
-    * re-wrote every staged byte). On an object store without atomic dir
-    * rename (s3a) you would swap this commit step back to the overwrite
-    * form; the FileSystem seam keeps that a local change. */
+    * write volume is exactly the merged touched-bucket data. On an object
+    * store without atomic dir rename (s3a) you would swap this commit step
+    * for a dynamic-partition overwrite; the FileSystem seam keeps that a
+    * local change. */
   private[graft] def upsertBatch(
       batch: DataFrame,
       batchId: Long,
@@ -83,40 +83,44 @@ object Sinks {
     // Fail loudly instead (rebucket() is the migration path).
     BucketCommit.pinGeometry(fs, path, nBuckets)
     BucketCommit.recover(fs, path)
+    // two actions read the batch (the touched-bucket probe and the merge
+    // write); persist so its upstream — under foreachBatch, the stateful
+    // operators feeding this sink — runs once per batch, not twice
     val bucketed = batch.withColumn("_bucket",
-      BucketCommit.bucketOf(col(key), nBuckets))
-    val touched = bucketed.select("_bucket").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    if (touched.nonEmpty) {
-      // only a store with no bucket dirs yet (first batch — the root may
-      // already exist holding the `_nbuckets` pin) may fall back to empty
-      // state; any other read failure must fail the batch — a blanket
-      // catch would silently wipe accumulated sink state
-      val existing =
-        if (hasBuckets(fs, target))
-          spark.read.parquet(path)
-            .filter(col("_bucket").isin(touched.map(Int.box): _*))
-        else bucketed.limit(0)
-      val w = Window.partitionBy(key).orderBy(col(orderingCol).desc)
-      val merged = existing.unionByName(bucketed)
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1).drop("_rn")
-      // repartition ON THE BUCKET first: a partitionBy write fans every
-      // upstream task across every bucket directory (tasks × buckets tiny
-      // files per publish — measured 4× the whole publish cost at sf0.1);
-      // hash-colocating each bucket into one task writes one file per
-      // bucket, the ES-segment-like layout the reader wants
-      val stage = new Path(path + s".stage-$batchId")
-      merged.repartition(col("_bucket"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("_bucket").parquet(stage.toString)
-      // commit: the shared displace-then-publish swap (BucketCommit) —
-      // no markers, because this merge is idempotent: a replayed batch
-      // (same batchId) re-merges to the identical bucket contents.
-      BucketCommit.publish(fs, target, stage, touched, batchId,
-        markers = false)
-    }
-    ()
+      BucketCommit.bucketOf(col(key), nBuckets)).persist()
+    try {
+      val touched = bucketed.select("_bucket").distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      if (touched.nonEmpty) {
+        // only a store with no bucket dirs yet (first batch — the root may
+        // already exist holding the `_nbuckets` pin) may fall back to empty
+        // state; any other read failure must fail the batch — a blanket
+        // catch would silently wipe accumulated sink state
+        val existing =
+          if (hasBuckets(fs, target))
+            spark.read.parquet(path)
+              .filter(col("_bucket").isin(touched.map(Int.box): _*))
+          else bucketed.limit(0)
+        val w = Window.partitionBy(key).orderBy(col(orderingCol).desc)
+        val merged = existing.unionByName(bucketed)
+          .withColumn("_rn", row_number().over(w))
+          .filter(col("_rn") === 1).drop("_rn")
+        // repartition ON THE BUCKET first: a partitionBy write fans every
+        // upstream task across every bucket directory (tasks × buckets tiny
+        // files per publish — measured 4× the whole publish cost at sf0.1);
+        // hash-colocating each bucket into one task writes one file per
+        // bucket, the ES-segment-like layout the reader wants
+        val stage = new Path(path + s".stage-$batchId")
+        merged.repartition(col("_bucket"))
+          .write.mode(SaveMode.Overwrite)
+          .partitionBy("_bucket").parquet(stage.toString)
+        // commit: the shared displace-then-publish swap (BucketCommit) —
+        // no markers, because this merge is idempotent: a replayed batch
+        // (same batchId) re-merges to the identical bucket contents.
+        BucketCommit.publish(fs, target, stage, touched, batchId,
+          markers = false)
+      }
+    } finally bucketed.unpersist(false)
   }
 
   private def hasBuckets(fs: org.apache.hadoop.fs.FileSystem,

@@ -97,6 +97,32 @@ class EndToEndStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("stateful compaction feeding the upsert sink runs once per micro-batch") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val in = MemoryStream[graft.streaming.KeyedChange]
+    val dir = java.nio.file.Files.createTempDirectory("graft_e2eonce")
+      .toString + "/state"
+    val q = graft.streaming.Sinks.upsertByKey(
+      StatefulCompaction.compact(in.toDS()).toDF(), dir, "key", "lsn",
+      nBuckets = 4).start()
+    try {
+      def change(k: Long, lsn: Long) =
+        graft.streaming.KeyedChange(k, lsn, deleted = false, s"p$lsn")
+      in.addData((1L to 40L).map(k => change(k, k)))
+      q.processAllAvailable()
+      in.addData((1L to 40L by 3).map(k => change(k, 100 + k)) :+ change(2L, 1L))
+      q.processAllAvailable()
+      // every state update is one emitted row; an input row can update a
+      // key at most once, unless the sink re-ran the stateful operator
+      val progress = q.recentProgress.filter(_.numInputRows > 0)
+      val updated = progress.flatMap(_.stateOperators).map(_.numRowsUpdated).sum
+      assert(updated > 0)
+      assert(updated <= progress.map(_.numInputRows).sum)
+      assert(graft.streaming.Sinks.readState(spark, dir).count() == 40)
+    } finally q.stop()
+  }
+
   test("salted aggregation equals direct aggregation on exact types") {
     import spark.implicits._
     // skewed input: key 7 holds 90% of rows
