@@ -155,7 +155,7 @@ private[graft] object BoundedDfCache {
     * bump is caught loudly, not silently — the DuckDB oracles re-derive
     * the same fixtures from the source tables in SQL, so a stale Spark
     * read hash-mismatches in the correctness gate. */
-  private val fixtureVersion = 1
+  private val fixtureVersion = 2
 
   private def fixtureDiskDir(tag: String): java.io.File = {
     val safe = tag.replaceAll("[^A-Za-z0-9._-]", "_")

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Serializes the [session-conf set → streaming-query start → restore]
   * critical sections of the stateful pipelines.
   *
@@ -25,5 +27,18 @@ package graft
   * warm-start and forfeit its −12 s/rep. Revisit only if a per-query
   * cloned-session start API lands (SPARK-45568-style scoped conf). */
 object StartGate {
-  def locked[A](f: => A): A = synchronized(f)
+  /** Runs `start` inside the gate with each `key -> value` set on the
+    * session conf; afterwards each key gets its previous value back, or
+    * is unset if it had none — also when `start` throws. */
+  def withConf[A](s: SparkSession, kvs: (String, String)*)(start: => A): A =
+    synchronized {
+      val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+      try {
+        kvs.foreach { case (k, v) => s.conf.set(k, v) }
+        start
+      } finally prev.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
+      }
+    }
 }

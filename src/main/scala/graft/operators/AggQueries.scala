@@ -566,52 +566,32 @@ object AggQueries extends QueryGroup {
 
     // EXACT equi-depth histogram (ANALYZE-grade statistics collection)
     // WITHOUT a global sort — the order-statistics pattern a CBO's stats
-    // job needs at 100 TB. The naive form is `ntile(B) OVER (ORDER BY y)`:
-    // one unpartitioned window that serializes the corpus through a
-    // single task (it is relegated to the DuckDB oracle below). The scale
-    // path is the TWO-PHASE EXACT RANK:
-    //   1. coarse VALUE-RANGE buckets b = (y-min) div w with w sized so
-    //      ~4096 buckets exist — counts per b are a partial+final hash
-    //      agg, and the cumulative `below` offsets run a global window
-    //      over the ≤4097-row bucket table only (same discipline as the
-    //      curate_* prefix sums, PlanSpec-asserted);
-    //   2. in-bucket row_number (parallel per bucket — buckets partition
-    //      the VALUE range, so offset+local rank IS the exact global
-    //      rank; equal values can never straddle buckets).
-    // The rank→tile map inlines DuckDB's ntile fill rule (first N%B
-    // tiles take ⌈N/B⌉) in exact integer arithmetic, so per-tile
-    // (n, min, max) hash-match the oracle's ntile exactly; ties within a
-    // tile are order-ambiguous but the per-tile aggregates are sorted-
-    // multiset positions — deterministic. min/max/count come in one
-    // bounded 1-row aggregate (the accepted bounded-scalar seam). All
-    // integer division is `div` (long `/` in Spark is DOUBLE division).
+    // job needs at 100 TB. The naive form, one `ntile(B) OVER (ORDER BY
+    // y)`, is the DuckDB oracle below; here the exact global rank is a
+    // [[GlobalOrder]] rank and the tile is [[GlobalOrder.ntile0]], so
+    // per-tile (n, min, max) hash-match the oracle's ntile exactly; ties
+    // within a tile are order-ambiguous but the per-tile aggregates are
+    // sorted-multiset positions — deterministic. min/max/count come in
+    // one bounded 1-row aggregate (the accepted bounded-scalar seam).
     "agg_equidepth" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val B = 16L
+      val B = 16
       // one parquet scan + decimal cast for the whole query: bounds, the
       // per-bucket counts, and the in-bucket rank all read the same
       // ~8-byte column — the session-shared [[liCents]] frame (also
       // under agg_median_exact), materialized once per rep
       val cents = liCents(s, dir).select("y")
       val bounds = cents.agg(min(col("y")), max(col("y")), count(lit(1))).head()
-      val (minY, maxY, n) = (bounds.getLong(0), bounds.getLong(1), bounds.getLong(2))
+      // the count first: min and max are null on an empty input
+      val n = bounds.getLong(2)
       require(n >= B, s"equi-depth needs at least $B rows, got $n")
+      val (minY, maxY) = (bounds.getLong(0), bounds.getLong(1))
       val w = math.max(1L, (maxY - minY) / 4096 + 1)
-      val bucketed = cents.withColumn("b", expr(s"(y - ${minY}L) div ${w}L"))
-      val off = bucketed.groupBy("b").agg(count(lit(1)).as("c"))
-        .withColumn("below",
-          coalesce(sum("c").over(Window.orderBy("b")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("b", "below")
-      val q = n / B; val rem = n % B; val cut = (q + 1) * rem
-      bucketed
-        .withColumn("rn",
-          row_number().over(Window.partitionBy("b").orderBy("y")))
-        .join(broadcast(off), Seq("b"))
-        .withColumn("r", col("below") + col("rn"))
-        .withColumn("tile", expr(
-          s"CASE WHEN r <= ${cut}L THEN (r - 1) div ${q + 1}L " +
-            s"ELSE ${rem}L + (r - 1 - ${cut}L) div ${q}L END"))
+      // ~4096 value-range buckets b = (y-min) div w are a prefix of y
+      // order; equal values never straddle buckets
+      GlobalOrder.prefixBefore(
+          cents.withColumn("b", expr(s"(y - ${minY}L) div ${w}L")), "b",
+          Seq(col("y")), lit(1L))
+        .withColumn("tile", GlobalOrder.ntile0(col("before") + 1L, lit(n), B))
         .groupBy("tile")
         .agg(count(lit(1)).as("n_rows"),
           min(col("y")).as("lo_cents"), max(col("y")).as("hi_cents"))

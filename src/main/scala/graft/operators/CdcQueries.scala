@@ -509,32 +509,20 @@ object CdcQueries extends QueryGroup {
         // instance is a live RocksDB opened+committed per micro-batch.
         // A production deployment makes the same call per stateful job
         // (state partitions ≈ state size / target store size).
-        val q = graft.StartGate.locked {
-          val prev =
-            s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-          val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-          s.conf.set("spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state." +
-              "RocksDBStateStoreProvider")
-          // NOT set: rocksdb.changelogCheckpointing (r17 A/B, 5-rep
-          // subset min: 2.41 → 2.75 s WITH changelog on) — with 2
-          // micro-batches × 4 tiny stores the full snapshot per commit
-          // is already small and the changelog layer is pure extra
-          // bookkeeping; at production state sizes (GB-scale stores,
-          // many batches) it is the right flag, here it measures worse
-          s.conf.set("spark.sql.shuffle.partitions", "4")
-          try TwsCompaction.compact(in.toDS())
+        // NOT set: rocksdb.changelogCheckpointing (r17 A/B, 5-rep
+        // subset min: 2.41 → 2.75 s WITH changelog on) — with 2
+        // micro-batches × 4 tiny stores the full snapshot per commit
+        // is already small and the changelog layer is pure extra
+        // bookkeeping; at production state sizes (GB-scale stores,
+        // many batches) it is the right flag, here it measures worse
+        val q = graft.StartGate.withConf(s,
+            "spark.sql.streaming.stateStore.providerClass" ->
+              ("org.apache.spark.sql.execution.streaming.state." +
+                "RocksDBStateStoreProvider"),
+            "spark.sql.shuffle.partitions" -> "4") {
+          TwsCompaction.compact(in.toDS())
             .writeStream.format("memory").queryName(sinkName)
             .outputMode(OutputMode.Update).start()
-          finally {
-            s.conf.set("spark.sql.shuffle.partitions", prevParts)
-            prev match {
-              case Some(v) => s.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", v)
-              case None =>
-                s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-            }
-          }
         }
         try {
           import scala.jdk.CollectionConverters._
@@ -1172,12 +1160,10 @@ object CdcQueries extends QueryGroup {
       // the stream's lifetime), so the session-wide set only needs to
       // cover the start — gated so concurrent pipeline starts can't
       // interleave their set/restore pairs
-      val q = graft.StartGate.locked {
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try Sinks.appendWarehouse(in.toDF(), s"$tmp/data",
+      val q = graft.StartGate.withConf(s,
+          "spark.sql.shuffle.partitions" -> "8") {
+        Sinks.appendWarehouse(in.toDF(), s"$tmp/data",
           s"$tmp/ckpt", "month", interval = "0 seconds").start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
       }
       try {
         import scala.jdk.CollectionConverters._
@@ -1224,10 +1210,9 @@ object CdcQueries extends QueryGroup {
       // same per-stateful-job sizing call as cdc_compact_tws. Width 8 is
       // pinned at START, so the session-wide set covers only the gated
       // start section (see buildSinkWarehouse).
-      val q = graft.StartGate.locked {
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try TxnApply(in.toDS(),
+      val q = graft.StartGate.withConf(s,
+          "spark.sql.shuffle.partitions" -> "8") {
+        TxnApply(in.toDS(),
             replayWindowMs = Some(TxnApply.DefaultReplayWindowMs))
           .writeStream
           // eviction mode schedules data-less timeout batches forever,
@@ -1237,7 +1222,6 @@ object CdcQueries extends QueryGroup {
           .trigger(Trigger.ProcessingTime("100 milliseconds"))
           .format("memory").queryName(sinkName)
           .outputMode(OutputMode.Update).start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
       }
       def await(cond: => Boolean, what: String): Unit = {
         val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000

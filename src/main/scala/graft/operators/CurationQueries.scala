@@ -12,28 +12,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * stream, cut it into fixed-budget shards, and compute per-domain
   * sampling weights to hit a target mixture).
   *
-  * Scale design — the interesting problem here is the GLOBAL prefix sum
-  * over the corpus (each document's token offset in the concatenated
-  * stream). The naive formulation is a single window `SUM(tokens) OVER
-  * (ORDER BY doc_id)` with an empty PARTITION BY — Spark executes that as
-  * ONE task holding the whole corpus, which is exactly the
-  * does-not-survive-100-TB shape. [[CurationQueries.packShards]] instead
-  * uses the classic two-phase scan:
-  *
-  *   1. bucket documents by contiguous doc_id block; per-bucket local
-  *      prefix sums run as a window PARTITIONED by bucket (distributed,
-  *      ≤ blockSize rows of state per task);
-  *   2. per-bucket subtotals (one tiny row per bucket) get their own
-  *      prefix sum — this window IS single-task, but over N/blockSize
-  *      16-byte rows, not the corpus (at 10^10 docs and blockSize 2^16
-  *      that is ~150k rows; a third level extends it indefinitely);
-  *   3. global offset = bucket offset + local prefix, computed map-side
-  *      after a join against the tiny offset table (AQE broadcasts it).
-  *
-  * The result is identical to the single-window formulation — the DuckDB
-  * oracle IS the naive single-window query — but every corpus-sized stage
-  * is distributed. PlanSpec asserts the executed plan has no
-  * empty-partition window over the documents scan.
+  * Scale design: every global position here (a document's token offset
+  * in the concatenated stream, its shuffle or interleave position, the
+  * running token sum of the budgeted selection) is a two-phase
+  * [[GlobalOrder.prefixBefore]] over a bucket that is a prefix of the
+  * order, never a corpus-sized single-task window; the DuckDB oracle is
+  * the naive single-window query.
   */
 object CurationQueries extends QueryGroup {
 
@@ -64,27 +48,6 @@ object CurationQueries extends QueryGroup {
         .select(col("doc_id"), col("lang"),
           size(TextQueries.toks(col("text"))).cast("long").as("tokens"))
     }
-
-  /** doc_id → (shard, cum_before): two-phase distributed prefix sum. */
-  private def packShards(s: SparkSession, dir: String): DataFrame = {
-    val d = withTokens(s, dir)
-      .withColumn("bucket", floor(col("doc_id") / blockSize))
-    val wLocal = Window.partitionBy("bucket").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val local = d.withColumn("local_before",
-      coalesce(sum("tokens").over(wLocal), lit(0L)))
-    // one row per bucket; its prefix window is single-task by design —
-    // bounded at N/blockSize tiny rows, not corpus-sized
-    val wBucket = Window.orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = d.groupBy("bucket").agg(sum("tokens").as("btot"))
-      .withColumn("offset", coalesce(sum("btot").over(wBucket), lit(0L)))
-      .select("bucket", "offset")
-    local.join(offsets, "bucket")
-      .withColumn("cum_before", col("offset") + col("local_before"))
-      .withColumn("shard",
-        floor(col("cum_before").cast("double") / lit(budget.toDouble)))
-  }
 
   /** Content-defined chunking core (see the `curate_chunk_cdc` entry):
     * docs(doc_id, text) → (doc_id, chunk_id, start_tok, n_tok,
@@ -158,21 +121,13 @@ object CurationQueries extends QueryGroup {
           "w1_ppm", "w2_ppm", "boost_x1000")
         .orderBy("source")
     }),
-    // token-budget shard packing: document i goes to the shard where its
-    // FIRST token lands in the concatenated corpus token stream (docs may
-    // straddle a boundary; assignment is by start offset, the standard
-    // offset-index convention)
+
     // quality-ranked data selection under a global token budget — the
     // data-selection step (C4/DsDm shape): rank every document by the
     // shared quality score, keep the best until 30% of the corpus's
-    // tokens are spent. The global running token sum in score order uses
-    // the same TWO-PHASE prefix sum as packShards/shuffle — per-band
-    // partitioned window + a constant-size band-offset table (bands =
-    // floor(q·20): ≤ ~20 rows at ANY corpus size; floor is monotone, so
-    // (band desc, q desc, doc_id) IS (q desc, doc_id) order) — never the
-    // single-task global window, which the DuckDB oracle deliberately
-    // is. The budget gate compares exact integers (cum·10 ≤ total·3), so
-    // the cut is bit-stable however large the corpus.
+    // tokens are spent. The budget gate compares exact integers
+    // (cum·10 ≤ total·3), so the cut is bit-stable however large the
+    // corpus.
     "curate_select_budget" -> ((s, dir) => {
       // the per-doc metric tuple (two corpus-wide regex counts) is the
       // shared [[PipelineQueries.docQualityMetrics]] pass — the same
@@ -184,29 +139,29 @@ object CurationQueries extends QueryGroup {
             * (lit(1.0) - col("n_punct") / col("n_chars"))
             * (lit(1.0) - lit(0.5) * col("n_stop") / col("n_tokens")))
             .as("q"))
-        .withColumn("band", floor(col("q") * lit(20.0)).cast("long"))
-      val wLocal = Window.partitionBy("band")
-        .orderBy(col("q").desc, col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val local = scored
-        .withColumn("cum_local", sum("tokens").over(wLocal))
-      val wBand = Window.orderBy(col("band").desc)
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = scored.groupBy("band").agg(sum("tokens").as("n"))
-        .withColumn("offset", coalesce(sum("n").over(wBand), lit(0L)))
-        .select("band", "offset")
-      val tot = scored.agg(sum("tokens").as("total"))
-      local.join(offsets, "band").crossJoin(broadcast(tot))
-        .select(col("doc_id"), col("tokens"), col("q"),
-          (col("offset") + col("cum_local")).as("cum_tokens"),
+        // floor is monotone, so the ≤ ~21 bands -floor(q·20) ascending
+        // are a prefix of (q desc, doc_id)
+        .withColumn("band", -floor(col("q") * lit(20.0)).cast("long"))
+      GlobalOrder.prefixBefore(scored, "band",
+          Seq(col("q").desc, col("doc_id")), col("tokens"))
+        .withColumn("cum_tokens", col("before") + col("tokens"))
+        .select(col("doc_id"), col("tokens"), col("q"), col("cum_tokens"),
           col("total"),
-          ((col("offset") + col("cum_local")) * 10L <= col("total") * 3L)
-            .as("kept"))
+          (col("cum_tokens") * 10L <= col("total") * 3L).as("kept"))
         .orderBy("doc_id")
     }),
 
+    // token-budget shard packing: document i goes to the shard where its
+    // FIRST token lands in the concatenated corpus token stream (docs may
+    // straddle a boundary; assignment is by start offset, the standard
+    // offset-index convention)
     "curate_pack_shards" -> ((s, dir) => {
-      packShards(s, dir)
+      // a contiguous doc_id block is a prefix of doc_id order
+      GlobalOrder.prefixBefore(withTokens(s, dir)
+          .withColumn("bucket", floor(col("doc_id") / blockSize)),
+        "bucket", Seq(col("doc_id")), col("tokens"))
+        .withColumn("shard",
+          floor(col("before").cast("double") / lit(budget.toDouble)))
         .groupBy("shard")
         .agg(count(lit(1)).as("n_docs"),
           sum("tokens").as("shard_tokens"),
@@ -334,27 +289,17 @@ object CurationQueries extends QueryGroup {
     // pseudo-random position (rank of its content-derived md5) — the
     // shuffle-before-sharding step of a training pipeline. Seedless and
     // content-derived, so retries/re-runs produce the identical
-    // permutation (an RNG-backed orderBy(rand()) would not). Same
-    // two-phase global-rank shape as packShards: positions within a hash
-    // bucket come from a PARTITIONED window; only the ≤256-row bucket
-    // offset table pays a global window. Because the bucket is the md5's
-    // first two hex chars, (bucket, h) order IS h order — the oracle is
-    // the naive single-window ROW_NUMBER over the whole corpus.
+    // permutation (an RNG-backed orderBy(rand()) would not). The oracle
+    // is the naive single-window ROW_NUMBER over the whole corpus.
     "curate_shuffle" -> ((s, dir) => {
       val d = Tables.scan(s, dir, "documents")
         .select(col("doc_id"),
           md5(col("doc_id").cast("string").cast("binary")).as("h"))
+        // the md5's first two hex chars are a prefix of h order
         .withColumn("bucket", substring(col("h"), 1, 2))
-      val wLocal = Window.partitionBy("bucket").orderBy("h", "doc_id")
-      val local = d.withColumn("local_rn", row_number().over(wLocal))
-      val wBucket = Window.orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = d.groupBy("bucket").agg(count(lit(1)).as("n"))
-        .withColumn("offset", coalesce(sum("n").over(wBucket), lit(0L)))
-        .select("bucket", "offset")
-      local.join(offsets, "bucket")
-        .select(col("doc_id"),
-          (col("offset") + col("local_rn") - 1).cast("long").as("pos"))
+      GlobalOrder.prefixBefore(d, "bucket", Seq(col("h"), col("doc_id")),
+          lit(1L))
+        .select(col("doc_id"), col("before").as("pos"))
         .orderBy("pos")
     }),
 
@@ -415,11 +360,7 @@ object CurationQueries extends QueryGroup {
     // only achieves in expectation; spec asserts it on real prefixes).
     // Within a language, docs arrive in the deterministic content-hash
     // shuffle order (the curate_shuffle discipline — seedless,
-    // retry-stable). Scale shape: rank-in-lang is a lang-PARTITIONED
-    // window; the global position reuses the two-phase prefix-sum trick
-    // with bucket = floor(vt) — per-lang density is p_l docs per unit
-    // vt, so a bucket holds ≤ ~|langs| rows no matter the corpus size,
-    // and only the thin bucket-offset table pays a global window. The
+    // retry-stable). Rank-in-lang is a lang-PARTITIONED window; the
     // oracle is the naive single-window ROW_NUMBER over vt.
     "curate_interleave" -> ((s, dir) => {
       // declared target mixture (sums to 1; en upweighted, the common
@@ -442,19 +383,14 @@ object CurationQueries extends QueryGroup {
         .select(col("doc_id"), col("lang"))
         .withColumn("rk", row_number().over(wLang).cast("long"))
         .withColumn("vt", col("rk").cast("double") / pCol)
+        // floor(vt) is a prefix of vt order; per-lang density is p_l docs
+        // per unit vt, so a bucket holds ≤ ~|langs| rows at any size
         .withColumn("bucket", floor(col("vt")))
         .localCheckpoint(true)
-      val wLocal = Window.partitionBy("bucket")
-        .orderBy("vt", "lang", "rk")
-      val local = d.withColumn("local_rn", row_number().over(wLocal))
-      val wBucket = Window.orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = d.groupBy("bucket").agg(count(lit(1)).as("n"))
-        .withColumn("offset", coalesce(sum("n").over(wBucket), lit(0L)))
-        .select("bucket", "offset")
-      local.join(offsets, "bucket")
+      GlobalOrder.prefixBefore(d, "bucket",
+          Seq(col("vt"), col("lang"), col("rk")), lit(1L))
         .select(col("doc_id"), col("lang"), col("rk"), col("vt"),
-          (col("offset") + col("local_rn") - 1).cast("long").as("pos"))
+          col("before").as("pos"))
         .orderBy("pos")
     }),
 
@@ -464,7 +400,7 @@ object CurationQueries extends QueryGroup {
     // open sequence while it fits, else close it and start a new one; an
     // oversize doc occupies a sequence alone. Packing is inherently a
     // sequential fold, so it runs WITHIN a doc_id block (the same
-    // [[blockSize]] geometry as packShards) — exactly how production
+    // [[blockSize]] geometry as curate_pack_shards) — exactly how production
     // packers work (each worker packs its own shard independently), which
     // makes the operator embarrassingly parallel: one shuffle keyed by
     // block, then a pure Catalyst higher-order `aggregate` fold over the

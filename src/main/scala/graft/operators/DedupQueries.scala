@@ -302,29 +302,20 @@ object DedupQueries extends QueryGroup {
     !r.isNullAt(0) && r.getLong(0).toDouble / r.getLong(1) >= 1.05
   }
 
-  /** The sorted-neighborhood GLOBAL RANK build (doc_id, rn) — the
-    * two-phase form every curation query uses: per-document positions
-    * from a window PARTITIONED by the key's 2-char prefix bucket (a
-    * PREFIX of the sort key, so bucket-local order composes to global
-    * order); only the ≤256-row bucket-count table pays a global window.
-    * Exposed uncached so PlanSpec can assert the window shape — the
-    * graded query consumes it through a localCheckpoint. */
+  /** The sorted-neighborhood global rank build (doc_id, rn), 1-based, as
+    * a [[GlobalOrder.prefixBefore]]. Exposed uncached so PlanSpec can
+    * assert the window shape — the graded query consumes it through a
+    * localCheckpoint. */
   private[graft] def sortedNeighborRank(
       s: SparkSession, dir: String): DataFrame = {
     val keyed = Tables.scanPar(s, dir, "documents")
       .select(col("doc_id"),
         substring(lower(trim(col("text"))), 1, 40).as("key"))
+      // the key's 2-char prefix is a prefix of key order
       .withColumn("bucket", substring(col("key"), 1, 2))
-    val wLocal = Window.partitionBy("bucket").orderBy("key", "doc_id")
-    val local = keyed.withColumn("local_rn", row_number().over(wLocal))
-    val wBucket = Window.orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = keyed.groupBy("bucket").agg(count(lit(1)).as("n"))
-      .withColumn("offset", coalesce(sum("n").over(wBucket), lit(0L)))
-      .select("bucket", "offset")
-    local.join(broadcast(offsets), "bucket")
-      .select(col("doc_id"),
-        (col("offset") + col("local_rn")).cast("long").as("rn"))
+    GlobalOrder.prefixBefore(keyed, "bucket", Seq(col("key"), col("doc_id")),
+        lit(1L))
+      .select(col("doc_id"), (col("before") + 1L).as("rn"))
   }
 
   private[graft] def sharedPairs(s: SparkSession, dir: String): DataFrame =

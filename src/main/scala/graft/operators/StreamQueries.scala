@@ -452,54 +452,27 @@ object StreamQueries extends QueryGroup {
             .otherwise(lit("RUNNING")))
       }
 
-  /** Two-phase global `ntile(k) - 1` over the total order (ts, event_id)
-    * — the feed fixtures' batch index — without the single-partition
-    * window a global ntile plans: `WindowExec` warns "No Partition
-    * Defined" and moves the whole slice to ONE task. Honest A/B (sf1,
-    * isolated, noop sink): old 2.96/0.76/0.66 s vs new 3.23/1.44/1.05 s
-    * for sess/join/late — the old form was NOT compute-bound at measured
+  /** `ntile(k) - 1` over the total order (ts, event_id) — the feed
+    * fixtures' batch index — as a [[GlobalOrder]] rank plus
+    * [[GlobalOrder.ntile0]]; event_id is unique, so the order is total.
+    * Honest A/B against the direct global ntile (sf1, isolated, noop
+    * sink): old 2.96/0.76/0.66 s vs new 3.23/1.44/1.05 s for
+    * sess/join/late — the old form was NOT compute-bound at measured
     * SFs (the 127 s `fixture:streamfeed:sess` window in the r17 sf1
     * sweep was the one-task stage starving under the concurrent prewarm
     * storm, an attribution artifact both forms show). The two-phase form
     * is kept for the SHAPE: a single-partition sort of the whole slice
-    * is a hard straggler at 10×+ this corpus and the one remaining
-    * corpus-sized global window in the repo. Same shape as
-    * [[DedupQueries.sortedNeighborRank]]: rank within hour buckets
-    * (date_trunc is a PREFIX of the event-time order, so bucket-local
-    * order composes to global order), add broadcast per-bucket offsets,
-    * and apply SQL NTILE arithmetic to the global row number — the first
-    * n%k tiles take ⌈n/k⌉ rows, the rest ⌊n/k⌋, exactly what NTile
-    * computes — so the assignment is bit-identical to
-    * `ntile(k).over(Window.orderBy(ts, event_id)) - 1` ((ts, event_id)
-    * is a total order: event_id is unique). Only the ≤span-hours bucket
-    * table still pays a global window. floor-over-double division is
-    * exact here: counts ≪ 2^53. FeedBatchEquivalenceSpec re-proves
-    * equality against the direct ntile on real corpus slices. */
-  private[graft] def twoPhaseNtile0(df: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bucketed = df.withColumn("_fb", date_trunc("hour", col("ts")))
-    val wLocal = Window.partitionBy("_fb").orderBy("ts", "event_id")
-    val wPrev = Window.orderBy("_fb")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.rowsBetween(
-      Window.unboundedPreceding, Window.unboundedFollowing)
-    val offsets = bucketed.groupBy("_fb").agg(count(lit(1)).as("_n"))
-      .withColumn("_off", coalesce(sum("_n").over(wPrev), lit(0L)))
-      .withColumn("_tot", sum("_n").over(wAll))
-      .select("_fb", "_off", "_tot")
-    val ranked = bucketed
-      .withColumn("_rn_local", row_number().over(wLocal))
-      .join(broadcast(offsets), "_fb")
-    val rn = col("_off") + col("_rn_local") // 1-based global row number
-    val q = floor(col("_tot") / lit(k)).cast("long")
-    val rem = col("_tot") % lit(k)
-    val boundary = rem * (q + lit(1L))
-    val tile0 = when(rn <= boundary, floor((rn - lit(1L)) / (q + lit(1L))))
-      .otherwise(rem +
-        floor((rn - boundary - lit(1L)) / greatest(q, lit(1L))))
-    ranked.withColumn("_tile0", tile0.cast("int"))
-      .drop("_fb", "_rn_local", "_off", "_tot")
-  }
+    * is a hard straggler at 10×+ this corpus. FeedBatchEquivalenceSpec
+    * re-proves equality against the direct ntile on real corpus
+    * slices. */
+  private[graft] def twoPhaseNtile0(df: DataFrame, k: Int): DataFrame =
+    // the hour of ts is a prefix of (ts, event_id) order
+    GlobalOrder.prefixBefore(
+        df.withColumn("_fb", date_trunc("hour", col("ts"))), "_fb",
+        Seq(col("ts"), col("event_id")), lit(1L))
+      .withColumn("_tile0",
+        GlobalOrder.ntile0(col("before") + 1L, col("total"), k).cast("int"))
+      .drop("_fb", "before", "total")
 
   /** ONE build for ALL three streaming-feed graded queries
     * (`stream_late_data`, `stream_append_mode`, `stream_session_live`):
@@ -630,6 +603,38 @@ object StreamQueries extends QueryGroup {
       // per-query start-time conf — a deployment starts the same join
       // at production width. StreamJoinPropertySpec re-proves the
       // contract across randomized batchings after this change.
+      // op 15 end to end: watermarked two-stream LEFT-OUTER interval
+      // join — matches emit when both sides have arrived; an
+      // unmatched left row null-pads only once the GLOBAL watermark
+      // (min of both sources' ratcheting watermarks, the default
+      // multipleWatermarkPolicy) passes the end of its 2-hour match
+      // window and the state store evicts it
+      val qJ = graft.StartGate.withConf(s,
+          "spark.sql.shuffle.partitions" -> "2") {
+        val l = inJL.toDS()
+          .select(col("ts").as("l_ts"), col("user_id"),
+            col("eid").as("l_eid"))
+          .withWatermark("l_ts", "12 hours")
+        val r = inJR.toDS()
+          .select(col("ts").as("r_ts"), col("user_id").as("r_uid"),
+            col("eid").as("r_eid"))
+          .withWatermark("r_ts", "12 hours")
+        l.join(r,
+          expr("""user_id = r_uid AND
+                 |r_ts >= l_ts AND r_ts <= l_ts + interval 2 hours"""
+            .stripMargin),
+          "left_outer")
+          .select(col("user_id"), col("l_eid"), col("l_ts"),
+            col("r_ts"), col("r_eid"))
+          .writeStream.format("memory")
+          .option("checkpointLocation", ck("join"))
+          .queryName("graft_stream_join")
+          .outputMode(OutputMode.Append).start()
+      }
+      def lateAgg(in: MemoryStream[LateFeedEvent]) = in.toDS()
+        .withWatermark("ts", "12 hours")
+        .groupBy(window(col("ts"), "1 day"), col("event_type"))
+        .agg(count(lit(1)).as("cnt"))
       // The aggregation queries run width 4 (r16: state is event-types ×
       // days / users × sessions — a few hundred keys at the bench SF, so
       // 8 partitions were commit fan-out, not parallelism; each flush
@@ -637,60 +642,25 @@ object StreamQueries extends QueryGroup {
       // batch — making the per-trigger commit count the feed's wall
       // clock). Results are width-independent; a deployment sizes this
       // at query start like any state width.
-      val (qJ, qU, qA, qS) = graft.StartGate.locked {
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "2")
-          // op 15 end to end: watermarked two-stream LEFT-OUTER interval
-          // join — matches emit when both sides have arrived; an
-          // unmatched left row null-pads only once the GLOBAL watermark
-          // (min of both sources' ratcheting watermarks, the default
-          // multipleWatermarkPolicy) passes the end of its 2-hour match
-          // window and the state store evicts it
-          val qJ = {
-            val l = inJL.toDS()
-              .select(col("ts").as("l_ts"), col("user_id"),
-                col("eid").as("l_eid"))
-              .withWatermark("l_ts", "12 hours")
-            val r = inJR.toDS()
-              .select(col("ts").as("r_ts"), col("user_id").as("r_uid"),
-                col("eid").as("r_eid"))
-              .withWatermark("r_ts", "12 hours")
-            l.join(r,
-              expr("""user_id = r_uid AND
-                     |r_ts >= l_ts AND r_ts <= l_ts + interval 2 hours"""
-                .stripMargin),
-              "left_outer")
-              .select(col("user_id"), col("l_eid"), col("l_ts"),
-                col("r_ts"), col("r_eid"))
-              .writeStream.format("memory")
-              .option("checkpointLocation", ck("join"))
-              .queryName("graft_stream_join")
-              .outputMode(OutputMode.Append).start()
-          }
-          s.conf.set("spark.sql.shuffle.partitions", "4")
-          def lateAgg(in: MemoryStream[LateFeedEvent]) = in.toDS()
-            .withWatermark("ts", "12 hours")
-            .groupBy(window(col("ts"), "1 day"), col("event_type"))
-            .agg(count(lit(1)).as("cnt"))
-          val qU = lateAgg(inU).writeStream.format("memory")
-            .option("checkpointLocation", ck("late"))
-            .queryName("graft_stream_late")
-            .outputMode(OutputMode.Update).start()
-          val qA = lateAgg(inA).writeStream.format("memory")
-            .option("checkpointLocation", ck("append"))
-            .queryName("graft_stream_append")
-            .outputMode(OutputMode.Append).start()
-          val qS = inS.toDS()
-            .withWatermark("ts", "12 hours")
-            .groupBy(session_window(col("ts"), "4 hours"), col("user_id"))
-            .agg(count(lit(1)).as("n"))
-            .writeStream.format("memory")
-            .option("checkpointLocation", ck("session"))
-            .queryName("graft_stream_session")
-            .outputMode(OutputMode.Append).start()
-          (qJ, qU, qA, qS)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val (qU, qA, qS) = graft.StartGate.withConf(s,
+          "spark.sql.shuffle.partitions" -> "4") {
+        val qU = lateAgg(inU).writeStream.format("memory")
+          .option("checkpointLocation", ck("late"))
+          .queryName("graft_stream_late")
+          .outputMode(OutputMode.Update).start()
+        val qA = lateAgg(inA).writeStream.format("memory")
+          .option("checkpointLocation", ck("append"))
+          .queryName("graft_stream_append")
+          .outputMode(OutputMode.Append).start()
+        val qS = inS.toDS()
+          .withWatermark("ts", "12 hours")
+          .groupBy(session_window(col("ts"), "4 hours"), col("user_id"))
+          .agg(count(lit(1)).as("n"))
+          .writeStream.format("memory")
+          .option("checkpointLocation", ck("session"))
+          .queryName("graft_stream_session")
+          .outputMode(OutputMode.Append).start()
+        (qU, qA, qS)
       }
       try {
         def drainLate(): Unit = {

@@ -340,4 +340,15 @@ class AggContractsSpec extends SparkSpec {
     assert(mults.head > 1.0 && mults.last < 1.0,
       "the smallest language must up-sample and the largest down-sample")
   }
+
+  test("agg_equidepth on an empty lineitem fails its row-count guard, " +
+      "not on the null bounds") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty-li")
+    Tables.scan(spark, sfDir, "lineitem").limit(0)
+      .write.parquet(s"$dir/lineitem.parquet")
+    val e = intercept[IllegalArgumentException] {
+      AggQueries.queries("agg_equidepth")(spark, dir.toString)
+    }
+    assert(e.getMessage.contains("got 0"), e.getMessage)
+  }
 }

@@ -217,12 +217,12 @@ class PlanSpec extends SparkSpec {
     assert(windows.size == 2, s"expected local + bucket windows:\n$plan")
     val (global, partitioned) = windows.partition(_.partitionSpec.isEmpty)
     // exactly one window runs unpartitioned — and it must be the one over
-    // the per-bucket subtotals (its frame sums `btot`), never the
+    // the per-bucket subtotals (its frame sums `n`), never the
     // corpus-sized per-document window (which sums raw `tokens` and must
     // be partitioned by bucket)
     assert(global.size == 1 && partitioned.size == 1,
       s"one global (bucket subtotals) + one partitioned window:\n$plan")
-    assert(global.head.windowExpression.mkString.contains("btot"),
+    assert(global.head.windowExpression.mkString.contains("n#"),
       s"the global window must be over bucket subtotals only:\n$plan")
     assert(partitioned.head.partitionSpec.mkString.contains("bucket"),
       s"the per-document window must be partitioned by bucket:\n$plan")
@@ -773,9 +773,9 @@ class PlanSpec extends SparkSpec {
     // rank must be partitioned by the value bucket
     assert(global.size == 1 && partitioned.size == 1,
       s"one global (bucket offsets) + one partitioned (rank) window:\n$plan")
-    // the offset window's expression sums the bucket COUNTS (c), never a
+    // the offset window's expression sums the bucket COUNTS (n), never a
     // corpus column (y) — plan names the output _we0, so match the input
-    assert(global.head.windowExpression.mkString.contains("sum(c#"),
+    assert(global.head.windowExpression.mkString.contains("sum(n#"),
       s"the global window must compute the bucket offsets only:\n$plan")
     assert(partitioned.head.partitionSpec.mkString.startsWith("b#"),
       s"the rank window must be partitioned by the value bucket:\n$plan")
