@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 
 /** The hash-bucket commit protocol shared by [[Sinks.upsertByKey]] and
   * [[BucketedJoinView]]: one hive partition directory per
@@ -57,6 +57,22 @@ private[streaming] object BucketCommit {
       try out.write(nBuckets.toString.getBytes("UTF-8")) finally out.close()
     }
   }
+
+  /** Stage one batch's merge of its touched buckets: `rows` (the stored
+    * rows of those buckets ∪ the batch's rows, all carrying `_bucket`)
+    * cross ONE exchange, on `_bucket`, then `merge`, then a
+    * `partitionBy("_bucket")` write under `dir`. The exchange puts each
+    * bucket in one task, so the write emits one file per bucket instead
+    * of fanning every task across every bucket directory (tasks × buckets
+    * tiny files — measured 4× the whole publish cost at sf0.1). The
+    * bucket is a function of the key, so a `merge` that groups or windows
+    * by (`_bucket`, key…) is already clustered by that exchange and adds
+    * none: the stored state moves once per batch. */
+  def stage(rows: DataFrame, dir: Path)(
+      merge: DataFrame => DataFrame): Unit =
+    merge(rows.repartition(col("_bucket")))
+      .write.mode(SaveMode.Overwrite).partitionBy("_bucket")
+      .parquet(dir.toString)
 
   /** Swap the staged buckets into the live tree. */
   def publish(fs: FileSystem, root: Path, stage: Path, buckets: Seq[Int],

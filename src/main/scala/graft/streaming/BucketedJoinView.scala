@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** [[IncrementalJoinView]] with HASH-BUCKETED key state — the storage
   * layout its Scaladoc names as the 100 TB swap-out: instead of
@@ -105,14 +105,14 @@ object BucketedJoinView {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
-      val fA = Future(stageBuckets(spark, fs, s"$path/A", aPrev,
+      val fA = Future(stageBuckets(fs, s"$path/A", aPrev,
         dA.select(col("k"), col("d_cents"), col("d_rows"), col("_bucket")),
         Seq("k"), Seq("cents" -> "d_cents", "rows" -> "d_rows"),
-        col("cents") =!= 0L || col("rows") =!= 0L, touchedA, batchId, nBuckets))
-      val fB = Future(stageBuckets(spark, fs, s"$path/B", bPrev,
+        col("cents") =!= 0L || col("rows") =!= 0L, touchedA, batchId))
+      val fB = Future(stageBuckets(fs, s"$path/B", bPrev,
         dB.select(col("k"), col("seg"), col("d_m"), col("_bucket")),
         Seq("k", "seg"), Seq("m" -> "d_m"),
-        col("m") =!= 0L, touchedB, batchId, nBuckets))
+        col("m") =!= 0L, touchedB, batchId))
 
       if (!wCommitted) {
         // W from the PRE-batch states (all markers < batchId here — a
@@ -158,11 +158,11 @@ object BucketedJoinView {
     * excluded from the returned `toApply`, and the rows feeding the
     * merge are filtered to the pre-batch buckets only. Returns None when
     * every touched bucket was already committed by a crashed attempt. */
-  private def stageBuckets(spark: SparkSession, fs: FileSystem,
-      root: String, prevAll: DataFrame, delta: DataFrame, keys: Seq[String],
+  private def stageBuckets(fs: FileSystem, root: String,
+      prevAll: DataFrame, delta: DataFrame, keys: Seq[String],
       cols: Seq[(String, String)],
       live: org.apache.spark.sql.Column,
-      touchedBuckets: Seq[Int], batchId: Long, nBuckets: Int)
+      touchedBuckets: Seq[Int], batchId: Long)
       : Option[(Seq[Int], Path)] = {
     // replay filter: a bucket whose marker already reached batchId was
     // committed by the crashed attempt — its merge must not re-run
@@ -175,17 +175,20 @@ object BucketedJoinView {
     if (toApply.isEmpty) return None
     def inApply(df: DataFrame) =
       df.filter(col("_bucket").isin(toApply.map(Int.box): _*))
-    // recompute the bucket from the key (the hash is stable) rather than
-    // thread it through the outer merge's null-padding; one staged file
-    // per bucket (hash-colocate THEN partitionBy — the Sinks layout)
-    val out = SignedDelta.merge(Some(inApply(prevAll).drop("_bucket")),
-        inApply(delta).drop("_bucket"), keys, cols)
-      .filter(live)
-      .withColumn("_bucket", BucketCommit.bucketOf(col(keys.head), nBuckets))
+    // the additive merge as one sum per (bucket, key) over prev ∪ delta —
+    // each side holds a key at most once — so it shares the Sinks layout's
+    // single exchange on the bucket (a full outer join on (bucket, key)
+    // would shuffle both sides on all its keys, then again for the write)
+    val ids = ("_bucket" +: keys).map(col)
+    val sums = cols.map { case (o, _) => coalesce(sum(o), lit(0L)).as(o) }
     val stage = new Path(root + s".stage-$batchId")
-    out.repartition(col("_bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("_bucket")
-      .parquet(stage.toString)
+    BucketCommit.stage(
+      inApply(prevAll).select(ids ++ cols.map { case (o, _) => col(o) }: _*)
+        .unionByName(inApply(delta)
+          .select(ids ++ cols.map { case (o, d) => col(d).as(o) }: _*)),
+      stage) {
+      _.groupBy(ids: _*).agg(sums.head, sums.tail: _*).filter(live)
+    }
     Some((toApply, stage))
   }
 
@@ -259,11 +262,9 @@ object BucketedJoinView {
 
     val tmp = new Path(dst + ".inprogress")
     fs.delete(tmp, true)
-    def rewrite(df: DataFrame, side: String): Unit =
-      df.withColumn("_bucket", BucketCommit.bucketOf(col("k"), newNBuckets))
-        .repartition(col("_bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("_bucket")
-        .parquet(new Path(tmp, side).toString)
+    def rewrite(df: DataFrame, side: String): Unit = BucketCommit.stage(
+      df.withColumn("_bucket", BucketCommit.bucketOf(col("k"), newNBuckets)),
+      new Path(tmp, side))(identity)
     rewrite(a, "A")
     rewrite(b, "B")
     wIds.lastOption.foreach { last =>

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Sink layer (SURVEY.md §2.A A7-A11): the Spark stand-ins for the
   * reference's declared sink fan-out — Elasticsearch (enriched docs,
@@ -29,14 +29,19 @@ object Sinks {
     *      only driver-side collect, bounded by the bucket count, never by
     *      data volume);
     *   2. reads ONLY those buckets back (partition pruning on `_bucket`);
-    *   3. merges batch rows in by (key, max ordering) — replays and
-    *      out-of-order events are no-ops, so the sink stays idempotent
-    *      under at-least-once delivery;
-    *   4. rewrites ONLY the touched buckets: staged, then swapped in by
+    *   3. merges batch rows in by (key, max ordering), a batch row winning
+    *      a tie with its stored row — replays and out-of-order events are
+    *      no-ops, so the sink stays idempotent under at-least-once
+    *      delivery. The merge runs behind ONE exchange, on `_bucket`:
+    *      the bucket is a function of the key, so that partitioning
+    *      already clusters the per-key ranking ([[BucketCommit.stage]]);
+    *   4. rewrites ONLY the touched buckets from that same partitioning
+    *      (one part file per bucket): staged, then swapped in by
     *      [[BucketCommit]]'s rename commit; untouched buckets are never
     *      read or written.
-    * Per-batch I/O is O(state in touched buckets), not O(total state) —
-    * the property that survives unbounded state growth; at 100 TB
+    * Per-batch I/O is O(state in touched buckets), not O(total state),
+    * and that state is shuffled once — the property that survives
+    * unbounded state growth; at 100 TB
     * `nBuckets` scales with state size exactly like ES shards / Redis
     * hash slots in the reference (ES sized 3+5 nodes × 1 Ti,
     * values-prod.yaml:22-28).
@@ -101,19 +106,17 @@ object Sinks {
             spark.read.parquet(path)
               .filter(col("_bucket").isin(touched.map(Int.box): _*))
           else bucketed.limit(0)
-        val w = Window.partitionBy(key).orderBy(col(orderingCol).desc)
-        val merged = existing.unionByName(bucketed)
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1).drop("_rn")
-        // repartition ON THE BUCKET first: a partitionBy write fans every
-        // upstream task across every bucket directory (tasks × buckets tiny
-        // files per publish — measured 4× the whole publish cost at sf0.1);
-        // hash-colocating each bucket into one task writes one file per
-        // bucket, the ES-segment-like layout the reader wants
+        // latest row per key; on an ordering tie the batch row wins (a
+        // delete rewritten at its row's source position must replace the
+        // stored row, and a replayed row equals the stored one)
+        val w = Window.partitionBy(col("_bucket"), col(key))
+          .orderBy(col(orderingCol).desc, col("_src").desc)
         val stage = new Path(path + s".stage-$batchId")
-        merged.repartition(col("_bucket"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("_bucket").parquet(stage.toString)
+        BucketCommit.stage(existing.withColumn("_src", lit(0))
+            .unionByName(bucketed.withColumn("_src", lit(1))), stage) {
+          _.withColumn("_rn", row_number().over(w))
+            .filter(col("_rn") === 1).drop("_rn", "_src")
+        }
         // commit: the shared displace-then-publish swap (BucketCommit) —
         // no markers, because this merge is idempotent: a replayed batch
         // (same batchId) re-merges to the identical bucket contents.
@@ -158,11 +161,9 @@ object Sinks {
     BucketCommit.recover(fs, src)
     val tmp = new Path(dst + ".inprogress")
     fs.delete(tmp, true)
-    readState(spark, src)
-      .withColumn("_bucket", BucketCommit.bucketOf(col(key), newNBuckets))
-      .repartition(col("_bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("_bucket")
-      .parquet(tmp.toString)
+    BucketCommit.stage(readState(spark, src)
+      .withColumn("_bucket", BucketCommit.bucketOf(col(key), newNBuckets)),
+      tmp)(identity)
     BucketCommit.pinGeometry(fs, tmp.toString, newNBuckets)
     val parent = dstPath.getParent
     if (parent != null && !fs.exists(parent)) fs.mkdirs(parent)

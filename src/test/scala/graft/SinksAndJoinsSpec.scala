@@ -115,6 +115,22 @@ class SinksAndJoinsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("upsertBatch: on an ordering tie the batch row beats the stored row " +
+    "(a delete rewritten at its row's position), and its replay is a no-op") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_tiesink").toString + "/t"
+    val keys = 1L to 20L
+    def state() = Sinks.readState(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    Sinks.upsertBatch(keys.map(k => (k, 10L, false)).toDF("k", "lsn", "deleted"),
+      0L, dir, "k", "lsn", 4)
+    val deletes = keys.map(k => (k, 10L, true)).toDF("k", "lsn", "deleted")
+    Sinks.upsertBatch(deletes, 1L, dir, "k", "lsn", 4)
+    assert(state() == keys.map(k => (k, 10L, true)).toSet)
+    Sinks.upsertBatch(deletes, 1L, dir, "k", "lsn", 4)
+    assert(state() == keys.map(k => (k, 10L, true)).toSet)
+  }
+
   test("upsertBatch recovers a crash between displace and publish " +
     "(bucket in trash, missing from live) without losing state") {
     import spark.implicits._
