@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -61,13 +60,7 @@ object Bench {
     // runtime re-planning pays exactly when exchanges are big enough to
     // have skew/coalesce decisions worth making.
     val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "false")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt, shuffle.toInt, Some(aqe.toBoolean))
     // concurrent warm-start of the shared builds (kicked inside the first
     // query's timed window each rep — see graft.Prewarm). Full-suite runs
     // only (same guard as Verify): a SPARK_GRAFT_ONLY profiling subset

@@ -217,10 +217,4 @@ private[graft] object BoundedDfCache {
     // graded build set
     Prewarm.reset()
   }
-
-  /** Unpersist and evict EVERY entry, fixtures included. */
-  def clearAll(): Unit = entries.synchronized {
-    entries.valuesIterator.foreach(df => scala.util.Try(df.unpersist()))
-    entries.clear()
-  }
 }

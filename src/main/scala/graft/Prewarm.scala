@@ -64,11 +64,10 @@ object Prewarm {
   // shuffle partitions each) don't swamp the cores the foreground query
   // is using. Sized to the session's core count (the driver also runs
   // the bench at lower core counts; a fixed-width pool would
-  // oversubscribe those), overridable for local A/B profiling. Tasks
-  // beyond the pool width queue in weight order.
+  // oversubscribe those). Tasks beyond the pool width queue in weight
+  // order.
   private def poolWidth(s: SparkSession): Int =
-    sys.env.get("SPARK_GRAFT_PREWARM_THREADS").map(_.toInt).getOrElse(
-      math.max(2, math.min(8, s.sparkContext.defaultParallelism / 4)))
+    math.max(2, math.min(8, s.sparkContext.defaultParallelism / 4))
 
   private var pool: java.util.concurrent.ExecutorService = null
 

@@ -493,37 +493,31 @@ object CdcQueries extends QueryGroup {
       // per-batch overhead that dominated this query's bench time.
       val chunk = math.max(1L, math.min(65536L, total / 2 + 1)).toInt
       locally {
-        implicit val sqlCtx = s.sqlContext
-        val sinkName = "graft_tws_compact"
-        s.catalog.dropTempView(sinkName)
-        val in = MemoryStream[KeyedChange]
-        // provider and state-store count are pinned at START (start()
-        // clones the session for the stream's lifetime), so the
-        // session-wide sets cover only this gated section — concurrent
-        // warm-start pipelines can no longer catch the RocksDB provider
-        // or have their width restore interleave with this one.
-        // Width 4 (r16 A/B: 8→4 measured 2.63→2.00 s, 4→2 regressed to
-        // 2.31 — commit fan-out vs per-store work crosses over): a
-        // stateful query's state-store count is sized to the STATE
-        // volume, not the session's analytic shuffle width — every
-        // instance is a live RocksDB opened+committed per micro-batch.
-        // A production deployment makes the same call per stateful job
-        // (state partitions ≈ state size / target store size).
+        // The stream runs on its own session clone with the RocksDB
+        // provider and state width 4 (r16 A/B: 8→4 measured 2.63→2.00 s,
+        // 4→2 regressed to 2.31 — commit fan-out vs per-store work
+        // crosses over): a stateful query's state-store count is sized
+        // to the STATE volume, not the session's analytic shuffle width
+        // — every instance is a live RocksDB opened+committed per
+        // micro-batch. A production deployment makes the same call per
+        // stateful job (state partitions ≈ state size / target store
+        // size).
         // NOT set: rocksdb.changelogCheckpointing (r17 A/B, 5-rep
         // subset min: 2.41 → 2.75 s WITH changelog on) — with 2
         // micro-batches × 4 tiny stores the full snapshot per commit
         // is already small and the changelog layer is pure extra
         // bookkeeping; at production state sizes (GB-scale stores,
         // many batches) it is the right flag, here it measures worse
-        val q = graft.StartGate.withConf(s,
-            "spark.sql.streaming.stateStore.providerClass" ->
-              ("org.apache.spark.sql.execution.streaming.state." +
-                "RocksDBStateStoreProvider"),
-            "spark.sql.shuffle.partitions" -> "4") {
-          TwsCompaction.compact(in.toDS())
-            .writeStream.format("memory").queryName(sinkName)
-            .outputMode(OutputMode.Update).start()
-        }
+        val c = graft.Sessions.scoped(s,
+          "spark.sql.streaming.stateStore.providerClass" ->
+            ("org.apache.spark.sql.execution.streaming.state." +
+              "RocksDBStateStoreProvider"),
+          "spark.sql.shuffle.partitions" -> "4")
+        val sinkName = "graft_tws_compact"
+        val in = MemoryStream[KeyedChange](c)
+        val q = TwsCompaction.compact(in.toDS())
+          .writeStream.format("memory").queryName(sinkName)
+          .outputMode(OutputMode.Update).start()
         try {
           import scala.jdk.CollectionConverters._
           keyed.toLocalIterator().asScala.grouped(chunk).foreach {
@@ -532,7 +526,7 @@ object CdcQueries extends QueryGroup {
         } finally q.stop()
         // fold Update-mode emissions to final state: max (lsn, deleted)
         // per key — the processor's own rank — then drop deleted keys
-        s.table(sinkName)
+        c.table(sinkName)
           .groupBy(col("key"))
           .agg(max(struct(col("lsn"), col("deleted"), col("payload")))
             .as("st"))
@@ -1045,20 +1039,15 @@ object CdcQueries extends QueryGroup {
     * per-tag-latch cache builds distinct tags in parallel; a sibling's
     * failure is only logged here — its own query retries the build and
     * raises it, so fault isolation in the gate is unchanged.
-    * cdc_compact_tws stays OUTSIDE the group: it swaps the session-wide
-    * state-store provider to RocksDB for its own run, which must not
-    * race other queries' starts. Shuffle width 8 across the block; the
-    * bodies' own set/restore of the same conf is benign under the
-    * wrapper (every writer writes 8). */
+    * The batch stages that feed the streams run at the session's width;
+    * the two streaming pipelines start on their own
+    * [[graft.Sessions.scoped]] clones at state width 8, so nothing here
+    * writes the session's conf. */
   private[graft] def standing(
       s: SparkSession, dir: String, which: String): DataFrame = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    // batch stages run at ambient width (the bench session is width 8);
-    // the two streaming pipelines pin their state width inside their own
-    // StartGate sections — the old group-wide session set/restore raced
-    // the concurrent warm-start's other groups
     locally {
       // shared inputs resolved BEFORE the futures spawn (the ivmViews
       // discipline): they are consumed by other queries too, so their
@@ -1154,17 +1143,12 @@ object CdcQueries extends QueryGroup {
     // bounded scalar: sizes the chunks so every sf feeds ~4 batches
     val chunk = math.max(1L, (rows.count() + 3) / 4).toInt
     locally {
-      implicit val sqlCtx = s.sqlContext
-      val in = MemoryStream[WarehouseFeedRow]
-      // state width 8 is pinned at START (start() clones the session for
-      // the stream's lifetime), so the session-wide set only needs to
-      // cover the start — gated so concurrent pipeline starts can't
-      // interleave their set/restore pairs
-      val q = graft.StartGate.withConf(s,
-          "spark.sql.shuffle.partitions" -> "8") {
-        Sinks.appendWarehouse(in.toDF(), s"$tmp/data",
-          s"$tmp/ckpt", "month", interval = "0 seconds").start()
-      }
+      // the stream's state width is 8 on its own session clone, whatever
+      // the session's analytic width
+      val c = graft.Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "8")
+      val in = MemoryStream[WarehouseFeedRow](c)
+      val q = Sinks.appendWarehouse(in.toDF(), s"$tmp/data",
+        s"$tmp/ckpt", "month", interval = "0 seconds").start()
       try {
         import scala.jdk.CollectionConverters._
         rows.toLocalIterator().asScala.grouped(chunk).foreach { b =>
@@ -1202,27 +1186,22 @@ object CdcQueries extends QueryGroup {
       .as[TxnFeedEvent].sort("txid")
     val nTx = meta.count() // bounded scalar: the await target
     locally {
-      implicit val sqlCtx = s.sqlContext
-      val sinkName = "graft_txn_apply_evict"
-      s.catalog.dropTempView(sinkName)
-      val in = MemoryStream[TxnFeedEvent]
       // state-store count follows state volume, not analytic width —
-      // same per-stateful-job sizing call as cdc_compact_tws. Width 8 is
-      // pinned at START, so the session-wide set covers only the gated
-      // start section (see buildSinkWarehouse).
-      val q = graft.StartGate.withConf(s,
-          "spark.sql.shuffle.partitions" -> "8") {
-        TxnApply(in.toDS(),
-            replayWindowMs = Some(TxnApply.DefaultReplayWindowMs))
-          .writeStream
-          // eviction mode schedules data-less timeout batches forever,
-          // so processAllAvailable never returns — poll the sink under a
-          // sane trigger interval instead (the operator's caller
-          // contract)
-          .trigger(Trigger.ProcessingTime("100 milliseconds"))
-          .format("memory").queryName(sinkName)
-          .outputMode(OutputMode.Update).start()
-      }
+      // same per-stateful-job sizing call as cdc_compact_tws: width 8 on
+      // the stream's own session clone
+      val c = graft.Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "8")
+      val sinkName = "graft_txn_apply_evict"
+      val in = MemoryStream[TxnFeedEvent](c)
+      val q = TxnApply(in.toDS(),
+          replayWindowMs = Some(TxnApply.DefaultReplayWindowMs))
+        .writeStream
+        // eviction mode schedules data-less timeout batches forever,
+        // so processAllAvailable never returns — poll the sink under a
+        // sane trigger interval instead (the operator's caller
+        // contract)
+        .trigger(Trigger.ProcessingTime("100 milliseconds"))
+        .format("memory").queryName(sinkName)
+        .outputMode(OutputMode.Update).start()
       def await(cond: => Boolean, what: String): Unit = {
         val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
         while (!cond) {
@@ -1244,7 +1223,7 @@ object CdcQueries extends QueryGroup {
         endFeed.toLocalIterator().asScala.grouped(65536).foreach {
           b => in.addData(b.toIndexedSeq: _*)
         }
-        await(s.table(sinkName).count() >= nTx, s"$nTx applied txns")
+        await(c.table(sinkName).count() >= nTx, s"$nTx applied txns")
         // redelivery in a strictly later batch (added only after every
         // apply was observed): data replays dedup against tombstones,
         // replayed ENDs hit the applied branch — all no-ops
@@ -1253,11 +1232,20 @@ object CdcQueries extends QueryGroup {
             scala.util.Try(p.sources.head.endOffset.trim.toLong)
               .getOrElse(-1L) >= target),
           "the replay batch to be consumed")
-        require(s.table(sinkName).count() == nTx,
+        require(c.table(sinkName).count() == nTx,
           "in-window replay re-applied a transaction — the applied " +
             "tombstone (or its eviction re-arm) is broken")
-      } finally q.stop()
-      s.table(sinkName)
+      } finally {
+        // stop between triggers: a stop inside a running eviction batch
+        // aborts its state-store commit (CANNOT_COMMIT logged per store).
+        // Bounded — the result is already read, so at worst the stop
+        // lands mid-batch as before.
+        val patience = System.nanoTime() + 10L * 1000 * 1000 * 1000
+        while (q.status.isTriggerActive && System.nanoTime() < patience)
+          Thread.sleep(5)
+        q.stop()
+      }
+      c.table(sinkName)
         .select(col("txid"), col("event_count"), col("min_lsn"),
           col("max_lsn"))
         .orderBy("txid")

@@ -565,15 +565,10 @@ object StreamQueries extends QueryGroup {
         .select(col("_tile0").as("batch"), col("ts"), col("user_id"),
           col("event_id"), col("is_left"))
     }
-    // fixture reads/drain bookkeeping run at ambient width (the bench
-    // session is width 8); the four streaming queries pin their state
-    // widths inside the gated start section below — the old build-wide
-    // session set/restore raced the concurrent warm-start's other groups
+    // fixture reads and drain bookkeeping run at the session's width;
+    // the four streaming queries start on session clones that carry
+    // their state widths (below)
     locally {
-      implicit val sqlCtx = s.sqlContext
-      Seq("graft_stream_late", "graft_stream_append",
-        "graft_stream_session", "graft_stream_join")
-        .foreach(s.catalog.dropTempView)
       // replay-feed checkpoints are pure commit-protocol scratch (a
       // MemoryStream cannot recover from one), so they live on tmpfs
       // when available; wiped up front because a leftover dir from a
@@ -583,25 +578,16 @@ object StreamQueries extends QueryGroup {
       scala.reflect.io.Directory(
         scala.reflect.io.Path(ckRoot).toDirectory).deleteRecursively()
       def ck(name: String): String = new java.io.File(ckRoot, name).toString
-      val inU = MemoryStream[LateFeedEvent]
-      val inA = MemoryStream[LateFeedEvent]
-      val inS = MemoryStream[SessionFeedEvent]
-      val inJL = MemoryStream[JoinFeedEvent]
-      val inJR = MemoryStream[JoinFeedEvent]
-      // State widths are pinned at START (start() clones the session for
-      // the stream's lifetime), so the session-wide sets cover only this
-      // gated section (concurrent pipeline starts can't interleave their
-      // set/restore pairs).
-      // The JOIN query starts first, under width-2 state (r16 trim of
-      // the stream:feeds tag): its per-trigger fixed cost is 4
+      // The JOIN query runs on its own clone at state width 2 (r16 trim
+      // of the stream:feeds tag): its per-trigger fixed cost is 4
       // state-store commits × state partitions × 2 batches per flush,
       // and its state volume at the bench SF is a few hundred keys —
       // so 8 partitions were pure commit overhead. Width 2 preserves
       // every graded property: pairs matching/evicting ACROSS batch
       // cuts is a property of the ntile(3) BATCHING (PLANS.md r15
       // note), not of the state fan-out, and state width is a
-      // per-query start-time conf — a deployment starts the same join
-      // at production width. StreamJoinPropertySpec re-proves the
+      // per-query conf — a deployment starts the same join at
+      // production width. StreamJoinPropertySpec re-proves the
       // contract across randomized batchings after this change.
       // op 15 end to end: watermarked two-stream LEFT-OUTER interval
       // join — matches emit when both sides have arrived; an
@@ -609,59 +595,60 @@ object StreamQueries extends QueryGroup {
       // (min of both sources' ratcheting watermarks, the default
       // multipleWatermarkPolicy) passes the end of its 2-hour match
       // window and the state store evicts it
-      val qJ = graft.StartGate.withConf(s,
-          "spark.sql.shuffle.partitions" -> "2") {
-        val l = inJL.toDS()
-          .select(col("ts").as("l_ts"), col("user_id"),
-            col("eid").as("l_eid"))
-          .withWatermark("l_ts", "12 hours")
-        val r = inJR.toDS()
-          .select(col("ts").as("r_ts"), col("user_id").as("r_uid"),
-            col("eid").as("r_eid"))
-          .withWatermark("r_ts", "12 hours")
-        l.join(r,
+      val cJ = graft.Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "2")
+      val inJL = MemoryStream[JoinFeedEvent](cJ)
+      val inJR = MemoryStream[JoinFeedEvent](cJ)
+      val l = inJL.toDS()
+        .select(col("ts").as("l_ts"), col("user_id"),
+          col("eid").as("l_eid"))
+        .withWatermark("l_ts", "12 hours")
+      val r = inJR.toDS()
+        .select(col("ts").as("r_ts"), col("user_id").as("r_uid"),
+          col("eid").as("r_eid"))
+        .withWatermark("r_ts", "12 hours")
+      val qJ = l.join(r,
           expr("""user_id = r_uid AND
                  |r_ts >= l_ts AND r_ts <= l_ts + interval 2 hours"""
             .stripMargin),
           "left_outer")
-          .select(col("user_id"), col("l_eid"), col("l_ts"),
-            col("r_ts"), col("r_eid"))
-          .writeStream.format("memory")
-          .option("checkpointLocation", ck("join"))
-          .queryName("graft_stream_join")
-          .outputMode(OutputMode.Append).start()
-      }
+        .select(col("user_id"), col("l_eid"), col("l_ts"),
+          col("r_ts"), col("r_eid"))
+        .writeStream.format("memory")
+        .option("checkpointLocation", ck("join"))
+        .queryName("graft_stream_join")
+        .outputMode(OutputMode.Append).start()
       def lateAgg(in: MemoryStream[LateFeedEvent]) = in.toDS()
         .withWatermark("ts", "12 hours")
         .groupBy(window(col("ts"), "1 day"), col("event_type"))
         .agg(count(lit(1)).as("cnt"))
-      // The aggregation queries run width 4 (r16: state is event-types ×
-      // days / users × sessions — a few hundred keys at the bench SF, so
-      // 8 partitions were commit fan-out, not parallelism; each flush
-      // commits every store twice — data batch + watermark-advance
-      // batch — making the per-trigger commit count the feed's wall
-      // clock). Results are width-independent; a deployment sizes this
-      // at query start like any state width.
-      val (qU, qA, qS) = graft.StartGate.withConf(s,
-          "spark.sql.shuffle.partitions" -> "4") {
-        val qU = lateAgg(inU).writeStream.format("memory")
-          .option("checkpointLocation", ck("late"))
-          .queryName("graft_stream_late")
-          .outputMode(OutputMode.Update).start()
-        val qA = lateAgg(inA).writeStream.format("memory")
-          .option("checkpointLocation", ck("append"))
-          .queryName("graft_stream_append")
-          .outputMode(OutputMode.Append).start()
-        val qS = inS.toDS()
-          .withWatermark("ts", "12 hours")
-          .groupBy(session_window(col("ts"), "4 hours"), col("user_id"))
-          .agg(count(lit(1)).as("n"))
-          .writeStream.format("memory")
-          .option("checkpointLocation", ck("session"))
-          .queryName("graft_stream_session")
-          .outputMode(OutputMode.Append).start()
-        (qU, qA, qS)
-      }
+      // The three aggregation queries share one clone at state width 4
+      // (r16: state is event-types × days / users × sessions — a few
+      // hundred keys at the bench SF, so 8 partitions were commit
+      // fan-out, not parallelism; each flush commits every store twice —
+      // data batch + watermark-advance batch — making the per-trigger
+      // commit count the feed's wall clock). Results are
+      // width-independent; a deployment sizes this at query start like
+      // any state width.
+      val cA = graft.Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "4")
+      val inU = MemoryStream[LateFeedEvent](cA)
+      val inA = MemoryStream[LateFeedEvent](cA)
+      val inS = MemoryStream[SessionFeedEvent](cA)
+      val qU = lateAgg(inU).writeStream.format("memory")
+        .option("checkpointLocation", ck("late"))
+        .queryName("graft_stream_late")
+        .outputMode(OutputMode.Update).start()
+      val qA = lateAgg(inA).writeStream.format("memory")
+        .option("checkpointLocation", ck("append"))
+        .queryName("graft_stream_append")
+        .outputMode(OutputMode.Append).start()
+      val qS = inS.toDS()
+        .withWatermark("ts", "12 hours")
+        .groupBy(session_window(col("ts"), "4 hours"), col("user_id"))
+        .agg(count(lit(1)).as("n"))
+        .writeStream.format("memory")
+        .option("checkpointLocation", ck("session"))
+        .queryName("graft_stream_session")
+        .outputMode(OutputMode.Append).start()
       try {
         def drainLate(): Unit = {
           val it = lateBatches.toLocalIterator().asScala
@@ -749,14 +736,14 @@ object StreamQueries extends QueryGroup {
         scala.reflect.io.Directory(
           scala.reflect.io.Path(ckRoot).toDirectory).deleteRecursively()
       }
-      val late = s.table("graft_stream_late")
+      val late = cA.table("graft_stream_late")
         .withColumn("_mode", lit("update"))
-        .unionByName(s.table("graft_stream_append")
+        .unionByName(cA.table("graft_stream_append")
           .withColumn("_mode", lit("append")))
         .select(col("_mode"), col("window.start").as("w_start"),
           col("window.end").as("w_end"),
           col("event_type").as("key"), col("cnt").as("n"))
-      val sess = s.table("graft_stream_session")
+      val sess = cA.table("graft_stream_session")
         .select(lit("session").as("_mode"),
           col("session_window.start").as("w_start"),
           col("session_window.end").as("w_end"),
@@ -764,7 +751,7 @@ object StreamQueries extends QueryGroup {
       // join rows fold into the normalized shape: w_start/w_end carry the
       // two event times (w_end NULL for null-padded rows), key packs the
       // left row identity, n carries the matched right event id (or NULL)
-      val join = s.table("graft_stream_join")
+      val join = cJ.table("graft_stream_join")
         .select(lit("join").as("_mode"),
           col("l_ts").as("w_start"), col("r_ts").as("w_end"),
           concat_ws("|", col("user_id"), col("l_eid")).as("key"),

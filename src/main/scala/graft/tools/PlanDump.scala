@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named queries to files — the plan
   * evidence artifact of the optimization rounds (`plans/r16/...`).
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <name[,name...]>
@@ -15,14 +13,7 @@ object PlanDump {
     val outDir = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val suffix = if (args.length > 3) args(3) else ""
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(8, 8, aqe = Some(false))
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, sfDir)

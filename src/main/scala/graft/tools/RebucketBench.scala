@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Measurement main for the bucketed join-view store's offline
   * resharding path (NOTES narrow-delta protocol, item 39 extension):
@@ -16,10 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object RebucketBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_sf1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(32, 32)
     import graft.operators.CdcOps
     import graft.streaming.{BucketedJoinView, IncrementalJoinView}
     import spark.implicits._

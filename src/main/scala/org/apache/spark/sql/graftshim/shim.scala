@@ -32,4 +32,12 @@ object Shim {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(name, info, builder)
+
+  /** A clone of `spark` (`cloneSession` is private[sql]): same shared
+    * state, a copy of its conf, temp views, functions and listeners —
+    * the seam of [[graft.Sessions.scoped]]. */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .cloneSession()
 }

@@ -78,8 +78,11 @@ class BucketMergePlanSpec extends SparkSpec {
   private def scansUnder(root: String)(s: FileSourceScanExec): Boolean =
     s.relation.location.rootPaths.exists(_.toString.contains(root))
 
-  private def withAqe[T](on: Boolean)(body: => T): T =
-    StartGate.withConf(spark, "spark.sql.adaptive.enabled" -> on.toString)(body)
+  private def withAqe[T](on: Boolean)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", on.toString)
+    try body finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
 
   for (aqe <- Seq(false, true))
     test(s"upsert sink merge: one exchange above the stored-state scan " +

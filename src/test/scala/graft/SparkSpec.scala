@@ -5,15 +5,10 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs: small core count, UTC, tiny shuffle
-  * fan-out — mirrors the driver's Verify session (Verify.scala:10-14). */
+  * fan-out — Verify's session at 4 cores. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4, 4)
 
   val sfDir = "/root/testdata/sf0.001"
 

@@ -2,28 +2,21 @@ package graft.operators
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** A/B harness for the feed-fixture batch synthesis: times the OLD form
   * (global single-partition ntile) against the NEW two-phase form on the
-  * same session, and dumps both physical plans. Test-scoped — it lives
-  * next to Scratch as a measurement tool, not in the shipped surface.
+  * same session, and dumps both physical plans. Test-scoped — a
+  * measurement tool, not in the shipped surface.
   * Usage: Test/runMain graft.operators.FeedFixtureAb [sfDir] [plansDir]
   * (session mirrors the sf1 sweep protocol: local[32], width 32, AQE). */
 object FeedFixtureAb {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/tmp/graft_sf1"
     val plansDir = if (args.length > 1) args(1) else ""
-    val s = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = graft.Sessions.local(32, 32, aqe = Some(true))
 
     def slice(name: String): DataFrame = name match {
       case "late" => graft.sources.Tables.scan(s, sfDir, "events")
