@@ -77,9 +77,9 @@ object Bench {
     }
     var failed = Set.empty[String]
     // wall seconds covered by the UNION of build windows, clipped to
-    // [t0, t1]: a group head that prewarms siblings concurrently must be
-    // charged the blocked wall time once, not the sum of overlapping
-    // build durations (which can exceed its own elapsed time)
+    // [t0, t1]: the query whose window Prewarm's concurrent builds land
+    // in must be charged the blocked wall time once, not the sum of
+    // overlapping build durations (which can exceed its own elapsed time)
     def clippedUnion(
         builds: Seq[BoundedDfCache.BuildRecord], t0: Long, t1: Long): Double = {
       val clipped = builds
@@ -138,10 +138,9 @@ object Bench {
         // drain after EVERY query: shared builds that completed in this
         // window are attributed to the per-tag shared_builds section, and
         // the query reports its OWN cost — elapsed minus the union of
-        // build wall inside [t0, t1] — so a group head that prewarms
-        // sibling pipelines concurrently no longer absorbs the whole
-        // group's first-touch cost into its per-query number (the r15
-        // attribution problem that false-flagged the cross-round gate).
+        // build wall inside [t0, t1] — so the query that kicks Prewarm
+        // (or blocks on a build's latch) does not absorb the concurrent
+        // first-touch cost of the tags the other queries read.
         // The union is clipped to the window: a background build spilling
         // past t1 charges its remainder to whichever later query blocks
         // on its latch, which is the query that actually waited.

@@ -33,12 +33,11 @@ private[graft] object BoundedDfCache {
     * durations as the `shared_builds` JSON section — the attribution
     * unit for first-touch cost — and (b) subtracts the interval-UNION of
     * the builds that completed inside a query's timed window from that
-    * query's reported time, so a group head that prewarms three sibling
-    * pipelines concurrently reports its OWN cost, not the group's (the
-    * r15 concurrency rework otherwise made `cdc_sink_upsert`-class heads
-    * false-flag the cross-round regression gate). Intervals, not just
-    * durations: concurrent group builds overlap, so summing durations
-    * would over-subtract past the query's real blocked wall time. */
+    * query's reported time, so the query whose window [[Prewarm]]'s
+    * concurrent builds land in reports its OWN cost, not theirs.
+    * Intervals, not just durations: concurrent prewarm builds overlap,
+    * so summing durations would over-subtract past the query's real
+    * blocked wall time. */
   private[graft] final case class BuildRecord(
       tag: String, startNs: Long, endNs: Long) {
     def seconds: Double = (endNs - startNs) / 1e9
@@ -50,9 +49,8 @@ private[graft] object BoundedDfCache {
   /** Tags currently being built, each with a latch its waiters block on.
     * Builds run OUTSIDE the map monitor (r15): holding it for the whole
     * build serialized every concurrent first-touch — and deadlocked any
-    * build that awaited a Future which itself touched the cache — which
-    * is exactly what the concurrent standing-consumer prewarm
-    * ([[graft.operators.CdcQueries]]) needs to work. */
+    * build whose nested tag another thread was building — which is
+    * exactly what [[Prewarm]]'s side-by-side builds need to work. */
   private val building = scala.collection.mutable.Map
     .empty[(SparkSession, String),
       (Thread, java.util.concurrent.CountDownLatch)]
@@ -89,11 +87,10 @@ private[graft] object BoundedDfCache {
       claim match {
         case Some(Right(df)) => return df
         case Some(Left(l)) =>
-          // blocking{}: waiters run on ForkJoinPool threads (the
-          // concurrent prewarm groups use the global ExecutionContext,
-          // which spawns nested futures on the same pool) — without the
-          // managed-blocker hint, enough same-tag waiters pin every pool
-          // thread and starve the builds they are waiting on
+          // blocking{}: a waiter on a ForkJoinPool thread (any caller on
+          // Scala's global ExecutionContext) gets a managed-blocker hint,
+          // so enough same-tag waiters cannot pin every pool thread and
+          // starve the builds they are waiting on
           scala.concurrent.blocking { l.await() } // built or failed — re-check
         case None =>
           try {

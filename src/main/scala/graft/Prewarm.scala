@@ -2,16 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Concurrent warm-start of the session's shared materializations.
+/** Concurrent warm-start of the session's shared materializations — the
+  * one place the engine runs independent shared builds side by side.
   *
-  * The engine's shared stages (bronze parses, shingle/pair tables, the
-  * standing streaming pipelines, the IVM views) are built lazily at first
-  * touch through [[BoundedDfCache]]. Under the benchmark's sorted
+  * The engine's shared stages (bronze parses, shingle/pair tables, each
+  * standing streaming pipeline, each IVM view) are built lazily at first
+  * touch through [[BoundedDfCache]], one cache tag each, and a query
+  * builds only the tags it reads. Under the benchmark's sorted
   * one-query-at-a-time sweep that lazy discipline serializes them: each
-  * 8-partition build leaves most of local[32] idle while later groups
+  * 8-partition build leaves most of local[32] idle while later builds
   * wait their turn — measured r16: ~35 s of a ~115 s rep was first-touch
-  * build wall, of which only the three r15 group families overlapped
-  * internally. A deployment does the opposite: it brings up all of its
+  * build wall. A deployment does the opposite: it brings up all of its
   * standing queries and materialized stages together at job start and
   * lets the cluster scheduler interleave them (guide §2.6 — overlap
   * independent jobs; actions are only sequential because driver code
@@ -21,10 +22,9 @@ import org.apache.spark.sql.SparkSession
   * per (session, corpus) epoch. It is called from the query surface
   * (SparkEntry wraps each query fn), so under the benchmark the kick —
   * and all build work it starts — lands INSIDE the first query's timed
-  * window: nothing escapes the measured region, the per-tag
-  * `shared_builds` attribution is unchanged (each build still records
-  * its own tag), and the benchmark's per-query times net out concurrent
-  * build wall exactly as they do for the r15 group heads. Consumers
+  * window: nothing escapes the measured region, each build records its
+  * own tag for the `shared_builds` attribution, and the benchmark nets
+  * the concurrent build wall out of each query's own time. Consumers
   * block only on their own tags (the per-tag latch in BoundedDfCache);
   * a prewarm failure is logged and swallowed — the owning query retries
   * the build and surfaces the error itself, so gate fault isolation is

@@ -25,15 +25,26 @@ object Sessions {
     s
   }
 
-  /** A clone of `s` with each `key -> value` set on the clone only. A
-    * stateful pipeline builds its `MemoryStream`, starts its stream and
-    * reads its memory sink on the clone, so its state width and
-    * provider never reach `s`, and its sink view lives and dies with the
-    * clone. A clone, not `newSession()`: it keeps `s`'s runtime-registered
-    * SQL functions and execution listeners. */
-  def scoped(s: SparkSession, kvs: (String, String)*): SparkSession = {
+  /** Lend `f` a clone of `s` with each `key -> value` set on the clone
+    * only. A stateful pipeline builds its `MemoryStream`, starts its
+    * stream and reads its memory sink on the clone, so its state width
+    * and provider never reach `s`, and its sink view lives and dies with
+    * the clone. A clone, not `newSession()`: it keeps `s`'s
+    * runtime-registered SQL functions and execution listeners.
+    *
+    * When `f` returns or throws, the clone's still-active streams stop
+    * and the clone's own streaming listener bus leaves the SparkContext's
+    * shared bus (Spark adds one per session and never removes it). Only
+    * this clone's bus goes: other pipelines' clones may still be running.
+    * Frames `f` returns over the clone's sinks stay readable. */
+  def scoped[A](s: SparkSession, kvs: (String, String)*)(
+      f: SparkSession => A): A = {
     val c = Shim.cloneSession(s)
     kvs.foreach { case (k, v) => c.conf.set(k, v) }
-    c
+    try f(c)
+    finally {
+      c.streams.active.foreach(_.stop())
+      s.sparkContext.removeSparkListener(Shim.streamingBus(c))
+    }
   }
 }

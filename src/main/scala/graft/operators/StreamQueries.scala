@@ -2,8 +2,10 @@ package graft.operators
 
 import graft.QueryGroup
 import graft.sources.Tables
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** One arrival of the `stream_late_data` feed: event time + grouping key
   * (top-level so the product encoder is stable across the driver-fed
@@ -87,14 +89,10 @@ object StreamQueries extends QueryGroup {
     // ran under). Final counts = last Update emission per key (counts
     // only grow, so max = last — the tws fold shape). Output is one row
     // per (day, event_type) — constant ~150 rows at EVERY scale factor,
-    // while the dropped-row set grows with the corpus. State width 8
+    // while the dropped-row set grows with the corpus. State width 4
     // (state-store sizing, as every stateful graded query).
     "stream_late_data" -> ((s, dir) => {
-      val sink = lateFeedSinks(s, dir)
-        .filter(col("_mode") === "update").drop("_mode")
-      sink
-        .groupBy(col("window"), col("event_type"))
-        .agg(max(col("cnt")).as("cnt"))
+      lateFeed(s, dir)
         // cast back to NTZ wall-clock (session is UTC): an LTZ parquet
         // column reads tz-aware downstream and would break the
         // tz-naive compare against the oracle's date_trunc
@@ -115,10 +113,9 @@ object StreamQueries extends QueryGroup {
     // (Triggers are wall-clock scheduling and stay spec-covered —
     // SinksAndJoinsSpec; this grades the mode semantics.)
     "stream_append_mode" -> ((s, dir) => {
-      lateFeedSinks(s, dir)
-        .filter(col("_mode") === "append").drop("_mode")
+      lateFeed(s, dir).filter(col("appended").isNotNull)
         .select(col("window.start").cast("timestamp_ntz").as("w_start"),
-          col("event_type"), col("cnt"))
+          col("event_type"), col("appended").as("cnt"))
         .orderBy("w_start", "event_type")
     }),
 
@@ -474,59 +471,24 @@ object StreamQueries extends QueryGroup {
         GlobalOrder.ntile0(col("before") + 1L, col("total"), k).cast("int"))
       .drop("_fb", "before", "total")
 
-  /** ONE build for ALL three streaming-feed graded queries
-    * (`stream_late_data`, `stream_append_mode`, `stream_session_live`):
-    * the two replay loops — the straggling late feed driving the
-    * Update/Append pair, and the event-time-ordered session feed — run
-    * CONCURRENTLY inside one cached entry, so the session drain hides
-    * under the late drain and the per-rep cost is max(loops), not their
-    * sum (~2.8 s/rep at sf0.1). The deployed shape is exactly this: one
-    * cluster hosting several standing queries over independent topics.
-    *
-    * Late pair: the event_id%8 slice as five deterministic micro-batches
-    * (event-time quartiles; every fifth sliced event straggles one
-    * batch) through withWatermark(12 h) + 1-day tumbling windows in BOTH
-    * output modes — each mode reads its own MemoryStream fed the
-    * identical batch sequence (MemoryStream keeps a single committed
-    * offset and truncates on commit, so two queries on one stream race
-    * the trim; per-consumer offsets are exactly the Kafka contract), and
-    * the two drains overlap per batch with both always awaited before
-    * the next add (so each add is the same micro-batch in each).
-    *
-    * Session feed: the event_id%4 slice as five event-time-ordered
-    * micro-batches through withWatermark(12 h) + session_window(4 h) in
-    * Append mode — sessions straddling batch boundaries merge in the
-    * state store (3 merged sessions at sf0.01, 19 at sf0.1;
-    * StreamingSpec pins ≥1).
-    *
-    * Bounded driver transfers (toLocalIterator in arrival order); the
-    * watermarks ratchet exactly at trigger boundaries like deployed
-    * streams; state width 8 (state-store sizing). The cached frame is
-    * normalized to (_mode, w_start, w_end, key, n); [[lateFeedSinks]] /
-    * [[sessionLiveSink]] restore the per-family shapes. */
-  private def streamFeeds(s: SparkSession, dir: String): DataFrame =
-    graft.BoundedDfCache.getOrPersist(s, s"stream:feeds:$dir") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import s.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    import scala.jdk.CollectionConverters._
-    // the three replay feeds are pure test-INPUT synthesis (ordered
-    // event slices a deployment would read from Kafka, not fabricate),
-    // so they carry FIXTURE tags (r16): disk-cached across JVMs and
-    // surviving bench rep boundaries — the events scan + global ntile
-    // sort no longer re-runs inside every rep's feeds build. The
-    // post-read sort restores the deterministic replay order the drain
-    // loops group on (within-batch tie order is irrelevant to the
-    // graded semantics: addData treats a batch as an unordered set).
-    def feedFixture(name: String, sortCols: Seq[String])(
-        build: => DataFrame): DataFrame =
-      graft.BoundedDfCache.getOrPersistFixture(
-        s, s"fixture:streamfeed:$name:$dir")(build)(
-        _.sort(sortCols.map(col): _*))
-    val lateBatches = feedFixture("late", Seq("batch", "ts")) {
+  /** One replay feed's batch table. The feeds are pure test-INPUT
+    * synthesis (ordered event slices a deployment would read from Kafka,
+    * not fabricate), so they carry FIXTURE tags: disk-cached across JVMs
+    * and surviving bench rep boundaries. The post-read sort restores the
+    * deterministic replay order [[replay]] groups on (within-batch tie
+    * order is irrelevant to the graded semantics: addData treats a batch
+    * as an unordered set). */
+  private def feedFixture(s: SparkSession, dir: String, name: String,
+      sortCols: Seq[String])(build: => DataFrame): DataFrame =
+    graft.BoundedDfCache.getOrPersistFixture(
+      s, s"fixture:streamfeed:$name:$dir")(build)(
+      _.sort(sortCols.map(col): _*))
+
+  /** The late feed: the event_id%8 slice as five deterministic
+    * micro-batches — event-time quartiles, every fifth sliced event
+    * straggling one batch. */
+  private def lateBatches(s: SparkSession, dir: String): DataFrame =
+    feedFixture(s, dir, "late", Seq("batch", "ts")) {
       twoPhaseNtile0(
         Tables.scan(s, dir, "events")
           .filter(col("event_id") % 8 === 0)
@@ -536,7 +498,11 @@ object StreamQueries extends QueryGroup {
           col("_tile0") + when(col("event_id") % 40 === 0, 1).otherwise(0))
         .select(col("batch"), col("ts"), col("event_type"))
     }
-    val sessBatches = feedFixture("sess", Seq("batch", "ts")) {
+
+  /** The session feed: the event_id%4 slice as five event-time-ordered
+    * micro-batches. */
+  private def sessBatches(s: SparkSession, dir: String): DataFrame =
+    feedFixture(s, dir, "sess", Seq("batch", "ts")) {
       twoPhaseNtile0(
         Tables.scan(s, dir, "events")
           .filter(col("event_id") % 4 === 1)
@@ -544,18 +510,20 @@ object StreamQueries extends QueryGroup {
             col("user_id")), 5)
         .select(col("_tile0").as("batch"), col("ts"), col("user_id"))
     }
-    // stream-stream join feed: two DISJOINT slices (left %8=2, right %8=6
-    // — off the late feed's %8=0 and the session feed's %4=1), batched
-    // by ntile(3) over the UNION's event-time order so both sides stay
-    // event-time-ordered and their watermarks interleave within one
-    // batch span of each other. THREE batches, not five: the graded
-    // semantics are batch-count-independent (matches = the full interval
-    // join under ordered feeds at any batching; the null-pad gate uses
-    // only the FINAL watermark), two state-carrying boundaries already
-    // exercise cross-trigger matching/eviction, and each join trigger
-    // commits 4 state stores × 8 partitions — the per-batch fixed cost
-    // this feed's wall-clock is made of
-    val joinBatches = feedFixture("join", Seq("batch", "ts", "event_id")) {
+
+  /** The stream-stream join feed: two DISJOINT slices (left %8=2, right
+    * %8=6 — off the late feed's %8=0 and the session feed's %4=1),
+    * batched by ntile(3) over the UNION's event-time order so both sides
+    * stay event-time-ordered and their watermarks interleave within one
+    * batch span of each other. THREE batches, not five: the graded
+    * semantics are batch-count-independent (matches = the full interval
+    * join under ordered feeds at any batching; the null-pad gate uses
+    * only the FINAL watermark), two state-carrying boundaries already
+    * exercise cross-trigger matching/eviction, and each join trigger
+    * commits 4 state stores per partition — the per-batch fixed cost this
+    * feed's wall-clock is made of. */
+  private def joinBatches(s: SparkSession, dir: String): DataFrame =
+    feedFixture(s, dir, "join", Seq("batch", "ts", "event_id")) {
       twoPhaseNtile0(
         Tables.scan(s, dir, "events")
           .filter(col("event_id") % 8 === 2 || col("event_id") % 8 === 6)
@@ -565,48 +533,152 @@ object StreamQueries extends QueryGroup {
         .select(col("_tile0").as("batch"), col("ts"), col("user_id"),
           col("event_id"), col("is_left"))
     }
-    // fixture reads and drain bookkeeping run at the session's width;
-    // the four streaming queries start on session clones that carry
-    // their state widths (below)
-    locally {
-      // replay-feed checkpoints are pure commit-protocol scratch (a
-      // MemoryStream cannot recover from one), so they live on tmpfs
-      // when available; wiped up front because a leftover dir from a
-      // previous rep would make a fresh query try to RESUME it
-      val ckRoot = new java.io.File(
-        graft.TmpPaths.ephemeral("graft-feeds-ck", dir))
-      scala.reflect.io.Directory(
-        scala.reflect.io.Path(ckRoot).toDirectory).deleteRecursively()
-      def ck(name: String): String = new java.io.File(ckRoot, name).toString
-      // The JOIN query runs on its own clone at state width 2 (r16 trim
-      // of the stream:feeds tag): its per-trigger fixed cost is 4
-      // state-store commits × state partitions × 2 batches per flush,
-      // and its state volume at the bench SF is a few hundred keys —
-      // so 8 partitions were pure commit overhead. Width 2 preserves
-      // every graded property: pairs matching/evicting ACROSS batch
-      // cuts is a property of the ntile(3) BATCHING (PLANS.md r15
-      // note), not of the state fan-out, and state width is a
-      // per-query conf — a deployment starts the same join at
-      // production width. StreamJoinPropertySpec re-proves the
-      // contract across randomized batchings after this change.
-      // op 15 end to end: watermarked two-stream LEFT-OUTER interval
-      // join — matches emit when both sides have arrived; an
-      // unmatched left row null-pads only once the GLOBAL watermark
-      // (min of both sources' ratcheting watermarks, the default
-      // multipleWatermarkPolicy) passes the end of its 2-hour match
-      // window and the state store evicts it
-      val cJ = graft.Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "2")
-      val inJL = MemoryStream[JoinFeedEvent](cJ)
-      val inJR = MemoryStream[JoinFeedEvent](cJ)
-      val l = inJL.toDS()
+
+  /** Feed `batches` (batch index first, in arrival order) to `flush` one
+    * micro-batch at a time, through a bounded driver transfer
+    * (toLocalIterator). */
+  private def replay[E](batches: DataFrame)(event: Row => E)(
+      flush: Seq[E] => Unit): Unit = {
+    import scala.jdk.CollectionConverters._
+    var cur = -1
+    val buf = scala.collection.mutable.ArrayBuffer.empty[E]
+    batches.toLocalIterator().asScala.foreach { r =>
+      if (r.getInt(0) != cur) {
+        if (buf.nonEmpty) flush(buf.toSeq)
+        buf.clear(); cur = r.getInt(0)
+      }
+      buf += event(r)
+    }
+    if (buf.nonEmpty) flush(buf.toSeq)
+  }
+
+  /** One standing replay pipeline under its own cache tag
+    * `stream:<name>`: `run` starts its queries on a
+    * [[graft.Sessions.scoped]] clone at state width `width` and drains
+    * its feed; the loan stops them. Each query builds only its own
+    * pipeline; [[graft.Prewarm]] runs the three side by side, as one
+    * cluster hosts several standing queries over independent topics.
+    * The watermarks ratchet exactly at trigger boundaries like deployed
+    * streams. The checkpoints are pure commit-protocol scratch (a
+    * MemoryStream cannot recover from one), so they live on tmpfs when
+    * available, wiped up front (a leftover dir from a previous rep would
+    * make a fresh query try to RESUME it) and freed when the pipeline
+    * ends. State widths
+    * are sized to the state volume — a few hundred keys at the bench SF,
+    * where more partitions are per-trigger commit fan-out, not
+    * parallelism; results are width-independent, and a deployment sizes
+    * the width at query start. */
+  private def standingFeed(s: SparkSession, dir: String, name: String,
+      width: Int)(run: (SparkSession, String) => DataFrame): DataFrame =
+    graft.BoundedDfCache.getOrPersist(s, s"stream:$name:$dir") {
+      val ck = new java.io.File(
+        graft.TmpPaths.ephemeral(s"graft-$name-ck", dir))
+      def wipe(): Unit = scala.reflect.io.Directory(
+        scala.reflect.io.Path(ck).toDirectory).deleteRecursively()
+      wipe()
+      try graft.Sessions.scoped(
+        s, "spark.sql.shuffle.partitions" -> width.toString)(
+        run(_, ck.toString))
+      finally wipe()
+    }
+
+  /** `stream_late_data` and `stream_append_mode`'s pipeline: the late
+    * feed through withWatermark(12 h) + 1-day tumbling windows in BOTH
+    * output modes. Each mode reads its own MemoryStream fed the identical
+    * batch sequence (MemoryStream keeps a single committed offset and
+    * truncates on commit, so two queries on one stream race the trim;
+    * per-consumer offsets are exactly the Kafka contract), and both
+    * drain before the next add, so each add is the same micro-batch in
+    * each. One row per (window, event_type): `cnt` is the Update mode's
+    * final count (counts only grow, so the last emission is the max),
+    * and `appended` is the Append mode's emitted count, null where the
+    * window was not final when the feed ended. Width 4. */
+  private def lateFeed(s: SparkSession, dir: String): DataFrame = {
+    val batches = lateBatches(s, dir)
+    standingFeed(s, dir, "late", 4) { (c, ck) =>
+      import c.implicits._
+      def start(mode: OutputMode, name: String) = {
+        val in = MemoryStream[LateFeedEvent](c)
+        val q = in.toDS()
+          .withWatermark("ts", "12 hours")
+          .groupBy(window(col("ts"), "1 day"), col("event_type"))
+          .agg(count(lit(1)).as("cnt"))
+          .writeStream.format("memory")
+          .option("checkpointLocation", s"$ck/$name")
+          .queryName(name).outputMode(mode).start()
+        (in, q)
+      }
+      val (inU, qU) = start(OutputMode.Update, "graft_stream_late")
+      val (inA, qA) = start(OutputMode.Append, "graft_stream_append")
+      replay(batches)(r =>
+        LateFeedEvent(r.getTimestamp(1), r.getString(2))) { b =>
+        inU.addData(b); inA.addData(b)
+        qU.processAllAvailable(); qA.processAllAvailable()
+      }
+      c.table("graft_stream_late")
+        .groupBy(col("window"), col("event_type"))
+        .agg(max(col("cnt")).as("cnt"))
+        .join(c.table("graft_stream_append")
+            .withColumnRenamed("cnt", "appended"),
+          Seq("window", "event_type"), "left_outer")
+    }
+  }
+
+  /** `stream_session_live`'s pipeline: the session feed through
+    * withWatermark(12 h) + session_window(4 h) in Append mode — sessions
+    * straddling batch boundaries merge in the state store (3 merged
+    * sessions at sf0.01, 19 at sf0.1; StreamingSpec pins ≥1). The
+    * session_window memory-sink shape. Width 4. */
+  private[graft] def sessionLiveSink(
+      s: SparkSession, dir: String): DataFrame = {
+    val batches = sessBatches(s, dir)
+    standingFeed(s, dir, "session", 4) { (c, ck) =>
+      import c.implicits._
+      val in = MemoryStream[SessionFeedEvent](c)
+      val q = in.toDS()
+        .withWatermark("ts", "12 hours")
+        .groupBy(session_window(col("ts"), "4 hours"), col("user_id"))
+        .agg(count(lit(1)).as("n"))
+        .writeStream.format("memory")
+        .option("checkpointLocation", s"$ck/session")
+        .queryName("graft_stream_session")
+        .outputMode(OutputMode.Append).start()
+      replay(batches)(r =>
+        SessionFeedEvent(r.getTimestamp(1), r.getLong(2))) { b =>
+        in.addData(b); q.processAllAvailable()
+      }
+      c.table("graft_stream_session")
+    }
+  }
+
+  /** `stream_join_live`'s pipeline (op 15 end to end): watermarked
+    * two-stream LEFT-OUTER interval join — matches emit when both sides
+    * have arrived; an unmatched left row null-pads only once the GLOBAL
+    * watermark (min of both sources' ratcheting watermarks, the default
+    * multipleWatermarkPolicy) passes the end of its 2-hour match window
+    * and the state store evicts it. Both sides of a batch land before
+    * the trigger, so each micro-batch advances both watermarks in
+    * lockstep. The join-output shape (user_id, l_eid, l_ts, r_ts, r_eid).
+    * Width 2: each trigger commits 4 state stores per partition and the
+    * state is a few hundred keys; pairs matching/evicting ACROSS batch
+    * cuts is a property of the ntile(3) BATCHING, not of the state
+    * fan-out (StreamJoinPropertySpec re-proves the contract across
+    * randomized batchings). */
+  private[graft] def joinLiveSink(s: SparkSession, dir: String): DataFrame = {
+    val batches = joinBatches(s, dir)
+    standingFeed(s, dir, "join", 2) { (c, ck) =>
+      import c.implicits._
+      val inL = MemoryStream[JoinFeedEvent](c)
+      val inR = MemoryStream[JoinFeedEvent](c)
+      val l = inL.toDS()
         .select(col("ts").as("l_ts"), col("user_id"),
           col("eid").as("l_eid"))
         .withWatermark("l_ts", "12 hours")
-      val r = inJR.toDS()
+      val r = inR.toDS()
         .select(col("ts").as("r_ts"), col("user_id").as("r_uid"),
           col("eid").as("r_eid"))
         .withWatermark("r_ts", "12 hours")
-      val qJ = l.join(r,
+      val q = l.join(r,
           expr("""user_id = r_uid AND
                  |r_ts >= l_ts AND r_ts <= l_ts + interval 2 hours"""
             .stripMargin),
@@ -614,179 +686,20 @@ object StreamQueries extends QueryGroup {
         .select(col("user_id"), col("l_eid"), col("l_ts"),
           col("r_ts"), col("r_eid"))
         .writeStream.format("memory")
-        .option("checkpointLocation", ck("join"))
+        .option("checkpointLocation", s"$ck/join")
         .queryName("graft_stream_join")
         .outputMode(OutputMode.Append).start()
-      def lateAgg(in: MemoryStream[LateFeedEvent]) = in.toDS()
-        .withWatermark("ts", "12 hours")
-        .groupBy(window(col("ts"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"))
-      // The three aggregation queries share one clone at state width 4
-      // (r16: state is event-types × days / users × sessions — a few
-      // hundred keys at the bench SF, so 8 partitions were commit
-      // fan-out, not parallelism; each flush commits every store twice —
-      // data batch + watermark-advance batch — making the per-trigger
-      // commit count the feed's wall clock). Results are
-      // width-independent; a deployment sizes this at query start like
-      // any state width.
-      val cA = graft.Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "4")
-      val inU = MemoryStream[LateFeedEvent](cA)
-      val inA = MemoryStream[LateFeedEvent](cA)
-      val inS = MemoryStream[SessionFeedEvent](cA)
-      val qU = lateAgg(inU).writeStream.format("memory")
-        .option("checkpointLocation", ck("late"))
-        .queryName("graft_stream_late")
-        .outputMode(OutputMode.Update).start()
-      val qA = lateAgg(inA).writeStream.format("memory")
-        .option("checkpointLocation", ck("append"))
-        .queryName("graft_stream_append")
-        .outputMode(OutputMode.Append).start()
-      val qS = inS.toDS()
-        .withWatermark("ts", "12 hours")
-        .groupBy(session_window(col("ts"), "4 hours"), col("user_id"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream.format("memory")
-        .option("checkpointLocation", ck("session"))
-        .queryName("graft_stream_session")
-        .outputMode(OutputMode.Append).start()
-      try {
-        def drainLate(): Unit = {
-          val it = lateBatches.toLocalIterator().asScala
-            .map(r => (r.getInt(0),
-              LateFeedEvent(r.getTimestamp(1), r.getString(2))))
-          var cur = -1
-          val buf = scala.collection.mutable.ArrayBuffer.empty[LateFeedEvent]
-          def flush(): Unit = if (buf.nonEmpty) {
-            val b = buf.toSeq
-            inU.addData(b); inA.addData(b)
-            val fU = Future(qU.processAllAvailable())
-            // drain BOTH queries before propagating any failure: if the
-            // Append drain throws while the Update future is still
-            // running, the outer finally\u0027s stop() would race an
-            // in-flight processAllAvailable (and a secondary failure from
-            // the interrupted future could mask the original exception)
-            val errA = try { qA.processAllAvailable(); None }
-              catch { case e: Throwable => Some(e) }
-            val errU = try { Await.result(fU, Duration.Inf); None }
-              catch { case e: Throwable => Some(e) }
-            (errA orElse errU).foreach(e => throw e)
-            buf.clear()
-          }
-          it.foreach { case (b, e) =>
-            if (b != cur) { flush(); cur = b }
-            buf += e
-          }
-          flush()
-        }
-        def drainSess(): Unit = {
-          val it = sessBatches.toLocalIterator().asScala
-            .map(r => (r.getInt(0),
-              SessionFeedEvent(r.getTimestamp(1), r.getLong(2))))
-          var cur = -1
-          val buf =
-            scala.collection.mutable.ArrayBuffer.empty[SessionFeedEvent]
-          def flush(): Unit = if (buf.nonEmpty) {
-            inS.addData(buf.toSeq)
-            qS.processAllAvailable()
-            buf.clear()
-          }
-          it.foreach { case (b, e) =>
-            if (b != cur) { flush(); cur = b }
-            buf += e
-          }
-          flush()
-        }
-        def drainJoin(): Unit = {
-          // both sides of a batch land before the trigger, so each
-          // micro-batch advances both watermarks in lockstep
-          val it = joinBatches.toLocalIterator().asScala
-            .map(r => (r.getInt(0),
-              JoinFeedEvent(r.getTimestamp(1), r.getLong(2), r.getLong(3)),
-              r.getBoolean(4)))
-          var cur = -1
-          val bufL = scala.collection.mutable.ArrayBuffer.empty[JoinFeedEvent]
-          val bufR = scala.collection.mutable.ArrayBuffer.empty[JoinFeedEvent]
-          def flush(): Unit = if (bufL.nonEmpty || bufR.nonEmpty) {
-            if (bufL.nonEmpty) inJL.addData(bufL.toSeq)
-            if (bufR.nonEmpty) inJR.addData(bufR.toSeq)
-            qJ.processAllAvailable()
-            bufL.clear(); bufR.clear()
-          }
-          it.foreach { case (b, e, isLeft) =>
-            if (b != cur) { flush(); cur = b }
-            if (isLeft) bufL += e else bufR += e
-          }
-          flush()
-        }
-        // the three replay loops overlap; all always run to completion (or
-        // failure) before any stop(), same discipline as the per-batch
-        // pair above — the first failure observed wins
-        val fS = Future(drainSess())
-        val fJ = Future(drainJoin())
-        val errL = try { drainLate(); None }
-          catch { case e: Throwable => Some(e) }
-        val errS = try { Await.result(fS, Duration.Inf); None }
-          catch { case e: Throwable => Some(e) }
-        val errJ = try { Await.result(fJ, Duration.Inf); None }
-          catch { case e: Throwable => Some(e) }
-        (errL orElse errS orElse errJ).foreach(e => throw e)
-      } finally {
-        qU.stop(); qA.stop(); qS.stop(); qJ.stop()
-        // free the tmpfs scratch (per-process dir; next rep re-wipes anyway)
-        scala.reflect.io.Directory(
-          scala.reflect.io.Path(ckRoot).toDirectory).deleteRecursively()
+      replay(batches)(r => (
+        JoinFeedEvent(r.getTimestamp(1), r.getLong(2), r.getLong(3)),
+        r.getBoolean(4))) { b =>
+        val (left, right) = b.partition(_._2)
+        if (left.nonEmpty) inL.addData(left.map(_._1))
+        if (right.nonEmpty) inR.addData(right.map(_._1))
+        q.processAllAvailable()
       }
-      val late = cA.table("graft_stream_late")
-        .withColumn("_mode", lit("update"))
-        .unionByName(cA.table("graft_stream_append")
-          .withColumn("_mode", lit("append")))
-        .select(col("_mode"), col("window.start").as("w_start"),
-          col("window.end").as("w_end"),
-          col("event_type").as("key"), col("cnt").as("n"))
-      val sess = cA.table("graft_stream_session")
-        .select(lit("session").as("_mode"),
-          col("session_window.start").as("w_start"),
-          col("session_window.end").as("w_end"),
-          col("user_id").cast("string").as("key"), col("n"))
-      // join rows fold into the normalized shape: w_start/w_end carry the
-      // two event times (w_end NULL for null-padded rows), key packs the
-      // left row identity, n carries the matched right event id (or NULL)
-      val join = cJ.table("graft_stream_join")
-        .select(lit("join").as("_mode"),
-          col("l_ts").as("w_start"), col("r_ts").as("w_end"),
-          concat_ws("|", col("user_id"), col("l_eid")).as("key"),
-          col("r_eid").as("n"))
-      late.unionByName(sess).unionByName(join)
+      c.table("graft_stream_join")
     }
   }
-
-  /** The watermark pair\u0027s view of [[streamFeeds]], restored to the
-    * memory-sink shape (window struct, event_type, cnt, _mode). */
-  private def lateFeedSinks(s: SparkSession, dir: String): DataFrame =
-    streamFeeds(s, dir).filter(col("_mode").isin("update", "append"))
-      .select(
-        struct(col("w_start").as("start"), col("w_end").as("end"))
-          .as("window"),
-        col("key").as("event_type"), col("n").as("cnt"), col("_mode"))
-
-  /** `stream_session_live`\u0027s view of [[streamFeeds]], restored to the
-    * session_window memory-sink shape. */
-  private[graft] def sessionLiveSink(s: SparkSession, dir: String): DataFrame =
-    streamFeeds(s, dir).filter(col("_mode") === "session")
-      .select(
-        struct(col("w_start").as("start"), col("w_end").as("end"))
-          .as("session_window"),
-        col("key").cast("long").as("user_id"), col("n"))
-
-  /** `stream_join_live`'s view of [[streamFeeds]], unpacked back to the
-    * join-output shape (user_id, l_eid, l_ts, r_ts, r_eid). */
-  private[graft] def joinLiveSink(s: SparkSession, dir: String): DataFrame =
-    streamFeeds(s, dir).filter(col("_mode") === "join")
-      .select(
-        split(col("key"), "\\|").getItem(0).cast("long").as("user_id"),
-        split(col("key"), "\\|").getItem(1).cast("long").as("l_eid"),
-        col("w_start").as("l_ts"), col("w_end").as("r_ts"),
-        col("n").as("r_eid"))
 
   val oracles: Map[String, String] = Map(
     // Spark's watermark contract restated: per-batch ratcheting watermark
@@ -1113,8 +1026,11 @@ object StreamQueries extends QueryGroup {
 
   /** Warm-start targets (see [[graft.Prewarm]]). */
   override def prewarm: Seq[graft.Prewarm.Task] = Seq(
-    graft.Prewarm.Task("stream:feeds", 4.5,
-      (s, d) => { streamFeeds(s, d); () }),
+    graft.Prewarm.Task("stream:late", 5.2, (s, d) => { lateFeed(s, d); () }),
+    graft.Prewarm.Task("stream:session", 4.2,
+      (s, d) => { sessionLiveSink(s, d); () }),
+    graft.Prewarm.Task("stream:join", 4.7,
+      (s, d) => { joinLiveSink(s, d); () }),
     graft.Prewarm.Task("alert:status", 0.5,
       (s, d) => { statusGrid(s, d); () }))
 

@@ -46,7 +46,10 @@ object StatefulCompaction {
   private def rank(lsn: Long, deleted: Boolean): (Long, Int) =
     (lsn, if (deleted) 1 else 0)
 
-  private def newerThan(a: KeyedChange, lsn: Long, deleted: Boolean): Boolean =
+  /** The winner rule both compaction forms share: `a` outranks the
+    * (lsn, deleted) state. */
+  private[streaming] def newerThan(
+      a: KeyedChange, lsn: Long, deleted: Boolean): Boolean =
     Ordering[(Long, Int)].gt(rank(a.lsn, a.deleted), rank(lsn, deleted))
 
   def update(

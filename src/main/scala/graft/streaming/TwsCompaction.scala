@@ -8,9 +8,9 @@ import org.apache.spark.sql.{Dataset, Encoders}
   * ([[StatefulCompaction]]) with typed named state, per-state TTL, and the
   * RocksDB state store (required by this operator), which is what a
   * 100 TB keyed-state deployment runs anyway (state larger than heap,
-  * incremental checkpoints). Same winner semantics as the legacy form:
-  * (lsn, deleted) lexicographic rank, delete preferred on position ties —
-  * TwsCompactionSpec asserts both APIs materialize identical state.
+  * incremental checkpoints). The winner rule is the legacy form's own
+  * [[StatefulCompaction.newerThan]] — TwsCompactionSpec asserts both
+  * APIs materialize identical state.
   */
 class CompactionProcessor
     extends StatefulProcessor[Long, KeyedChange, KeyState] {
@@ -21,22 +21,17 @@ class CompactionProcessor
     state = getHandle.getValueState[KeyState](
       "compacted", Encoders.product[KeyState], TTLConfig.NONE)
 
-  private def rank(lsn: Long, deleted: Boolean): (Long, Int) =
-    (lsn, if (deleted) 1 else 0)
-
   override def handleInputRows(
       key: Long,
       rows: Iterator[KeyedChange],
       timers: TimerValues): Iterator[KeyState] = {
-    val newest = rows.reduceOption { (a, b) =>
-      if (Ordering[(Long, Int)].gt(rank(a.lsn, a.deleted),
-        rank(b.lsn, b.deleted))) a else b
-    }
+    import StatefulCompaction.newerThan
+    val newest = rows.reduceOption((a, b) =>
+      if (newerThan(a, b.lsn, b.deleted)) a else b)
     newest match {
       case Some(e)
-          if !state.exists() || Ordering[(Long, Int)].gt(
-            rank(e.lsn, e.deleted),
-            rank(state.get().lsn, state.get().deleted)) =>
+          if !state.exists() ||
+            newerThan(e, state.get().lsn, state.get().deleted) =>
         val s = KeyState(key, e.lsn, e.deleted, e.payload)
         state.update(s)
         Iterator.single(s)

@@ -40,4 +40,23 @@ object Shim {
       : org.apache.spark.sql.SparkSession =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .cloneSession()
+
+  /** The listener bus that `spark`'s own streaming query manager put on
+    * the SparkContext's shared bus: Spark registers one per session that
+    * touches `streams` and never removes it (the manager's field is
+    * private, hence the reflection). */
+  def streamingBus(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.scheduler.SparkListenerInterface = {
+    val m = classOf[org.apache.spark.sql.classic.StreamingQueryManager]
+    val f = m.getDeclaredField("listenerBus")
+    f.setAccessible(true)
+    f.get(spark.streams)
+      .asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface]
+  }
+
+  /** How many streaming query buses sit on `spark`'s shared bus. */
+  def streamingBusCount(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.sparkContext.listenerBus.findListenersByClass[
+      org.apache.spark.sql.execution.streaming.runtime
+        .StreamingQueryListenerBus].size
 }

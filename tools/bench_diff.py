@@ -10,19 +10,21 @@ works). Compares per-query minima and prints:
 
 Attribution note (r16): Bench per-query times are now OWN cost — the
 interval-union of shared builds completing inside a query's window is
-subtracted and attributed to the `shared_builds` tags instead, so a
-concurrent-group head (e.g. cdc_sink_upsert prewarming the standing
-pipelines) no longer false-flags here when build cost moves between
-consumers. Rep totals ("runs"/"value") remain RAW (builds included).
-Comparing a pre-r16 (raw) file against an r16+ (netted) file shows group
-heads as large improvements — expected, and never flagged.
+subtracted and attributed to the `shared_builds` tags instead, so the
+query whose window the concurrent prewarm builds land in no longer
+false-flags here when build cost moves between consumers. Rep totals
+("runs"/"value") remain RAW (builds included). Comparing a pre-r16 (raw)
+file against an r16+ (netted) file shows the old group-head queries
+(e.g. cdc_sink_upsert, which once built all three standing pipelines) as
+large improvements — expected, and never flagged.
 
   - REGRESSED: queries whose current min > flag x prior min (default 1.5x),
     with both times floored at `floor` seconds (default 0.15 s — below that
     per-query fixed overhead dominates and a 0.05->0.12 s "2.4x" is
     scheduling noise, not a regression);
   - shared-build tags with the same flag rule (first-touch cost moved);
-  - NEW / REMOVED queries (surface changes, informational);
+  - NEW / REMOVED queries and shared-build tags (surface changes and
+    renamed or split tags, informational);
   - the total-time ratio.
 
 Exit code 1 iff any query regressed past the flag on a comparable host
@@ -95,13 +97,14 @@ def main():
         for r, t, a, b in sorted(breg, reverse=True):
             print(f"  {t:32s} {a:7.3f} -> {b:7.3f} s  ({r:.2f}x)")
 
-    new = sorted(set(cq) - set(pq))
-    gone = sorted(set(pq) - set(cq))
-    if new:
-        print(f"\nNEW ({len(new)}): " + ", ".join(
-            f"{n}={cq[n]:.2f}s" for n in new))
-    if gone:
-        print(f"REMOVED ({len(gone)}): " + ", ".join(gone))
+    for kind, p, c in (("", pq, cq), (" shared-build tags", sp, sc)):
+        new = sorted(set(c) - set(p))
+        gone = sorted(set(p) - set(c))
+        if new:
+            print(f"\nNEW{kind} ({len(new)}): " + ", ".join(
+                f"{n}={c[n]:.2f}s" for n in new))
+        if gone:
+            print(f"REMOVED{kind} ({len(gone)}): " + ", ".join(gone))
 
     tp, tc = prior.get("value"), cur.get("value")
     if tp and tc:
