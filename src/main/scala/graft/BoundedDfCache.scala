@@ -143,56 +143,11 @@ private[graft] object BoundedDfCache {
     * re-fabricate it — so these, and ONLY these, may survive a benchmark
     * rep boundary (the recorded baseline contract: "only the fixture
     * build is shared"). Everything else in the cache is the output of a
-    * GRADED operator and must be re-executed every rep. */
+    * GRADED operator and must be re-executed every rep. A fixture lives
+    * only in the memory of the JVM that built it: each process
+    * synthesizes its own once, so no on-disk copy can go stale when a
+    * synthesis changes. */
   val FixturePrefix = "fixture:"
-
-  /** Bump whenever ANY fixture synthesis changes its content or schema:
-    * the on-disk cache key is (version, tag), and a version bump is what
-    * invalidates every previously-written fixture parquet. A forgotten
-    * bump is caught loudly, not silently — the DuckDB oracles re-derive
-    * the same fixtures from the source tables in SQL, so a stale Spark
-    * read hash-mismatches in the correctness gate. */
-  private val fixtureVersion = 2
-
-  private def fixtureDiskDir(tag: String): java.io.File = {
-    val safe = tag.replaceAll("[^A-Za-z0-9._-]", "_")
-    new java.io.File(s"/tmp/graft_fixtures/v$fixtureVersion/$safe")
-  }
-
-  /** [[getOrPersist]] plus a DISK layer for fixture synthesis: the first
-    * JVM to need a fixture writes it to a versioned parquet under /tmp
-    * (atomic directory rename, so concurrent Verify/Bench/test JVMs race
-    * safely) and every later JVM — including the benchmark's rep 1,
-    * which previously paid the full synthesis inside its first timed
-    * query — reads it back like any other input table. This is exactly
-    * the deployment posture the fixture contract describes: changelog
-    * input comes from disk/Kafka, never re-fabricated per run.
-    *
-    * `post` runs on whatever the in-memory cache admits (fresh build or
-    * parquet read-back) — callers use it to restore the keyed
-    * parallelism a small parquet read would coalesce away. */
-  def getOrPersistFixture(spark: SparkSession, tag: String)(
-      build: => DataFrame)(post: DataFrame => DataFrame): DataFrame = {
-    require(tag.startsWith(FixturePrefix),
-      s"disk-cached entries must be fixtures: $tag")
-    getOrPersist(spark, tag) {
-      val dir = fixtureDiskDir(tag)
-      if (!dir.isDirectory) {
-        val tmp = new java.io.File(dir.getParentFile,
-          s"${dir.getName}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-        build.write.mode("overwrite").parquet(tmp.toString)
-        // lost the rename race → another JVM finished first; read theirs
-        if (!tmp.renameTo(dir)) {
-          if (!dir.isDirectory)
-            throw new java.io.IOException(
-              s"could not publish fixture $tag to $dir")
-          scala.reflect.io.Directory(
-            scala.reflect.io.Path(tmp).toDirectory).deleteRecursively()
-        }
-      }
-      post(spark.read.parquet(dir.toString))
-    }
-  }
 
   /** Unpersist and evict every GRADED entry (all tags except
     * [[FixturePrefix]] ones). The benchmark calls this at the top of each

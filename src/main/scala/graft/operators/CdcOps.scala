@@ -181,18 +181,12 @@ object CdcOps {
   // every downstream graded parse runs single-threaded on a 32-core
   // session; with it the per-rep envelope decode gets the same
   // parallelism a real consumer group gets from the broker.
-  // Disk-backed (BoundedDfCache.getOrPersistFixture): synthesized once
-  // per (fixture-version, variant, sf) ACROSS JVMs, then read back like
-  // any other input parquet. The repartition runs post-read because the
-  // small fixture parquet would otherwise coalesce to 1-2 input splits
-  // and serialize every downstream graded parse.
   private def cachedFixture(
       spark: SparkSession, sfDir: String, variant: String)(
       build: => DataFrame): DataFrame =
-    graft.BoundedDfCache.getOrPersistFixture(
+    graft.BoundedDfCache.getOrPersist(
       spark, s"${graft.BoundedDfCache.FixturePrefix}cdc:$variant:$sfDir")(
-      build)(
-      _.repartition(spark.sparkContext.defaultParallelism, col("key")))
+      build.repartition(spark.sparkContext.defaultParallelism, col("key")))
 
   // -------------------------------------------------------------------
   // Bronze stage: the PARSED typed changelog, materialized once per
@@ -295,70 +289,29 @@ object CdcOps {
     (inserts, tail)
   }
 
-  /** Kafka-archive files for the `orders` changelog: the fixture written
-    * once per (tmpdir, sfDir) as newline-delimited JSON records —
-    * `{"topic":…,"key":…,"value":"<envelope>"}`, tombstones with `value`
-    * omitted — the exact shape [[graft.sources.DebeziumJsonSource]] reads.
-    * Fixture IO (test INPUT, like the cachedFixture branches): written if
-    * the `_SUCCESS` marker is absent, reused across Verify/Bench reps.
+  private val archives = scala.collection.mutable.Map.empty[String, String]
+
+  /** Kafka-archive files for the `orders` changelog: newline-delimited
+    * JSON records — `{"topic":…,"key":…,"value":"<envelope>"}`,
+    * tombstones with `value` omitted — the exact shape
+    * [[graft.sources.DebeziumJsonSource]] reads. Fixture IO (test INPUT,
+    * like the cachedFixture branches): written once per (process, sfDir)
+    * to a fresh per-process path and reused across Verify/Bench reps.
     * Returns the archive directory path. */
-  def ordersChangelogArchive(spark: SparkSession, sfDir: String): String = {
-    import org.apache.hadoop.fs.Path
-    // keyed by the SANITIZED full corpus path (hashCode can collide and
-    // silently serve the wrong corpus's archive — round-6 ADVICE)
-    val tmp = graft.TmpPaths.shared("graft-dbz-archive", sfDir)
-    val root = new Path(tmp)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val done = new Path(tmp, "_SUCCESS")
-    if (!fs.exists(done)) {
-      // atomic publish: build in a unique staging dir, then rename into
-      // place — a concurrent driver either sees the complete previous
-      // archive or the complete new one, never a half-written directory
-      // (the write itself drops the _SUCCESS marker inside staging, so
-      // the rename carries the commit mark with it)
-      val staging = new Path(
-        s"$tmp.stage-${java.util.UUID.randomUUID().toString.take(8)}")
-      synthOrdersChangelog(spark, sfDir)
-        // one JSON record per line; null `value` (tombstone) serializes as
-        // an absent field under the default ignoreNullFields
-        .select(to_json(struct(col("topic"), col("key"), col("value"))))
-        .repartition(8) // several files so the DSv2 scan plans in parallel
-        .write.mode("overwrite").text(staging.toString)
-      if (fs.exists(done)) {
-        fs.delete(staging, true) // lost the race to a complete publish
-      } else {
-        // Hadoop FileSystem.rename moves src INTO dst when dst exists as
-        // a directory — so a racer re-creating root inside the
-        // delete→rename window would NEST this staging dir under the
-        // racer's archive, and the recursive DSv2 lister would
-        // double-count records (round-7 ADVICE). Root is deleted only
-        // when a STALE INCOMPLETE dir (no _SUCCESS) is in the way; after
-        // a successful rename, probe for the nested shape and remove it —
-        // it can only exist if a racing publisher won root back in the
-        // window, and then the racer's complete archive is exactly what
-        // must survive. A failed rename means a committed root stands:
-        // discard staging (lost race).
-        // Re-probe the commit marker IMMEDIATELY before touching root
-        // (round-8 ADVICE): a racer completing its publish between the
-        // two probes has a complete archive that must survive — without
-        // this the delete below would remove committed data and the
-        // "stale incomplete only" invariant documented above would rest
-        // on both stagings holding identical content.
-        if (fs.exists(done)) {
-          fs.delete(staging, true) // lost the race inside the window
-        } else {
-          if (fs.exists(root)) fs.delete(root, true) // stale incomplete dir
-          if (fs.rename(staging, root)) {
-            val nested = new Path(root, staging.getName)
-            if (fs.exists(nested)) fs.delete(nested, true)
-          } else {
-            fs.delete(staging, true)
-          }
-        }
-      }
+  def ordersChangelogArchive(spark: SparkSession, sfDir: String): String =
+    archives.synchronized {
+      archives.getOrElseUpdate(sfDir, {
+        val tmp = graft.TmpPaths.fresh(
+          graft.TmpPaths.perProcess("graft-dbz-archive", sfDir))
+        synthOrdersChangelog(spark, sfDir)
+          // one JSON record per line; null `value` (tombstone) serializes
+          // as an absent field under the default ignoreNullFields
+          .select(to_json(struct(col("topic"), col("key"), col("value"))))
+          .repartition(8) // several files so the DSv2 scan plans in parallel
+          .write.text(tmp)
+        tmp
+      })
     }
-    tmp
-  }
 
   /** A4: initial-snapshot events — `snapshot.mode=initial`
     * (postgresql-connector.yaml:47) bulk-reads each captured table once and

@@ -698,14 +698,13 @@ object CdcQueries extends QueryGroup {
         // the fixture cache tier; without it each window branch re-probed
         // the key/value JSON over the full fixture (the sweep's one >15×
         // sf1 residue). The parse inside unwrapped stays graded work.
-        val sliced = graft.BoundedDfCache.getOrPersistFixture(
+        val sliced = graft.BoundedDfCache.getOrPersist(
           s, s"${graft.BoundedDfCache.FixturePrefix}cdc:pauseslice:$dir")(
           CdcOps.synthOrdersChangelog(s, dir)
             .filter(get_json_object(col("key"), "$.o_orderkey")
               .cast("long") % 4 === 2)
             .withColumn("_w_lsn",
-              get_json_object(col("value"), "$.source.lsn").cast("long")))(
-          identity)
+              get_json_object(col("value"), "$.source.lsn").cast("long")))
         // window 1 = inserts; window 2 = updates + deletes + tombstones
         // (value-less tombstones have no lsn → coalesce routes them here)
         val w1 = sliced
@@ -1047,7 +1046,8 @@ object CdcQueries extends QueryGroup {
     import graft.streaming.Sinks
     val un = CdcOps.ordersUnwrapped(s, dir)
       .filter(!col("_tombstone") && col("o_orderkey") % 4 === 0)
-    val tmp = wipedTmp(s, "graft-sink-upsert", dir)
+    val tmp = graft.TmpPaths.fresh(
+      graft.TmpPaths.perProcess("graft-sink-upsert", dir))
     Sinks.upsertBatch(un.filter(col("_op") === "c"),
       0L, tmp, "o_orderkey", "_lsn", nBuckets = 16)
     Sinks.upsertBatch(un.filter(col("_op") =!= "c"),
@@ -1082,7 +1082,8 @@ object CdcQueries extends QueryGroup {
       // partition dir every trigger.
       .orderBy("o_orderdate_us", "o_orderkey")
       .as[WarehouseFeedRow]
-    val tmp = wipedTmp(s, "graft-sink-warehouse", dir)
+    val tmp = graft.TmpPaths.fresh(
+      graft.TmpPaths.perProcess("graft-sink-warehouse", dir))
     // bounded scalar: sizes the chunks so every sf feeds ~4 batches
     val chunk = math.max(1L, (rows.count() + 3) / 4).toInt
     // the stream's state width is 8 on its own session clone, whatever
@@ -1190,18 +1191,6 @@ object CdcQueries extends QueryGroup {
     }
   }
 
-  /** A per-(corpus, process) scratch dir, wiped up front: a fresh
-    * createTempDirectory per invocation would leak its files every rep,
-    * and a wiped dir keeps the snapshot stores' stale-batchId guard
-    * happy. */
-  private def wipedTmp(s: SparkSession, name: String, dir: String): String = {
-    val tmp = graft.TmpPaths.perProcess(name, dir)
-    val root = new org.apache.hadoop.fs.Path(tmp)
-    val fs = root.getFileSystem(s.sessionState.newHadoopConf())
-    if (fs.exists(root)) fs.delete(root, true)
-    tmp
-  }
-
   /** One incrementally-maintained view under its own cache tag
     * `cdc:ivm:<kind>`: the changelog applied in three SEQUENTIAL op-sliced
     * micro-batches — inserts (and snapshot reads); updates incl. the
@@ -1217,7 +1206,8 @@ object CdcQueries extends QueryGroup {
       apply: (Seq[String], Seq[String], Long, String) => Unit)(
       read: String => Option[DataFrame]): DataFrame =
     graft.BoundedDfCache.getOrPersist(s, s"cdc:ivm:$kind:$dir") {
-      val tmp = wipedTmp(s, s"graft-ivm-$kind", dir)
+      val tmp = graft.TmpPaths.fresh(
+        graft.TmpPaths.perProcess(s"graft-ivm-$kind", dir))
       Seq(Seq("c", "r") -> Seq("c"), Seq("u") -> Seq("u"),
           Seq("d") -> Seq("d")).zipWithIndex.foreach {
         case ((fact, dim), b) => apply(fact, dim, b.toLong, tmp)

@@ -345,10 +345,8 @@ object SimilarityQueries extends QueryGroup {
     "sim_ann_ivf_saved" -> ((s, dir) => {
       // per-(corpus, process) path — wiped and rebuilt per invocation, so
       // it must not be shared with a concurrent driver (round-6 ADVICE)
-      val path = graft.TmpPaths.perProcess("graft-ivf-index", dir)
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sessionState.newHadoopConf())
-      if (fs.exists(root)) fs.delete(root, true)
+      val path = graft.TmpPaths.fresh(
+        graft.TmpPaths.perProcess("graft-ivf-index", dir))
       saveIvfIndex(s, dir, path, kCentroids = 16, lloydIters = 1)
       probeIvfIndex(s, path, embs(s, dir).filter(col("vec_id") < 10),
         nprobe = 2)

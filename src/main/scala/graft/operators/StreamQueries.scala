@@ -473,16 +473,15 @@ object StreamQueries extends QueryGroup {
 
   /** One replay feed's batch table. The feeds are pure test-INPUT
     * synthesis (ordered event slices a deployment would read from Kafka,
-    * not fabricate), so they carry FIXTURE tags: disk-cached across JVMs
-    * and surviving bench rep boundaries. The post-read sort restores the
-    * deterministic replay order [[replay]] groups on (within-batch tie
-    * order is irrelevant to the graded semantics: addData treats a batch
-    * as an unordered set). */
+    * not fabricate), so they carry FIXTURE tags and survive bench rep
+    * boundaries. The sort fixes the deterministic replay order [[replay]]
+    * groups on (within-batch tie order is irrelevant to the graded
+    * semantics: addData treats a batch as an unordered set). */
   private def feedFixture(s: SparkSession, dir: String, name: String,
       sortCols: Seq[String])(build: => DataFrame): DataFrame =
-    graft.BoundedDfCache.getOrPersistFixture(
-      s, s"fixture:streamfeed:$name:$dir")(build)(
-      _.sort(sortCols.map(col): _*))
+    graft.BoundedDfCache.getOrPersist(
+      s, s"${graft.BoundedDfCache.FixturePrefix}streamfeed:$name:$dir")(
+      build.sort(sortCols.map(col): _*))
 
   /** The late feed: the event_id%8 slice as five deterministic
     * micro-batches — event-time quartiles, every fifth sliced event
@@ -571,15 +570,11 @@ object StreamQueries extends QueryGroup {
   private def standingFeed(s: SparkSession, dir: String, name: String,
       width: Int)(run: (SparkSession, String) => DataFrame): DataFrame =
     graft.BoundedDfCache.getOrPersist(s, s"stream:$name:$dir") {
-      val ck = new java.io.File(
+      val ck = graft.TmpPaths.fresh(
         graft.TmpPaths.ephemeral(s"graft-$name-ck", dir))
-      def wipe(): Unit = scala.reflect.io.Directory(
-        scala.reflect.io.Path(ck).toDirectory).deleteRecursively()
-      wipe()
       try graft.Sessions.scoped(
-        s, "spark.sql.shuffle.partitions" -> width.toString)(
-        run(_, ck.toString))
-      finally wipe()
+        s, "spark.sql.shuffle.partitions" -> width.toString)(run(_, ck))
+      finally graft.TmpPaths.fresh(ck)
     }
 
   /** `stream_late_data` and `stream_append_mode`'s pipeline: the late

@@ -121,8 +121,8 @@ object AvroWire {
     * topic a rolling producer upgrade leaves behind. */
   def synthConfluentChangelog(
       spark: SparkSession, sfDir: String): DataFrame =
-    graft.BoundedDfCache.getOrPersistFixture(
-      spark, s"fixture:avrowire:$sfDir") {
+    graft.BoundedDfCache.getOrPersist(
+      spark, s"${graft.BoundedDfCache.FixturePrefix}avrowire:$sfDir") {
       import spark.implicits._
       val base = Tables.scan(spark, sfDir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
@@ -195,12 +195,10 @@ object AvroWire {
           Iterator(ins) ++ upd ++ del
         }
       }.toDF()
-    } { df =>
-        // keyed-topic layout: restore partition parallelism the small
-        // fixture parquet read-back would coalesce away
-        df.repartition(
-          df.sparkSession.sparkContext.defaultParallelism, col("key"))
-      }
+        // keyed-topic layout: spread the single-split orders scan across
+        // the session's parallelism
+        .repartition(spark.sparkContext.defaultParallelism, col("key"))
+    }
 
   /** Decode a registry-framed (key, value) stream into the typed orders
     * envelope under the v2 READER schema: per-record writer dispatch by

@@ -86,10 +86,6 @@ object SchemaEvolution {
     case _ => None
   }
 
-  /** Kept for callers of the v1 (round-1) API. */
-  def parseAddColumn(ddl: String): Option[(String, StructField)] =
-    parseDdl(ddl).collect { case AddCol(t, f) => (t, f) }
-
   /** Is `from` → `to` a lossless widening? Old values parse exactly under
     * the wider type; everything else needs reprocessing. */
   private[sources] def widens(from: DataType, to: DataType): Boolean =

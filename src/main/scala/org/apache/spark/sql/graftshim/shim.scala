@@ -54,6 +54,12 @@ object Shim {
       .asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface]
   }
 
+  /** Delete `dir` (a file or a whole tree) when the JVM exits
+    * (`ShutdownHookManager` is private[spark]): Spark's temp-dir hook,
+    * which runs after the SparkContext has stopped. */
+  def deleteOnExit(dir: java.io.File): Unit =
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir)
+
   /** How many streaming query buses sit on `spark`'s shared bus. */
   def streamingBusCount(spark: org.apache.spark.sql.SparkSession): Int =
     spark.sparkContext.listenerBus.findListenersByClass[

@@ -351,27 +351,22 @@ class DebeziumDsv2Spec extends SparkSpec {
     assert(e.getMessage.contains("fixed schema"))
   }
 
-  test("archive fixture: an uncommitted (crashed-writer) dir is rebuilt " +
-      "and republished atomically") {
-    import org.apache.hadoop.fs.Path
-    val tmp = graft.TmpPaths.shared("graft-dbz-archive", sfDir)
-    val root = new Path(tmp)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val expected = CdcOps.synthOrdersChangelog(spark, sfDir).count()
-    // ensure it exists, then simulate a writer that died mid-publish:
-    // data present but no commit marker
-    CdcOps.ordersChangelogArchive(spark, sfDir)
-    assert(fs.exists(new Path(root, "_SUCCESS")))
-    fs.delete(new Path(root, "_SUCCESS"), false)
-    val again = CdcOps.ordersChangelogArchive(spark, sfDir)
-    assert(again == tmp)
-    assert(fs.exists(new Path(root, "_SUCCESS")),
-      "rebuild must republish the commit marker")
-    assert(spark.read.format("debezium-json").load(tmp).count() === expected)
-    // no staging leftovers next to the published dir
-    val stale = fs.listStatus(root.getParent).map(_.getPath.getName)
-      .filter(_.startsWith(root.getName + ".stage-"))
-    assert(stale.isEmpty, s"staging dirs leaked: ${stale.mkString(",")}")
+  test("archive fixture: written once per process, pid-scoped") {
+    val path = CdcOps.ordersChangelogArchive(spark, sfDir)
+    assert(path.endsWith(s"-p${ProcessHandle.current().pid()}"))
+    def mtimes: Map[String, java.nio.file.attribute.FileTime] = {
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(Paths.get(path))
+      try walk.iterator().asScala
+        .map(p => p.toString -> Files.getLastModifiedTime(p)).toMap
+      finally walk.close()
+    }
+    val before = mtimes
+    assert(before.keys.exists(_.endsWith(".txt")))
+    assert(CdcOps.ordersChangelogArchive(spark, sfDir) == path)
+    assert(mtimes == before, "a second call must not rewrite the archive")
+    assert(spark.read.format("debezium-json").load(path).count() ===
+      CdcOps.synthOrdersChangelog(spark, sfDir).count())
   }
 
   test("differential: archive-replay compaction equals in-memory compaction") {

@@ -12,7 +12,6 @@ class InfraSpec extends SparkSpec {
       .startsWith("_root_testdata_sf0.1-"))
     // distinct corpora → distinct keys (the hashCode scheme this replaced
     // could collide two corpora onto one artifact)
-    assert(TmpPaths.shared("x", "/a/b") != TmpPaths.shared("x", "/a/c"))
     assert(TmpPaths.perProcess("x", "/a/b") != TmpPaths.perProcess("x", "/a/c"))
     // the substitution alone is NOT injective ('_' is in the allowed
     // class) — the digest suffix must separate paths that sanitize alike
@@ -23,6 +22,57 @@ class InfraSpec extends SparkSpec {
     // per-process paths carry this JVM's pid
     assert(TmpPaths.perProcess("x", "/a/b")
       .endsWith(s"p${ProcessHandle.current().pid()}"))
+  }
+
+  test("TmpPaths.fresh removes whatever an earlier use left at its path") {
+    val path = TmpPaths.perProcess("graft-fresh-probe", sfDir)
+    val nested = java.nio.file.Paths.get(path, "a", "b")
+    java.nio.file.Files.createDirectories(nested)
+    java.nio.file.Files.writeString(nested.resolve("part-0"), "stale")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(path, "_SUCCESS"), "")
+    assert(TmpPaths.fresh(path) == path)
+    assert(!new java.io.File(path).exists())
+    // an absent path is already fresh
+    assert(TmpPaths.fresh(path) == path)
+  }
+
+  test("per-process scratch is deleted when the JVM exits") {
+    // a child JVM writes into its per-process path and exits normally;
+    // Spark's shutdown hook must take the whole tree with it
+    val javaBin = new java.io.File(sys.props("java.home"), "bin/java").toString
+    val child = new ProcessBuilder(javaBin,
+        "-cp", sys.props("java.class.path"),
+        s"-Djava.io.tmpdir=${sys.props("java.io.tmpdir")}",
+        "-Xmx256m", "graft.TmpPathsExitProbe", sfDir)
+      .redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(child.getInputStream)
+      .getLines().toList
+    assert(child.waitFor() == 0, out.mkString("\n"))
+    val written = out.collectFirst {
+      case l if l.startsWith("written ") => l.stripPrefix("written ")
+    }.getOrElse(fail(s"probe printed no path:\n${out.mkString("\n")}"))
+    assert(written.endsWith(s"-p${child.pid()}"))
+    assert(!new java.io.File(written).exists(),
+      s"$written outlived its JVM")
+  }
+
+  test("fixtures live only in the memory of the JVM that builds them: " +
+      "src/main has no cross-process fixture cache") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main")
+    val walk = java.nio.file.Files.walk(root)
+    val offenders =
+      try walk.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          val src = java.nio.file.Files.readString(p)
+          Seq("graft_fixtures", "fixtureVersion", "getOrPersistFixture",
+              "TmpPaths.shared")
+            .filter(src.contains).map(n => s"${root.relativize(p)}: $n")
+        }.toList.sorted
+      finally walk.close()
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("the AQE bench knob stays a bench knob: only Bench.scala reads " +

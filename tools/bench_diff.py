@@ -25,6 +25,10 @@ large improvements — expected, and never flagged.
   - shared-build tags with the same flag rule (first-touch cost moved);
   - NEW / REMOVED queries and shared-build tags (surface changes and
     renamed or split tags, informational);
+  - `fixture:` tags (test-input synthesis, built once per JVM) apart from
+    the graded builds, per tag prior -> current, never flagged: a fixture
+    is not a graded operator, and what its one build costs depends on
+    how the harness stages test input, not on the engine;
   - the total-time ratio.
 
 Exit code 1 iff any query regressed past the flag on a comparable host
@@ -87,6 +91,8 @@ def main():
     # tags carry the sf-dir suffix; normalize so runs at the same SF compare
     sp = {k.split(":/")[0]: v for k, v in sp.items()}
     sc = {k.split(":/")[0]: v for k, v in sc.items()}
+    fp = {k: sp.pop(k) for k in list(sp) if k.startswith("fixture:")}
+    fc = {k: sc.pop(k) for k in list(sc) if k.startswith("fixture:")}
     # displayed ratio uses the SAME floored operands as the flag condition,
     # so sub-floor tags never print a ratio that disagrees with the rule
     breg = [(max(sc[t], floor) / max(sp[t], floor), t, sp[t], sc[t])
@@ -105,6 +111,15 @@ def main():
                 f"{n}={c[n]:.2f}s" for n in new))
         if gone:
             print(f"REMOVED{kind} ({len(gone)}): " + ", ".join(gone))
+
+    if fp or fc:
+        print(f"\nfixture tags (test input, never flagged): "
+              f"{sum(fp.values()):.1f} -> {sum(fc.values()):.1f} s "
+              f"over {len(fp)} -> {len(fc)} tags")
+        for t in sorted(set(fp) | set(fc)):
+            a = f"{fp[t]:7.3f}" if t in fp else "      -"
+            b = f"{fc[t]:7.3f}" if t in fc else "      -"
+            print(f"  {t:32s} {a} -> {b} s")
 
     tp, tc = prior.get("value"), cur.get("value")
     if tp and tc:
