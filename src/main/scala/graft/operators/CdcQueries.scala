@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Dec, QueryGroup}
-import graft.sources.Tables
+import graft.sources.{AvroWire, Tables}
 import graft.streaming.{BucketedJoinView, IncrementalJoinView,
   IncrementalMinMax, IncrementalView}
 import org.apache.spark.sql.functions._
@@ -874,12 +874,7 @@ object CdcQueries extends QueryGroup {
     // comment; v1-written survivors surface the default null, proving
     // the resolution actually ran.
     "cdc_compact_avro" -> ((s, dir) => {
-      import graft.sources.AvroWire
-      val decoded = graft.BoundedDfCache.getOrPersist(
-        s, s"cdc:avro-decoded:$dir")(
-        AvroWire.decodeOrdersConfluent(
-          AvroWire.synthConfluentChangelog(s, dir)))
-      CdcOps.compactLatest(decoded,
+      CdcOps.compactLatest(avroDecoded(s, dir),
         keys = Seq("o_orderkey"), ordering = Seq(col("_lsn").desc))
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
           "o_orderdate_us", "o_orderpriority", "o_comment")
@@ -1938,9 +1933,15 @@ object CdcQueries extends QueryGroup {
         |GROUP BY c_mktsegment
         |ORDER BY c_mktsegment""".stripMargin)
 
-  /** Warm-start targets (weights = measured sf0.1 build seconds — the
-    * per-pipeline tags' from one prewarm-off Bench at local[4]; the
-    * concurrent kick is [[graft.Prewarm]]). */
+  /** The Confluent wire-format changelog decoded under the v2 reader
+    * schema (bronze, shared; see `cdc_compact_avro`). */
+  private def avroDecoded(s: SparkSession, dir: String): DataFrame =
+    graft.BoundedDfCache.getOrPersist(s, s"cdc:avro-decoded:$dir")(
+      AvroWire.decodeOrdersConfluent(AvroWire.synthConfluentChangelog(s, dir)))
+
+  /** Warm-start targets (weights = sf0.1 build seconds; read them off
+    * the per-task wall seconds of the `[prewarm]` line that
+    * [[graft.Prewarm.run]] ends with). */
   override def prewarm: Seq[graft.Prewarm.Task] = Seq(
     graft.Prewarm.Task("cdc:ivm:view", 1.6, (s, d) => { ivmView(s, d); () }),
     graft.Prewarm.Task("cdc:ivm:minmax", 3.3,
@@ -1961,6 +1962,7 @@ object CdcQueries extends QueryGroup {
       CdcOps.parsedOrdersTail(s, d); CdcOps.parsedOrdersSnapshot(s, d)
       CdcOps.parsedOrdersMySql(s, d); CdcOps.parsedOrdersMongo(s, d)
       CdcOps.parsedUsers(s, d); CdcOps.parsedOutbox(s, d)
+      CdcOps.parsedOrdersSnapshotChunks(s, d); avroDecoded(s, d)
       ()
     }))
 

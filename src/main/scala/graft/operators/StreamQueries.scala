@@ -456,12 +456,13 @@ object StreamQueries extends QueryGroup {
     * sink): old 2.96/0.76/0.66 s vs new 3.23/1.44/1.05 s for
     * sess/join/late — the old form was NOT compute-bound at measured
     * SFs (the 127 s `fixture:streamfeed:sess` window in the r17 sf1
-    * sweep was the one-task stage starving under the concurrent prewarm
-    * storm, an attribution artifact both forms show). The two-phase form
-    * is kept for the SHAPE: a single-partition sort of the whole slice
-    * is a hard straggler at 10×+ this corpus. FeedBatchEquivalenceSpec
-    * re-proves equality against the direct ntile on real corpus
-    * slices. */
+    * sweep was the one-task stage starving for cores among the other
+    * prewarm builds, a contention artifact both forms show; that phase
+    * is one blocking step before the queries, so no query's time holds
+    * it). The two-phase form is kept for the SHAPE: a single-partition
+    * sort of the whole slice is a hard straggler at 10×+ this corpus.
+    * FeedBatchEquivalenceSpec re-proves equality against the direct
+    * ntile on real corpus slices. */
   private[graft] def twoPhaseNtile0(df: DataFrame, k: Int): DataFrame =
     // the hour of ts is a prefix of (ts, event_id) order
     GlobalOrder.prefixBefore(

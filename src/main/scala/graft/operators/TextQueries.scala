@@ -1433,7 +1433,7 @@ FROM dcg CROSS JOIN ideal CROSS JOIN best"""
   /** Warm-start targets (see [[graft.Prewarm]]). */
   override def prewarm: Seq[graft.Prewarm.Task] = Seq(
     graft.Prewarm.Task("text:tables", 1.7, (s, d) => {
-      bm25PerDoc(s, d); classifierScores(s, d)
+      bm25PerDoc(s, d); classifierScores(s, d); bpeVocab(s, d)
       ()
     }))
 

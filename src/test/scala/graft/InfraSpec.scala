@@ -6,6 +6,20 @@ import graft.sources.Tables
   * parallelized scan helper ([[Tables.scanPar]]). */
 class InfraSpec extends SparkSpec {
 
+  /** `file: name` for each of `names` found in a `src/main` Scala file. */
+  private def srcMainHits(names: String*): List[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main")
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = java.nio.file.Files.readString(p)
+        names.filter(src.contains).map(n => s"${root.relativize(p)}: $n")
+      }.toList.sorted
+    finally walk.close()
+  }
+
   test("TmpPaths: keys derive from the full path, distinct per corpus " +
       "and per process") {
     assert(TmpPaths.sanitize("/root/testdata/sf0.1")
@@ -59,19 +73,25 @@ class InfraSpec extends SparkSpec {
 
   test("fixtures live only in the memory of the JVM that builds them: " +
       "src/main has no cross-process fixture cache") {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main")
-    val walk = java.nio.file.Files.walk(root)
+    val offenders = srcMainHits("graft_fixtures", "fixtureVersion",
+      "getOrPersistFixture", "TmpPaths.shared")
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("SparkEntry.queries hands out each group's own function, unwrapped") {
+    Seq("cdc_ivm_view" -> operators.CdcQueries,
+        "dedup_exact" -> operators.DedupQueries,
+        "stream_late_data" -> operators.StreamQueries,
+        "text_tfidf" -> operators.TextQueries)
+      .foreach { case (name, group) =>
+        assert(SparkEntry.queries(name) eq group.queries(name), name)
+      }
+  }
+
+  test("shared builds have one attribution rule: src/main has no build " +
+      "netting, no prewarm switch and no in-query kick") {
     val offenders =
-      try walk.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .flatMap { p =>
-          val src = java.nio.file.Files.readString(p)
-          Seq("graft_fixtures", "fixtureVersion", "getOrPersistFixture",
-              "TmpPaths.shared")
-            .filter(src.contains).map(n => s"${root.relativize(p)}: $n")
-        }.toList.sorted
-      finally walk.close()
+      srcMainHits("clippedUnion", "SPARK_GRAFT_PREWARM", "Prewarm.kick")
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 

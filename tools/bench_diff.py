@@ -8,16 +8,6 @@ Both inputs are graft.Bench full-JSON lines (bench_perquery_rN.json /
 bench_perquery_latest.json — the first line of SPARK_GRAFT_BENCH_OUT also
 works). Compares per-query minima and prints:
 
-Attribution note (r16): Bench per-query times are now OWN cost — the
-interval-union of shared builds completing inside a query's window is
-subtracted and attributed to the `shared_builds` tags instead, so the
-query whose window the concurrent prewarm builds land in no longer
-false-flags here when build cost moves between consumers. Rep totals
-("runs"/"value") remain RAW (builds included). Comparing a pre-r16 (raw)
-file against an r16+ (netted) file shows the old group-head queries
-(e.g. cdc_sink_upsert, which once built all three standing pipelines) as
-large improvements — expected, and never flagged.
-
   - REGRESSED: queries whose current min > flag x prior min (default 1.5x),
     with both times floored at `floor` seconds (default 0.15 s — below that
     per-query fixed overhead dominates and a 0.05->0.12 s "2.4x" is
@@ -29,7 +19,19 @@ large improvements — expected, and never flagged.
     the graded builds, per tag prior -> current, never flagged: a fixture
     is not a graded operator, and what its one build costs depends on
     how the harness stages test input, not on the engine;
+  - the prewarm phase, prior -> current minimum over reps;
   - the total-time ratio.
+
+Attribution rule: each rep first builds every shared stage in one timed
+phase (graft.Prewarm; the per-rep `prewarm` seconds array), then times
+each query alone. A query's time is its own wall time with no build in
+flight, and a rep total ("runs"/"value") is the phase plus the queries.
+A file written before that phase existed has no `prewarm` array: its
+per-query times were netted of the builds that finished inside each
+query's window. Against such a file, a query that builds a tag at first
+touch reads slower by that build (Bench logs such tags per rep as
+"graded tags built by queries"); that is a re-baseline, not a
+regression.
 
 Exit code 1 iff any query regressed past the flag on a comparable host
 (probe-noise ratio <= 1.3); otherwise 0. Host comparability uses the min
@@ -120,6 +122,14 @@ def main():
             a = f"{fp[t]:7.3f}" if t in fp else "      -"
             b = f"{fc[t]:7.3f}" if t in fc else "      -"
             print(f"  {t:32s} {a} -> {b} s")
+
+    pw = [d.get("prewarm") for d in (prior, cur)]
+    if all(pw):
+        print(f"\nprewarm phase: {min(pw[0]):.1f} -> {min(pw[1]):.1f} s "
+              "(min over reps)")
+    else:
+        print("\nprewarm phase: not recorded in "
+              + " or ".join(n for n, p in zip(("prior", "current"), pw) if not p))
 
     tp, tc = prior.get("value"), cur.get("value")
     if tp and tc:
