@@ -15,11 +15,6 @@ object CatalogGen {
         s"stale=${(described -- names).toSeq.sorted}")
     val fams = SparkEntry.families
     val oracled = SparkEntry.oracleSql.keySet
-    val famOrder = Seq("CdcQueries", "AggQueries", "JoinQueries",
-      "FilterSetQueries", "WindowQueries", "ScalarQueries", "StreamQueries",
-      "TextQueries", "DedupQueries", "SimilarityQueries",
-      "TimeSeriesQueries", "MultimodalQueries", "PipelineQueries",
-      "SamplingQueries", "CurationQueries")
     val sb = new StringBuilder
     sb ++= "# Query catalog\n\n"
     sb ++= "GENERATED by `graft.CatalogGen` from `Catalog.describe` — do " +
@@ -34,7 +29,7 @@ object CatalogGen {
       "grades, the\noracle kind, and what it computes. Every query runs " +
       "via `SparkEntry.queries(name)(spark, sfDir)`\nover the parquet " +
       "tables in `sfDir`.\n"
-    for (fam <- famOrder) {
+    for (fam <- SparkEntry.familyOrder) {
       val qs = names.filter(fams(_) == fam).toSeq.sorted
       if (qs.nonEmpty) {
         sb ++= s"\n## $fam\n\n"

@@ -54,6 +54,11 @@ object SparkEntry {
   /** Query name → owning [[QueryGroup]] simple name ([[CatalogGen]]'s
     * operator-family column). */
   def families: Map[String, String] =
-    groups.flatMap(g => g.queries.keys
-      .map(_ -> g.getClass.getSimpleName.stripSuffix("$"))).toMap
+    groups.flatMap(g => g.queries.keys.map(_ -> family(g))).toMap
+
+  /** The family names in `groups` order ([[CatalogGen]]'s section order). */
+  private[graft] def familyOrder: Seq[String] = groups.map(family)
+
+  private def family(g: QueryGroup): String =
+    g.getClass.getSimpleName.stripSuffix("$")
 }

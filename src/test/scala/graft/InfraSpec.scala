@@ -7,9 +7,12 @@ import graft.sources.Tables
 class InfraSpec extends SparkSpec {
 
   /** `file: name` for each of `names` found in a `src/main` Scala file. */
-  private def srcMainHits(names: String*): List[String] = {
+  private def srcMainHits(names: String*): List[String] =
+    srcHits("src/main", names: _*)
+
+  private def srcHits(dir: String, names: String*): List[String] = {
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main")
+    val root = java.nio.file.Paths.get(dir)
     val walk = java.nio.file.Files.walk(root)
     try walk.iterator().asScala
       .filter(_.toString.endsWith(".scala"))
@@ -75,6 +78,14 @@ class InfraSpec extends SparkSpec {
       "src/main has no cross-process fixture cache") {
     val offenders = srcMainHits("graft_fixtures", "fixtureVersion",
       "getOrPersistFixture", "TmpPaths.shared")
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("the hash-bucket store's layout lives in BucketCommit alone: no " +
+      "other streaming file names its paths, pin or markers") {
+    val offenders = srcHits("src/main/scala/graft/streaming", "_bucket=",
+      ".stage-", ".trash-", "_applied-", "_nbuckets", ".inprogress")
+      .filterNot(_.startsWith("BucketCommit.scala: "))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 

@@ -201,6 +201,22 @@ class SinksAndJoinsSpec extends SparkSpec {
       .filter(pmod(xxhash64(col("k")), lit(8L)).cast("int") =!= col("_bucket"))
       .count()
     assert(misplaced == 0L)
+    // rebucket refuses to reshard in place, onto an existing path, to zero
+    // buckets, or from a root that holds no bucket — and writes nothing
+    val empty = base + "/empty"
+    assert(new java.io.File(empty).mkdirs())
+    for ((from, to, n, why) <- Seq(
+        (dir, dir, 8, "NEW path"), (dir, wide, 8, "already exists"),
+        (dir, base + "/t0", 0, "positive"), (empty, base + "/t9", 8, "")))
+      withClue(s"$from -> $to ($n): ") {
+        val e = intercept[IllegalArgumentException](
+          Sinks.rebucket(spark, from, to, "k", n))
+        assert(e.getMessage.contains(why))
+        assert(!new java.io.File(to + ".inprogress").exists())
+      }
+    assert(!new java.io.File(base + "/t0").exists())
+    assert(!new java.io.File(base + "/t9").exists())
+    assert(state(dir) == state(wide))
     // the resumed stream continues against the new geometry (old rejected)
     intercept[IllegalArgumentException] {
       Sinks.upsertBatch(batch((1L, 11L, "a2")), 1L, wide, "k", "lsn",
