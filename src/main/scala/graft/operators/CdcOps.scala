@@ -74,7 +74,8 @@ object CdcOps {
     * (`lsn` for Postgres — NOT arrival order, which at-least-once delivery
     * does not preserve; SURVEY.md §7.4.2). Idempotent under replay: a
     * duplicated event has the same (key, lsn, content) so `row_number`
-    * keeps an identical winner.
+    * keeps an identical winner. On a position tie the delete rewrite wins
+    * (`__deleted` desc after `ordering`), the streaming form's rule.
     *
     * One hash-shuffle on `keys`; no global sort. Streaming form lives in
     * [[graft.streaming.StatefulCompaction]].
@@ -83,7 +84,8 @@ object CdcOps {
       unwrapped: DataFrame,
       keys: Seq[String],
       ordering: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(ordering: _*)
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(ordering :+ col("__deleted").desc: _*)
     unwrapped
       .filter(!col("_tombstone")) // delete is represented by the rewrite row
       .withColumn("_rn", row_number().over(w))

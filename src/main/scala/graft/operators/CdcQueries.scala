@@ -30,17 +30,7 @@ final case class WarehouseFeedRow(
   * deterministically from `orders` (see [[CdcOps.synthOrdersChangelog]]),
   * so every oracle is plain SQL over the same table. */
 object CdcQueries extends QueryGroup {
-
-  /** Shared CTE: orders row with the configured CDC type modes applied
-    * (decimal-as-string, epoch-micros — postgresql-connector.yaml:48-49). */
-  private val baseCte =
-    """WITH base AS (
-      |  SELECT o_orderkey, o_custkey, o_orderstatus,
-      |         CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR) AS o_totalprice,
-      |         epoch_us(o_orderdate) AS o_orderdate_us,
-      |         o_orderpriority
-      |  FROM orders)
-      |""".stripMargin
+  import OracleSql._
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // op 2: envelope parse — event counts by op (tombstones pass through).
@@ -1106,7 +1096,7 @@ object CdcQueries extends QueryGroup {
   private def buildTxnApplyEvict(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{TxnApply, TxnFeedEvent}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+    import org.apache.spark.sql.streaming.OutputMode
     import s.implicits._
     val evAll = CdcOps.txnEventsShared(s, dir)
       .filter(col("txid") % 4 === 0)
@@ -1119,66 +1109,44 @@ object CdcQueries extends QueryGroup {
         col("max_lsn").as("lsn"), lit(true).as("end"),
         col("event_count").as("expected"))
       .as[TxnFeedEvent].sort("txid")
-    val nTx = meta.count() // bounded scalar: the await target
+    val nTx = meta.count() // bounded scalar: the applied-count check
     // state-store count follows state volume, not analytic width — same
     // per-stateful-job sizing call as cdc_compact_tws: width 8 on the
-    // stream's own session clone
-    graft.Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "8") { c =>
+    // stream's own session clone. With no-data batches off the stream
+    // runs only data batches, so processAllAvailable drains it like every
+    // other standing pipeline; pending evictions fire on the next data
+    // batch (see TxnApply.apply).
+    graft.Sessions.scoped(s, "spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") { c =>
       val sinkName = "graft_txn_apply_evict"
       val in = MemoryStream[TxnFeedEvent](c)
       val q = TxnApply(in.toDS(),
           replayWindowMs = Some(TxnApply.DefaultReplayWindowMs))
         .writeStream
-        // eviction mode schedules data-less timeout batches forever,
-        // so processAllAvailable never returns — poll the sink under a
-        // sane trigger interval instead (the operator's caller
-        // contract)
-        .trigger(Trigger.ProcessingTime("100 milliseconds"))
         .format("memory").queryName(sinkName)
         .outputMode(OutputMode.Update).start()
-      def await(cond: => Boolean, what: String): Unit = {
-        val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
-        while (!cond) {
-          if (System.nanoTime() > deadline)
-            throw new IllegalStateException(
-              s"cdc_txn_apply_evict: timed out waiting for $what")
-          Thread.sleep(50)
-        }
+      import scala.jdk.CollectionConverters._
+      // bounded driver transfer: chunked toLocalIterator, tws-style
+      var replayChunk: IndexedSeq[TxnFeedEvent] = IndexedSeq.empty
+      dataFeed.toLocalIterator().asScala.grouped(65536).foreach { b =>
+        val chunk = b.toIndexedSeq
+        if (replayChunk.isEmpty) replayChunk = chunk
+        in.addData(chunk: _*)
       }
-      try {
-        import scala.jdk.CollectionConverters._
-        // bounded driver transfer: chunked toLocalIterator, tws-style
-        var replayChunk: IndexedSeq[TxnFeedEvent] = IndexedSeq.empty
-        dataFeed.toLocalIterator().asScala.grouped(65536).foreach { b =>
-          val chunk = b.toIndexedSeq
-          if (replayChunk.isEmpty) replayChunk = chunk
-          in.addData(chunk: _*)
-        }
-        endFeed.toLocalIterator().asScala.grouped(65536).foreach {
-          b => in.addData(b.toIndexedSeq: _*)
-        }
-        await(c.table(sinkName).count() >= nTx, s"$nTx applied txns")
-        // redelivery in a strictly later batch (added only after every
-        // apply was observed): data replays dedup against tombstones,
-        // replayed ENDs hit the applied branch — all no-ops
-        val target = in.addData(replayChunk: _*).json().trim.toLong
-        await(Option(q.lastProgress).exists(p =>
-            scala.util.Try(p.sources.head.endOffset.trim.toLong)
-              .getOrElse(-1L) >= target),
-          "the replay batch to be consumed")
-        require(c.table(sinkName).count() == nTx,
-          "in-window replay re-applied a transaction — the applied " +
-            "tombstone (or its eviction re-arm) is broken")
-      } finally {
-        // stop between triggers: a stop inside a running eviction batch
-        // aborts its state-store commit (CANNOT_COMMIT logged per store).
-        // Bounded — the result is already read, so at worst the stop
-        // lands mid-batch as before.
-        val patience = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        while (q.status.isTriggerActive && System.nanoTime() < patience)
-          Thread.sleep(5)
-        q.stop()
+      endFeed.toLocalIterator().asScala.grouped(65536).foreach {
+        b => in.addData(b.toIndexedSeq: _*)
       }
+      q.processAllAvailable()
+      require(c.table(sinkName).count() == nTx,
+        s"cdc_txn_apply_evict: expected $nTx applied transactions")
+      // redelivery in a strictly later batch (added only after every
+      // apply was observed): data replays dedup against tombstones,
+      // replayed ENDs hit the applied branch — all no-ops
+      in.addData(replayChunk: _*)
+      q.processAllAvailable()
+      require(c.table(sinkName).count() == nTx,
+        "in-window replay re-applied a transaction — the applied " +
+          "tombstone (or its eviction re-arm) is broken")
       c.table(sinkName)
         .select(col("txid"), col("event_count"), col("min_lsn"),
           col("max_lsn"))
@@ -1322,39 +1290,33 @@ object CdcQueries extends QueryGroup {
     "cdc_route" ->
       "SELECT 'prod.postgres.orders' AS topic, 'orders' AS tbl",
 
-    "cdc_unwrap" -> (baseCte +
-      """SELECT * FROM (
-        |  SELECT 'orders' AS tbl, o_orderkey, o_custkey, o_orderstatus,
-        |         o_totalprice, o_orderdate_us, o_orderpriority,
-        |         'false' AS __deleted, 'c' AS _op
-        |  FROM base
-        |  UNION ALL
-        |  SELECT 'orders', o_orderkey, o_custkey, 'X', o_totalprice,
-        |         o_orderdate_us, o_orderpriority, 'false', 'u'
-        |  FROM base WHERE o_orderkey % 10 = 0
-        |  UNION ALL
-        |  SELECT 'orders', o_orderkey, o_custkey, 'X', o_totalprice,
-        |         o_orderdate_us, o_orderpriority, 'false', 'u'
-        |  FROM base WHERE o_orderkey % 20 = 0
-        |  UNION ALL
-        |  SELECT 'orders', o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END,
-        |         o_totalprice, o_orderdate_us, o_orderpriority, 'true', 'd'
-        |  FROM base WHERE o_orderkey % 7 = 0)
-        |ORDER BY o_orderkey, _op, __deleted""".stripMargin),
+    "cdc_unwrap" -> (ordersBase +
+      s"""SELECT * FROM (
+         |  SELECT 'orders' AS tbl, o_orderkey, o_custkey, o_orderstatus,
+         |         o_totalprice, o_orderdate_us, o_orderpriority,
+         |         'false' AS __deleted, 'c' AS _op
+         |  FROM base
+         |  UNION ALL
+         |  SELECT 'orders', o_orderkey, o_custkey, 'X', o_totalprice,
+         |         o_orderdate_us, o_orderpriority, 'false', 'u'
+         |  FROM base WHERE o_orderkey % 10 = 0
+         |  UNION ALL
+         |  SELECT 'orders', o_orderkey, o_custkey, 'X', o_totalprice,
+         |         o_orderdate_us, o_orderpriority, 'false', 'u'
+         |  FROM base WHERE o_orderkey % 20 = 0
+         |  UNION ALL
+         |  SELECT 'orders', o_orderkey, o_custkey,
+         |         $finalStatus,
+         |         o_totalprice, o_orderdate_us, o_orderpriority, 'true', 'd'
+         |  FROM base WHERE o_orderkey % 7 = 0)
+         |ORDER BY o_orderkey, _op, __deleted""".stripMargin),
 
-    "cdc_compact" -> (baseCte +
-      """SELECT o_orderkey, o_custkey,
-        |       CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END
-        |         AS o_orderstatus,
-        |       o_totalprice, o_orderdate_us, o_orderpriority
-        |FROM base WHERE o_orderkey % 7 <> 0
-        |ORDER BY o_orderkey""".stripMargin),
+    "cdc_compact" -> compactedOrders(),
 
     // the fixture's lsn layout (insert k·10, update k·10+5, delete
     // k·10+8) replayed only up to the cutoff: updates/deletes past it
     // never happened
-    "cdc_time_travel" -> (baseCte.stripSuffix("\n") +
+    "cdc_time_travel" -> (ordersBase.stripSuffix("\n") +
       """, mk AS (SELECT MAX(o_orderkey) * 6 AS c FROM orders)
         |SELECT o_orderkey, o_custkey,
         |       CASE WHEN o_orderkey % 10 = 0
@@ -1420,98 +1382,74 @@ object CdcQueries extends QueryGroup {
 
     // compacted state (the cdc_compact oracle) digested twice — pristine
     // and with the drift rules applied — then chunk fingerprints compared
-    "cdc_reconcile" -> (baseCte.stripSuffix("\n") +
-      """, st AS (SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END
-        |      AS o_orderstatus,
-        |    o_totalprice
-        |  FROM base WHERE o_orderkey % 7 <> 0),
-        |sd AS (SELECT o_orderkey // 512 AS chunk,
-        |    CAST(concat('0x', substr(md5(concat_ws('|',
-        |      CAST(o_orderkey AS VARCHAR), o_orderstatus, o_totalprice)),
-        |      1, 12)) AS BIGINT) AS d
-        |  FROM st),
-        |sc AS (SELECT chunk, COUNT(*) AS cnt, CAST(SUM(d) AS BIGINT)
-        |    AS hsum FROM sd GROUP BY 1),
-        |t0 AS (SELECT o_orderkey, o_orderstatus,
-        |    CASE WHEN o_orderkey % 113 = 5 THEN '0.00'
-        |         ELSE o_totalprice END AS o_totalprice
-        |  FROM st WHERE o_orderkey % 127 <> 9),
-        |td AS (SELECT o_orderkey // 512 AS chunk,
-        |    CAST(concat('0x', substr(md5(concat_ws('|',
-        |      CAST(o_orderkey AS VARCHAR), o_orderstatus, o_totalprice)),
-        |      1, 12)) AS BIGINT) AS d
-        |  FROM t0),
-        |tc AS (SELECT chunk, COUNT(*) AS t_cnt, CAST(SUM(d) AS BIGINT)
-        |    AS t_hsum FROM td GROUP BY 1)
-        |SELECT COALESCE(sc.chunk, tc.chunk) AS chunk,
-        |  COALESCE(cnt, 0) AS src_cnt, COALESCE(t_cnt, 0) AS tgt_cnt,
-        |  COALESCE(cnt, 0) - COALESCE(t_cnt, 0) AS cnt_diff
-        |FROM sc FULL OUTER JOIN tc ON sc.chunk = tc.chunk
-        |WHERE COALESCE(cnt, -1) <> COALESCE(t_cnt, -1)
-        |   OR COALESCE(hsum, -1) <> COALESCE(t_hsum, -1)
-        |ORDER BY chunk""".stripMargin),
+    "cdc_reconcile" -> (ordersBase.stripSuffix("\n") +
+      s""", st AS (SELECT o_orderkey,
+         |    $finalStatus
+         |      AS o_orderstatus,
+         |    o_totalprice
+         |  FROM base WHERE o_orderkey % 7 <> 0),
+         |sd AS (SELECT o_orderkey // 512 AS chunk,
+         |    CAST(concat('0x', substr(md5(concat_ws('|',
+         |      CAST(o_orderkey AS VARCHAR), o_orderstatus, o_totalprice)),
+         |      1, 12)) AS BIGINT) AS d
+         |  FROM st),
+         |sc AS (SELECT chunk, COUNT(*) AS cnt, CAST(SUM(d) AS BIGINT)
+         |    AS hsum FROM sd GROUP BY 1),
+         |t0 AS (SELECT o_orderkey, o_orderstatus,
+         |    CASE WHEN o_orderkey % 113 = 5 THEN '0.00'
+         |         ELSE o_totalprice END AS o_totalprice
+         |  FROM st WHERE o_orderkey % 127 <> 9),
+         |td AS (SELECT o_orderkey // 512 AS chunk,
+         |    CAST(concat('0x', substr(md5(concat_ws('|',
+         |      CAST(o_orderkey AS VARCHAR), o_orderstatus, o_totalprice)),
+         |      1, 12)) AS BIGINT) AS d
+         |  FROM t0),
+         |tc AS (SELECT chunk, COUNT(*) AS t_cnt, CAST(SUM(d) AS BIGINT)
+         |    AS t_hsum FROM td GROUP BY 1)
+         |SELECT COALESCE(sc.chunk, tc.chunk) AS chunk,
+         |  COALESCE(cnt, 0) AS src_cnt, COALESCE(t_cnt, 0) AS tgt_cnt,
+         |  COALESCE(cnt, 0) - COALESCE(t_cnt, 0) AS cnt_diff
+         |FROM sc FULL OUTER JOIN tc ON sc.chunk = tc.chunk
+         |WHERE COALESCE(cnt, -1) <> COALESCE(t_cnt, -1)
+         |   OR COALESCE(hsum, -1) <> COALESCE(t_hsum, -1)
+         |ORDER BY chunk""".stripMargin),
 
-    "cdc_compact_mysql" -> (baseCte +
-      """SELECT o_orderkey, o_custkey,
-        |       CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END
-        |         AS o_orderstatus,
-        |       o_totalprice, o_orderdate_us, o_orderpriority
-        |FROM base WHERE o_orderkey % 7 <> 0
-        |ORDER BY o_orderkey""".stripMargin),
+    "cdc_compact_mysql" -> compactedOrders(),
 
-    "cdc_compact_mongo" -> (baseCte +
-      """SELECT o_orderkey, o_custkey,
-        |       CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END
-        |         AS o_orderstatus,
-        |       o_totalprice, o_orderdate_us, o_orderpriority
-        |FROM base WHERE o_orderkey % 7 <> 0
-        |ORDER BY o_orderkey""".stripMargin),
+    "cdc_compact_mongo" -> compactedOrders(),
 
-    "cdc_snapshot_union" -> (baseCte +
-      """SELECT o_orderkey, o_custkey,
-        |       CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END
-        |         AS o_orderstatus,
-        |       o_totalprice, o_orderdate_us, o_orderpriority
-        |FROM base WHERE o_orderkey % 7 <> 0
-        |ORDER BY o_orderkey""".stripMargin),
+    "cdc_snapshot_union" -> compactedOrders(),
 
     // the oracle re-derives the version timeline from the synthesis rules
     // (insert lsn=10k; update lsn=10k+5 when k%10=0 — the k%20 replay is
     // NOT generated, mirroring the engine's replay elimination; delete
     // lsn=10k+8 when k%7=0 closes the last interval)
-    "cdc_scd2" -> (baseCte +
-      """, ev AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice,
-        |         o_orderkey * 10 AS lsn, 'c' AS op
-        |  FROM base
-        |  UNION ALL
-        |  SELECT o_orderkey, 'X', o_totalprice, o_orderkey * 10 + 5, 'u'
-        |  FROM base WHERE o_orderkey % 10 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey,
-        |         CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END,
-        |         o_totalprice, o_orderkey * 10 + 8, 'd'
-        |  FROM base WHERE o_orderkey % 7 = 0),
-        |v AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice,
-        |         lsn AS valid_from,
-        |         LEAD(lsn) OVER (PARTITION BY o_orderkey ORDER BY lsn)
-        |           AS valid_to,
-        |         op
-        |  FROM ev)
-        |SELECT o_orderkey, o_orderstatus, o_totalprice, valid_from, valid_to,
-        |       CAST(valid_to IS NULL AS INT) AS is_current
-        |FROM v WHERE op <> 'd'
-        |ORDER BY o_orderkey, valid_from""".stripMargin),
+    "cdc_scd2" -> (ordersBase +
+      s""", ev AS (
+         |  SELECT o_orderkey, o_orderstatus, o_totalprice,
+         |         o_orderkey * 10 AS lsn, 'c' AS op
+         |  FROM base
+         |  UNION ALL
+         |  SELECT o_orderkey, 'X', o_totalprice, o_orderkey * 10 + 5, 'u'
+         |  FROM base WHERE o_orderkey % 10 = 0
+         |  UNION ALL
+         |  SELECT o_orderkey,
+         |         $finalStatus,
+         |         o_totalprice, o_orderkey * 10 + 8, 'd'
+         |  FROM base WHERE o_orderkey % 7 = 0),
+         |v AS (
+         |  SELECT o_orderkey, o_orderstatus, o_totalprice,
+         |         lsn AS valid_from,
+         |         LEAD(lsn) OVER (PARTITION BY o_orderkey ORDER BY lsn)
+         |           AS valid_to,
+         |         op
+         |  FROM ev)
+         |SELECT o_orderkey, o_orderstatus, o_totalprice, valid_from, valid_to,
+         |       CAST(valid_to IS NULL AS INT) AS is_current
+         |FROM v WHERE op <> 'd'
+         |ORDER BY o_orderkey, valid_from""".stripMargin),
 
-    "cdc_dsv2_compact" -> (baseCte +
-      """SELECT o_orderkey, o_custkey,
-        |       CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END
-        |         AS o_orderstatus,
-        |       o_totalprice, o_orderdate_us, o_orderpriority
-        |FROM base WHERE o_orderkey % 7 <> 0
-        |ORDER BY o_orderkey""".stripMargin),
+    "cdc_dsv2_compact" -> compactedOrders(),
 
     "cdc_dead_letter" ->
       """SELECT o_orderkey, 40 AS payload_chars
@@ -1522,35 +1460,23 @@ object CdcQueries extends QueryGroup {
     // cdc_compact oracle exactly, plus the repair marker on precisely the
     // keys whose CURRENT version is the replayed insert (dead-lettered
     // %97 keys that were neither later updated nor deleted)
-    "cdc_dlq_replay" -> (baseCte +
-      """SELECT o_orderkey, o_custkey,
-        |       CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END
-        |         AS o_orderstatus,
-        |       o_totalprice, o_orderdate_us, o_orderpriority,
+    "cdc_dlq_replay" -> compactedOrders(cols =
+      """,
         |       CASE WHEN o_orderkey % 97 = 0 AND o_orderkey % 10 <> 0
-        |            THEN 'dlq-replay' END AS o_note
-        |FROM base WHERE o_orderkey % 7 <> 0
-        |ORDER BY o_orderkey""".stripMargin),
+        |            THEN 'dlq-replay' END AS o_note""".stripMargin),
 
-    "cdc_sink_upsert" -> (baseCte +
-      """SELECT o_orderkey, o_custkey,
-        |       CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END
-        |         AS o_orderstatus,
-        |       o_totalprice, o_orderdate_us, o_orderpriority
-        |FROM base WHERE o_orderkey % 7 <> 0 AND o_orderkey % 4 = 0
-        |ORDER BY o_orderkey""".stripMargin),
+    "cdc_sink_upsert" -> compactedOrders(" AND o_orderkey % 4 = 0"),
 
     // exact-text JSON by concatenation over the compacted current state
     // (the same %7<>0 + status-X predicate every compaction oracle uses)
-    "cdc_kafka_shape" -> (baseCte +
-      """SELECT '{"o_orderkey":' || o_orderkey || '}' AS key,
-        |  '{"o_orderkey":' || o_orderkey || ',"o_orderstatus":"'
-        |    || CASE WHEN o_orderkey % 10 = 0 THEN 'X'
-        |            ELSE o_orderstatus END
-        |    || '","o_totalprice":"' || o_totalprice || '"}' AS value
-        |FROM base
-        |WHERE o_orderkey % 7 <> 0 AND o_orderkey % 4 = 1
-        |ORDER BY key""".stripMargin),
+    "cdc_kafka_shape" -> (ordersBase +
+      s"""SELECT '{"o_orderkey":' || o_orderkey || '}' AS key,
+         |  '{"o_orderkey":' || o_orderkey || ',"o_orderstatus":"'
+         |    || $finalStatus
+         |    || '","o_totalprice":"' || o_totalprice || '"}' AS value
+         |FROM base
+         |WHERE o_orderkey % 7 <> 0 AND o_orderkey % 4 = 1
+         |ORDER BY key""".stripMargin),
 
     // the 'c' event set is one insert per order with ORIGINAL values
     // (updates/deletes are separate events), so the appended table is
@@ -1571,33 +1497,15 @@ object CdcQueries extends QueryGroup {
         |FROM orders GROUP BY o_orderstatus
         |ORDER BY o_orderstatus""".stripMargin,
 
-    "cdc_compact_tws" -> (baseCte +
-      """SELECT o_orderkey, o_custkey,
-        |       CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END
-        |         AS o_orderstatus,
-        |       o_totalprice, o_orderdate_us, o_orderpriority
-        |FROM base WHERE o_orderkey % 7 <> 0 AND o_orderkey % 5 = 0
-        |ORDER BY o_orderkey""".stripMargin),
+    "cdc_compact_tws" -> compactedOrders(" AND o_orderkey % 5 = 0"),
 
     // same current-state predicate as cdc_compact on the %5 subset — the
     // REST-provisioned pipeline must land exactly where the builder does
     // pause defers, never drops: the final state of the paused+resumed
     // run is EXACTLY the never-paused compacted slice
-    "cdc_pause_resume" -> (baseCte +
-      """SELECT o_orderkey, o_custkey,
-        |       CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END
-        |         AS o_orderstatus,
-        |       o_totalprice, o_orderdate_us, o_orderpriority
-        |FROM base WHERE o_orderkey % 7 <> 0 AND o_orderkey % 4 = 2
-        |ORDER BY o_orderkey""".stripMargin),
+    "cdc_pause_resume" -> compactedOrders(" AND o_orderkey % 4 = 2"),
 
-    "cdc_rest_provision" -> (baseCte +
-      """SELECT o_orderkey, o_custkey,
-        |       CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END
-        |         AS o_orderstatus,
-        |       o_totalprice, o_orderdate_us, o_orderpriority
-        |FROM base WHERE o_orderkey % 7 <> 0 AND o_orderkey % 5 = 0
-        |ORDER BY o_orderkey""".stripMargin),
+    "cdc_rest_provision" -> compactedOrders(" AND o_orderkey % 5 = 0"),
 
     "cdc_schema_rename" ->
       """SELECT o_orderstatus, COUNT(*) AS n_orders,
@@ -1609,33 +1517,33 @@ object CdcQueries extends QueryGroup {
         |ORDER BY o_orderstatus""".stripMargin,
 
     "cdc_ivm_view" ->
-      """WITH fin AS (SELECT
-        |    CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END
-        |      AS o_orderstatus,
-        |    CAST(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR)
-        |      AS DECIMAL(12,2)) AS price
-        |  FROM orders WHERE o_orderkey % 7 <> 0)
-        |SELECT o_orderstatus,
-        |  CAST(SUM(CAST(price * 100 AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |  COUNT(*) AS n_orders
-        |FROM fin GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
+      s"""WITH fin AS (SELECT
+         |    $finalStatus
+         |      AS o_orderstatus,
+         |    CAST(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR)
+         |      AS DECIMAL(12,2)) AS price
+         |  FROM orders WHERE o_orderkey % 7 <> 0)
+         |SELECT o_orderstatus,
+         |  CAST(SUM(CAST(price * 100 AS BIGINT)) AS BIGINT) AS revenue_cents,
+         |  COUNT(*) AS n_orders
+         |FROM fin GROUP BY o_orderstatus
+         |ORDER BY o_orderstatus""".stripMargin,
 
     // min/max recompute over the surviving rows — deletes included, so a
     // delta-fold min that forgot the runner-up would hash-mismatch here
     "cdc_ivm_minmax" ->
-      """WITH fin AS (SELECT
-        |    CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END
-        |      AS o_orderstatus,
-        |    CAST(CAST(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR)
-        |      AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
-        |  FROM orders WHERE o_orderkey % 7 <> 0)
-        |SELECT o_orderstatus,
-        |  CAST(MIN(cents) AS BIGINT) AS min_cents,
-        |  CAST(MAX(cents) AS BIGINT) AS max_cents,
-        |  COUNT(*) AS n_orders
-        |FROM fin GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
+      s"""WITH fin AS (SELECT
+         |    $finalStatus
+         |      AS o_orderstatus,
+         |    CAST(CAST(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR)
+         |      AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
+         |  FROM orders WHERE o_orderkey % 7 <> 0)
+         |SELECT o_orderstatus,
+         |  CAST(MIN(cents) AS BIGINT) AS min_cents,
+         |  CAST(MAX(cents) AS BIGINT) AS max_cents,
+         |  COUNT(*) AS n_orders
+         |FROM fin GROUP BY o_orderstatus
+         |ORDER BY o_orderstatus""".stripMargin,
 
     // join-view recompute: final customer dimension (segment moves %4,
     // deletes %9) ⋈ final orders state (deletes %7; status flips don't
@@ -1678,30 +1586,24 @@ object CdcQueries extends QueryGroup {
     // two tenants' states re-derived independently: tenant1 follows the
     // standard update/delete rules, tenant2 its own — proof the merge
     // never let one tenant's events supersede the other's same-PK rows
-    "cdc_shard_merge" -> (baseCte +
-      """SELECT * FROM (
-        |  SELECT 'tenant1' AS shard, o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END
-        |           AS o_orderstatus,
-        |         o_totalprice, o_orderdate_us, o_orderpriority
-        |  FROM base WHERE o_orderkey % 7 <> 0
-        |  UNION ALL
-        |  SELECT 'tenant2', o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 6 = 0 THEN 'Y' ELSE o_orderstatus END,
-        |         o_totalprice, o_orderdate_us, o_orderpriority
-        |  FROM base)
-        |ORDER BY shard, o_orderkey""".stripMargin),
+    "cdc_shard_merge" -> (ordersBase +
+      s"""SELECT * FROM (
+         |  SELECT 'tenant1' AS shard, o_orderkey, o_custkey,
+         |         $finalStatus
+         |           AS o_orderstatus,
+         |         o_totalprice, o_orderdate_us, o_orderpriority
+         |  FROM base WHERE o_orderkey % 7 <> 0
+         |  UNION ALL
+         |  SELECT 'tenant2', o_orderkey, o_custkey,
+         |         CASE WHEN o_orderkey % 6 = 0 THEN 'Y' ELSE o_orderstatus END,
+         |         o_totalprice, o_orderdate_us, o_orderpriority
+         |  FROM base)
+         |ORDER BY shard, o_orderkey""".stripMargin),
 
     // the incremental-snapshot contract: the merged chunked-snapshot ∪
     // stream state is EXACTLY the compacted current state — the oracle
     // is cdc_compact's, reached through the chunk/watermark merge path
-    "cdc_incremental_snapshot" -> (baseCte +
-      """SELECT o_orderkey, o_custkey,
-        |       CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END
-        |         AS o_orderstatus,
-        |       o_totalprice, o_orderdate_us, o_orderpriority
-        |FROM base WHERE o_orderkey % 7 <> 0
-        |ORDER BY o_orderkey""".stripMargin),
+    "cdc_incremental_snapshot" -> compactedOrders(),
 
     // the routed census from the synthesis rules: inserts at 10k (std,
     // or flagged if the source status were X), update + verbatim replay
@@ -1762,39 +1664,34 @@ object CdcQueries extends QueryGroup {
     // cdc_compact's state plus the v2-schema comment: 'rev2' exactly on
     // surviving update rows (k%10==0 not deleted), default-null on
     // v1-written survivors
-    "cdc_compact_avro" -> (baseCte +
-      """SELECT o_orderkey, o_custkey,
-        |       CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END
-        |         AS o_orderstatus,
-        |       o_totalprice, o_orderdate_us, o_orderpriority,
+    "cdc_compact_avro" -> compactedOrders(cols =
+      """,
         |       CASE WHEN o_orderkey % 10 = 0 THEN 'rev2'
-        |            ELSE NULL END AS o_comment
-        |FROM base WHERE o_orderkey % 7 <> 0
-        |ORDER BY o_orderkey""".stripMargin),
+        |            ELSE NULL END AS o_comment""".stripMargin),
 
     // straight compaction of BOTH signaled tables (orders under its
     // update/delete rules, users under its k%5 +100 balance update) —
     // the state the signal-gated chunk path must reach; decimal→string
     // via DECIMAL(12,2), the fixture's decimal.handling.mode
     "cdc_signal_snapshot" ->
-      """WITH o AS (
-        |  SELECT 'orders' AS tab, o_orderkey AS pk,
-        |    concat_ws('|',
-        |      CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END,
-        |      CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR),
-        |      o_orderpriority) AS state
-        |  FROM orders WHERE o_orderkey % 7 <> 0),
-        |u AS (
-        |  SELECT 'users' AS tab, c_custkey AS pk,
-        |    concat_ws('|', c_name,
-        |      CAST(CAST(c_acctbal +
-        |          CASE WHEN c_custkey % 5 = 0 THEN 100 ELSE 0 END
-        |        AS DECIMAL(12,2)) AS VARCHAR),
-        |      c_mktsegment) AS state
-        |  FROM customer)
-        |SELECT tab, pk, state FROM o
-        |UNION ALL SELECT tab, pk, state FROM u
-        |ORDER BY tab, pk""".stripMargin,
+      s"""WITH o AS (
+         |  SELECT 'orders' AS tab, o_orderkey AS pk,
+         |    concat_ws('|',
+         |      $finalStatus,
+         |      CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR),
+         |      o_orderpriority) AS state
+         |  FROM orders WHERE o_orderkey % 7 <> 0),
+         |u AS (
+         |  SELECT 'users' AS tab, c_custkey AS pk,
+         |    concat_ws('|', c_name,
+         |      CAST(CAST(c_acctbal +
+         |          CASE WHEN c_custkey % 5 = 0 THEN 100 ELSE 0 END
+         |        AS DECIMAL(12,2)) AS VARCHAR),
+         |      c_mktsegment) AS state
+         |  FROM customer)
+         |SELECT tab, pk, state FROM o
+         |UNION ALL SELECT tab, pk, state FROM u
+         |ORDER BY tab, pk""".stripMargin,
 
     // the router's contract over the synthesized outbox feed: the routed
     // stream IS the events table re-keyed — inserts only, deletes and
@@ -1813,115 +1710,63 @@ object CdcQueries extends QueryGroup {
     // (txId = lsn/2; the k%20 replay is NOT generated — the engine
     // eliminates it by (collection, lsn) before counting)
     "cdc_txn_meta" ->
-      """WITH ev AS (
-        |  SELECT 'orders' AS tbl, o_orderkey*5 AS txid, o_orderkey*10 AS lsn
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'orders', o_orderkey*5+2, o_orderkey*10+5
-        |  FROM orders WHERE o_orderkey % 10 = 0
-        |  UNION ALL
-        |  SELECT 'orders', o_orderkey*5+4, o_orderkey*10+8
-        |  FROM orders WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT 'users', c_custkey*5, c_custkey*10 FROM customer
-        |  UNION ALL
-        |  SELECT 'users', c_custkey*5+2, c_custkey*10+5
-        |  FROM customer WHERE c_custkey % 5 = 0),
-        |per AS (
-        |  SELECT txid, tbl, COUNT(*) AS n, MIN(lsn) AS lo, MAX(lsn) AS hi
-        |  FROM ev GROUP BY txid, tbl)
-        |SELECT txid, CAST(SUM(n) AS BIGINT) AS event_count,
-        |       array_to_string(list_sort(list(tbl || ':' || CAST(n AS VARCHAR))), ',')
-        |         AS data_collections,
-        |       MIN(lo) AS min_lsn, MAX(hi) AS max_lsn
-        |FROM per GROUP BY txid ORDER BY txid""".stripMargin,
+      s"""WITH $txnEvents,
+         |per AS (
+         |  SELECT txid, tbl, COUNT(*) AS n, MIN(lsn) AS lo, MAX(lsn) AS hi
+         |  FROM ev GROUP BY txid, tbl)
+         |SELECT txid, CAST(SUM(n) AS BIGINT) AS event_count,
+         |       array_to_string(list_sort(list(tbl || ':' || CAST(n AS VARCHAR))), ',')
+         |         AS data_collections,
+         |       MIN(lo) AS min_lsn, MAX(hi) AS max_lsn
+         |FROM per GROUP BY txid ORDER BY txid""".stripMargin,
 
     // apply-status oracle: same re-derived tx sets as cdc_txn_meta; the
     // users topic is truncated at 70% of its own max lsn (integer
     // floor-division, exact in both engines), orders and the transaction
     // topic are caught up
     "cdc_txn_apply" ->
-      """WITH ev AS (
-        |  SELECT 'orders' AS tbl, o_orderkey*5 AS txid, o_orderkey*10 AS lsn
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'orders', o_orderkey*5+2, o_orderkey*10+5
-        |  FROM orders WHERE o_orderkey % 10 = 0
-        |  UNION ALL
-        |  SELECT 'orders', o_orderkey*5+4, o_orderkey*10+8
-        |  FROM orders WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT 'users', c_custkey*5, c_custkey*10 FROM customer
-        |  UNION ALL
-        |  SELECT 'users', c_custkey*5+2, c_custkey*10+5
-        |  FROM customer WHERE c_custkey % 5 = 0),
-        |tx AS (SELECT txid, COUNT(*) AS event_count, MAX(lsn) AS max_lsn
-        |       FROM ev GROUP BY txid),
-        |ucut AS (SELECT (7 * MAX(lsn)) // 10 AS c FROM ev WHERE tbl = 'users'),
-        |seen AS (SELECT txid FROM ev, ucut
-        |         WHERE tbl = 'orders' OR lsn <= c),
-        |arr AS (SELECT txid, COUNT(*) AS arrived FROM seen GROUP BY txid)
-        |SELECT t.txid, COALESCE(a.arrived, 0) AS arrived,
-        |       t.event_count AS expected,
-        |       (COALESCE(a.arrived, 0) = t.event_count) AS applied
-        |FROM tx t LEFT JOIN arr a USING (txid)
-        |ORDER BY t.txid""".stripMargin,
+      s"""WITH $txnEvents,
+         |tx AS (SELECT txid, COUNT(*) AS event_count, MAX(lsn) AS max_lsn
+         |       FROM ev GROUP BY txid),
+         |ucut AS (SELECT (7 * MAX(lsn)) // 10 AS c FROM ev WHERE tbl = 'users'),
+         |seen AS (SELECT txid FROM ev, ucut
+         |         WHERE tbl = 'orders' OR lsn <= c),
+         |arr AS (SELECT txid, COUNT(*) AS arrived FROM seen GROUP BY txid)
+         |SELECT t.txid, COALESCE(a.arrived, 0) AS arrived,
+         |       t.event_count AS expected,
+         |       (COALESCE(a.arrived, 0) = t.event_count) AS applied
+         |FROM tx t LEFT JOIN arr a USING (txid)
+         |ORDER BY t.txid""".stripMargin,
 
     // the lagging-tx-topic variant: END cutoff at 80% of the global max
     // lsn — expected is NULL past it, applied additionally gated on it
     "cdc_txn_apply_lag" ->
-      """WITH ev AS (
-        |  SELECT 'orders' AS tbl, o_orderkey*5 AS txid, o_orderkey*10 AS lsn
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'orders', o_orderkey*5+2, o_orderkey*10+5
-        |  FROM orders WHERE o_orderkey % 10 = 0
-        |  UNION ALL
-        |  SELECT 'orders', o_orderkey*5+4, o_orderkey*10+8
-        |  FROM orders WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT 'users', c_custkey*5, c_custkey*10 FROM customer
-        |  UNION ALL
-        |  SELECT 'users', c_custkey*5+2, c_custkey*10+5
-        |  FROM customer WHERE c_custkey % 5 = 0),
-        |tx AS (SELECT txid, COUNT(*) AS event_count, MAX(lsn) AS max_lsn
-        |       FROM ev GROUP BY txid),
-        |ucut AS (SELECT (7 * MAX(lsn)) // 10 AS c FROM ev WHERE tbl = 'users'),
-        |tcut AS (SELECT (8 * MAX(lsn)) // 10 AS c FROM ev),
-        |seen AS (SELECT txid FROM ev, ucut
-        |         WHERE tbl = 'orders' OR lsn <= c),
-        |arr AS (SELECT txid, COUNT(*) AS arrived FROM seen GROUP BY txid)
-        |SELECT t.txid, COALESCE(a.arrived, 0) AS arrived,
-        |       CASE WHEN t.max_lsn <= tcut.c THEN t.event_count END
-        |         AS expected,
-        |       (t.max_lsn <= tcut.c
-        |        AND COALESCE(a.arrived, 0) = t.event_count) AS applied
-        |FROM tx t LEFT JOIN arr a USING (txid) CROSS JOIN tcut
-        |ORDER BY t.txid""".stripMargin,
+      s"""WITH $txnEvents,
+         |tx AS (SELECT txid, COUNT(*) AS event_count, MAX(lsn) AS max_lsn
+         |       FROM ev GROUP BY txid),
+         |ucut AS (SELECT (7 * MAX(lsn)) // 10 AS c FROM ev WHERE tbl = 'users'),
+         |tcut AS (SELECT (8 * MAX(lsn)) // 10 AS c FROM ev),
+         |seen AS (SELECT txid FROM ev, ucut
+         |         WHERE tbl = 'orders' OR lsn <= c),
+         |arr AS (SELECT txid, COUNT(*) AS arrived FROM seen GROUP BY txid)
+         |SELECT t.txid, COALESCE(a.arrived, 0) AS arrived,
+         |       CASE WHEN t.max_lsn <= tcut.c THEN t.event_count END
+         |         AS expected,
+         |       (t.max_lsn <= tcut.c
+         |        AND COALESCE(a.arrived, 0) = t.event_count) AS applied
+         |FROM tx t LEFT JOIN arr a USING (txid) CROSS JOIN tcut
+         |ORDER BY t.txid""".stripMargin,
 
     // the streaming eviction-armed apply: every transaction in the
     // txid%4 slice completes (data + END all fed), each exactly once —
     // one row per txid with the dedup-free feed's count and lsn span
     "cdc_txn_apply_evict" ->
-      """WITH ev AS (
-        |  SELECT 'orders' AS tbl, o_orderkey*5 AS txid, o_orderkey*10 AS lsn
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'orders', o_orderkey*5+2, o_orderkey*10+5
-        |  FROM orders WHERE o_orderkey % 10 = 0
-        |  UNION ALL
-        |  SELECT 'orders', o_orderkey*5+4, o_orderkey*10+8
-        |  FROM orders WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT 'users', c_custkey*5, c_custkey*10 FROM customer
-        |  UNION ALL
-        |  SELECT 'users', c_custkey*5+2, c_custkey*10+5
-        |  FROM customer WHERE c_custkey % 5 = 0)
-        |SELECT txid, CAST(COUNT(*) AS BIGINT) AS event_count,
-        |  CAST(MIN(lsn) AS BIGINT) AS min_lsn,
-        |  CAST(MAX(lsn) AS BIGINT) AS max_lsn
-        |FROM ev WHERE txid % 4 = 0
-        |GROUP BY txid ORDER BY txid""".stripMargin,
+      s"""WITH $txnEvents
+         |SELECT txid, CAST(COUNT(*) AS BIGINT) AS event_count,
+         |  CAST(MIN(lsn) AS BIGINT) AS min_lsn,
+         |  CAST(MAX(lsn) AS BIGINT) AS max_lsn
+         |FROM ev WHERE txid % 4 = 0
+         |GROUP BY txid ORDER BY txid""".stripMargin,
 
     "cdc_revenue_by_segment" ->
       """SELECT c_mktsegment,

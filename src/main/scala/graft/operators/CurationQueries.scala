@@ -20,6 +20,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the naive single-window query.
   */
 object CurationQueries extends QueryGroup {
+  import OracleSql._
 
   /** Contiguous doc_id block size for the two-phase prefix sum. Small
     * here so the sf0.01 corpus (500 docs) exercises many buckets; at
@@ -463,33 +464,32 @@ object CurationQueries extends QueryGroup {
   val oracles: Map[String, String] = Map(
     // same integer gate predicates, source rollup, ppm/permille divs
     "curate_anneal_mix" ->
-      """WITH d AS (SELECT source,
-        |    CAST(length(text) AS BIGINT) AS nc,
-        |    CAST(len(regexp_split_to_array(lower(trim(text)), '\s+'))
-        |      AS BIGINT) AS nt,
-        |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))
-        |      AS BIGINT) AS np,
-        |    CAST(len(regexp_extract_all(lower(text),
-        |      '\b(the|a|of|and|to|in|is|it)\b')) AS BIGINT) AS ns
-        |  FROM documents),
-        |g AS (SELECT source, nc,
-        |    (nt >= 20 AND np * 10 < nc AND ns * 2 < nt) AS good
-        |  FROM d),
-        |p AS (SELECT source, COUNT(*) AS n_docs,
-        |    CAST(SUM(CASE WHEN good THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_good,
-        |    CAST(SUM(nc) AS BIGINT) AS tokens,
-        |    CAST(SUM(CASE WHEN good THEN nc ELSE 0 END) AS BIGINT)
-        |      AS good_tokens
-        |  FROM g GROUP BY 1),
-        |t AS (SELECT CAST(SUM(tokens) AS BIGINT) AS total,
-        |    CAST(SUM(good_tokens) AS BIGINT) AS good_total FROM p)
-        |SELECT source, n_docs, n_good, tokens, good_tokens,
-        |  (tokens * 1000000) // total AS w1_ppm,
-        |  (good_tokens * 1000000) // good_total AS w2_ppm,
-        |  (((good_tokens * 1000000) // good_total) * 1000)
-        |    // ((tokens * 1000000) // total) AS boost_x1000
-        |FROM p CROSS JOIN t ORDER BY source""".stripMargin,
+      s"""WITH d AS (SELECT source,
+         |    CAST(length(text) AS BIGINT) AS nc,
+         |    CAST(len(${words()})
+         |      AS BIGINT) AS nt,
+         |    CAST($punctCount
+         |      AS BIGINT) AS np,
+         |    CAST($stopCount AS BIGINT) AS ns
+         |  FROM documents),
+         |g AS (SELECT source, nc,
+         |    (nt >= 20 AND np * 10 < nc AND ns * 2 < nt) AS good
+         |  FROM d),
+         |p AS (SELECT source, COUNT(*) AS n_docs,
+         |    CAST(SUM(CASE WHEN good THEN 1 ELSE 0 END) AS BIGINT)
+         |      AS n_good,
+         |    CAST(SUM(nc) AS BIGINT) AS tokens,
+         |    CAST(SUM(CASE WHEN good THEN nc ELSE 0 END) AS BIGINT)
+         |      AS good_tokens
+         |  FROM g GROUP BY 1),
+         |t AS (SELECT CAST(SUM(tokens) AS BIGINT) AS total,
+         |    CAST(SUM(good_tokens) AS BIGINT) AS good_total FROM p)
+         |SELECT source, n_docs, n_good, tokens, good_tokens,
+         |  (tokens * 1000000) // total AS w1_ppm,
+         |  (good_tokens * 1000000) // good_total AS w2_ppm,
+         |  (((good_tokens * 1000000) // good_total) * 1000)
+         |    // ((tokens * 1000000) // total) AS boost_x1000
+         |FROM p CROSS JOIN t ORDER BY source""".stripMargin,
 
     // same lower(trim(text)) grouping key as the dedup family's
     // textGroups, 1/k weights as truncating integer division
@@ -504,116 +504,102 @@ object CurationQueries extends QueryGroup {
     // sqrt is correctly-rounded IEEE, quantized once to fixed point so
     // the normalizing sum is exact BIGINT in both engines
     "curate_temperature" ->
-      """WITH t AS (SELECT lang,
-        |    CAST(SUM(len(regexp_split_to_array(lower(trim(text)), '\s+')))
-        |      AS BIGINT) AS tokens
-        |  FROM documents GROUP BY lang),
-        |f AS (SELECT lang, tokens,
-        |    CAST(floor(sqrt(CAST(tokens AS DOUBLE)) * 1048576.0) AS BIGINT)
-        |      AS sw_fix
-        |  FROM t),
-        |g AS (SELECT CAST(SUM(tokens) AS BIGINT) AS total,
-        |    CAST(SUM(sw_fix) AS BIGINT) AS sw_total FROM f)
-        |SELECT lang, tokens,
-        |  CAST(tokens AS DOUBLE) / CAST(total AS DOUBLE) AS share,
-        |  CAST(sw_fix AS DOUBLE) / CAST(sw_total AS DOUBLE) AS weight,
-        |  CAST(sw_fix * total AS DOUBLE)
-        |    / CAST(sw_total * tokens AS DOUBLE) AS multiplier
-        |FROM f CROSS JOIN g ORDER BY lang""".stripMargin,
+      s"""WITH t AS (SELECT lang,
+         |    CAST(SUM(len(${words()}))
+         |      AS BIGINT) AS tokens
+         |  FROM documents GROUP BY lang),
+         |f AS (SELECT lang, tokens,
+         |    CAST(floor(sqrt(CAST(tokens AS DOUBLE)) * 1048576.0) AS BIGINT)
+         |      AS sw_fix
+         |  FROM t),
+         |g AS (SELECT CAST(SUM(tokens) AS BIGINT) AS total,
+         |    CAST(SUM(sw_fix) AS BIGINT) AS sw_total FROM f)
+         |SELECT lang, tokens,
+         |  CAST(tokens AS DOUBLE) / CAST(total AS DOUBLE) AS share,
+         |  CAST(sw_fix AS DOUBLE) / CAST(sw_total AS DOUBLE) AS weight,
+         |  CAST(sw_fix * total AS DOUBLE)
+         |    / CAST(sw_total * tokens AS DOUBLE) AS multiplier
+         |FROM f CROSS JOIN g ORDER BY lang""".stripMargin,
 
     // the same fixed-point scorer as pipeline_source_filter's oracle,
     // ranked by the integer-divided mean, exploded to epoch copies
     "curate_epochs" ->
-      """WITH m AS (SELECT source,
-        |    CAST(len(regexp_split_to_array(lower(trim(text)), '\s+'))
-        |      AS DOUBLE) AS n_tokens,
-        |    CAST(length(text) AS DOUBLE) AS n_chars,
-        |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))
-        |      AS DOUBLE) AS n_punct,
-        |    CAST(len(regexp_extract_all(lower(text),
-        |      '\b(the|a|of|and|to|in|is|it)\b')) AS DOUBLE) AS n_stop
-        |  FROM documents),
-        |sc AS (SELECT source,
-        |    CAST(floor((least(1.0, n_tokens/50.0) * (1.0 - n_punct/n_chars)
-        |      * (1.0 - 0.5*n_stop/n_tokens)) * 1048576.0) AS BIGINT)
-        |      AS q_fix
-        |  FROM m),
-        |q AS (SELECT source, COUNT(*) AS n_docs,
-        |    CAST(SUM(q_fix) AS BIGINT) AS q_sum_fix
-        |  FROM sc GROUP BY source),
-        |f AS (SELECT source,
-        |    CAST(ntile(4) OVER (ORDER BY (q_sum_fix * 1048576) // n_docs,
-        |      source) AS BIGINT) AS epochs
-        |  FROM q)
-        |SELECT d.doc_id, d.source, f.epochs,
-        |  CAST(unnest(range(1, f.epochs + 1)) AS BIGINT) AS copy
-        |FROM documents d JOIN f ON f.source = d.source
-        |ORDER BY d.doc_id, copy""".stripMargin,
+      s"""WITH m AS (SELECT source,
+         |    $qualityCols
+         |  FROM documents),
+         |sc AS (SELECT source,
+         |    CAST(floor(($qualityScore) * 1048576.0) AS BIGINT)
+         |      AS q_fix
+         |  FROM m),
+         |q AS (SELECT source, COUNT(*) AS n_docs,
+         |    CAST(SUM(q_fix) AS BIGINT) AS q_sum_fix
+         |  FROM sc GROUP BY source),
+         |f AS (SELECT source,
+         |    CAST(ntile(4) OVER (ORDER BY (q_sum_fix * 1048576) // n_docs,
+         |      source) AS BIGINT) AS epochs
+         |  FROM q)
+         |SELECT d.doc_id, d.source, f.epochs,
+         |  CAST(unnest(range(1, f.epochs + 1)) AS BIGINT) AS copy
+         |FROM documents d JOIN f ON f.source = d.source
+         |ORDER BY d.doc_id, copy""".stripMargin,
 
     // the naive single-window statement of the two-phase selection
     "curate_select_budget" ->
-      """WITH m AS (SELECT doc_id,
-        |    CAST(len(regexp_split_to_array(lower(trim(text)), '\s+'))
-        |      AS BIGINT) AS tokens,
-        |    CAST(len(regexp_split_to_array(lower(trim(text)), '\s+'))
-        |      AS DOUBLE) AS n_tokens,
-        |    CAST(length(text) AS DOUBLE) AS n_chars,
-        |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))
-        |      AS DOUBLE) AS n_punct,
-        |    CAST(len(regexp_extract_all(lower(text),
-        |      '\b(the|a|of|and|to|in|is|it)\b')) AS DOUBLE) AS n_stop
-        |  FROM documents),
-        |s AS (SELECT doc_id, tokens,
-        |    least(1.0, n_tokens/50.0) * (1.0 - n_punct/n_chars)
-        |      * (1.0 - 0.5*n_stop/n_tokens) AS q
-        |  FROM m),
-        |c AS (SELECT doc_id, tokens, q,
-        |    SUM(tokens) OVER (ORDER BY q DESC, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS cum_tokens,
-        |    SUM(tokens) OVER () AS total
-        |  FROM s)
-        |SELECT doc_id, tokens, q,
-        |  CAST(cum_tokens AS BIGINT) AS cum_tokens,
-        |  CAST(total AS BIGINT) AS total,
-        |  (cum_tokens * 10 <= total * 3) AS kept
-        |FROM c ORDER BY doc_id""".stripMargin,
+      s"""WITH m AS (SELECT doc_id,
+         |    CAST(len(${words()})
+         |      AS BIGINT) AS tokens,
+         |    $qualityCols
+         |  FROM documents),
+         |s AS (SELECT doc_id, tokens,
+         |    $qualityScore AS q
+         |  FROM m),
+         |c AS (SELECT doc_id, tokens, q,
+         |    SUM(tokens) OVER (ORDER BY q DESC, doc_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+         |      AS cum_tokens,
+         |    SUM(tokens) OVER () AS total
+         |  FROM s)
+         |SELECT doc_id, tokens, q,
+         |  CAST(cum_tokens AS BIGINT) AS cum_tokens,
+         |  CAST(total AS BIGINT) AS total,
+         |  (cum_tokens * 10 <= total * 3) AS kept
+         |FROM c ORDER BY doc_id""".stripMargin,
 
     // the oracle is deliberately the NAIVE single-window global prefix
     // sum — same math, which is the whole point of the two-phase plan
     "curate_pack_shards" ->
-      """WITH t AS (SELECT doc_id,
-        |    CAST(len(regexp_split_to_array(lower(trim(text)), '\s+'))
-        |      AS BIGINT) AS tokens
-        |  FROM documents),
-        |c AS (SELECT doc_id, tokens,
-        |    COALESCE(SUM(tokens) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS cum_before
-        |  FROM t)
-        |SELECT CAST(floor(CAST(cum_before AS DOUBLE) / 2000.0) AS BIGINT)
-        |    AS shard,
-        |  COUNT(*) AS n_docs,
-        |  CAST(SUM(tokens) AS BIGINT) AS shard_tokens,
-        |  MIN(doc_id) AS first_doc,
-        |  MAX(doc_id) AS last_doc
-        |FROM c GROUP BY 1 ORDER BY shard""".stripMargin,
+      s"""WITH t AS (SELECT doc_id,
+         |    CAST(len(${words()})
+         |      AS BIGINT) AS tokens
+         |  FROM documents),
+         |c AS (SELECT doc_id, tokens,
+         |    COALESCE(SUM(tokens) OVER (ORDER BY doc_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+         |      AS cum_before
+         |  FROM t)
+         |SELECT CAST(floor(CAST(cum_before AS DOUBLE) / 2000.0) AS BIGINT)
+         |    AS shard,
+         |  COUNT(*) AS n_docs,
+         |  CAST(SUM(tokens) AS BIGINT) AS shard_tokens,
+         |  MIN(doc_id) AS first_doc,
+         |  MAX(doc_id) AS last_doc
+         |FROM c GROUP BY 1 ORDER BY shard""".stripMargin,
 
     "curate_mix_weights" ->
-      """WITH t AS (SELECT lang,
-        |    CAST(len(regexp_split_to_array(lower(trim(text)), '\s+'))
-        |      AS BIGINT) AS tokens
-        |  FROM documents),
-        |per AS (SELECT lang, CAST(SUM(tokens) AS BIGINT) AS tokens
-        |  FROM t GROUP BY lang),
-        |tot AS (SELECT CAST(SUM(tokens) AS BIGINT) AS total,
-        |    COUNT(*) AS n_langs
-        |  FROM per)
-        |SELECT lang, tokens,
-        |  CAST(tokens AS DOUBLE) / CAST(total AS DOUBLE) AS share,
-        |  CAST(total AS DOUBLE)
-        |    / (CAST(n_langs AS DOUBLE) * CAST(tokens AS DOUBLE)) AS weight
-        |FROM per CROSS JOIN tot ORDER BY lang""".stripMargin,
+      s"""WITH t AS (SELECT lang,
+         |    CAST(len(${words()})
+         |      AS BIGINT) AS tokens
+         |  FROM documents),
+         |per AS (SELECT lang, CAST(SUM(tokens) AS BIGINT) AS tokens
+         |  FROM t GROUP BY lang),
+         |tot AS (SELECT CAST(SUM(tokens) AS BIGINT) AS total,
+         |    COUNT(*) AS n_langs
+         |  FROM per)
+         |SELECT lang, tokens,
+         |  CAST(tokens AS DOUBLE) / CAST(total AS DOUBLE) AS share,
+         |  CAST(total AS DOUBLE)
+         |    / (CAST(n_langs AS DOUBLE) * CAST(tokens AS DOUBLE)) AS weight
+         |FROM per CROSS JOIN tot ORDER BY lang""".stripMargin,
 
     // the naive single-window rank — same math the two-phase plan computes
     "curate_shuffle" ->
@@ -624,52 +610,49 @@ object CurationQueries extends QueryGroup {
         |FROM documents ORDER BY pos""".stripMargin,
 
     "curate_chunk" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |st AS (SELECT doc_id, w, CAST(len(w) AS BIGINT) AS n,
-        |    unnest(generate_series(0,
-        |      CAST(greatest(len(w) - 1, 0) AS BIGINT), 96)) AS start
-        |  FROM toks)
-        |SELECT doc_id,
-        |  CAST(start // 96 AS BIGINT) AS chunk_id,
-        |  CAST(start AS BIGINT) AS start_tok,
-        |  CAST(least(128, n - start) AS BIGINT) AS n_tok,
-        |  md5(array_to_string(
-        |    w[CAST(start + 1 AS INT):CAST(start + 128 AS INT)], ' '))
-        |    AS chunk_md5
-        |FROM st ORDER BY doc_id, chunk_id""".stripMargin,
+      s"""WITH toks AS (SELECT doc_id,
+         |    ${words()} AS w
+         |  FROM documents),
+         |st AS (SELECT doc_id, w, CAST(len(w) AS BIGINT) AS n,
+         |    unnest(generate_series(0,
+         |      CAST(greatest(len(w) - 1, 0) AS BIGINT), 96)) AS start
+         |  FROM toks)
+         |SELECT doc_id,
+         |  CAST(start // 96 AS BIGINT) AS chunk_id,
+         |  CAST(start AS BIGINT) AS start_tok,
+         |  CAST(least(128, n - start) AS BIGINT) AS n_tok,
+         |  md5(array_to_string(
+         |    w[CAST(start + 1 AS INT):CAST(start + 128 AS INT)], ' '))
+         |    AS chunk_md5
+         |FROM st ORDER BY doc_id, chunk_id""".stripMargin,
 
     // relational twin of the map-side HOF form: per-token rows, boundary
     // flag from the same rolling hash, chunk id = running count of
     // boundaries strictly before the token, group back to chunks
     "curate_chunk_cdc" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |tok AS (SELECT doc_id, w,
-        |    unnest(generate_series(CAST(1 AS BIGINT),
-        |      CAST(len(w) AS BIGINT))) AS i
-        |  FROM toks),
-        |h AS (SELECT doc_id, i, w[CAST(i AS INT)] AS t,
-        |    CAST(len(w) AS BIGINT) AS n,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(string_split(w[CAST(i AS INT)], ''),
-        |        c -> CAST(ord(c) AS BIGINT))),
-        |      (a, b) -> (a * 1000003 + b) % 1000000007) AS hv
-        |  FROM tok),
-        |cid AS (SELECT doc_id, i, t,
-        |    COALESCE(SUM(CASE WHEN i < n AND hv % 32 = 0 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY i
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS chunk_id
-        |  FROM h)
-        |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-        |  CAST(MIN(i) - 1 AS BIGINT) AS start_tok,
-        |  CAST(COUNT(*) AS BIGINT) AS n_tok,
-        |  md5(string_agg(t, ' ' ORDER BY i)) AS chunk_md5
-        |FROM cid GROUP BY doc_id, chunk_id
-        |ORDER BY doc_id, chunk_id""".stripMargin,
+      s"""WITH toks AS (SELECT doc_id,
+         |    ${words()} AS w
+         |  FROM documents),
+         |tok AS (SELECT doc_id, w,
+         |    unnest(generate_series(CAST(1 AS BIGINT),
+         |      CAST(len(w) AS BIGINT))) AS i
+         |  FROM toks),
+         |h AS (SELECT doc_id, i, w[CAST(i AS INT)] AS t,
+         |    CAST(len(w) AS BIGINT) AS n,
+         |    ${charFold("w[CAST(i AS INT)]")} AS hv
+         |  FROM tok),
+         |cid AS (SELECT doc_id, i, t,
+         |    COALESCE(SUM(CASE WHEN i < n AND hv % 32 = 0 THEN 1 ELSE 0 END)
+         |      OVER (PARTITION BY doc_id ORDER BY i
+         |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+         |      AS chunk_id
+         |  FROM h)
+         |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
+         |  CAST(MIN(i) - 1 AS BIGINT) AS start_tok,
+         |  CAST(COUNT(*) AS BIGINT) AS n_tok,
+         |  md5(string_agg(t, ' ' ORDER BY i)) AS chunk_md5
+         |FROM cid GROUP BY doc_id, chunk_id
+         |ORDER BY doc_id, chunk_id""".stripMargin,
 
     // the naive single-window rank over virtual time — same math the
     // two-phase bucketed plan computes
@@ -697,29 +680,29 @@ object CurationQueries extends QueryGroup {
     // block's first doc (seq 0, fill = its tokens), inductive step walks
     // rn+1 carrying (seq, fill) — depth ≤ blockSize, width = #blocks
     "curate_pack_sequences" ->
-      """WITH RECURSIVE t AS (SELECT doc_id,
-        |    CAST(len(regexp_split_to_array(lower(trim(text)), '\s+'))
-        |      AS BIGINT) AS tokens,
-        |    CAST(doc_id // 64 AS BIGINT) AS block
-        |  FROM documents),
-        |r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY block
-        |    ORDER BY doc_id) AS BIGINT) AS rn FROM t),
-        |step AS (
-        |  SELECT block, rn, doc_id, tokens,
-        |    CAST(0 AS BIGINT) AS seq, tokens AS fill,
-        |    CAST(0 AS BIGINT) AS off
-        |  FROM r WHERE rn = 1
-        |  UNION ALL
-        |  SELECT r.block, r.rn, r.doc_id, r.tokens,
-        |    CASE WHEN s.fill + r.tokens <= 512 THEN s.seq
-        |         ELSE s.seq + 1 END,
-        |    CASE WHEN s.fill + r.tokens <= 512 THEN s.fill + r.tokens
-        |         ELSE r.tokens END,
-        |    CASE WHEN s.fill + r.tokens <= 512 THEN s.fill
-        |         ELSE CAST(0 AS BIGINT) END
-        |  FROM step s JOIN r ON r.block = s.block AND r.rn = s.rn + 1)
-        |SELECT block, doc_id, tokens, seq, off AS off_tok
-        |FROM step ORDER BY doc_id""".stripMargin,
+      s"""WITH RECURSIVE t AS (SELECT doc_id,
+         |    CAST(len(${words()})
+         |      AS BIGINT) AS tokens,
+         |    CAST(doc_id // 64 AS BIGINT) AS block
+         |  FROM documents),
+         |r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY block
+         |    ORDER BY doc_id) AS BIGINT) AS rn FROM t),
+         |step AS (
+         |  SELECT block, rn, doc_id, tokens,
+         |    CAST(0 AS BIGINT) AS seq, tokens AS fill,
+         |    CAST(0 AS BIGINT) AS off
+         |  FROM r WHERE rn = 1
+         |  UNION ALL
+         |  SELECT r.block, r.rn, r.doc_id, r.tokens,
+         |    CASE WHEN s.fill + r.tokens <= 512 THEN s.seq
+         |         ELSE s.seq + 1 END,
+         |    CASE WHEN s.fill + r.tokens <= 512 THEN s.fill + r.tokens
+         |         ELSE r.tokens END,
+         |    CASE WHEN s.fill + r.tokens <= 512 THEN s.fill
+         |         ELSE CAST(0 AS BIGINT) END
+         |  FROM step s JOIN r ON r.block = s.block AND r.rn = s.rn + 1)
+         |SELECT block, doc_id, tokens, seq, off AS off_tok
+         |FROM step ORDER BY doc_id""".stripMargin,
 
     // same 16-bit interleave, unrolled with DuckDB's bit operators
     "curate_zorder" -> {

@@ -32,6 +32,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * `xxhash64`) — no UDFs, no driver-side loops.
   */
 object DedupQueries extends QueryGroup {
+  import OracleSql._
 
   /** 4-word shingle array per document — one codegen'd pass
     * (graft.functions.WordShingles); the pure-SQL lambda form re-ran the
@@ -1463,102 +1464,53 @@ object DedupQueries extends QueryGroup {
     // identical rows by the QuotientEquivalence argument (identical
     // texts have identical shingle sets; the weighted cap counts docs)
     "dedup_containment" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |sh AS (SELECT DISTINCT doc_id,
-        |    unnest(CASE WHEN len(w) >= 4 THEN
-        |      list_transform(range(1, len(w) - 2),
-        |        i -> array_to_string(w[i:i+3], ' '))
-        |      ELSE [] END) AS s
-        |  FROM toks),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 50),
-        |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM sh a JOIN rare r ON a.s = r.s
-        |  JOIN sh b ON b.s = a.s AND a.doc_id < b.doc_id),
-        |pairs AS (SELECT c.da, c.db, COUNT(*) AS common
-        |  FROM cand c
-        |  JOIN sh a ON a.doc_id = c.da
-        |  JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-        |  GROUP BY 1, 2)
-        |SELECT p.da, p.db, p.common,
-        |  least(sa.n, sb.n) AS n_small,
-        |  p.common / least(sa.n, sb.n) AS containment
-        |FROM pairs p
-        |JOIN sizes sa ON p.da = sa.doc_id
-        |JOIN sizes sb ON p.db = sb.doc_id
-        |WHERE p.common / least(sa.n, sb.n) >= 0.8
-        |ORDER BY da, db""".stripMargin,
+      s"""WITH ${OracleSql.jaccardPairs()}
+         |SELECT p.da, p.db, p.common,
+         |  least(sa.n, sb.n) AS n_small,
+         |  p.common / least(sa.n, sb.n) AS containment
+         |FROM pairs p
+         |JOIN sizes sa ON p.da = sa.doc_id
+         |JOIN sizes sb ON p.db = sb.doc_id
+         |WHERE p.common / least(sa.n, sb.n) >= 0.8
+         |ORDER BY da, db""".stripMargin,
 
     // the delta restated: v1 shingles, 'new '-prefixed delta shingles
     // (ids re-based by max+1), df cap on the standing side, exact
     // Jaccard >= 0.5 — single int division, bit-identical cross-engine
     "dedup_incremental" ->
-      """WITH v1t AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |sh1 AS MATERIALIZED (SELECT DISTINCT doc_id,
-        |    unnest(CASE WHEN len(w) >= 4 THEN
-        |      list_transform(range(1, len(w) - 2),
-        |        i -> array_to_string(w[i:i+3], ' '))
-        |      ELSE [] END) AS s
-        |  FROM v1t),
-        |dt AS (SELECT doc_id + (SELECT max(doc_id) + 1 FROM documents)
-        |      AS doc_id,
-        |    regexp_split_to_array(lower(trim('NEW ' || text)), '\s+') AS w
-        |  FROM documents WHERE doc_id % 19 = 7),
-        |shd AS MATERIALIZED (SELECT DISTINCT doc_id,
-        |    unnest(CASE WHEN len(w) >= 4 THEN
-        |      list_transform(range(1, len(w) - 2),
-        |        i -> array_to_string(w[i:i+3], ' '))
-        |      ELSE [] END) AS s
-        |  FROM dt),
-        |rare AS (SELECT s FROM sh1 GROUP BY s HAVING COUNT(*) <= 50),
-        |cand AS (SELECT DISTINCT d.doc_id AS nd, a.doc_id AS od
-        |  FROM shd d JOIN rare r ON d.s = r.s
-        |  JOIN sh1 a ON a.s = d.s),
-        |pairs AS (SELECT c.nd, c.od, COUNT(*) AS common
-        |  FROM cand c
-        |  JOIN shd d ON d.doc_id = c.nd
-        |  JOIN sh1 a ON a.doc_id = c.od AND a.s = d.s
-        |  GROUP BY 1, 2),
-        |s1 AS (SELECT doc_id, COUNT(*) AS n FROM sh1 GROUP BY doc_id),
-        |sd AS (SELECT doc_id, COUNT(*) AS n FROM shd GROUP BY doc_id)
-        |SELECT nd AS new_id, od AS old_id,
-        |  common / (sd.n + s1.n - common) AS jaccard
-        |FROM pairs
-        |JOIN sd ON nd = sd.doc_id
-        |JOIN s1 ON od = s1.doc_id
-        |WHERE common / (sd.n + s1.n - common) >= 0.5
-        |ORDER BY new_id, old_id""".stripMargin,
+      s"""WITH v1t AS (SELECT doc_id, ${words()} AS w FROM documents),
+         |sh1 AS MATERIALIZED (SELECT DISTINCT doc_id,
+         |    unnest(${OracleSql.shingles(4)}) AS s
+         |  FROM v1t),
+         |dt AS (SELECT doc_id + (SELECT max(doc_id) + 1 FROM documents)
+         |      AS doc_id,
+         |    ${words("'NEW ' || text")} AS w
+         |  FROM documents WHERE doc_id % 19 = 7),
+         |shd AS MATERIALIZED (SELECT DISTINCT doc_id,
+         |    unnest(${OracleSql.shingles(4)}) AS s
+         |  FROM dt),
+         |rare AS (SELECT s FROM sh1 GROUP BY s HAVING COUNT(*) <= 50),
+         |cand AS (SELECT DISTINCT d.doc_id AS nd, a.doc_id AS od
+         |  FROM shd d JOIN rare r ON d.s = r.s
+         |  JOIN sh1 a ON a.s = d.s),
+         |pairs AS (SELECT c.nd, c.od, COUNT(*) AS common
+         |  FROM cand c
+         |  JOIN shd d ON d.doc_id = c.nd
+         |  JOIN sh1 a ON a.doc_id = c.od AND a.s = d.s
+         |  GROUP BY 1, 2),
+         |s1 AS (SELECT doc_id, COUNT(*) AS n FROM sh1 GROUP BY doc_id),
+         |sd AS (SELECT doc_id, COUNT(*) AS n FROM shd GROUP BY doc_id)
+         |SELECT nd AS new_id, od AS old_id,
+         |  common / (sd.n + s1.n - common) AS jaccard
+         |FROM pairs
+         |JOIN sd ON nd = sd.doc_id
+         |JOIN s1 ON od = s1.doc_id
+         |WHERE common / (sd.n + s1.n - common) >= 0.5
+         |ORDER BY new_id, old_id""".stripMargin,
 
     "dedup_ngram_jaccard" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |sh AS (SELECT DISTINCT doc_id,
-        |    unnest(CASE WHEN len(w) >= 4 THEN
-        |      list_transform(range(1, len(w) - 2),
-        |        i -> array_to_string(w[i:i+3], ' '))
-        |      ELSE [] END) AS s
-        |  FROM toks),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 50),
-        |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM sh a JOIN rare r ON a.s = r.s
-        |  JOIN sh b ON b.s = a.s AND a.doc_id < b.doc_id),
-        |pairs AS (SELECT c.da, c.db, COUNT(*) AS common
-        |  FROM cand c
-        |  JOIN sh a ON a.doc_id = c.da
-        |  JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-        |  GROUP BY 1, 2)
-        |SELECT da, db, common / (sa.n + sb.n - common) AS jaccard
-        |FROM pairs
-        |JOIN sizes sa ON da = sa.doc_id
-        |JOIN sizes sb ON db = sb.doc_id
-        |WHERE common / (sa.n + sb.n - common) >= 0.5
-        |ORDER BY da, db""".stripMargin,
+      s"""WITH ${OracleSql.jaccardPairs()}
+         |SELECT da, db, jaccard FROM jp ORDER BY da, db""".stripMargin,
 
     // the banding twin, GENERATED from the same Scala constants the
     // Catalyst expression inlines (lshPolyA/B, the 1000003 band fold) —
@@ -1576,39 +1528,13 @@ object DedupQueries extends QueryGroup {
       val bandRows = (0 until lshBands).map(b =>
         s"SELECT doc_id, $b AS band, ${bkeySql(b)} AS bk FROM mh")
         .mkString("\n  UNION ALL ")
-      s"""WITH toks AS (SELECT doc_id,
-    regexp_split_to_array(lower(trim(text)), '\\s+') AS w
-  FROM documents),
-sh AS MATERIALIZED (SELECT DISTINCT doc_id,
-    unnest(CASE WHEN len(w) >= 4 THEN
-      list_transform(range(1, len(w) - 2),
-        i -> array_to_string(w[i:i+3], ' '))
-      ELSE [] END) AS s
-  FROM toks),
-hs AS MATERIALIZED (SELECT doc_id,
-    list_reduce(list_prepend(CAST(0 AS BIGINT),
-      list_transform(string_split(s, ''), c -> CAST(ord(c) AS BIGINT))),
-      (a, b) -> (a * 1000003 + b) % 1000000007) AS h
-  FROM sh),
+      s"""WITH ${OracleSql.jaccardPairs()},
+hs AS MATERIALIZED (SELECT doc_id, ${charFold("s")} AS h FROM sh),
 mh AS MATERIALIZED (SELECT doc_id,
     $minCols
   FROM hs GROUP BY doc_id),
 bk AS MATERIALIZED (
   $bandRows),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 50),
-jcand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-  FROM sh a JOIN rare r ON a.s = r.s
-  JOIN sh b ON b.s = a.s AND a.doc_id < b.doc_id),
-jp AS MATERIALIZED (SELECT p.da, p.db FROM
-    (SELECT c.da, c.db, COUNT(*) AS common
-     FROM jcand c
-     JOIN sh a ON a.doc_id = c.da
-     JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-     GROUP BY 1, 2) p
-  JOIN sizes sa ON p.da = sa.doc_id
-  JOIN sizes sb ON p.db = sb.doc_id
-  WHERE p.common / (sa.n + sb.n - p.common) >= 0.5),
 cnd AS (SELECT a.band, a.doc_id AS da, b.doc_id AS db
   FROM bk a JOIN bk b
     ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id),
@@ -1644,20 +1570,8 @@ ORDER BY bb.band"""
       val blockRows = (0 until 4).map(k =>
         s"SELECT doc_id, $k AS k, b$k AS blk FROM sig")
         .mkString("\n  UNION ALL ")
-      s"""WITH toks AS (SELECT doc_id,
-    regexp_split_to_array(lower(trim(text)), '\\s+') AS w
-  FROM documents),
-sh AS MATERIALIZED (SELECT DISTINCT doc_id,
-    unnest(CASE WHEN len(w) >= 4 THEN
-      list_transform(range(1, len(w) - 2),
-        i -> array_to_string(w[i:i+3], ' '))
-      ELSE [] END) AS s
-  FROM toks),
-hs AS MATERIALIZED (SELECT doc_id,
-    list_reduce(list_prepend(CAST(0 AS BIGINT),
-      list_transform(string_split(s, ''), c -> CAST(ord(c) AS BIGINT))),
-      (a, b) -> (a * 1000003 + b) % 1000000007) AS h
-  FROM sh),
+      s"""WITH ${OracleSql.jaccardPairs()},
+hs AS MATERIALIZED (SELECT doc_id, ${charFold("s")} AS h FROM sh),
 mh AS MATERIALIZED (SELECT doc_id, COUNT(*) AS nf,
     $sumCols
   FROM hs GROUP BY doc_id),
@@ -1669,20 +1583,6 @@ sig AS MATERIALIZED (SELECT doc_id,
   FROM mh),
 bkx AS MATERIALIZED (
   $blockRows),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 50),
-jcand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-  FROM sh a JOIN rare r ON a.s = r.s
-  JOIN sh b ON b.s = a.s AND a.doc_id < b.doc_id),
-jp AS MATERIALIZED (SELECT p.da, p.db FROM
-    (SELECT c.da, c.db, COUNT(*) AS common
-     FROM jcand c
-     JOIN sh a ON a.doc_id = c.da
-     JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-     GROUP BY 1, 2) p
-  JOIN sizes sa ON p.da = sa.doc_id
-  JOIN sizes sb ON p.db = sb.doc_id
-  WHERE p.common / (sa.n + sb.n - p.common) >= 0.5),
 cnd AS MATERIALIZED (SELECT x.k, x.doc_id AS da, y.doc_id AS db,
     bit_count(xor(sa.b0, sb.b0)) + bit_count(xor(sa.b1, sb.b1))
     + bit_count(xor(sa.b2, sb.b2)) + bit_count(xor(sa.b3, sb.b3))
@@ -1711,330 +1611,184 @@ ORDER BY block"""
     // the naive single-window global rank (the two-phase plan's math),
     // window pairs by rank distance, the standard verified-Jaccard CTEs
     "dedup_sorted_neighbors" ->
-      """WITH d AS (SELECT doc_id, lower(trim(text)) AS t FROM documents),
-        |r AS MATERIALIZED (SELECT doc_id,
-        |    ROW_NUMBER() OVER (ORDER BY substr(t, 1, 40), doc_id) AS rn
-        |  FROM d),
-        |cand AS MATERIALIZED (SELECT least(a.doc_id, b.doc_id) AS da,
-        |    greatest(a.doc_id, b.doc_id) AS db,
-        |    CAST(b.rn - a.rn AS BIGINT) AS gap
-        |  FROM r a JOIN r b ON b.rn - a.rn BETWEEN 1 AND 4),
-        |toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |sh AS MATERIALIZED (SELECT DISTINCT doc_id,
-        |    unnest(CASE WHEN len(w) >= 4 THEN
-        |      list_transform(range(1, len(w) - 2),
-        |        i -> array_to_string(w[i:i+3], ' '))
-        |      ELSE [] END) AS s
-        |  FROM toks),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |jv AS (SELECT c.da, c.db, COUNT(*) AS common
-        |  FROM cand c JOIN sh a ON a.doc_id = c.da
-        |  JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-        |  GROUP BY 1, 2),
-        |res AS (SELECT c.da, c.db, c.gap,
-        |    j.common / (sa.n + sb.n - j.common) AS jaccard
-        |  FROM cand c JOIN jv j ON c.da = j.da AND c.db = j.db
-        |  JOIN sizes sa ON c.da = sa.doc_id
-        |  JOIN sizes sb ON c.db = sb.doc_id)
-        |SELECT da, db, gap, jaccard FROM res
-        |WHERE jaccard >= 0.5 ORDER BY da, db""".stripMargin,
+      s"""WITH d AS (SELECT doc_id, lower(trim(text)) AS t FROM documents),
+         |r AS MATERIALIZED (SELECT doc_id,
+         |    ROW_NUMBER() OVER (ORDER BY substr(t, 1, 40), doc_id) AS rn
+         |  FROM d),
+         |cand AS MATERIALIZED (SELECT least(a.doc_id, b.doc_id) AS da,
+         |    greatest(a.doc_id, b.doc_id) AS db,
+         |    CAST(b.rn - a.rn AS BIGINT) AS gap
+         |  FROM r a JOIN r b ON b.rn - a.rn BETWEEN 1 AND 4),
+         |toks AS (SELECT doc_id, ${words()} AS w FROM documents),
+         |sh AS MATERIALIZED (SELECT DISTINCT doc_id,
+         |    unnest(${OracleSql.shingles(4)}) AS s
+         |  FROM toks),
+         |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+         |jv AS (SELECT c.da, c.db, COUNT(*) AS common
+         |  FROM cand c JOIN sh a ON a.doc_id = c.da
+         |  JOIN sh b ON b.doc_id = c.db AND b.s = a.s
+         |  GROUP BY 1, 2),
+         |res AS (SELECT c.da, c.db, c.gap,
+         |    j.common / (sa.n + sb.n - j.common) AS jaccard
+         |  FROM cand c JOIN jv j ON c.da = j.da AND c.db = j.db
+         |  JOIN sizes sa ON c.da = sa.doc_id
+         |  JOIN sizes sb ON c.db = sb.doc_id)
+         |SELECT da, db, gap, jaccard FROM res
+         |WHERE jaccard >= 0.5 ORDER BY da, db""".stripMargin,
 
     // same positional shingling, cap, diagonal islands — stated in SQL
     "dedup_substring" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |ish AS (SELECT doc_id, unnest(range(1, len(w) - 2)) AS i, w
-        |  FROM toks WHERE len(w) >= 4),
-        |psh AS (SELECT doc_id, i - 1 AS pos,
-        |    array_to_string(w[i:i+3], ' ') AS s
-        |  FROM ish),
-        |capped AS (SELECT doc_id, pos, s FROM (
-        |    SELECT doc_id, pos, s, COUNT(*) OVER (PARTITION BY s) AS df
-        |    FROM psh) t
-        |  WHERE df <= 50),
-        |m AS (SELECT a.doc_id AS da, b.doc_id AS db, a.pos AS pa, b.pos AS pb
-        |  FROM capped a JOIN capped b
-        |    ON a.s = b.s AND a.doc_id < b.doc_id),
-        |runs AS (SELECT da, db, pa - pb AS diag, pa,
-        |    ROW_NUMBER() OVER (PARTITION BY da, db, pa - pb ORDER BY pa) AS rn
-        |  FROM m),
-        |r2 AS (SELECT da, db, COUNT(*) AS run
-        |  FROM runs GROUP BY da, db, diag, pa - rn)
-        |SELECT da, db, CAST(MAX(run) + 3 AS BIGINT) AS span_words
-        |FROM r2 GROUP BY da, db
-        |HAVING MAX(run) + 3 >= 12
-        |ORDER BY da, db""".stripMargin,
+      s"""WITH $substringRunCtes
+         |SELECT da, db, CAST(MAX(run) + 3 AS BIGINT) AS span_words
+         |FROM r2 GROUP BY da, db
+         |HAVING MAX(run) + 3 >= 12
+         |ORDER BY da, db""".stripMargin,
 
     "dedup_substring_rewrite" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |ish AS (SELECT doc_id, unnest(range(1, len(w) - 2)) AS i, w
-        |  FROM toks WHERE len(w) >= 4),
-        |psh AS (SELECT doc_id, i - 1 AS pos,
-        |    array_to_string(w[i:i+3], ' ') AS s
-        |  FROM ish),
-        |capped AS (SELECT doc_id, pos, s FROM (
-        |    SELECT doc_id, pos, s, COUNT(*) OVER (PARTITION BY s) AS df
-        |    FROM psh) t
-        |  WHERE df <= 50),
-        |m AS (SELECT a.doc_id AS da, b.doc_id AS db, a.pos AS pa, b.pos AS pb
-        |  FROM capped a JOIN capped b
-        |    ON a.s = b.s AND a.doc_id < b.doc_id),
-        |runs AS (SELECT da, db, pa - pb AS diag, pa, pb,
-        |    ROW_NUMBER() OVER (PARTITION BY da, db, pa - pb ORDER BY pa) AS rn
-        |  FROM m),
-        |r2 AS (SELECT da, db, diag, COUNT(*) AS run, MIN(pb) AS pb0
-        |  FROM runs GROUP BY da, db, diag, pa - rn),
-        |best AS (SELECT db AS doc_id, CAST(pb0 AS BIGINT) AS span_start,
-        |    CAST(run + 3 AS BIGINT) AS span_words
-        |  FROM (SELECT r2.*, ROW_NUMBER() OVER (PARTITION BY db
-        |          ORDER BY run DESC, pb0, da, diag) AS brn
-        |        FROM r2 WHERE run + 3 >= 12) t
-        |  WHERE brn = 1)
-        |SELECT b.doc_id, b.span_start, b.span_words,
-        |  COALESCE(array_to_string(
-        |    w[1:CAST(b.span_start AS INT)]
-        |      || w[CAST(b.span_start + b.span_words + 1 AS INT):len(w)], ' '),
-        |    '') AS new_text
-        |FROM best b JOIN toks t ON t.doc_id = b.doc_id
-        |ORDER BY b.doc_id""".stripMargin,
+      s"""WITH $substringRunCtes,
+         |best AS (SELECT db AS doc_id, CAST(pb0 AS BIGINT) AS span_start,
+         |    CAST(run + 3 AS BIGINT) AS span_words
+         |  FROM (SELECT r2.*, ROW_NUMBER() OVER (PARTITION BY db
+         |          ORDER BY run DESC, pb0, da, diag) AS brn
+         |        FROM r2 WHERE run + 3 >= 12) t
+         |  WHERE brn = 1)
+         |SELECT b.doc_id, b.span_start, b.span_words,
+         |  COALESCE(array_to_string(
+         |    w[1:CAST(b.span_start AS INT)]
+         |      || w[CAST(b.span_start + b.span_words + 1 AS INT):len(w)], ' '),
+         |    '') AS new_text
+         |FROM best b JOIN toks t ON t.doc_id = b.doc_id
+         |ORDER BY b.doc_id""".stripMargin,
 
     "dedup_substring_rewrite_all" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |ish AS (SELECT doc_id, unnest(range(1, len(w) - 2)) AS i, w
-        |  FROM toks WHERE len(w) >= 4),
-        |psh AS (SELECT doc_id, i - 1 AS pos,
-        |    array_to_string(w[i:i+3], ' ') AS s
-        |  FROM ish),
-        |capped AS (SELECT doc_id, pos, s FROM (
-        |    SELECT doc_id, pos, s, COUNT(*) OVER (PARTITION BY s) AS df
-        |    FROM psh) t
-        |  WHERE df <= 50),
-        |m AS (SELECT a.doc_id AS da, b.doc_id AS db, a.pos AS pa, b.pos AS pb
-        |  FROM capped a JOIN capped b
-        |    ON a.s = b.s AND a.doc_id < b.doc_id),
-        |runs AS (SELECT da, db, pa - pb AS diag, pa, pb,
-        |    ROW_NUMBER() OVER (PARTITION BY da, db, pa - pb ORDER BY pa) AS rn
-        |  FROM m),
-        |r2 AS (SELECT da, db, diag, COUNT(*) AS run, MIN(pb) AS pb0
-        |  FROM runs GROUP BY da, db, diag, pa - rn),
-        |spans AS (SELECT DISTINCT db AS doc_id, pb0 AS s0, pb0 + run + 3 AS e0
-        |  FROM r2 WHERE run + 3 >= 12),
-        |isl AS (SELECT doc_id, s0, e0,
-        |    SUM(CASE WHEN pmax IS NULL OR s0 > pmax THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY s0, e0
-        |            ROWS UNBOUNDED PRECEDING) AS island
-        |  FROM (SELECT doc_id, s0, e0,
-        |      MAX(e0) OVER (PARTITION BY doc_id ORDER BY s0, e0
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-        |    FROM spans) t),
-        |mi AS (SELECT doc_id, MIN(s0) AS s, MAX(e0) AS e
-        |  FROM isl GROUP BY doc_id, island),
-        |agg AS (SELECT doc_id, CAST(SUM(e - s) AS BIGINT) AS cut_words
-        |  FROM mi GROUP BY doc_id),
-        |words AS (SELECT doc_id,
-        |    generate_subscripts(w, 1) - 1 AS pos, unnest(w) AS x
-        |  FROM toks),
-        |keep AS (SELECT wd.doc_id, wd.pos, wd.x FROM words wd
-        |  WHERE NOT EXISTS (SELECT 1 FROM mi
-        |    WHERE mi.doc_id = wd.doc_id
-        |      AND wd.pos >= mi.s AND wd.pos < mi.e)),
-        |nw AS (SELECT doc_id, CAST(len(w) AS INT) AS n_words FROM toks)
-        |SELECT a.doc_id, nw.n_words, a.cut_words,
-        |  COALESCE(string_agg(k.x, ' ' ORDER BY k.pos), '') AS new_text
-        |FROM agg a
-        |JOIN nw ON nw.doc_id = a.doc_id
-        |LEFT JOIN keep k ON k.doc_id = a.doc_id
-        |GROUP BY a.doc_id, nw.n_words, a.cut_words
-        |ORDER BY a.doc_id""".stripMargin,
+      s"""WITH $substringRunCtes,
+         |spans AS (SELECT DISTINCT db AS doc_id, pb0 AS s0, pb0 + run + 3 AS e0
+         |  FROM r2 WHERE run + 3 >= 12),
+         |isl AS (SELECT doc_id, s0, e0,
+         |    SUM(CASE WHEN pmax IS NULL OR s0 > pmax THEN 1 ELSE 0 END)
+         |      OVER (PARTITION BY doc_id ORDER BY s0, e0
+         |            ROWS UNBOUNDED PRECEDING) AS island
+         |  FROM (SELECT doc_id, s0, e0,
+         |      MAX(e0) OVER (PARTITION BY doc_id ORDER BY s0, e0
+         |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
+         |    FROM spans) t),
+         |mi AS (SELECT doc_id, MIN(s0) AS s, MAX(e0) AS e
+         |  FROM isl GROUP BY doc_id, island),
+         |agg AS (SELECT doc_id, CAST(SUM(e - s) AS BIGINT) AS cut_words
+         |  FROM mi GROUP BY doc_id),
+         |words AS (SELECT doc_id,
+         |    generate_subscripts(w, 1) - 1 AS pos, unnest(w) AS x
+         |  FROM toks),
+         |keep AS (SELECT wd.doc_id, wd.pos, wd.x FROM words wd
+         |  WHERE NOT EXISTS (SELECT 1 FROM mi
+         |    WHERE mi.doc_id = wd.doc_id
+         |      AND wd.pos >= mi.s AND wd.pos < mi.e)),
+         |nw AS (SELECT doc_id, CAST(len(w) AS INT) AS n_words FROM toks)
+         |SELECT a.doc_id, nw.n_words, a.cut_words,
+         |  COALESCE(string_agg(k.x, ' ' ORDER BY k.pos), '') AS new_text
+         |FROM agg a
+         |JOIN nw ON nw.doc_id = a.doc_id
+         |LEFT JOIN keep k ON k.doc_id = a.doc_id
+         |GROUP BY a.doc_id, nw.n_words, a.cut_words
+         |ORDER BY a.doc_id""".stripMargin,
 
     "dedup_clusters" ->
-      """WITH RECURSIVE
-        |toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |sh AS (SELECT DISTINCT doc_id,
-        |    unnest(CASE WHEN len(w) >= 4 THEN
-        |      list_transform(range(1, len(w) - 2),
-        |        i -> array_to_string(w[i:i+3], ' '))
-        |      ELSE [] END) AS s
-        |  FROM toks),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 50),
-        |cand0 AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM sh a JOIN rare r ON a.s = r.s
-        |  JOIN sh b ON b.s = a.s AND a.doc_id < b.doc_id),
-        |cand AS (SELECT c.da, c.db, COUNT(*) AS common
-        |  FROM cand0 c
-        |  JOIN sh a ON a.doc_id = c.da
-        |  JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-        |  GROUP BY 1, 2),
-        |jp AS (SELECT da, db FROM cand
-        |  JOIN sizes sa ON da = sa.doc_id
-        |  JOIN sizes sb ON db = sb.doc_id
-        |  WHERE common / (sa.n + sb.n - common) >= 0.5),
-        |e AS (SELECT da, db FROM jp UNION SELECT db, da FROM jp),
-        |reach(v, r) AS (
-        |  SELECT da AS v, da AS r FROM e
-        |  UNION
-        |  SELECT e.da, reach.r FROM e JOIN reach ON e.db = reach.v),
-        |comp AS (SELECT v, MIN(r) AS component FROM reach GROUP BY v)
-        |SELECT component, COUNT(*) AS size,
-        |  array_to_string(list_sort(list(v)), ',') AS members
-        |FROM comp GROUP BY component ORDER BY component""".stripMargin,
+      s"""WITH RECURSIVE
+         |${OracleSql.jaccardPairs()},
+         |e AS (SELECT da, db FROM jp UNION SELECT db, da FROM jp),
+         |reach(v, r) AS (
+         |  SELECT da AS v, da AS r FROM e
+         |  UNION
+         |  SELECT e.da, reach.r FROM e JOIN reach ON e.db = reach.v),
+         |comp AS (SELECT v, MIN(r) AS component FROM reach GROUP BY v)
+         |SELECT component, COUNT(*) AS size,
+         |  array_to_string(list_sort(list(v)), ',') AS members
+         |FROM comp GROUP BY component ORDER BY component""".stripMargin,
 
-    // pair/edge prefix (through `e`) is VERBATIM dedup_clusters'; the 3
-    // PageRank rounds are unrolled plainly (no recursion), each round
-    // the identical floor'd-double/BIGINT expressions the Spark side runs
-    "dedup_pagerank" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |sh AS MATERIALIZED (SELECT DISTINCT doc_id,
-        |    unnest(CASE WHEN len(w) >= 4 THEN
-        |      list_transform(range(1, len(w) - 2),
-        |        i -> array_to_string(w[i:i+3], ' '))
-        |      ELSE [] END) AS s
-        |  FROM toks),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 50),
-        |cand0 AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM sh a JOIN rare r ON a.s = r.s
-        |  JOIN sh b ON b.s = a.s AND a.doc_id < b.doc_id),
-        |cand AS MATERIALIZED (SELECT c.da, c.db, COUNT(*) AS common
-        |  FROM cand0 c
-        |  JOIN sh a ON a.doc_id = c.da
-        |  JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-        |  GROUP BY 1, 2),
-        |jp AS MATERIALIZED (SELECT da, db FROM cand
-        |  JOIN sizes sa ON da = sa.doc_id
-        |  JOIN sizes sb ON db = sb.doc_id
-        |  WHERE common / (sa.n + sb.n - common) >= 0.5),
-        |e AS MATERIALIZED (SELECT da, db FROM jp UNION SELECT db, da FROM jp),
-        |deg AS MATERIALIZED (SELECT da AS v, COUNT(*) AS deg FROM e GROUP BY da),
-        |pr0 AS MATERIALIZED (SELECT v, CAST(1048576 AS BIGINT) AS pr FROM deg),
-        |c1 AS MATERIALIZED (SELECT e.db AS v, CAST(SUM(CAST(floor(
-        |      CAST(p.pr AS DOUBLE) / CAST(d.deg AS DOUBLE)) AS BIGINT))
-        |    AS BIGINT) AS sc
-        |  FROM e JOIN pr0 p ON e.da = p.v JOIN deg d ON e.da = d.v
-        |  GROUP BY e.db),
-        |pr1 AS MATERIALIZED (SELECT deg.v, CAST(157286 + CAST(floor(
-        |    CAST(COALESCE(c.sc, 0) * 85 AS DOUBLE) / 100.0) AS BIGINT)
-        |    AS BIGINT) AS pr
-        |  FROM deg LEFT JOIN c1 c ON deg.v = c.v),
-        |c2 AS MATERIALIZED (SELECT e.db AS v, CAST(SUM(CAST(floor(
-        |      CAST(p.pr AS DOUBLE) / CAST(d.deg AS DOUBLE)) AS BIGINT))
-        |    AS BIGINT) AS sc
-        |  FROM e JOIN pr1 p ON e.da = p.v JOIN deg d ON e.da = d.v
-        |  GROUP BY e.db),
-        |pr2 AS MATERIALIZED (SELECT deg.v, CAST(157286 + CAST(floor(
-        |    CAST(COALESCE(c.sc, 0) * 85 AS DOUBLE) / 100.0) AS BIGINT)
-        |    AS BIGINT) AS pr
-        |  FROM deg LEFT JOIN c2 c ON deg.v = c.v),
-        |c3 AS MATERIALIZED (SELECT e.db AS v, CAST(SUM(CAST(floor(
-        |      CAST(p.pr AS DOUBLE) / CAST(d.deg AS DOUBLE)) AS BIGINT))
-        |    AS BIGINT) AS sc
-        |  FROM e JOIN pr2 p ON e.da = p.v JOIN deg d ON e.da = d.v
-        |  GROUP BY e.db),
-        |pr3 AS (SELECT deg.v, CAST(157286 + CAST(floor(
-        |    CAST(COALESCE(c.sc, 0) * 85 AS DOUBLE) / 100.0) AS BIGINT)
-        |    AS BIGINT) AS pr
-        |  FROM deg LEFT JOIN c3 c ON deg.v = c.v)
-        |SELECT v AS doc_id, pr AS pr_fix,
-        |  CAST(pr AS DOUBLE) / 1048576.0 AS pr
-        |FROM pr3 ORDER BY doc_id""".stripMargin,
+    // the shared verified-pair chain (OracleSql.jaccardPairs) as an edge
+    // list; the 3 PageRank rounds are unrolled plainly (no recursion),
+    // each round the identical floor'd-double/BIGINT expressions the
+    // Spark side runs
+    "dedup_pagerank" -> {
+      def round(i: Int): String =
+        s"""c$i AS MATERIALIZED (SELECT e.db AS v, CAST(SUM(CAST(floor(
+           |      CAST(p.pr AS DOUBLE) / CAST(d.deg AS DOUBLE)) AS BIGINT))
+           |    AS BIGINT) AS sc
+           |  FROM e JOIN pr${i - 1} p ON e.da = p.v JOIN deg d ON e.da = d.v
+           |  GROUP BY e.db),
+           |pr$i AS MATERIALIZED (SELECT deg.v, CAST(157286 + CAST(floor(
+           |    CAST(COALESCE(c.sc, 0) * 85 AS DOUBLE) / 100.0) AS BIGINT)
+           |    AS BIGINT) AS pr
+           |  FROM deg LEFT JOIN c$i c ON deg.v = c.v)""".stripMargin
+      s"""WITH ${OracleSql.jaccardPairs()},
+         |e AS MATERIALIZED (SELECT da, db FROM jp UNION SELECT db, da FROM jp),
+         |deg AS MATERIALIZED (SELECT da AS v, COUNT(*) AS deg FROM e GROUP BY da),
+         |pr0 AS MATERIALIZED (SELECT v, CAST(1048576 AS BIGINT) AS pr FROM deg),
+         |${(1 to 3).map(round).mkString(",\n")}
+         |SELECT v AS doc_id, pr AS pr_fix,
+         |  CAST(pr AS DOUBLE) / 1048576.0 AS pr
+         |FROM pr3 ORDER BY doc_id""".stripMargin
+    },
 
-    // same pair prefix (through `jp`) as dedup_pagerank; triangles by
-    // the ordered node-iterator: apex wedge + closing-edge join
+    // the shared verified-pair chain; triangles by the ordered
+    // node-iterator: apex wedge + closing-edge join
     "dedup_triangles" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |sh AS MATERIALIZED (SELECT DISTINCT doc_id,
-        |    unnest(CASE WHEN len(w) >= 4 THEN
-        |      list_transform(range(1, len(w) - 2),
-        |        i -> array_to_string(w[i:i+3], ' '))
-        |      ELSE [] END) AS s
-        |  FROM toks),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 50),
-        |cand0 AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM sh a JOIN rare r ON a.s = r.s
-        |  JOIN sh b ON b.s = a.s AND a.doc_id < b.doc_id),
-        |cand AS MATERIALIZED (SELECT c.da, c.db, COUNT(*) AS common
-        |  FROM cand0 c
-        |  JOIN sh a ON a.doc_id = c.da
-        |  JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-        |  GROUP BY 1, 2),
-        |jp AS MATERIALIZED (SELECT da, db FROM cand
-        |  JOIN sizes sa ON da = sa.doc_id
-        |  JOIN sizes sb ON db = sb.doc_id
-        |  WHERE common / (sa.n + sb.n - common) >= 0.5),
-        |w2 AS (SELECT e1.da AS a, e1.db AS b, e2.db AS c
-        |  FROM jp e1 JOIN jp e2
-        |    ON e1.da = e2.da AND e1.db < e2.db),
-        |tri AS (SELECT a, b, c FROM w2
-        |  JOIN jp e ON w2.b = e.da AND w2.c = e.db),
-        |vx AS (SELECT unnest([a, b, c]) AS doc_id FROM tri)
-        |SELECT doc_id, COUNT(*) AS n_triangles
-        |FROM vx GROUP BY 1 ORDER BY doc_id""".stripMargin,
+      s"""WITH ${OracleSql.jaccardPairs()},
+         |w2 AS (SELECT e1.da AS a, e1.db AS b, e2.db AS c
+         |  FROM jp e1 JOIN jp e2
+         |    ON e1.da = e2.da AND e1.db < e2.db),
+         |tri AS (SELECT a, b, c FROM w2
+         |  JOIN jp e ON w2.b = e.da AND w2.c = e.db),
+         |vx AS (SELECT unnest([a, b, c]) AS doc_id FROM tri)
+         |SELECT doc_id, COUNT(*) AS n_triangles
+         |FROM vx GROUP BY 1 ORDER BY doc_id""".stripMargin,
 
     "dedup_embedding" ->
-      """WITH e AS (SELECT vec_id, embedding AS v,
-        |  sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list_transform(embedding,
-        |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-        |    (a, b) -> a + b)) AS nrm
-        |  FROM embeddings WHERE vec_id < 500)
-        |SELECT a.vec_id AS va, b.vec_id AS vb,
-        |  list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list_transform(list_zip(a.v, b.v),
-        |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |    (x, y) -> x + y) / (a.nrm * b.nrm) AS cosine
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list_transform(list_zip(a.v, b.v),
-        |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |    (x, y) -> x + y) / (a.nrm * b.nrm) >= 0.35
-        |ORDER BY va, vb""".stripMargin,
+      s"""WITH e AS (SELECT vec_id, embedding AS v, ${norm("embedding")} AS nrm
+         |  FROM embeddings WHERE vec_id < 500),
+         |p AS (SELECT a.vec_id AS va, b.vec_id AS vb,
+         |    ${dot("a.v", "b.v")} / (a.nrm * b.nrm) AS cosine
+         |  FROM e a JOIN e b ON a.vec_id < b.vec_id)
+         |SELECT va, vb, cosine FROM p WHERE cosine >= 0.35
+         |ORDER BY va, vb""".stripMargin,
 
+    // the IVF assignment CTEs (OracleSql.ivfAssign), then every
+    // same-cluster pair at cosine ≥ 0.35
     "dedup_semantic" ->
-      """WITH e AS (SELECT vec_id, embedding AS v,
-        |  sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list_transform(embedding,
-        |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-        |    (a, b) -> a + b)) AS nrm
-        |  FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM e
-        |  WHERE vec_id < 16),
-        |sc AS (SELECT e.vec_id, e.v, e.nrm, c.cid,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(e.v, c.cv),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |      (x, y) -> x + y) / (e.nrm * c.cn) AS cos
-        |  FROM e CROSS JOIN c),
-        |asg AS (SELECT vec_id, v, nrm, cid AS cluster FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos DESC, cid) AS rn FROM sc) WHERE rn = 1)
-        |SELECT a.cluster AS cluster, a.vec_id AS va, b.vec_id AS vb,
-        |  list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list_transform(list_zip(a.v, b.v),
-        |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |    (x, y) -> x + y) / (a.nrm * b.nrm) AS cosine
-        |FROM asg a JOIN asg b
-        |  ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-        |WHERE a.vec_id < 2000
-        |  AND list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list_transform(list_zip(a.v, b.v),
-        |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |    (x, y) -> x + y) / (a.nrm * b.nrm) >= 0.35
-        |ORDER BY va, vb""".stripMargin)
+      s"""WITH e AS (SELECT vec_id, embedding AS v, ${norm("embedding")} AS nrm
+         |  FROM embeddings),
+         |${ivfAssign(", v, nrm")},
+         |p AS (SELECT a.cluster AS cluster, a.vec_id AS va, b.vec_id AS vb,
+         |    ${dot("a.v", "b.v")} / (a.nrm * b.nrm) AS cosine
+         |  FROM asg a JOIN asg b
+         |    ON a.cluster = b.cluster AND a.vec_id < b.vec_id
+         |  WHERE a.vec_id < 2000)
+         |SELECT cluster, va, vb, cosine FROM p WHERE cosine >= 0.35
+         |ORDER BY va, vb""".stripMargin)
+
+  /** The positional-shingle run CTEs the three substring oracles share:
+    * `toks`, 4-word shingles with their 0-based position (`psh`), df cap
+    * 50 (`capped`), same-shingle matches and their diagonal islands
+    * (`r2(da, db, diag, run, pb0)`). Mirrors [[substringRuns]]. */
+  private def substringRunCtes: String =
+    s"""toks AS (SELECT doc_id, ${words()} AS w FROM documents),
+       |ish AS (SELECT doc_id, unnest(range(1, len(w) - 2)) AS i, w
+       |  FROM toks WHERE len(w) >= 4),
+       |psh AS (SELECT doc_id, i - 1 AS pos,
+       |    array_to_string(w[i:i+3], ' ') AS s
+       |  FROM ish),
+       |capped AS (SELECT doc_id, pos, s FROM (
+       |    SELECT doc_id, pos, s, COUNT(*) OVER (PARTITION BY s) AS df
+       |    FROM psh) t
+       |  WHERE df <= 50),
+       |m AS (SELECT a.doc_id AS da, b.doc_id AS db, a.pos AS pa, b.pos AS pb
+       |  FROM capped a JOIN capped b
+       |    ON a.s = b.s AND a.doc_id < b.doc_id),
+       |runs AS (SELECT da, db, pa - pb AS diag, pa, pb,
+       |    ROW_NUMBER() OVER (PARTITION BY da, db, pa - pb ORDER BY pa) AS rn
+       |  FROM m),
+       |r2 AS (SELECT da, db, diag, COUNT(*) AS run, MIN(pb) AS pb0
+       |  FROM runs GROUP BY da, db, diag, pa - rn)""".stripMargin
 
   /** Warm-start targets (see [[graft.Prewarm]]): docComponents pulls the
     * whole shingle -> groups -> overlap-counts -> pair-table -> CC chain

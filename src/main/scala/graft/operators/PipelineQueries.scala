@@ -25,6 +25,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the expensive stage runs on the reduced corpus — filter early, always.
   */
 object PipelineQueries extends QueryGroup {
+  import OracleSql._
 
   private val minTokens = 20
   private val maxStopRatio = 0.45
@@ -551,180 +552,77 @@ object PipelineQueries extends QueryGroup {
         |FROM d ORDER BY source""".stripMargin,
 
     "pipeline_source_filter" ->
-      """WITH m AS (SELECT source,
-        |    CAST(len(regexp_split_to_array(lower(trim(text)), '\s+'))
-        |      AS DOUBLE) AS n_tokens,
-        |    CAST(length(text) AS DOUBLE) AS n_chars,
-        |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))
-        |      AS DOUBLE) AS n_punct,
-        |    CAST(len(regexp_extract_all(lower(text),
-        |      '\b(the|a|of|and|to|in|is|it)\b')) AS DOUBLE) AS n_stop
-        |  FROM documents),
-        |s AS (SELECT source,
-        |    CAST(floor((least(1.0, n_tokens/50.0) * (1.0 - n_punct/n_chars)
-        |      * (1.0 - 0.5*n_stop/n_tokens)) * 1048576.0) AS BIGINT)
-        |      AS q_fix
-        |  FROM m)
-        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(q_fix) AS BIGINT) AS q_sum_fix,
-        |  CAST(SUM(q_fix) AS DOUBLE)
-        |    / (CAST(COUNT(*) AS DOUBLE) * 1048576.0) AS q_mean,
-        |  (SUM(q_fix) >= COUNT(*) * 828375) AS kept
-        |FROM s GROUP BY source ORDER BY source""".stripMargin,
+      s"""WITH m AS (SELECT source,
+         |    $qualityCols
+         |  FROM documents),
+         |s AS (SELECT source,
+         |    CAST(floor(($qualityScore) * 1048576.0) AS BIGINT)
+         |      AS q_fix
+         |  FROM m)
+         |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+         |  CAST(SUM(q_fix) AS BIGINT) AS q_sum_fix,
+         |  CAST(SUM(q_fix) AS DOUBLE)
+         |    / (CAST(COUNT(*) AS DOUBLE) * 1048576.0) AS q_mean,
+         |  (SUM(q_fix) >= COUNT(*) * 828375) AS kept
+         |FROM s GROUP BY source ORDER BY source""".stripMargin,
 
+    // the gate ([[gateCtes]]), then the shared verified-pair chain over
+    // the gated docs: every pair's later doc is dropped
     "pipeline_clean_corpus" ->
-      """WITH gated AS (
-        |  SELECT doc_id, lang, text,
-        |    CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS INT)
-        |      AS n_tokens,
-        |    len(regexp_extract_all(lower(text),
-        |      '\b(the|a|of|and|to|in|is|it)\b')) AS n_stop
-        |  FROM documents
-        |  WHERE lang IN ('en','de','es','fr')),
-        |g2 AS (SELECT * FROM gated
-        |  WHERE n_tokens >= 20
-        |    AND CAST(n_stop AS DOUBLE) / n_tokens <= 0.45),
-        |toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM g2),
-        |sh AS (SELECT DISTINCT doc_id,
-        |    unnest(CASE WHEN len(w) >= 4 THEN
-        |      list_transform(range(1, len(w) - 2),
-        |        i -> array_to_string(w[i:i+3], ' '))
-        |      ELSE [] END) AS sg
-        |  FROM toks),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |rare AS (SELECT sg FROM sh GROUP BY sg HAVING COUNT(*) <= 50),
-        |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM sh a JOIN rare r ON a.sg = r.sg
-        |  JOIN sh b ON b.sg = a.sg AND a.doc_id < b.doc_id),
-        |pairs AS (SELECT c.da, c.db, COUNT(*) AS common
-        |  FROM cand c
-        |  JOIN sh a ON a.doc_id = c.da
-        |  JOIN sh b ON b.doc_id = c.db AND b.sg = a.sg
-        |  GROUP BY 1, 2),
-        |dropped AS (SELECT DISTINCT db AS doc_id
-        |  FROM pairs
-        |  JOIN sizes sa ON da = sa.doc_id
-        |  JOIN sizes sb ON db = sb.doc_id
-        |  WHERE common / (sa.n + sb.n - common) >= 0.5)
-        |SELECT doc_id, lang, n_tokens FROM g2
-        |WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
-        |ORDER BY doc_id""".stripMargin,
+      s"""WITH $gateCtes,
+         |${jaccardPairs("g2")},
+         |dropped AS (SELECT DISTINCT db AS doc_id FROM jp)
+         |SELECT doc_id, lang, n_tokens FROM g2
+         |WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
+         |ORDER BY doc_id""".stripMargin,
 
+    // the same pairs closed into components: every doc but a component's
+    // minimum is dropped
     "pipeline_clean_corpus_cc" ->
-      """WITH RECURSIVE gated AS (
-        |  SELECT doc_id, lang, text,
-        |    CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS INT)
-        |      AS n_tokens,
-        |    len(regexp_extract_all(lower(text),
-        |      '\b(the|a|of|and|to|in|is|it)\b')) AS n_stop
-        |  FROM documents
-        |  WHERE lang IN ('en','de','es','fr')),
-        |g2 AS (SELECT * FROM gated
-        |  WHERE n_tokens >= 20
-        |    AND CAST(n_stop AS DOUBLE) / n_tokens <= 0.45),
-        |toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM g2),
-        |sh AS (SELECT DISTINCT doc_id,
-        |    unnest(CASE WHEN len(w) >= 4 THEN
-        |      list_transform(range(1, len(w) - 2),
-        |        i -> array_to_string(w[i:i+3], ' '))
-        |      ELSE [] END) AS sg
-        |  FROM toks),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |rare AS (SELECT sg FROM sh GROUP BY sg HAVING COUNT(*) <= 50),
-        |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM sh a JOIN rare r ON a.sg = r.sg
-        |  JOIN sh b ON b.sg = a.sg AND a.doc_id < b.doc_id),
-        |pairs AS (SELECT c.da, c.db, COUNT(*) AS common
-        |  FROM cand c
-        |  JOIN sh a ON a.doc_id = c.da
-        |  JOIN sh b ON b.doc_id = c.db AND b.sg = a.sg
-        |  GROUP BY 1, 2),
-        |jp AS (SELECT da, db FROM pairs
-        |  JOIN sizes sa ON da = sa.doc_id
-        |  JOIN sizes sb ON db = sb.doc_id
-        |  WHERE common / (sa.n + sb.n - common) >= 0.5),
-        |e AS (SELECT da, db FROM jp UNION SELECT db, da FROM jp),
-        |reach(v, r) AS (
-        |  SELECT da AS v, da AS r FROM e
-        |  UNION
-        |  SELECT e.da, reach.r FROM e JOIN reach ON e.db = reach.v),
-        |dropped AS (SELECT v AS doc_id FROM reach
-        |  GROUP BY v HAVING MIN(r) <> v)
-        |SELECT doc_id, lang, n_tokens FROM g2
-        |WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
-        |ORDER BY doc_id""".stripMargin,
+      s"""WITH RECURSIVE $gateCtes,
+         |${jaccardPairs("g2")},
+         |e AS (SELECT da, db FROM jp UNION SELECT db, da FROM jp),
+         |reach(v, r) AS (
+         |  SELECT da AS v, da AS r FROM e
+         |  UNION
+         |  SELECT e.da, reach.r FROM e JOIN reach ON e.db = reach.v),
+         |dropped AS (SELECT v AS doc_id FROM reach
+         |  GROUP BY v HAVING MIN(r) <> v)
+         |SELECT doc_id, lang, n_tokens FROM g2
+         |WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
+         |ORDER BY doc_id""".stripMargin,
 
+    // the same components, keeping each one's longest doc
     "pipeline_clean_keep_longest" ->
-      """WITH RECURSIVE gated AS (
-        |  SELECT doc_id, lang, text,
-        |    CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS INT)
-        |      AS n_tokens,
-        |    len(regexp_extract_all(lower(text),
-        |      '\b(the|a|of|and|to|in|is|it)\b')) AS n_stop
-        |  FROM documents
-        |  WHERE lang IN ('en','de','es','fr')),
-        |g2 AS (SELECT * FROM gated
-        |  WHERE n_tokens >= 20
-        |    AND CAST(n_stop AS DOUBLE) / n_tokens <= 0.45),
-        |toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM g2),
-        |sh AS (SELECT DISTINCT doc_id,
-        |    unnest(CASE WHEN len(w) >= 4 THEN
-        |      list_transform(range(1, len(w) - 2),
-        |        i -> array_to_string(w[i:i+3], ' '))
-        |      ELSE [] END) AS sg
-        |  FROM toks),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |rare AS (SELECT sg FROM sh GROUP BY sg HAVING COUNT(*) <= 50),
-        |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM sh a JOIN rare r ON a.sg = r.sg
-        |  JOIN sh b ON b.sg = a.sg AND a.doc_id < b.doc_id),
-        |pairs AS (SELECT c.da, c.db, COUNT(*) AS common
-        |  FROM cand c
-        |  JOIN sh a ON a.doc_id = c.da
-        |  JOIN sh b ON b.sg = a.sg AND b.doc_id = c.db
-        |  GROUP BY 1, 2),
-        |jp AS (SELECT da, db FROM pairs
-        |  JOIN sizes sa ON da = sa.doc_id
-        |  JOIN sizes sb ON db = sb.doc_id
-        |  WHERE common / (sa.n + sb.n - common) >= 0.5),
-        |e AS (SELECT da, db FROM jp UNION SELECT db, da FROM jp),
-        |reach(v, r) AS (
-        |  SELECT da AS v, da AS r FROM e
-        |  UNION
-        |  SELECT e.da, reach.r FROM e JOIN reach ON e.db = reach.v),
-        |lbl AS (SELECT v AS doc_id, MIN(r) AS comp FROM reach GROUP BY v)
-        |SELECT doc_id, lang, n_tokens FROM (
-        |  SELECT g2.doc_id, g2.lang, g2.n_tokens,
-        |    ROW_NUMBER() OVER (
-        |      PARTITION BY COALESCE(l.comp, g2.doc_id)
-        |      ORDER BY g2.n_tokens DESC, g2.doc_id) AS rn
-        |  FROM g2 LEFT JOIN lbl l ON g2.doc_id = l.doc_id)
-        |WHERE rn = 1
-        |ORDER BY doc_id""".stripMargin,
+      s"""WITH RECURSIVE $gateCtes,
+         |${jaccardPairs("g2")},
+         |e AS (SELECT da, db FROM jp UNION SELECT db, da FROM jp),
+         |reach(v, r) AS (
+         |  SELECT da AS v, da AS r FROM e
+         |  UNION
+         |  SELECT e.da, reach.r FROM e JOIN reach ON e.db = reach.v),
+         |lbl AS (SELECT v AS doc_id, MIN(r) AS comp FROM reach GROUP BY v)
+         |SELECT doc_id, lang, n_tokens FROM (
+         |  SELECT g2.doc_id, g2.lang, g2.n_tokens,
+         |    ROW_NUMBER() OVER (
+         |      PARTITION BY COALESCE(l.comp, g2.doc_id)
+         |      ORDER BY g2.n_tokens DESC, g2.doc_id) AS rn
+         |  FROM g2 LEFT JOIN lbl l ON g2.doc_id = l.doc_id)
+         |WHERE rn = 1
+         |ORDER BY doc_id""".stripMargin,
 
     "pipeline_contamination" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |sh AS (SELECT DISTINCT doc_id,
-        |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS h,
-        |    unnest(CASE WHEN len(w) >= 8 THEN
-        |      list_transform(range(1, len(w) - 6),
-        |        i -> array_to_string(w[i:i+7], ' '))
-        |      ELSE [] END) AS s
-        |  FROM toks),
-        |test AS (SELECT doc_id AS db, s FROM sh WHERE h IN ('e', 'f')),
-        |train AS (SELECT doc_id AS da, s FROM sh
-        |  WHERE h NOT IN ('c', 'd', 'e', 'f'))
-        |SELECT da, db, COUNT(*) AS n_shared
-        |FROM train JOIN test USING (s)
-        |GROUP BY da, db ORDER BY da, db""".stripMargin,
+      s"""WITH toks AS (SELECT doc_id, ${words()} AS w FROM documents),
+         |sh AS (SELECT DISTINCT doc_id,
+         |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS h,
+         |    unnest(${shingles(8)}) AS s
+         |  FROM toks),
+         |test AS (SELECT doc_id AS db, s FROM sh WHERE h IN ('e', 'f')),
+         |train AS (SELECT doc_id AS da, s FROM sh
+         |  WHERE h NOT IN ('c', 'd', 'e', 'f'))
+         |SELECT da, db, COUNT(*) AS n_shared
+         |FROM train JOIN test USING (s)
+         |GROUP BY da, db ORDER BY da, db""".stripMargin,
 
     "pipeline_forget" ->
       """WITH f AS (SELECT c_custkey FROM customer
@@ -742,64 +640,48 @@ object PipelineQueries extends QueryGroup {
         |  (SELECT COUNT(*) FROM orders), (SELECT COUNT(*) FROM ro)
         |ORDER BY tbl""".stripMargin,
 
-    // every metric restated over the raw tables: the near-dup pair chain
-    // is the dedup_ngram_jaccard oracle (τ ≥ 0.5, df-cap 50), the gate is
-    // the pipeline_clean_corpus gate — shared definitions, stated twice
+    // every metric restated over the raw tables: the near-dup pairs are
+    // the shared verified-pair chain (τ ≥ 0.5, df-cap 50), the gate is
+    // pipeline_clean_corpus' [[gateCtes]]
     "pipeline_dataset_card" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |sh AS (SELECT DISTINCT doc_id,
-        |    unnest(CASE WHEN len(w) >= 4 THEN
-        |      list_transform(range(1, len(w) - 2),
-        |        i -> array_to_string(w[i:i+3], ' '))
-        |      ELSE [] END) AS sg
-        |  FROM toks),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |rare AS (SELECT sg FROM sh GROUP BY sg HAVING COUNT(*) <= 50),
-        |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM sh a JOIN rare r ON a.sg = r.sg
-        |  JOIN sh b ON b.sg = a.sg AND a.doc_id < b.doc_id),
-        |pairs AS (SELECT c.da, c.db, COUNT(*) AS common
-        |  FROM cand c
-        |  JOIN sh a ON a.doc_id = c.da
-        |  JOIN sh b ON b.doc_id = c.db AND b.sg = a.sg
-        |  GROUP BY 1, 2),
-        |nd AS (SELECT COUNT(*) AS n FROM pairs
-        |  JOIN sizes sa ON da = sa.doc_id
-        |  JOIN sizes sb ON db = sb.doc_id
-        |  WHERE common / (sa.n + sb.n - common) >= 0.5),
-        |grp AS (SELECT lower(trim(text)) AS t, COUNT(*) AS c
-        |  FROM documents GROUP BY 1),
-        |gated AS (SELECT doc_id FROM (
-        |    SELECT doc_id, lang,
-        |      CAST(len(regexp_split_to_array(lower(trim(text)), '\s+'))
-        |        AS INT) AS n_tokens,
-        |      len(regexp_extract_all(lower(text),
-        |        '\b(the|a|of|and|to|in|is|it)\b')) AS n_stop
-        |    FROM documents)
-        |  WHERE lang IN ('en','de','es','fr') AND n_tokens >= 20
-        |    AND CAST(n_stop AS DOUBLE) / n_tokens <= 0.45)
-        |SELECT 'docs' AS metric, CAST(COUNT(*) AS BIGINT) AS value
-        |  FROM documents
-        |UNION ALL SELECT 'chars', CAST(SUM(n_chars) AS BIGINT)
-        |  FROM documents
-        |UNION ALL SELECT 'ws_tokens',
-        |  CAST(SUM(len(regexp_split_to_array(lower(trim(text)), '\s+')))
-        |    AS BIGINT) FROM documents
-        |UNION ALL SELECT 'langs', CAST(COUNT(DISTINCT lang) AS BIGINT)
-        |  FROM documents
-        |UNION ALL SELECT 'sources', CAST(COUNT(DISTINCT source) AS BIGINT)
-        |  FROM documents
-        |UNION ALL SELECT 'exact_dup_docs',
-        |  CAST(COALESCE(SUM(c), 0) AS BIGINT) FROM grp WHERE c > 1
-        |UNION ALL SELECT 'exact_dup_groups', CAST(COUNT(*) AS BIGINT)
-        |  FROM grp WHERE c > 1
-        |UNION ALL SELECT 'neardup_pairs', CAST(n AS BIGINT) FROM nd
-        |UNION ALL SELECT 'gate_fail',
-        |  (SELECT COUNT(*) FROM documents)
-        |    - (SELECT COUNT(*) FROM gated)
-        |ORDER BY metric""".stripMargin)
+      s"""WITH ${jaccardPairs()},
+         |nd AS (SELECT COUNT(*) AS n FROM jp),
+         |grp AS (SELECT lower(trim(text)) AS t, COUNT(*) AS c
+         |  FROM documents GROUP BY 1),
+         |$gateCtes
+         |SELECT 'docs' AS metric, CAST(COUNT(*) AS BIGINT) AS value
+         |  FROM documents
+         |UNION ALL SELECT 'chars', CAST(SUM(n_chars) AS BIGINT)
+         |  FROM documents
+         |UNION ALL SELECT 'ws_tokens',
+         |  CAST(SUM(len(${words()})) AS BIGINT) FROM documents
+         |UNION ALL SELECT 'langs', CAST(COUNT(DISTINCT lang) AS BIGINT)
+         |  FROM documents
+         |UNION ALL SELECT 'sources', CAST(COUNT(DISTINCT source) AS BIGINT)
+         |  FROM documents
+         |UNION ALL SELECT 'exact_dup_docs',
+         |  CAST(COALESCE(SUM(c), 0) AS BIGINT) FROM grp WHERE c > 1
+         |UNION ALL SELECT 'exact_dup_groups', CAST(COUNT(*) AS BIGINT)
+         |  FROM grp WHERE c > 1
+         |UNION ALL SELECT 'neardup_pairs', CAST(n AS BIGINT) FROM nd
+         |UNION ALL SELECT 'gate_fail',
+         |  (SELECT COUNT(*) FROM documents)
+         |    - (SELECT COUNT(*) FROM g2)
+         |ORDER BY metric""".stripMargin)
+
+  /** The corpus gate of the cleaning oracles, mirroring [[gated]]:
+    * `gated` keeps en/de/es/fr docs with their token and stopword counts,
+    * `g2` those with ≥ 20 tokens and a stopword share ≤ 0.45. */
+  private def gateCtes: String =
+    s"""gated AS (
+       |  SELECT doc_id, lang, text,
+       |    CAST(len(${words()}) AS INT) AS n_tokens,
+       |    $stopCount AS n_stop
+       |  FROM documents
+       |  WHERE lang IN ('en','de','es','fr')),
+       |g2 AS (SELECT * FROM gated
+       |  WHERE n_tokens >= 20
+       |    AND CAST(n_stop AS DOUBLE) / n_tokens <= 0.45)""".stripMargin
 
   /** Warm-start targets (see [[graft.Prewarm]]). */
   override def prewarm: Seq[graft.Prewarm.Task] = Seq(

@@ -32,6 +32,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * hex, so the DuckDB twin is exact.
   */
 object SamplingQueries extends QueryGroup {
+  import OracleSql._
 
   /** First hex nibble of md5 of the record key — a uniform, deterministic
     * 16-bucket content hash (measured spread on the corpus: 24-42 docs per
@@ -440,70 +441,39 @@ object SamplingQueries extends QueryGroup {
         |FROM al LEFT JOIN sel ON al.lang = sel.lang
         |ORDER BY al.lang""".stripMargin,
 
-    // the pair/CC prefix (through `comp`) is VERBATIM dedup_clusters'
-    // oracle — including the `e AS (SELECT` seam tools/check.py --sf1
-    // slices at to swap the recursive closure for bounded min-label
-    // propagation on dup-dense corpora
+    // the shared verified-pair chain (OracleSql.jaccardPairs), closed
+    // into components; the chain ends at the `e AS (SELECT` seam
+    // tools/check.py --sf1 slices at to swap the recursive closure for
+    // bounded min-label propagation on dup-dense corpora
     "sample_split_safe" ->
-      """WITH RECURSIVE
-        |toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |sh AS (SELECT DISTINCT doc_id,
-        |    unnest(CASE WHEN len(w) >= 4 THEN
-        |      list_transform(range(1, len(w) - 2),
-        |        i -> array_to_string(w[i:i+3], ' '))
-        |      ELSE [] END) AS s
-        |  FROM toks),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 50),
-        |cand0 AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM sh a JOIN rare r ON a.s = r.s
-        |  JOIN sh b ON b.s = a.s AND a.doc_id < b.doc_id),
-        |cand AS (SELECT c.da, c.db, COUNT(*) AS common
-        |  FROM cand0 c
-        |  JOIN sh a ON a.doc_id = c.da
-        |  JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-        |  GROUP BY 1, 2),
-        |jp AS (SELECT da, db FROM cand
-        |  JOIN sizes sa ON da = sa.doc_id
-        |  JOIN sizes sb ON db = sb.doc_id
-        |  WHERE common / (sa.n + sb.n - common) >= 0.5),
-        |e AS (SELECT da, db FROM jp UNION SELECT db, da FROM jp),
-        |reach(v, r) AS (
-        |  SELECT da AS v, da AS r FROM e
-        |  UNION
-        |  SELECT e.da, reach.r FROM e JOIN reach ON e.db = reach.v),
-        |comp AS (SELECT v, MIN(r) AS component FROM reach GROUP BY v)
-        |SELECT d.doc_id, d.lang,
-        |  COALESCE(c.component, d.doc_id) AS component,
-        |  CASE WHEN substr(md5(CAST(COALESCE(c.component, d.doc_id)
-        |         AS VARCHAR)), 1, 1) IN ('c', 'd') THEN 'val'
-        |       WHEN substr(md5(CAST(COALESCE(c.component, d.doc_id)
-        |         AS VARCHAR)), 1, 1) IN ('e', 'f') THEN 'test'
-        |       ELSE 'train' END AS split
-        |FROM documents d LEFT JOIN comp c ON d.doc_id = c.v
-        |ORDER BY doc_id""".stripMargin,
+      s"""WITH RECURSIVE
+         |${jaccardPairs()},
+         |e AS (SELECT da, db FROM jp UNION SELECT db, da FROM jp),
+         |reach(v, r) AS (
+         |  SELECT da AS v, da AS r FROM e
+         |  UNION
+         |  SELECT e.da, reach.r FROM e JOIN reach ON e.db = reach.v),
+         |comp AS (SELECT v, MIN(r) AS component FROM reach GROUP BY v)
+         |SELECT d.doc_id, d.lang,
+         |  COALESCE(c.component, d.doc_id) AS component,
+         |  CASE WHEN substr(md5(CAST(COALESCE(c.component, d.doc_id)
+         |         AS VARCHAR)), 1, 1) IN ('c', 'd') THEN 'val'
+         |       WHEN substr(md5(CAST(COALESCE(c.component, d.doc_id)
+         |         AS VARCHAR)), 1, 1) IN ('e', 'f') THEN 'test'
+         |       ELSE 'train' END AS split
+         |FROM documents d LEFT JOIN comp c ON d.doc_id = c.v
+         |ORDER BY doc_id""".stripMargin,
 
     "sample_importance" ->
-      """WITH m AS (SELECT doc_id, lang,
-        |  CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS DOUBLE)
-        |    AS n_tokens,
-        |  CAST(length(text) AS DOUBLE) AS n_chars,
-        |  CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS DOUBLE)
-        |    AS n_punct,
-        |  CAST(len(regexp_extract_all(lower(text),
-        |    '\b(the|a|of|and|to|in|is|it)\b')) AS DOUBLE) AS n_stop,
-        |  CAST(CAST(concat('0x',
-        |      substr(md5(CAST(doc_id AS VARCHAR)), 1, 6)) AS INTEGER)
-        |    AS DOUBLE) / CAST(16777216 AS DOUBLE) AS u01
-        |  FROM documents),
-        |sc AS (SELECT doc_id, lang, u01,
-        |    least(1.0, n_tokens / 50.0) * (1.0 - n_punct / n_chars)
-        |      * (1.0 - 0.5 * n_stop / n_tokens) AS q
-        |  FROM m)
-        |SELECT doc_id, lang, u01, q FROM sc
-        |WHERE u01 < q ORDER BY doc_id""".stripMargin,
+      s"""WITH m AS (SELECT doc_id, lang,
+         |    $qualityCols,
+         |    CAST(CAST(concat('0x',
+         |        substr(md5(CAST(doc_id AS VARCHAR)), 1, 6)) AS INTEGER)
+         |      AS DOUBLE) / CAST(16777216 AS DOUBLE) AS u01
+         |  FROM documents),
+         |sc AS (SELECT doc_id, lang, u01, $qualityScore AS q FROM m)
+         |SELECT doc_id, lang, u01, q FROM sc
+         |WHERE u01 < q ORDER BY doc_id""".stripMargin,
 
     "sample_topk_group" ->
       """WITH r AS (SELECT o_orderkey, o_orderpriority,

@@ -25,6 +25,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * DuckDB — so the exact variant hash-matches its oracle on raw doubles.
   */
 object SimilarityQueries extends QueryGroup {
+  import OracleSql._
 
   // codegen'd kernels (graft.functions.FloatDot) — same IEEE fold order as
   // the portable SQL `aggregate(zip_with(...))` form, so oracle values are
@@ -889,564 +890,287 @@ object SimilarityQueries extends QueryGroup {
     // same dyadic-rational planes, same descending acc·2+bit code fold,
     // same fixed-order cosine tree — all values exact cross-engine
     "sim_lsh_buckets" ->
-      """WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
-        |c AS MATERIALIZED (SELECT vec_id, v,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(15, -1, -1), pp ->
-        |        CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |            list_transform(list_zip(v, range(0, 64)),
-        |              q -> CAST(q[1] AS DOUBLE) *
-        |                (CAST((pp * 64 + q[2]) * 2654435761 % 4096
-        |                   AS DOUBLE) / 4096 - 0.5))),
-        |            (a, b) -> a + b) >= 0
-        |          THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END)),
-        |      (a, b) -> a * 2 + b) AS code
-        |  FROM e),
-        |p AS (SELECT a.code,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(a.v, b.v),
-        |        q -> CAST(q[1] AS DOUBLE) * CAST(q[2] AS DOUBLE))),
-        |      (x, y) -> x + y)
-        |    / (sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |        list_transform(a.v, x -> CAST(x AS DOUBLE)
-        |          * CAST(x AS DOUBLE))), (x, y) -> x + y))
-        |     * sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |        list_transform(b.v, x -> CAST(x AS DOUBLE)
-        |          * CAST(x AS DOUBLE))), (x, y) -> x + y))) AS cosine
-        |  FROM c a JOIN c b ON a.code = b.code AND a.vec_id < b.vec_id),
-        |pa AS (SELECT code, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-        |    CAST(SUM(CASE WHEN cosine >= 0.2 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_close
-        |  FROM p GROUP BY code),
-        |bb AS (SELECT code, CAST(COUNT(*) AS BIGINT) AS n_vecs
-        |  FROM c GROUP BY code HAVING COUNT(*) >= 2)
-        |SELECT bb.code, bb.n_vecs,
-        |  CAST(COALESCE(pa.n_pairs, 0) AS BIGINT) AS n_pairs,
-        |  CAST(COALESCE(pa.n_close, 0) AS BIGINT) AS n_close
-        |FROM bb LEFT JOIN pa ON bb.code = pa.code
-        |ORDER BY bb.code""".stripMargin,
+      s"""WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
+         |c AS MATERIALIZED (SELECT vec_id, v, ${dyadicCode("v", 16)} AS code
+         |  FROM e),
+         |p AS (SELECT a.code,
+         |    ${OracleSql.dot("a.v", "b.v")} / (${OracleSql.norm("a.v")} * ${OracleSql.norm("b.v")}) AS cosine
+         |  FROM c a JOIN c b ON a.code = b.code AND a.vec_id < b.vec_id),
+         |pa AS (SELECT code, CAST(COUNT(*) AS BIGINT) AS n_pairs,
+         |    CAST(SUM(CASE WHEN cosine >= 0.2 THEN 1 ELSE 0 END) AS BIGINT)
+         |      AS n_close
+         |  FROM p GROUP BY code),
+         |bb AS (SELECT code, CAST(COUNT(*) AS BIGINT) AS n_vecs
+         |  FROM c GROUP BY code HAVING COUNT(*) >= 2)
+         |SELECT bb.code, bb.n_vecs,
+         |  CAST(COALESCE(pa.n_pairs, 0) AS BIGINT) AS n_pairs,
+         |  CAST(COALESCE(pa.n_close, 0) AS BIGINT) AS n_close
+         |FROM bb LEFT JOIN pa ON bb.code = pa.code
+         |ORDER BY bb.code""".stripMargin,
 
-    // recall@10 as exact ints: sim_topk's brute-force CTE as ground
-    // truth, the two pinned search-result CTEs (sim_ann_lsh_pinned /
-    // sim_ann_ivf_flat verbatim, renamed to avoid collisions), hit
-    // counts via left join so zero-hit queries keep their row
-    "sim_ann_recall" ->
-      """WITH e AS MATERIALIZED (SELECT vec_id, embedding AS v,
-        |  sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list_transform(embedding,
-        |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-        |    (a, b) -> a + b)) AS nrm
-        |  FROM embeddings),
-        |xscored AS (SELECT q.vec_id AS qid, e.vec_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(q.v, e.v),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |      (x, y) -> x + y) / (q.nrm * e.nrm) AS cosine
-        |  FROM e q JOIN e ON q.vec_id < 10 AND q.vec_id != e.vec_id),
-        |exact AS MATERIALIZED (SELECT qid, vec_id FROM (
-        |    SELECT qid, vec_id, ROW_NUMBER() OVER (PARTITION BY qid
-        |      ORDER BY cosine DESC, vec_id) AS rank FROM xscored)
-        |  WHERE rank <= 10),
-        |c AS MATERIALIZED (SELECT vec_id, v, nrm,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(7, -1, -1), pp ->
-        |        CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |            list_transform(list_zip(v, range(0, 64)),
-        |              q -> CAST(q[1] AS DOUBLE) *
-        |                (CAST((pp * 64 + q[2]) * 2654435761 % 4096
-        |                   AS DOUBLE) / 4096 - 0.5))),
-        |            (a, b) -> a + b) >= 0
-        |          THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END)),
-        |      (a, b) -> a * 2 + b) AS code
-        |  FROM e),
-        |lscored AS (SELECT q.vec_id AS qid, t.vec_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(q.v, t.v),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |      (x, y) -> x + y) / (q.nrm * t.nrm) AS cosine
-        |  FROM c q JOIN c t ON q.code = t.code
-        |  WHERE q.vec_id < 10 AND q.vec_id != t.vec_id),
-        |l10 AS (SELECT qid, vec_id FROM (
-        |    SELECT qid, vec_id, ROW_NUMBER() OVER (PARTITION BY qid
-        |      ORDER BY cosine DESC, vec_id) AS rank FROM lscored)
-        |  WHERE rank <= 10),
-        |cc AS MATERIALIZED (SELECT vec_id AS cid, v AS cv, nrm AS cn
-        |  FROM e WHERE vec_id < 16),
-        |sc AS (SELECT e.vec_id, cc.cid,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(e.v, cc.cv),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |      (x, y) -> x + y) / (e.nrm * cc.cn) AS cos
-        |  FROM e CROSS JOIN cc),
-        |asg AS MATERIALIZED (SELECT vec_id, cid AS cluster FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos DESC, cid) AS rn FROM sc) WHERE rn = 1),
-        |probe AS MATERIALIZED (SELECT vec_id AS qid, cid FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos DESC, cid) AS rn FROM sc WHERE vec_id < 10)
-        |  WHERE rn <= 2),
-        |cand AS (SELECT p.qid, a.vec_id
-        |  FROM probe p JOIN asg a ON a.cluster = p.cid
-        |  WHERE a.vec_id != p.qid),
-        |iscored AS (SELECT cd.qid, cd.vec_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(qe.v, ve.v),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |      (x, y) -> x + y) / (qe.nrm * ve.nrm) AS cosine
-        |  FROM cand cd
-        |  JOIN e qe ON qe.vec_id = cd.qid
-        |  JOIN e ve ON ve.vec_id = cd.vec_id),
-        |i10 AS (SELECT qid, vec_id FROM (
-        |    SELECT qid, vec_id, ROW_NUMBER() OVER (PARTITION BY qid
-        |      ORDER BY cosine DESC, vec_id) AS rank FROM iscored)
-        |  WHERE rank <= 10)
-        |SELECT variant, qid, hits, k FROM (
-        |  SELECT 'ivf_flat' AS variant, x.qid,
-        |    CAST(COUNT(a.vec_id) AS BIGINT) AS hits,
-        |    CAST(COUNT(*) AS BIGINT) AS k
-        |  FROM exact x LEFT JOIN i10 a
-        |    ON a.qid = x.qid AND a.vec_id = x.vec_id
-        |  GROUP BY x.qid
-        |  UNION ALL
-        |  SELECT 'lsh_pinned' AS variant, x.qid,
-        |    CAST(COUNT(b.vec_id) AS BIGINT) AS hits,
-        |    CAST(COUNT(*) AS BIGINT) AS k
-        |  FROM exact x LEFT JOIN l10 b
-        |    ON b.qid = x.qid AND b.vec_id = x.vec_id
-        |  GROUP BY x.qid)
-        |ORDER BY variant, qid""".stripMargin,
+    // recall@10 as exact ints: sim_topk's brute-force top 10 as ground
+    // truth, the two pinned searches (sim_ann_lsh_pinned's and
+    // sim_ann_ivf_flat's, from the same fragments), hit counts via left
+    // join so zero-hit queries keep their row
+    "sim_ann_recall" -> {
+      val exact =
+        s"""SELECT q.vec_id AS qid, e.vec_id,
+           |    ${OracleSql.dot("q.v", "e.v")} / (q.nrm * e.nrm) AS cosine
+           |  FROM e q JOIN e ON q.vec_id < 10 AND q.vec_id != e.vec_id""".stripMargin
+      val lsh =
+        s"""SELECT q.vec_id AS qid, t.vec_id,
+           |    ${OracleSql.dot("q.v", "t.v")} / (q.nrm * t.nrm) AS cosine
+           |  FROM lc q JOIN lc t ON q.code = t.code
+           |  WHERE q.vec_id < 10 AND q.vec_id != t.vec_id""".stripMargin
+      s"""WITH $normed,
+         |exact AS MATERIALIZED (${top10(exact)}),
+         |lc AS MATERIALIZED (SELECT vec_id, v, nrm, ${dyadicCode("v", 8)} AS code
+         |  FROM e),
+         |l10 AS (${top10(lsh)}),
+         |${ivfAssign()},
+         |i10 AS (${top10(ivfScored(""))})
+         |SELECT variant, qid, hits, k FROM (
+         |  SELECT 'ivf_flat' AS variant, x.qid,
+         |    CAST(COUNT(a.vec_id) AS BIGINT) AS hits,
+         |    CAST(COUNT(*) AS BIGINT) AS k
+         |  FROM exact x LEFT JOIN i10 a
+         |    ON a.qid = x.qid AND a.vec_id = x.vec_id
+         |  GROUP BY x.qid
+         |  UNION ALL
+         |  SELECT 'lsh_pinned' AS variant, x.qid,
+         |    CAST(COUNT(b.vec_id) AS BIGINT) AS hits,
+         |    CAST(COUNT(*) AS BIGINT) AS k
+         |  FROM exact x LEFT JOIN l10 b
+         |    ON b.qid = x.qid AND b.vec_id = x.vec_id
+         |  GROUP BY x.qid)
+         |ORDER BY variant, qid""".stripMargin
+    },
 
-    // sim_lsh_buckets' code CTE at 8 planes + sim_topk's ranking over
+    // sim_lsh_buckets' code at 8 planes + sim_topk's ranking over
     // in-bucket candidates — the ANN search result replayed relationally
     "sim_ann_lsh_pinned" ->
-      """WITH e AS (SELECT vec_id, embedding AS v,
-        |  sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list_transform(embedding,
-        |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-        |    (a, b) -> a + b)) AS nrm
-        |  FROM embeddings),
-        |c AS MATERIALIZED (SELECT vec_id, v, nrm,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(7, -1, -1), pp ->
-        |        CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |            list_transform(list_zip(v, range(0, 64)),
-        |              q -> CAST(q[1] AS DOUBLE) *
-        |                (CAST((pp * 64 + q[2]) * 2654435761 % 4096
-        |                   AS DOUBLE) / 4096 - 0.5))),
-        |            (a, b) -> a + b) >= 0
-        |          THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END)),
-        |      (a, b) -> a * 2 + b) AS code
-        |  FROM e),
-        |scored AS (SELECT q.vec_id AS qid, t.vec_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(q.v, t.v),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |      (x, y) -> x + y) / (q.nrm * t.nrm) AS cosine
-        |  FROM c q JOIN c t ON q.code = t.code
-        |  WHERE q.vec_id < 10 AND q.vec_id != t.vec_id),
-        |ranked AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY qid
-        |    ORDER BY cosine DESC, vec_id) AS INT) AS rank
-        |  FROM scored)
-        |SELECT qid, vec_id, cosine, rank FROM ranked
-        |WHERE rank <= 10 ORDER BY qid, rank""".stripMargin,
+      s"""WITH $normed,
+         |c AS MATERIALIZED (SELECT vec_id, v, nrm, ${dyadicCode("v", 8)} AS code
+         |  FROM e),
+         |scored AS (SELECT q.vec_id AS qid, t.vec_id,
+         |    ${OracleSql.dot("q.v", "t.v")} / (q.nrm * t.nrm) AS cosine
+         |  FROM c q JOIN c t ON q.code = t.code
+         |  WHERE q.vec_id < 10 AND q.vec_id != t.vec_id)
+         |${ranked("cosine DESC", "qid, vec_id, cosine")}""".stripMargin,
 
-    // the same code CTE; the query side fans out to the 9 probe codes
+    // the same code; the query side fans out to the 9 probe codes
     // (base + every one-bit flip) before the bucket equi-join
     "sim_ann_lsh_multiprobe" ->
-      """WITH e AS (SELECT vec_id, embedding AS v,
-        |  sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list_transform(embedding,
-        |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-        |    (a, b) -> a + b)) AS nrm
-        |  FROM embeddings),
-        |c AS MATERIALIZED (SELECT vec_id, v, nrm,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(7, -1, -1), pp ->
-        |        CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |            list_transform(list_zip(v, range(0, 64)),
-        |              q -> CAST(q[1] AS DOUBLE) *
-        |                (CAST((pp * 64 + q[2]) * 2654435761 % 4096
-        |                   AS DOUBLE) / 4096 - 0.5))),
-        |            (a, b) -> a + b) >= 0
-        |          THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END)),
-        |      (a, b) -> a * 2 + b) AS code
-        |  FROM e),
-        |qp AS (SELECT vec_id, v, nrm,
-        |    unnest([code, xor(code, 1), xor(code, 2), xor(code, 4),
-        |      xor(code, 8), xor(code, 16), xor(code, 32),
-        |      xor(code, 64), xor(code, 128)]) AS pcode
-        |  FROM c WHERE vec_id < 10),
-        |scored AS (SELECT q.vec_id AS qid, t.vec_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(q.v, t.v),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |      (x, y) -> x + y) / (q.nrm * t.nrm) AS cosine
-        |  FROM qp q JOIN c t ON q.pcode = t.code
-        |  WHERE q.vec_id != t.vec_id),
-        |ranked AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY qid
-        |    ORDER BY cosine DESC, vec_id) AS INT) AS rank
-        |  FROM scored)
-        |SELECT qid, vec_id, cosine, rank FROM ranked
-        |WHERE rank <= 10 ORDER BY qid, rank""".stripMargin,
+      s"""WITH $normed,
+         |c AS MATERIALIZED (SELECT vec_id, v, nrm, ${dyadicCode("v", 8)} AS code
+         |  FROM e),
+         |qp AS (SELECT vec_id, v, nrm,
+         |    unnest([code, xor(code, 1), xor(code, 2), xor(code, 4),
+         |      xor(code, 8), xor(code, 16), xor(code, 32),
+         |      xor(code, 64), xor(code, 128)]) AS pcode
+         |  FROM c WHERE vec_id < 10),
+         |scored AS (SELECT q.vec_id AS qid, t.vec_id,
+         |    ${OracleSql.dot("q.v", "t.v")} / (q.nrm * t.nrm) AS cosine
+         |  FROM qp q JOIN c t ON q.pcode = t.code
+         |  WHERE q.vec_id != t.vec_id)
+         |${ranked("cosine DESC", "qid, vec_id, cosine")}""".stripMargin,
 
-    // the ivfpq oracle's assignment/probe CTEs, then exact-cosine
-    // re-ranking inside the probed lists instead of ADC scoring
+    // the IVF assignment/probe CTEs, then exact-cosine re-ranking inside
+    // the probed lists
     "sim_ann_ivf_flat" ->
-      """WITH e AS MATERIALIZED (SELECT vec_id, label, embedding AS v,
-        |  sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list_transform(embedding,
-        |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-        |    (a, b) -> a + b)) AS nrm
-        |  FROM embeddings),
-        |c AS MATERIALIZED (SELECT vec_id AS cid, v AS cv, nrm AS cn
-        |  FROM e WHERE vec_id < 16),
-        |sc AS (SELECT e.vec_id, c.cid,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(e.v, c.cv),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |      (x, y) -> x + y) / (e.nrm * c.cn) AS cos
-        |  FROM e CROSS JOIN c),
-        |asg AS MATERIALIZED (SELECT vec_id, cid AS cluster FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos DESC, cid) AS rn FROM sc) WHERE rn = 1),
-        |probe AS MATERIALIZED (SELECT vec_id AS qid, cid FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos DESC, cid) AS rn FROM sc WHERE vec_id < 10)
-        |  WHERE rn <= 2),
-        |cand AS (SELECT p.qid, a.vec_id
-        |  FROM probe p JOIN asg a ON a.cluster = p.cid
-        |  WHERE a.vec_id != p.qid),
-        |scored AS (SELECT cd.qid, cd.vec_id, ve.label,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(qe.v, ve.v),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |      (x, y) -> x + y) / (qe.nrm * ve.nrm) AS cosine
-        |  FROM cand cd
-        |  JOIN e qe ON qe.vec_id = cd.qid
-        |  JOIN e ve ON ve.vec_id = cd.vec_id),
-        |ranked AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY qid
-        |    ORDER BY cosine DESC, vec_id) AS INT) AS rank
-        |  FROM scored)
-        |SELECT qid, vec_id, label, cosine, rank FROM ranked
-        |WHERE rank <= 10 ORDER BY qid, rank""".stripMargin,
+      s"""WITH $normed,
+         |${ivfAssign()},
+         |scored AS (${ivfScored(", ve.label")})
+         |${ranked("cosine DESC", "qid, vec_id, label, cosine")}""".stripMargin,
 
     // the same element-order fold without normalization: raw inner
     // product, rank by (ip DESC, vec_id)
     "sim_mips" ->
-      """WITH e AS (SELECT vec_id, label, embedding AS v FROM embeddings),
-        |scored AS (SELECT q.vec_id AS qid, e.vec_id, e.label,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(q.v, e.v),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |      (x, y) -> x + y) AS ip
-        |  FROM e q JOIN e ON q.vec_id < 10 AND q.vec_id != e.vec_id),
-        |ranked AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY qid
-        |    ORDER BY ip DESC, vec_id) AS INT) AS rank
-        |  FROM scored)
-        |SELECT qid, vec_id, label, ip, rank FROM ranked
-        |WHERE rank <= 10 ORDER BY qid, rank""".stripMargin,
+      s"""WITH e AS (SELECT vec_id, label, embedding AS v FROM embeddings),
+         |scored AS (SELECT q.vec_id AS qid, e.vec_id, e.label,
+         |    ${OracleSql.dot("q.v", "e.v")} AS ip
+         |  FROM e q JOIN e ON q.vec_id < 10 AND q.vec_id != e.vec_id)
+         |${ranked("ip DESC", "qid, vec_id, label, ip")}""".stripMargin,
 
     "sim_topk" ->
-      """WITH e AS (SELECT vec_id, label, embedding AS v,
-        |  sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list_transform(embedding,
-        |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-        |    (a, b) -> a + b)) AS nrm
-        |  FROM embeddings),
-        |scored AS (SELECT q.vec_id AS qid, e.vec_id, e.label,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(q.v, e.v),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |      (x, y) -> x + y) / (q.nrm * e.nrm) AS cosine
-        |  FROM e q JOIN e ON q.vec_id < 10 AND q.vec_id != e.vec_id),
-        |ranked AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY qid
-        |    ORDER BY cosine DESC, vec_id) AS INT) AS rank
-        |  FROM scored)
-        |SELECT qid, vec_id, label, cosine, rank FROM ranked
-        |WHERE rank <= 10 ORDER BY qid, rank""".stripMargin,
+      s"""WITH $normed,
+         |scored AS (SELECT q.vec_id AS qid, e.vec_id, e.label,
+         |    ${OracleSql.dot("q.v", "e.v")} / (q.nrm * e.nrm) AS cosine
+         |  FROM e q JOIN e ON q.vec_id < 10 AND q.vec_id != e.vec_id)
+         |${ranked("cosine DESC", "qid, vec_id, label, cosine")}""".stripMargin,
 
     // same fixed-order fold, τ filter instead of the top-k window
     "sim_range_search" ->
-      """WITH e AS (SELECT vec_id, embedding AS v,
-        |  sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list_transform(embedding,
-        |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-        |    (a, b) -> a + b)) AS nrm
-        |  FROM embeddings),
-        |scored AS (SELECT q.vec_id AS qid, e.vec_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(q.v, e.v),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |      (x, y) -> x + y) / (q.nrm * e.nrm) AS cosine
-        |  FROM e q JOIN e ON q.vec_id < 10 AND q.vec_id != e.vec_id)
-        |SELECT qid, vec_id, cosine FROM scored
-        |WHERE cosine >= 0.30 ORDER BY qid, vec_id""".stripMargin,
+      s"""WITH $normed,
+         |scored AS (SELECT q.vec_id AS qid, e.vec_id,
+         |    ${OracleSql.dot("q.v", "e.v")} / (q.nrm * e.nrm) AS cosine
+         |  FROM e q JOIN e ON q.vec_id < 10 AND q.vec_id != e.vec_id)
+         |SELECT qid, vec_id, cosine FROM scored
+         |WHERE cosine >= 0.30 ORDER BY qid, vec_id""".stripMargin,
 
     "sim_centroids" ->
-      """WITH dims AS (SELECT label, u.dim - 1 AS dim, u.x
-        |  FROM (SELECT label,
-        |          unnest(embedding) AS x,
-        |          generate_subscripts(embedding, 1) AS dim
-        |        FROM embeddings) u(label, x, dim)),
-        |cd AS (SELECT label, dim,
-        |    CAST(SUM(CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))
-        |      AS DOUBLE) / (CAST(COUNT(*) AS DOUBLE) * 1000000) AS c
-        |  FROM dims GROUP BY label, dim),
-        |cent AS (SELECT label,
-        |    list_transform(list_sort(list(struct_pack(dim := dim, c := c))),
-        |      s -> s.c) AS centroid
-        |  FROM cd GROUP BY label)
-        |SELECT a.label AS la, b.label AS lb,
-        |  list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list_transform(list_zip(a.centroid, b.centroid),
-        |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |    (x, y) -> x + y)
-        |  / (sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(a.centroid, x -> x * x)), (x, y) -> x + y))
-        |   * sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(b.centroid, x -> x * x)), (x, y) -> x + y)))
-        |  AS cosine
-        |FROM cent a JOIN cent b ON a.label < b.label
-        |ORDER BY la, lb""".stripMargin,
+      s"""WITH dims AS (SELECT label, u.dim - 1 AS dim, u.x
+         |  FROM (SELECT label,
+         |          unnest(embedding) AS x,
+         |          generate_subscripts(embedding, 1) AS dim
+         |        FROM embeddings) u(label, x, dim)),
+         |cd AS (SELECT label, dim,
+         |    CAST(SUM(CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))
+         |      AS DOUBLE) / (CAST(COUNT(*) AS DOUBLE) * 1000000) AS c
+         |  FROM dims GROUP BY label, dim),
+         |cent AS (SELECT label,
+         |    list_transform(list_sort(list(struct_pack(dim := dim, c := c))),
+         |      s -> s.c) AS centroid
+         |  FROM cd GROUP BY label)
+         |SELECT a.label AS la, b.label AS lb,
+         |  ${OracleSql.dot("a.centroid", "b.centroid")}
+         |  / (${OracleSql.norm("a.centroid")} * ${OracleSql.norm("b.centroid")}) AS cosine
+         |FROM cent a JOIN cent b ON a.label < b.label
+         |ORDER BY la, lb""".stripMargin,
 
-    // assignment CTEs (e/c/sc/asg) mirror dedup_semantic's oracle — the
-    // proven cross-engine-identical cosine-argmax formulation; the
-    // re-centering CTEs mirror sim_centroids' fixed-point mean
+    // the IVF assignment CTEs (OracleSql.ivfAssign), then the re-centering
+    // CTEs of sim_centroids' fixed-point mean
     "sim_kmeans" ->
-      """WITH e AS (SELECT vec_id, embedding AS v,
-        |  sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list_transform(embedding,
-        |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-        |    (a, b) -> a + b)) AS nrm
-        |  FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM e
-        |  WHERE vec_id < 16),
-        |sc AS (SELECT e.vec_id, e.v, c.cid,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(e.v, c.cv),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |      (x, y) -> x + y) / (e.nrm * c.cn) AS cos
-        |  FROM e CROSS JOIN c),
-        |asg AS (SELECT vec_id, v, cid AS cluster FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos DESC, cid) AS rn FROM sc) WHERE rn = 1),
-        |dims AS (SELECT cluster, u.dim - 1 AS dim, u.x
-        |  FROM (SELECT cluster, unnest(v) AS x,
-        |          generate_subscripts(v, 1) AS dim
-        |        FROM asg) u(cluster, x, dim)),
-        |cd AS (SELECT cluster, dim,
-        |    CAST(SUM(CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))
-        |      AS DOUBLE) / (CAST(COUNT(*) AS DOUBLE) * 1000000) AS cx,
-        |    COUNT(*) AS cnt
-        |  FROM dims GROUP BY cluster, dim),
-        |nc AS (SELECT cluster, CAST(MAX(cnt) AS BIGINT) AS n,
-        |    list_transform(list_sort(list(struct_pack(dim := dim, cx := cx))),
-        |      s -> s.cx) AS centroid
-        |  FROM cd GROUP BY cluster),
-        |fin AS (SELECT nc.cluster, nc.n, nc.centroid,
-        |    sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(nc.centroid, c.cv),
-        |        p -> (p[1] - CAST(p[2] AS DOUBLE))
-        |           * (p[1] - CAST(p[2] AS DOUBLE)))),
-        |      (x, y) -> x + y)) AS shift
-        |  FROM nc JOIN c ON nc.cluster = c.cid)
-        |SELECT cluster, CAST(dim - 1 AS INT) AS dim, cx, n, shift
-        |FROM (SELECT cluster, n, shift, unnest(centroid) AS cx,
-        |        generate_subscripts(centroid, 1) AS dim
-        |      FROM fin) u
-        |ORDER BY cluster, dim""".stripMargin,
+      s"""WITH $normed,
+         |${ivfAssign(", v")},
+         |dims AS (SELECT cluster, u.dim - 1 AS dim, u.x
+         |  FROM (SELECT cluster, unnest(v) AS x,
+         |          generate_subscripts(v, 1) AS dim
+         |        FROM asg) u(cluster, x, dim)),
+         |cd AS (SELECT cluster, dim,
+         |    CAST(SUM(CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))
+         |      AS DOUBLE) / (CAST(COUNT(*) AS DOUBLE) * 1000000) AS cx,
+         |    COUNT(*) AS cnt
+         |  FROM dims GROUP BY cluster, dim),
+         |nc AS (SELECT cluster, CAST(MAX(cnt) AS BIGINT) AS n,
+         |    list_transform(list_sort(list(struct_pack(dim := dim, cx := cx))),
+         |      s -> s.cx) AS centroid
+         |  FROM cd GROUP BY cluster),
+         |fin AS (SELECT nc.cluster, nc.n, nc.centroid,
+         |    sqrt(${sqDist("nc.centroid", "c.cv")}) AS shift
+         |  FROM nc JOIN c ON nc.cluster = c.cid)
+         |SELECT cluster, CAST(dim - 1 AS INT) AS dim, cx, n, shift
+         |FROM (SELECT cluster, n, shift, unnest(centroid) AS cx,
+         |        generate_subscripts(centroid, 1) AS dim
+         |      FROM fin) u
+         |ORDER BY cluster, dim""".stripMargin,
 
     "sim_quantize" ->
-      """WITH e AS (SELECT vec_id, embedding AS v,
-        |  list_aggregate(list_transform(embedding,
-        |    x -> abs(CAST(x AS DOUBLE))), 'max') AS maxabs
-        |  FROM embeddings),
-        |s AS (SELECT vec_id, v, maxabs, maxabs / 127.0 AS scale FROM e)
-        |SELECT vec_id, maxabs, scale,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(list_zip(v, range(1, len(v)+1)),
-        |      p -> (CASE WHEN scale = 0 THEN 0
-        |            ELSE CAST(floor(CAST(p[1] AS DOUBLE)/scale + 0.5)
-        |                 AS BIGINT) END) * p[2])),
-        |    (a, b) -> a + b) AS checksum,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(v, x -> CASE WHEN scale != 0 AND
-        |        abs(CAST(floor(CAST(x AS DOUBLE)/scale + 0.5) AS BIGINT))
-        |          = 127
-        |      THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END)),
-        |    (a, b) -> a + b) AS n_sat,
-        |  list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list_transform(v, x ->
-        |      (CAST(x AS DOUBLE) - (CASE WHEN scale = 0 THEN 0
-        |         ELSE CAST(floor(CAST(x AS DOUBLE)/scale + 0.5) AS BIGINT)
-        |         END) * scale)
-        |      * (CAST(x AS DOUBLE) - (CASE WHEN scale = 0 THEN 0
-        |         ELSE CAST(floor(CAST(x AS DOUBLE)/scale + 0.5) AS BIGINT)
-        |         END) * scale))),
-        |    (a, b) -> a + b) AS sse
-        |FROM s ORDER BY vec_id""".stripMargin,
+      s"""WITH e AS (SELECT vec_id, embedding AS v,
+         |  list_aggregate(list_transform(embedding,
+         |    x -> abs(CAST(x AS DOUBLE))), 'max') AS maxabs
+         |  FROM embeddings),
+         |s AS (SELECT vec_id, v, maxabs, maxabs / 127.0 AS scale FROM e)
+         |SELECT vec_id, maxabs, scale,
+         |  ${int8Checksum("v")} AS checksum,
+         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
+         |    list_transform(v, x -> CASE WHEN scale != 0 AND
+         |        abs(${int8("x")}) = 127
+         |      THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END)),
+         |    (a, b) -> a + b) AS n_sat,
+         |  list_reduce(list_prepend(CAST(0 AS DOUBLE),
+         |    list_transform(v, x ->
+         |      (CAST(x AS DOUBLE) - ${int8("x")} * scale)
+         |      * (CAST(x AS DOUBLE) - ${int8("x")} * scale))),
+         |    (a, b) -> a + b) AS sse
+         |FROM s ORDER BY vec_id""".stripMargin,
 
     "sim_pq" ->
-      """WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |sub AS (SELECT vec_id, m, v[m*16+1 : (m+1)*16] AS sv
-        |  FROM (SELECT vec_id, v, unnest(range(0, 4)) AS m FROM e)),
-        |csub AS (SELECT cid, m, cv[m*16+1 : (m+1)*16] AS cs
-        |  FROM (SELECT cid, cv, unnest(range(0, 4)) AS m FROM c)),
-        |d AS (SELECT s.vec_id, s.m, cs.cid,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(s.sv, cs.cs),
-        |        p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-        |           * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)))),
-        |      (a, b) -> a + b) AS dist
-        |  FROM sub s JOIN csub cs ON s.m = cs.m),
-        |best AS (SELECT vec_id, m, cid AS code, dist FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m
-        |      ORDER BY dist, cid) AS rn FROM d) WHERE rn = 1)
-        |SELECT vec_id,
-        |  CAST(MAX(CASE WHEN m = 0 THEN code END) AS INT) AS code0,
-        |  CAST(MAX(CASE WHEN m = 1 THEN code END) AS INT) AS code1,
-        |  CAST(MAX(CASE WHEN m = 2 THEN code END) AS INT) AS code2,
-        |  CAST(MAX(CASE WHEN m = 3 THEN code END) AS INT) AS code3,
-        |  CAST(SUM(code * (16 ** m)) AS BIGINT) AS code_packed,
-        |  list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list(dist ORDER BY m)), (a, b) -> a + b) AS sse
-        |FROM best GROUP BY vec_id ORDER BY vec_id""".stripMargin,
+      s"""WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
+         |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
+         |${OracleSql.pqCodes}
+         |SELECT vec_id,
+         |  CAST(MAX(CASE WHEN m = 0 THEN code END) AS INT) AS code0,
+         |  CAST(MAX(CASE WHEN m = 1 THEN code END) AS INT) AS code1,
+         |  CAST(MAX(CASE WHEN m = 2 THEN code END) AS INT) AS code2,
+         |  CAST(MAX(CASE WHEN m = 3 THEN code END) AS INT) AS code3,
+         |  CAST(SUM(code * (16 ** m)) AS BIGINT) AS code_packed,
+         |  list_reduce(list_prepend(CAST(0 AS DOUBLE),
+         |    list(dist ORDER BY m)), (a, b) -> a + b) AS sse
+         |FROM best GROUP BY vec_id ORDER BY vec_id""".stripMargin,
 
-    // ADC search oracle: recompute the code table (same CTEs as sim_pq),
-    // score every (query, vector) pair by joining each code to its
-    // centroid subvector — the relational statement of the LUT lookup —
-    // and compare ADC top-10 against the exact L2 top-10
+    // ADC search oracle: the PQ code table (OracleSql.pqCodes), every
+    // (query, vector) pair scored by joining each code to its centroid
+    // subvector — the relational statement of the LUT lookup — and the
+    // ADC top-10 compared against the exact L2 top-10
     "sim_pq_recall" ->
-      """WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |sub AS (SELECT vec_id, m, v[m*16+1 : (m+1)*16] AS sv
-        |  FROM (SELECT vec_id, v, unnest(range(0, 4)) AS m FROM e)),
-        |csub AS (SELECT cid, m, cv[m*16+1 : (m+1)*16] AS cs
-        |  FROM (SELECT cid, cv, unnest(range(0, 4)) AS m FROM c)),
-        |d AS (SELECT s.vec_id, s.m, cs.cid,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(s.sv, cs.cs),
-        |        p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-        |           * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)))),
-        |      (a, b) -> a + b) AS dist
-        |  FROM sub s JOIN csub cs ON s.m = cs.m),
-        |best AS (SELECT vec_id, m, cid AS code FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m
-        |      ORDER BY dist, cid) AS rn FROM d) WHERE rn = 1),
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-        |qsub AS (SELECT qid, m, qv[m*16+1 : (m+1)*16] AS qs
-        |  FROM (SELECT qid, qv, unnest(range(0, 4)) AS m FROM q)),
-        |term AS (SELECT qs.qid, b.vec_id, b.m,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(qs.qs, cs.cs),
-        |        p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-        |           * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)))),
-        |      (a, b) -> a + b) AS t
-        |  FROM best b
-        |  JOIN csub cs ON b.m = cs.m AND b.code = cs.cid
-        |  JOIN qsub qs ON qs.m = b.m
-        |  WHERE qs.qid != b.vec_id),
-        |adist AS (SELECT qid, vec_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list(t ORDER BY m)), (a, b) -> a + b) AS adist
-        |  FROM term GROUP BY qid, vec_id),
-        |atop AS (SELECT qid, vec_id FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-        |      ORDER BY adist, vec_id) AS rn FROM adist) WHERE rn <= 10),
-        |ex AS (SELECT q.qid, e.vec_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(q.qv, e.v),
-        |        p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-        |           * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)))),
-        |      (a, b) -> a + b) AS dist
-        |  FROM q JOIN e ON q.qid != e.vec_id),
-        |etop AS (SELECT qid, vec_id FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-        |      ORDER BY dist, vec_id) AS rn FROM ex) WHERE rn <= 10)
-        |SELECT et.qid, CAST(COUNT(at.vec_id) AS BIGINT) AS hits,
-        |  CAST(COUNT(at.vec_id) AS DOUBLE) / 10.0 AS recall
-        |FROM etop et LEFT JOIN atop at
-        |  ON et.qid = at.qid AND et.vec_id = at.vec_id
-        |GROUP BY et.qid ORDER BY et.qid""".stripMargin,
+      s"""WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
+         |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
+         |${OracleSql.pqCodes},
+         |${pqRecall("best b", "qs.qid != b.vec_id")}""".stripMargin,
 
-    // IVF-PQ: the sim_kmeans assignment CTEs (coarse lists), the same
-    // ranking as probes (rn ≤ 2), the sim_pq code CTEs (MATERIALIZED —
-    // multiply referenced), ADC restricted to probed candidates
+    // IVF-PQ: the IVF probe lists (OracleSql.ivfAssign), the PQ code
+    // table, ADC restricted to the probed candidates
     "sim_ann_ivfpq_recall" ->
-      """WITH e AS MATERIALIZED (SELECT vec_id, embedding AS v,
-        |  sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |    list_transform(embedding,
-        |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-        |    (a, b) -> a + b)) AS nrm
-        |  FROM embeddings),
-        |c AS MATERIALIZED (SELECT vec_id AS cid, v AS cv, nrm AS cn
-        |  FROM e WHERE vec_id < 16),
-        |sc AS (SELECT e.vec_id, c.cid,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(e.v, c.cv),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-        |      (x, y) -> x + y) / (e.nrm * c.cn) AS cos
-        |  FROM e CROSS JOIN c),
-        |asg AS MATERIALIZED (SELECT vec_id, cid AS cluster FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos DESC, cid) AS rn FROM sc) WHERE rn = 1),
-        |probe AS MATERIALIZED (SELECT vec_id AS qid, cid FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY cos DESC, cid) AS rn FROM sc WHERE vec_id < 10)
-        |  WHERE rn <= 2),
-        |cand AS MATERIALIZED (SELECT p.qid, a.vec_id
-        |  FROM probe p JOIN asg a ON a.cluster = p.cid
-        |  WHERE a.vec_id != p.qid),
-        |sub AS MATERIALIZED (SELECT vec_id, m, v[m*16+1 : (m+1)*16] AS sv
-        |  FROM (SELECT vec_id, v, unnest(range(0, 4)) AS m FROM e)),
-        |csub AS MATERIALIZED (SELECT cid, m, cv[m*16+1 : (m+1)*16] AS cs
-        |  FROM (SELECT cid, cv, unnest(range(0, 4)) AS m FROM c)),
-        |d AS MATERIALIZED (SELECT s.vec_id, s.m, cs.cid,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(s.sv, cs.cs),
-        |        p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-        |           * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)))),
-        |      (a, b) -> a + b) AS dist
-        |  FROM sub s JOIN csub cs ON s.m = cs.m),
-        |best AS MATERIALIZED (SELECT vec_id, m, cid AS code FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m
-        |      ORDER BY dist, cid) AS rn FROM d) WHERE rn = 1),
-        |qsub AS MATERIALIZED (SELECT vec_id AS qid, m, sv AS qs
-        |  FROM sub WHERE vec_id < 10),
-        |term AS (SELECT ca.qid, ca.vec_id, b.m,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(qs.qs, cs.cs),
-        |        p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-        |           * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)))),
-        |      (a, b) -> a + b) AS t
-        |  FROM cand ca
-        |  JOIN best b ON b.vec_id = ca.vec_id
-        |  JOIN csub cs ON b.m = cs.m AND b.code = cs.cid
-        |  JOIN qsub qs ON qs.m = b.m AND qs.qid = ca.qid),
-        |adist AS (SELECT qid, vec_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list(t ORDER BY m)), (a, b) -> a + b) AS adist
-        |  FROM term GROUP BY qid, vec_id),
-        |atop AS (SELECT qid, vec_id FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-        |      ORDER BY adist, vec_id) AS rn FROM adist) WHERE rn <= 10),
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-        |ex AS (SELECT q.qid, e.vec_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_zip(q.qv, e.v),
-        |        p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-        |           * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)))),
-        |      (a, b) -> a + b) AS dist
-        |  FROM q JOIN e ON q.qid != e.vec_id),
-        |etop AS (SELECT qid, vec_id FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-        |      ORDER BY dist, vec_id) AS rn FROM ex) WHERE rn <= 10)
-        |SELECT et.qid, CAST(COUNT(at.vec_id) AS BIGINT) AS hits,
-        |  CAST(COUNT(at.vec_id) AS DOUBLE) / 10.0 AS recall
-        |FROM etop et LEFT JOIN atop at
-        |  ON et.qid = at.qid AND et.vec_id = at.vec_id
-        |GROUP BY et.qid ORDER BY et.qid""".stripMargin)
+      s"""WITH $normed,
+         |${ivfAssign()},
+         |${OracleSql.pqCodes},
+         |${pqRecall("cand ca JOIN best b ON b.vec_id = ca.vec_id",
+             "qs.qid = ca.qid")}""".stripMargin)
+
+  /** `e(vec_id, label, v, nrm)`: every embedding with its
+    * [[OracleSql.norm]]. */
+  private def normed: String =
+    s"""e AS MATERIALIZED (SELECT vec_id, label, embedding AS v,
+       |    ${OracleSql.norm("embedding")} AS nrm
+       |  FROM embeddings)""".stripMargin
+
+  /** The top-10 `(qid, vec_id)` rows of a `(qid, vec_id, cosine)` query,
+    * ties to the lower vec_id. */
+  private def top10(scored: String): String =
+    s"""SELECT qid, vec_id FROM (
+       |    SELECT qid, vec_id, ROW_NUMBER() OVER (PARTITION BY qid
+       |      ORDER BY cosine DESC, vec_id) AS rank FROM ($scored))
+       |  WHERE rank <= 10""".stripMargin
+
+  /** The graded top-10 select over `scored`: rank by `order`, ties to the
+    * lower vec_id, then `cols` and the rank. */
+  private def ranked(order: String, cols: String): String =
+    s"""SELECT $cols, rank FROM (
+       |  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY qid
+       |    ORDER BY $order, vec_id) AS INT) AS rank
+       |  FROM scored)
+       |WHERE rank <= 10 ORDER BY qid, rank""".stripMargin
+
+  /** Exact cosine of every vector in a query's probed IVF lists
+    * ([[OracleSql.ivfAssign]]'s `cand`), plus `cols`. */
+  private def ivfScored(cols: String): String =
+    s"""SELECT cd.qid, cd.vec_id$cols,
+       |    ${OracleSql.dot("qe.v", "ve.v")} / (qe.nrm * ve.nrm) AS cosine
+       |  FROM cand cd
+       |  JOIN e qe ON qe.vec_id = cd.qid
+       |  JOIN e ve ON ve.vec_id = cd.vec_id""".stripMargin
+
+  /** ADC recall@10 against the exact L2 top 10, over the PQ code table
+    * ([[OracleSql.pqCodes]]): `from` yields the scored (query, vector)
+    * code rows `b`, `on` ties a query subvector `qs` to them. Mirrors
+    * `adcTopK` and [[l2TopK]]. */
+  private def pqRecall(from: String, on: String): String =
+    s"""q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
+       |qsub AS MATERIALIZED (SELECT vec_id AS qid, m, sv AS qs
+       |  FROM sub WHERE vec_id < 10),
+       |term AS (SELECT qs.qid, b.vec_id, b.m,
+       |    ${sqDist("qs.qs", "cs.cs")} AS t
+       |  FROM $from
+       |  JOIN csub cs ON b.m = cs.m AND b.code = cs.cid
+       |  JOIN qsub qs ON qs.m = b.m AND $on),
+       |adist AS (SELECT qid, vec_id,
+       |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
+       |      list(t ORDER BY m)), (a, b) -> a + b) AS adist
+       |  FROM term GROUP BY qid, vec_id),
+       |atop AS (SELECT qid, vec_id FROM (
+       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
+       |      ORDER BY adist, vec_id) AS rn FROM adist) WHERE rn <= 10),
+       |ex AS (SELECT q.qid, e.vec_id, ${sqDist("q.qv", "e.v")} AS dist
+       |  FROM q JOIN e ON q.qid != e.vec_id),
+       |etop AS (SELECT qid, vec_id FROM (
+       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
+       |      ORDER BY dist, vec_id) AS rn FROM ex) WHERE rn <= 10)
+       |SELECT et.qid, CAST(COUNT(at.vec_id) AS BIGINT) AS hits,
+       |  CAST(COUNT(at.vec_id) AS DOUBLE) / 10.0 AS recall
+       |FROM etop et LEFT JOIN atop at
+       |  ON et.qid = at.qid AND et.vec_id = at.vec_id
+       |GROUP BY et.qid ORDER BY et.qid""".stripMargin
 
   /** Warm-start targets (see [[graft.Prewarm]]). */
   override def prewarm: Seq[graft.Prewarm.Task] = Seq(

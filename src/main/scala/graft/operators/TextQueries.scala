@@ -28,6 +28,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * (P ≈ 2^-29 per input) — and is exact BIGINT arithmetic downstream.
   */
 object TextQueries extends QueryGroup {
+  import OracleSql._
 
   /** Whitespace tokens of lower-cased trimmed text — THE corpus
     * tokenizer; shared with [[CurationQueries]] so token counts can
@@ -895,227 +896,192 @@ object TextQueries extends QueryGroup {
     // same map-side bigram build (1-based list slices), same permille
     // integer lift and the (lift desc, w1, w2) total-order top-100
     "text_collocations" ->
-      """WITH d AS (SELECT regexp_split_to_array(lower(trim(text)),
-        |    '\s+') AS w FROM documents),
-        |uc AS (SELECT tok, COUNT(*) AS c FROM
-        |  (SELECT unnest(w) AS tok FROM d) GROUP BY 1),
-        |n AS (SELECT CAST(SUM(c) AS BIGINT) AS n_tokens FROM uc),
-        |bc AS (SELECT bg, COUNT(*) AS c12,
-        |    split_part(bg, ' ', 1) AS w1, split_part(bg, ' ', 2) AS w2
-        |  FROM (SELECT unnest(list_transform(range(1, len(w)),
-        |      i -> w[i] || ' ' || w[i + 1])) AS bg
-        |    FROM d WHERE len(w) >= 2)
-        |  GROUP BY 1),
-        |j AS (SELECT w1, w2, c12, u1.c AS c1, u2.c AS c2,
-        |    (c12 * n_tokens * 1000) // (c1 * c2) AS lift_x1000
-        |  FROM bc JOIN uc u1 ON bc.w1 = u1.tok
-        |  JOIN uc u2 ON bc.w2 = u2.tok
-        |  CROSS JOIN n
-        |  WHERE c12 >= 5),
-        |r AS (SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY lift_x1000
-        |    DESC, w1, w2) AS INT) AS rk FROM j)
-        |SELECT w1, w2, c12, c1, c2, lift_x1000, rk
-        |FROM r WHERE rk <= 100 ORDER BY rk""".stripMargin,
+      s"""WITH d AS (SELECT ${words()} AS w FROM documents),
+         |uc AS (SELECT tok, COUNT(*) AS c FROM
+         |  (SELECT unnest(w) AS tok FROM d) GROUP BY 1),
+         |n AS (SELECT CAST(SUM(c) AS BIGINT) AS n_tokens FROM uc),
+         |bc AS (SELECT bg, COUNT(*) AS c12,
+         |    split_part(bg, ' ', 1) AS w1, split_part(bg, ' ', 2) AS w2
+         |  FROM (SELECT unnest(list_transform(range(1, len(w)),
+         |      i -> w[i] || ' ' || w[i + 1])) AS bg
+         |    FROM d WHERE len(w) >= 2)
+         |  GROUP BY 1),
+         |j AS (SELECT w1, w2, c12, u1.c AS c1, u2.c AS c2,
+         |    (c12 * n_tokens * 1000) // (c1 * c2) AS lift_x1000
+         |  FROM bc JOIN uc u1 ON bc.w1 = u1.tok
+         |  JOIN uc u2 ON bc.w2 = u2.tok
+         |  CROSS JOIN n
+         |  WHERE c12 >= 5),
+         |r AS (SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY lift_x1000
+         |    DESC, w1, w2) AS INT) AS rk FROM j)
+         |SELECT w1, w2, c12, c1, c2, lift_x1000, rk
+         |FROM r WHERE rk <= 100 ORDER BY rk""".stripMargin,
 
     // the dedup family's shingle prefix, first-occurrence credit by
     // MIN(doc_id), source rollup with the exact ppm division
     "text_novelty" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |sh AS MATERIALIZED (SELECT DISTINCT doc_id,
-        |    unnest(CASE WHEN len(w) >= 4 THEN
-        |      list_transform(range(1, len(w) - 2),
-        |        i -> array_to_string(w[i:i+3], ' '))
-        |      ELSE [] END) AS s
-        |  FROM toks),
-        |f AS (SELECT s, MIN(doc_id) AS first_doc FROM sh GROUP BY 1),
-        |pd AS (SELECT sh.doc_id, COUNT(*) AS n_sh,
-        |    CAST(SUM(CASE WHEN f.first_doc = sh.doc_id THEN 1 ELSE 0
-        |      END) AS BIGINT) AS n_novel
-        |  FROM sh JOIN f ON sh.s = f.s GROUP BY 1)
-        |SELECT d.source, COUNT(*) AS n_docs,
-        |  CAST(SUM(n_sh) AS BIGINT) AS n_shingles,
-        |  CAST(SUM(n_novel) AS BIGINT) AS n_novel,
-        |  (CAST(SUM(n_novel) AS BIGINT) * 1000000)
-        |    // CAST(SUM(n_sh) AS BIGINT) AS novelty_ppm
-        |FROM documents d JOIN pd ON d.doc_id = pd.doc_id
-        |GROUP BY 1 ORDER BY source""".stripMargin,
+      s"""WITH toks AS (SELECT doc_id,
+         |    ${words()} AS w
+         |  FROM documents),
+         |sh AS MATERIALIZED (SELECT DISTINCT doc_id,
+         |    unnest(${shingles(4)}) AS s
+         |  FROM toks),
+         |f AS (SELECT s, MIN(doc_id) AS first_doc FROM sh GROUP BY 1),
+         |pd AS (SELECT sh.doc_id, COUNT(*) AS n_sh,
+         |    CAST(SUM(CASE WHEN f.first_doc = sh.doc_id THEN 1 ELSE 0
+         |      END) AS BIGINT) AS n_novel
+         |  FROM sh JOIN f ON sh.s = f.s GROUP BY 1)
+         |SELECT d.source, COUNT(*) AS n_docs,
+         |  CAST(SUM(n_sh) AS BIGINT) AS n_shingles,
+         |  CAST(SUM(n_novel) AS BIGINT) AS n_novel,
+         |  (CAST(SUM(n_novel) AS BIGINT) * 1000000)
+         |    // CAST(SUM(n_sh) AS BIGINT) AS novelty_ppm
+         |FROM documents d JOIN pd ON d.doc_id = pd.doc_id
+         |GROUP BY 1 ORDER BY source""".stripMargin,
 
     // same two counting expressions, language grain, integer permille
     "text_fertility" ->
-      """SELECT lang, COUNT(*) AS n_docs,
-        |  CAST(SUM(len(regexp_split_to_array(lower(trim(text)),
-        |    '\s+'))) AS BIGINT) AS ws_tokens,
-        |  CAST(SUM(len(regexp_extract_all(text,
-        |    '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))) AS BIGINT)
-        |    AS bpe_tokens,
-        |  (CAST(SUM(len(regexp_extract_all(text,
-        |    '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))) AS BIGINT) * 1000)
-        |    // CAST(SUM(len(regexp_split_to_array(lower(trim(text)),
-        |    '\s+'))) AS BIGINT) AS fertility_x1000
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+      s"""SELECT lang, COUNT(*) AS n_docs,
+         |  CAST(SUM(len(${words()})) AS BIGINT) AS ws_tokens,
+         |  CAST(SUM(len(regexp_extract_all(text,
+         |    '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))) AS BIGINT)
+         |    AS bpe_tokens,
+         |  (CAST(SUM(len(regexp_extract_all(text,
+         |    '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))) AS BIGINT) * 1000)
+         |    // CAST(SUM(len(${words()})) AS BIGINT) AS fertility_x1000
+         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
 
     "text_tokens" ->
-      """SELECT doc_id,
-        |  CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS INT)
-        |    AS n_ws_tokens,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))
-        |    AS INT) AS n_bpe_tokens,
-        |  CAST(length(text) AS INT) AS n_chars_meas
-        |FROM documents ORDER BY doc_id""".stripMargin,
+      s"""SELECT doc_id,
+         |  CAST(len(${words()}) AS INT)
+         |    AS n_ws_tokens,
+         |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))
+         |    AS INT) AS n_bpe_tokens,
+         |  CAST(length(text) AS INT) AS n_chars_meas
+         |FROM documents ORDER BY doc_id""".stripMargin,
 
     "text_quality" ->
-      """WITH m AS (SELECT doc_id,
-        |  CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS DOUBLE)
-        |    AS n_tokens,
-        |  CAST(length(text) AS DOUBLE) AS n_chars,
-        |  CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS DOUBLE)
-        |    AS n_punct,
-        |  CAST(len(regexp_extract_all(lower(text),
-        |    '\b(the|a|of|and|to|in|is|it)\b')) AS DOUBLE) AS n_stop
-        |  FROM documents)
-        |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-        |  n_punct / n_chars AS punct_ratio,
-        |  n_stop / n_tokens AS stop_ratio,
-        |  least(1.0, n_tokens / 50.0) * (1.0 - n_punct / n_chars)
-        |    * (1.0 - 0.5 * n_stop / n_tokens) AS quality_score
-        |FROM m ORDER BY doc_id""".stripMargin,
+      s"""WITH m AS (SELECT doc_id,
+         |    $qualityCols
+         |  FROM documents)
+         |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
+         |  n_punct / n_chars AS punct_ratio,
+         |  n_stop / n_tokens AS stop_ratio,
+         |  $qualityScore AS quality_score
+         |FROM m ORDER BY doc_id""".stripMargin,
 
     "text_langid" ->
-      """WITH m AS (SELECT doc_id, lang,
-        |  CAST(len(regexp_extract_all(lower(text),
-        |    '\b(the|a|of|and|to|in|is|it)\b')) AS INT) AS s_en,
-        |  CAST(len(regexp_extract_all(lower(text),
-        |    '\b(der|die|das|und|ist|nicht)\b')) AS INT) AS s_de,
-        |  CAST(len(regexp_extract_all(lower(text),
-        |    '\b(el|la|los|de|que|es)\b')) AS INT) AS s_es,
-        |  CAST(len(regexp_extract_all(lower(text),
-        |    '\b(le|la|les|des|et|est)\b')) AS INT) AS s_fr,
-        |  CAST(len(regexp_extract_all(lower(text),
-        |    '[\x{4e00}-\x{9fff}]')) AS INT) AS s_zh
-        |  FROM documents),
-        |b AS (SELECT *, greatest(s_en, s_de, s_es, s_fr, s_zh) AS best FROM m)
-        |SELECT doc_id, lang,
-        |  CASE WHEN s_en = best THEN 'en' WHEN s_de = best THEN 'de'
-        |       WHEN s_es = best THEN 'es' WHEN s_fr = best THEN 'fr'
-        |       WHEN s_zh = best THEN 'zh' ELSE 'und' END AS pred_lang,
-        |  CAST(best AS BIGINT) AS best_score,
-        |  (CASE WHEN s_en = best THEN 'en' WHEN s_de = best THEN 'de'
-        |        WHEN s_es = best THEN 'es' WHEN s_fr = best THEN 'fr'
-        |        WHEN s_zh = best THEN 'zh' ELSE 'und' END) = lang AS is_match
-        |FROM b ORDER BY doc_id""".stripMargin,
+      s"""WITH m AS (SELECT doc_id, lang,
+         |  CAST($stopCount AS INT) AS s_en,
+         |  CAST(len(regexp_extract_all(lower(text),
+         |    '\\b(der|die|das|und|ist|nicht)\\b')) AS INT) AS s_de,
+         |  CAST(len(regexp_extract_all(lower(text),
+         |    '\\b(el|la|los|de|que|es)\\b')) AS INT) AS s_es,
+         |  CAST(len(regexp_extract_all(lower(text),
+         |    '\\b(le|la|les|des|et|est)\\b')) AS INT) AS s_fr,
+         |  CAST(len(regexp_extract_all(lower(text),
+         |    '[\\x{4e00}-\\x{9fff}]')) AS INT) AS s_zh
+         |  FROM documents),
+         |b AS (SELECT *, greatest(s_en, s_de, s_es, s_fr, s_zh) AS best FROM m)
+         |SELECT doc_id, lang,
+         |  CASE WHEN s_en = best THEN 'en' WHEN s_de = best THEN 'de'
+         |       WHEN s_es = best THEN 'es' WHEN s_fr = best THEN 'fr'
+         |       WHEN s_zh = best THEN 'zh' ELSE 'und' END AS pred_lang,
+         |  CAST(best AS BIGINT) AS best_score,
+         |  (CASE WHEN s_en = best THEN 'en' WHEN s_de = best THEN 'de'
+         |        WHEN s_es = best THEN 'es' WHEN s_fr = best THEN 'fr'
+         |        WHEN s_zh = best THEN 'zh' ELSE 'und' END) = lang AS is_match
+         |FROM b ORDER BY doc_id""".stripMargin,
 
     // same tf dictionary, same charFold, same integer-affine weight —
     // the sums are exact BIGINTs so the hash-compare needs no tolerance
     "text_linear_classifier" ->
-      """WITH tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        |  FROM (SELECT doc_id,
-        |          unnest(regexp_split_to_array(lower(trim(text)), '\s+'))
-        |            AS term
-        |        FROM documents)
-        |  GROUP BY doc_id, term),
-        |h AS (SELECT doc_id, tf,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(string_split(term, ''),
-        |        c -> CAST(ord(c) AS BIGINT))),
-        |      (a, b) -> (a * 1000003 + b) % 1000000007) % 1024 AS b
-        |  FROM tf),
-        |s AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tokens,
-        |    CAST(SUM(tf * ((b * 2654435761) % 2048 * 1000 - 1023500))
-        |      AS BIGINT) AS score_fix
-        |  FROM h GROUP BY doc_id)
-        |SELECT doc_id, n_tokens, score_fix,
-        |  CAST(score_fix AS DOUBLE) / (CAST(n_tokens AS DOUBLE) * 1000000.0)
-        |    AS score,
-        |  score_fix > 0 AS keep
-        |FROM s ORDER BY doc_id""".stripMargin,
+      s"""WITH $termFreq,
+         |h AS (SELECT doc_id, tf,
+         |    ${OracleSql.charFold("term")} % 1024 AS b
+         |  FROM tf),
+         |s AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tokens,
+         |    CAST(SUM(tf * ((b * 2654435761) % 2048 * 1000 - 1023500))
+         |      AS BIGINT) AS score_fix
+         |  FROM h GROUP BY doc_id)
+         |SELECT doc_id, n_tokens, score_fix,
+         |  CAST(score_fix AS DOUBLE) / (CAST(n_tokens AS DOUBLE) * 1000000.0)
+         |    AS score,
+         |  score_fix > 0 AS keep
+         |FROM s ORDER BY doc_id""".stripMargin,
 
     // the kernel's documented equivalence: wordShingles(text, n) ==
     // n-windows of regexp-split tokens joined with single spaces
     "text_ngram_counts" ->
-      """WITH w AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS a
-        |  FROM documents),
-        |g2 AS (SELECT doc_id, a[i] || ' ' || a[i+1] AS ngram
-        |  FROM w CROSS JOIN LATERAL
-        |    (SELECT unnest(range(1, len(a))) AS i) t),
-        |g3 AS (SELECT doc_id,
-        |    a[i] || ' ' || a[i+1] || ' ' || a[i+2] AS ngram
-        |  FROM w CROSS JOIN LATERAL
-        |    (SELECT unnest(range(1, len(a) - 1)) AS i) t),
-        |u AS (
-        |  SELECT 2 AS n, ngram, COUNT(*) AS cnt,
-        |      COUNT(DISTINCT doc_id) AS df
-        |    FROM g2 GROUP BY ngram
-        |  UNION ALL
-        |  SELECT 3 AS n, ngram, COUNT(*) AS cnt,
-        |      COUNT(DISTINCT doc_id) AS df
-        |    FROM g3 GROUP BY ngram),
-        |r AS (SELECT *, row_number() OVER
-        |    (PARTITION BY n ORDER BY cnt DESC, ngram) AS rn
-        |  FROM u)
-        |SELECT CAST(n AS BIGINT) AS n, ngram, CAST(cnt AS BIGINT) AS cnt,
-        |  CAST(df AS BIGINT) AS df
-        |FROM r WHERE rn <= 20 ORDER BY n, ngram""".stripMargin,
+      s"""WITH w AS (SELECT doc_id,
+         |    ${words()} AS a
+         |  FROM documents),
+         |g2 AS (SELECT doc_id, a[i] || ' ' || a[i+1] AS ngram
+         |  FROM w CROSS JOIN LATERAL
+         |    (SELECT unnest(range(1, len(a))) AS i) t),
+         |g3 AS (SELECT doc_id,
+         |    a[i] || ' ' || a[i+1] || ' ' || a[i+2] AS ngram
+         |  FROM w CROSS JOIN LATERAL
+         |    (SELECT unnest(range(1, len(a) - 1)) AS i) t),
+         |u AS (
+         |  SELECT 2 AS n, ngram, COUNT(*) AS cnt,
+         |      COUNT(DISTINCT doc_id) AS df
+         |    FROM g2 GROUP BY ngram
+         |  UNION ALL
+         |  SELECT 3 AS n, ngram, COUNT(*) AS cnt,
+         |      COUNT(DISTINCT doc_id) AS df
+         |    FROM g3 GROUP BY ngram),
+         |r AS (SELECT *, row_number() OVER
+         |    (PARTITION BY n ORDER BY cnt DESC, ngram) AS rn
+         |  FROM u)
+         |SELECT CAST(n AS BIGINT) AS n, ngram, CAST(cnt AS BIGINT) AS cnt,
+         |  CAST(df AS BIGINT) AS df
+         |FROM r WHERE rn <= 20 ORDER BY n, ngram""".stripMargin,
 
     // the same classifier CTEs (term retained through the hash stage for
     // the stopword gold), then an 11-threshold sweep in exact ints
     "text_classifier_calibration" ->
-      """WITH tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        |  FROM (SELECT doc_id,
-        |          unnest(regexp_split_to_array(lower(trim(text)), '\s+'))
-        |            AS term
-        |        FROM documents)
-        |  GROUP BY doc_id, term),
-        |h AS (SELECT doc_id, term, tf,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(string_split(term, ''),
-        |        c -> CAST(ord(c) AS BIGINT))),
-        |      (a, b) -> (a * 1000003 + b) % 1000000007) % 1024 AS b
-        |  FROM tf),
-        |s AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tokens,
-        |    CAST(SUM(tf * ((b * 2654435761) % 2048 * 1000 - 1023500))
-        |      AS BIGINT) AS score_fix,
-        |    CAST(SUM(CASE WHEN term IN
-        |      ('the','a','of','and','to','in','is','it')
-        |      THEN tf ELSE 0 END) AS BIGINT) AS n_stop
-        |  FROM h GROUP BY doc_id),
-        |ks AS (SELECT CAST(unnest(range(-5, 6)) AS BIGINT) AS k),
-        |x AS (SELECT k,
-        |    (10 * score_fix >= k * n_tokens * 1000000) AS pred,
-        |    (10 * n_stop >= n_tokens) AS gold
-        |  FROM s CROSS JOIN ks),
-        |c AS (SELECT k, COUNT(*) AS n_docs,
-        |    SUM(CASE WHEN pred THEN 1 ELSE 0 END) AS n_kept,
-        |    SUM(CASE WHEN pred AND gold THEN 1 ELSE 0 END) AS tp,
-        |    SUM(CASE WHEN pred AND NOT gold THEN 1 ELSE 0 END) AS fp,
-        |    SUM(CASE WHEN NOT pred AND gold THEN 1 ELSE 0 END) AS fn
-        |  FROM x GROUP BY k)
-        |SELECT k, CAST(k AS DOUBLE) / 10.0 AS threshold,
-        |  CAST(n_docs AS BIGINT) AS n_docs, CAST(n_kept AS BIGINT) AS n_kept,
-        |  CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-        |  CAST(fn AS BIGINT) AS fn,
-        |  CASE WHEN n_kept > 0 THEN CAST(tp AS DOUBLE) / CAST(n_kept AS DOUBLE)
-        |       ELSE 1.0 END AS precision,
-        |  CASE WHEN tp + fn > 0 THEN CAST(tp AS DOUBLE)
-        |         / CAST(tp + fn AS DOUBLE)
-        |       ELSE 1.0 END AS recall
-        |FROM c ORDER BY k""".stripMargin,
+      s"""WITH $termFreq,
+         |h AS (SELECT doc_id, term, tf,
+         |    ${OracleSql.charFold("term")} % 1024 AS b
+         |  FROM tf),
+         |s AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tokens,
+         |    CAST(SUM(tf * ((b * 2654435761) % 2048 * 1000 - 1023500))
+         |      AS BIGINT) AS score_fix,
+         |    CAST(SUM(CASE WHEN term IN
+         |      ('the','a','of','and','to','in','is','it')
+         |      THEN tf ELSE 0 END) AS BIGINT) AS n_stop
+         |  FROM h GROUP BY doc_id),
+         |ks AS (SELECT CAST(unnest(range(-5, 6)) AS BIGINT) AS k),
+         |x AS (SELECT k,
+         |    (10 * score_fix >= k * n_tokens * 1000000) AS pred,
+         |    (10 * n_stop >= n_tokens) AS gold
+         |  FROM s CROSS JOIN ks),
+         |c AS (SELECT k, COUNT(*) AS n_docs,
+         |    SUM(CASE WHEN pred THEN 1 ELSE 0 END) AS n_kept,
+         |    SUM(CASE WHEN pred AND gold THEN 1 ELSE 0 END) AS tp,
+         |    SUM(CASE WHEN pred AND NOT gold THEN 1 ELSE 0 END) AS fp,
+         |    SUM(CASE WHEN NOT pred AND gold THEN 1 ELSE 0 END) AS fn
+         |  FROM x GROUP BY k)
+         |SELECT k, CAST(k AS DOUBLE) / 10.0 AS threshold,
+         |  CAST(n_docs AS BIGINT) AS n_docs, CAST(n_kept AS BIGINT) AS n_kept,
+         |  CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
+         |  CAST(fn AS BIGINT) AS fn,
+         |  CASE WHEN n_kept > 0 THEN CAST(tp AS DOUBLE) / CAST(n_kept AS DOUBLE)
+         |       ELSE 1.0 END AS precision,
+         |  CASE WHEN tp + fn > 0 THEN CAST(tp AS DOUBLE)
+         |         / CAST(tp + fn AS DOUBLE)
+         |       ELSE 1.0 END AS recall
+         |FROM c ORDER BY k""".stripMargin,
 
     "text_fingerprint" ->
-      """WITH n AS (SELECT doc_id,
-        |  regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
-        |  FROM documents)
-        |SELECT doc_id,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(string_split(t, ''), c -> CAST(ord(c) AS BIGINT))),
-        |    (a, b) -> (a * 1000003 + b) % 1000000007) AS fp,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(string_split(substr(t, 1, 64), ''),
-        |      c -> CAST(ord(c) AS BIGINT))),
-        |    (a, b) -> (a * 1000003 + b) % 1000000007) AS fp_prefix64
-        |FROM n ORDER BY doc_id""".stripMargin,
+      s"""WITH n AS (SELECT doc_id,
+         |  regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS t
+         |  FROM documents)
+         |SELECT doc_id,
+         |  ${OracleSql.charFold("t")} AS fp,
+         |  ${OracleSql.charFold("substr(t, 1, 64)")} AS fp_prefix64
+         |FROM n ORDER BY doc_id""".stripMargin,
 
     "text_editdist" ->
       """WITH d AS (SELECT doc_id, substr(text, 1, 40) AS p
@@ -1127,53 +1093,46 @@ object TextQueries extends QueryGroup {
         |ORDER BY da, db""".stripMargin,
 
     "text_termstats" ->
-      """SELECT term, COUNT(*) AS tf, COUNT(DISTINCT doc_id) AS df
-        |FROM (SELECT doc_id,
-        |        unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
-        |      FROM documents)
-        |GROUP BY term ORDER BY tf DESC, term LIMIT 100""".stripMargin,
+      s"""SELECT term, COUNT(*) AS tf, COUNT(DISTINCT doc_id) AS df
+         |FROM (SELECT doc_id,
+         |        unnest(${words()}) AS term
+         |      FROM documents)
+         |GROUP BY term ORDER BY tf DESC, term LIMIT 100""".stripMargin,
 
     "text_tfidf" ->
-      """WITH terms AS (SELECT doc_id,
-        |    unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf
-        |  FROM terms GROUP BY doc_id, term),
-        |dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-        |n AS (SELECT COUNT(*) AS n_docs FROM documents),
-        |scored AS (SELECT doc_id, tf.term AS term, tf, df,
-        |    CAST(tf AS DOUBLE) * (n_docs - df + CAST(0.5 AS DOUBLE))
-        |      / (df + CAST(0.5 AS DOUBLE)) AS score
-        |  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN n),
-        |ranked AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
-        |    ORDER BY score DESC, term) AS INT) AS rank
-        |  FROM scored)
-        |SELECT doc_id, term, tf, df, score, rank FROM ranked
-        |WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin,
+      s"""WITH $termFreq,
+         |dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
+         |n AS (SELECT COUNT(*) AS n_docs FROM documents),
+         |scored AS (SELECT doc_id, tf.term AS term, tf, df,
+         |    CAST(tf AS DOUBLE) * (n_docs - df + CAST(0.5 AS DOUBLE))
+         |      / (df + CAST(0.5 AS DOUBLE)) AS score
+         |  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN n),
+         |ranked AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
+         |    ORDER BY score DESC, term) AS INT) AS rank
+         |  FROM scored)
+         |SELECT doc_id, term, tf, df, score, rank FROM ranked
+         |WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin,
 
     "text_repetition" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |grams AS (SELECT doc_id,
-        |    unnest(CASE WHEN len(w) >= 2 THEN
-        |      list_transform(range(1, len(w)),
-        |        i -> array_to_string(w[i:i+1], ' '))
-        |      ELSE [] END) AS g
-        |  FROM toks),
-        |gc AS (SELECT doc_id, g, COUNT(*) AS c FROM grams GROUP BY doc_id, g),
-        |gs AS (SELECT doc_id, SUM(c) AS n_grams, MAX(c) AS top_c
-        |  FROM gc GROUP BY doc_id),
-        |wc AS (SELECT doc_id, wd, COUNT(*) AS c
-        |  FROM (SELECT doc_id, unnest(w) AS wd FROM toks)
-        |  GROUP BY doc_id, wd),
-        |ws AS (SELECT doc_id, SUM(c) AS n_words, COUNT(*) AS n_distinct
-        |  FROM wc GROUP BY doc_id)
-        |SELECT gs.doc_id AS doc_id, CAST(n_grams AS BIGINT) AS n_grams,
-        |  CAST(top_c AS DOUBLE) / n_grams AS top_gram_frac,
-        |  CAST(n_words - n_distinct AS DOUBLE) / n_words AS dup_word_frac
-        |FROM gs JOIN ws ON gs.doc_id = ws.doc_id
-        |ORDER BY doc_id""".stripMargin,
+      s"""WITH toks AS (SELECT doc_id,
+         |    ${words()} AS w
+         |  FROM documents),
+         |grams AS (SELECT doc_id,
+         |    unnest(${shingles(2)}) AS g
+         |  FROM toks),
+         |gc AS (SELECT doc_id, g, COUNT(*) AS c FROM grams GROUP BY doc_id, g),
+         |gs AS (SELECT doc_id, SUM(c) AS n_grams, MAX(c) AS top_c
+         |  FROM gc GROUP BY doc_id),
+         |wc AS (SELECT doc_id, wd, COUNT(*) AS c
+         |  FROM (SELECT doc_id, unnest(w) AS wd FROM toks)
+         |  GROUP BY doc_id, wd),
+         |ws AS (SELECT doc_id, SUM(c) AS n_words, COUNT(*) AS n_distinct
+         |  FROM wc GROUP BY doc_id)
+         |SELECT gs.doc_id AS doc_id, CAST(n_grams AS BIGINT) AS n_grams,
+         |  CAST(top_c AS DOUBLE) / n_grams AS top_gram_frac,
+         |  CAST(n_words - n_distinct AS DOUBLE) / n_words AS dup_word_frac
+         |FROM gs JOIN ws ON gs.doc_id = ws.doc_id
+         |ORDER BY doc_id""".stripMargin,
 
     "text_pii" ->
       """WITH m AS (SELECT event_id,
@@ -1194,76 +1153,18 @@ object TextQueries extends QueryGroup {
         |FROM m ORDER BY event_id""".stripMargin,
 
     "text_bm25" ->
-      """WITH terms AS (SELECT doc_id,
-        |    unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf
-        |  FROM terms GROUP BY doc_id, term),
-        |post AS (SELECT * FROM tf
-        |  WHERE term IN ('dup', 'vector', 'spark', 'merge')),
-        |dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY doc_id),
-        |stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS tot_tok FROM dl),
-        |dfreq AS (SELECT term, COUNT(*) AS df FROM post GROUP BY term),
-        |sc AS (SELECT post.doc_id AS doc_id, post.term AS term,
-        |    ((n_docs - df + CAST(0.5 AS DOUBLE)) / (df + CAST(0.5 AS DOUBLE)))
-        |    * ((CAST(tf AS DOUBLE) * CAST(2.2 AS DOUBLE)
-        |          * CAST(tot_tok AS DOUBLE))
-        |       / (CAST(tf AS DOUBLE) * CAST(tot_tok AS DOUBLE)
-        |          + CAST(1.2 AS DOUBLE)
-        |            * (CAST(0.25 AS DOUBLE) * CAST(tot_tok AS DOUBLE)
-        |               + CAST(0.75 AS DOUBLE)
-        |                 * (CAST(dl AS DOUBLE) * CAST(n_docs AS DOUBLE)))))
-        |      AS s
-        |  FROM post JOIN dfreq ON post.term = dfreq.term
-        |  JOIN dl ON post.doc_id = dl.doc_id CROSS JOIN stats)
-        |SELECT doc_id, CAST(COUNT(*) AS INT) AS n_hit,
-        |  COALESCE(MAX(CASE WHEN term = 'dup' THEN s END), CAST(0 AS DOUBLE))
-        |  + COALESCE(MAX(CASE WHEN term = 'vector' THEN s END),
-        |      CAST(0 AS DOUBLE))
-        |  + COALESCE(MAX(CASE WHEN term = 'spark' THEN s END),
-        |      CAST(0 AS DOUBLE))
-        |  + COALESCE(MAX(CASE WHEN term = 'merge' THEN s END),
-        |      CAST(0 AS DOUBLE)) AS score
-        |FROM sc GROUP BY doc_id
-        |ORDER BY score DESC, doc_id LIMIT 10""".stripMargin,
+      s"""WITH $bm25Ctes
+         |SELECT doc_id, n_hit, score FROM perdoc
+         |ORDER BY score DESC, doc_id LIMIT 10""".stripMargin,
 
-    // the bm25 CTEs verbatim, then NDCG/MRR with the DCG position weights
-    // inlined as a VALUES table from the same Scala constants the Spark
-    // plan ships as an array literal — no query-time log in either engine
+    // the bm25 CTEs ([[bm25Ctes]]), then NDCG/MRR with the DCG position
+    // weights inlined as a VALUES table from the same Scala constants the
+    // Spark plan ships as an array literal — no query-time log in either
+    // engine
     "text_retrieval_ndcg" -> {
       val wRows = (1 to 10).map(r => s"($r, ${dcgW(r - 1)})").mkString(", ")
       val mRows = (1 to 10).map(r => s"($r, ${mrrW(r - 1)})").mkString(", ")
-      s"""WITH terms AS (SELECT doc_id,
-    unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS term
-  FROM documents),
-tf AS MATERIALIZED (SELECT doc_id, term, COUNT(*) AS tf
-  FROM terms GROUP BY doc_id, term),
-post AS MATERIALIZED (SELECT * FROM tf
-  WHERE term IN ('dup', 'vector', 'spark', 'merge')),
-dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY doc_id),
-stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS tot_tok FROM dl),
-dfreq AS (SELECT term, COUNT(*) AS df FROM post GROUP BY term),
-sc AS (SELECT post.doc_id AS doc_id, post.term AS term,
-    ((n_docs - df + CAST(0.5 AS DOUBLE)) / (df + CAST(0.5 AS DOUBLE)))
-    * ((CAST(tf AS DOUBLE) * CAST(2.2 AS DOUBLE)
-          * CAST(tot_tok AS DOUBLE))
-       / (CAST(tf AS DOUBLE) * CAST(tot_tok AS DOUBLE)
-          + CAST(1.2 AS DOUBLE)
-            * (CAST(0.25 AS DOUBLE) * CAST(tot_tok AS DOUBLE)
-               + CAST(0.75 AS DOUBLE)
-                 * (CAST(dl AS DOUBLE) * CAST(n_docs AS DOUBLE)))))
-      AS s
-  FROM post JOIN dfreq ON post.term = dfreq.term
-  JOIN dl ON post.doc_id = dl.doc_id CROSS JOIN stats),
-perdoc AS (SELECT doc_id,
-  COALESCE(MAX(CASE WHEN term = 'dup' THEN s END), CAST(0 AS DOUBLE))
-  + COALESCE(MAX(CASE WHEN term = 'vector' THEN s END),
-      CAST(0 AS DOUBLE))
-  + COALESCE(MAX(CASE WHEN term = 'spark' THEN s END),
-      CAST(0 AS DOUBLE))
-  + COALESCE(MAX(CASE WHEN term = 'merge' THEN s END),
-      CAST(0 AS DOUBLE)) AS score
-  FROM sc GROUP BY doc_id),
+      s"""WITH $bm25Ctes,
 rnk AS (SELECT doc_id,
     ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rank
   FROM perdoc),
@@ -1294,73 +1195,59 @@ FROM dcg CROSS JOIN ideal CROSS JOIN best"""
     },
 
     "text_boilerplate" ->
-      """WITH terms AS (SELECT doc_id,
-        |    unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf
-        |  FROM terms GROUP BY doc_id, term),
-        |pres AS (SELECT tf.doc_id, tf.term, tf.tf, d.source
-        |  FROM tf JOIN documents d USING (doc_id)),
-        |nd AS (SELECT source, COUNT(*) AS n_docs FROM documents
-        |  GROUP BY source),
-        |boiler AS (SELECT f.source, f.term
-        |  FROM (SELECT source, term, COUNT(*) AS df FROM pres
-        |        GROUP BY source, term) f
-        |  JOIN nd USING (source) WHERE f.df * 2 >= nd.n_docs),
-        |tot AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tokens
-        |  FROM pres GROUP BY doc_id),
-        |bt AS (SELECT p.doc_id, CAST(SUM(p.tf) AS BIGINT) AS n_boiler
-        |  FROM pres p JOIN boiler b
-        |    ON p.source = b.source AND p.term = b.term
-        |  GROUP BY p.doc_id)
-        |SELECT t.doc_id, t.n_tokens,
-        |  COALESCE(bt.n_boiler, 0) AS n_boiler,
-        |  CAST(COALESCE(bt.n_boiler, 0) AS DOUBLE)
-        |    / CAST(t.n_tokens AS DOUBLE) AS boiler_frac
-        |FROM tot t LEFT JOIN bt USING (doc_id)
-        |ORDER BY t.doc_id""".stripMargin,
+      s"""WITH $termFreq,
+         |pres AS (SELECT tf.doc_id, tf.term, tf.tf, d.source
+         |  FROM tf JOIN documents d USING (doc_id)),
+         |nd AS (SELECT source, COUNT(*) AS n_docs FROM documents
+         |  GROUP BY source),
+         |boiler AS (SELECT f.source, f.term
+         |  FROM (SELECT source, term, COUNT(*) AS df FROM pres
+         |        GROUP BY source, term) f
+         |  JOIN nd USING (source) WHERE f.df * 2 >= nd.n_docs),
+         |tot AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tokens
+         |  FROM pres GROUP BY doc_id),
+         |bt AS (SELECT p.doc_id, CAST(SUM(p.tf) AS BIGINT) AS n_boiler
+         |  FROM pres p JOIN boiler b
+         |    ON p.source = b.source AND p.term = b.term
+         |  GROUP BY p.doc_id)
+         |SELECT t.doc_id, t.n_tokens,
+         |  COALESCE(bt.n_boiler, 0) AS n_boiler,
+         |  CAST(COALESCE(bt.n_boiler, 0) AS DOUBLE)
+         |    / CAST(t.n_tokens AS DOUBLE) AS boiler_frac
+         |FROM tot t LEFT JOIN bt USING (doc_id)
+         |ORDER BY t.doc_id""".stripMargin,
 
     "text_bpe_pairs" ->
-      """WITH tf AS (SELECT doc_id, term, COUNT(*) AS tf
-        |  FROM (SELECT doc_id,
-        |          unnest(regexp_split_to_array(lower(trim(text)), '\s+'))
-        |            AS term
-        |        FROM documents)
-        |  GROUP BY doc_id, term),
-        |wf AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS freq
-        |  FROM tf GROUP BY term),
-        |p AS (SELECT freq,
-        |    unnest(list_transform(range(1, length(term)),
-        |      i -> substr(term, CAST(i AS INT), 2))) AS pair
-        |  FROM wf WHERE length(term) >= 2)
-        |SELECT pair, CAST(SUM(freq) AS BIGINT) AS cnt,
-        |  CAST(COUNT(*) AS BIGINT) AS n_types
-        |FROM p GROUP BY pair ORDER BY cnt DESC, pair LIMIT 20""".stripMargin,
+      s"""WITH $termFreq,
+         |wf AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS freq
+         |  FROM tf GROUP BY term),
+         |p AS (SELECT freq,
+         |    unnest(list_transform(range(1, length(term)),
+         |      i -> substr(term, CAST(i AS INT), 2))) AS pair
+         |  FROM wf WHERE length(term) >= 2)
+         |SELECT pair, CAST(SUM(freq) AS BIGINT) AS cnt,
+         |  CAST(COUNT(*) AS BIGINT) AS n_types
+         |FROM p GROUP BY pair ORDER BY cnt DESC, pair LIMIT 20""".stripMargin,
 
     "text_perplexity" ->
-      """WITH tf AS (SELECT doc_id, term, COUNT(*) AS tf
-        |  FROM (SELECT doc_id,
-        |          unnest(regexp_split_to_array(lower(trim(text)), '\s+'))
-        |            AS term
-        |        FROM documents)
-        |  GROUP BY doc_id, term),
-        |freq AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS freq
-        |  FROM tf GROUP BY term),
-        |st AS (SELECT CAST(floor(ln(CAST(SUM(freq) AS DOUBLE)) * 1048576.0)
-        |    AS BIGINT) AS lnq_n FROM freq),
-        |sc AS (SELECT tf.doc_id, CAST(SUM(tf.tf) AS BIGINT) AS n_tok,
-        |    CAST(SUM(tf.tf * (st.lnq_n
-        |      - CAST(floor(ln(CAST(f.freq AS DOUBLE)) * 1048576.0)
-        |          AS BIGINT))) AS BIGINT) AS xent_fix
-        |  FROM tf JOIN freq f USING (term) CROSS JOIN st
-        |  GROUP BY tf.doc_id)
-        |SELECT doc_id, n_tok, xent_fix,
-        |  CAST(xent_fix AS DOUBLE)
-        |    / (CAST(n_tok AS DOUBLE) * CAST(1048576 AS DOUBLE)) AS xent,
-        |  CASE WHEN xent_fix < n_tok * 3565158 THEN 'head'
-        |       WHEN xent_fix < n_tok * 3575644 THEN 'middle'
-        |       ELSE 'tail' END AS bucket
-        |FROM sc ORDER BY doc_id""".stripMargin,
+      s"""WITH $termFreq,
+         |freq AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS freq
+         |  FROM tf GROUP BY term),
+         |st AS (SELECT CAST(floor(ln(CAST(SUM(freq) AS DOUBLE)) * 1048576.0)
+         |    AS BIGINT) AS lnq_n FROM freq),
+         |sc AS (SELECT tf.doc_id, CAST(SUM(tf.tf) AS BIGINT) AS n_tok,
+         |    CAST(SUM(tf.tf * (st.lnq_n
+         |      - CAST(floor(ln(CAST(f.freq AS DOUBLE)) * 1048576.0)
+         |          AS BIGINT))) AS BIGINT) AS xent_fix
+         |  FROM tf JOIN freq f USING (term) CROSS JOIN st
+         |  GROUP BY tf.doc_id)
+         |SELECT doc_id, n_tok, xent_fix,
+         |  CAST(xent_fix AS DOUBLE)
+         |    / (CAST(n_tok AS DOUBLE) * CAST(1048576 AS DOUBLE)) AS xent,
+         |  CASE WHEN xent_fix < n_tok * 3565158 THEN 'head'
+         |       WHEN xent_fix < n_tok * 3575644 THEN 'middle'
+         |       ELSE 'tail' END AS bucket
+         |FROM sc ORDER BY doc_id""".stripMargin,
 
     // five plainly-unrolled merge rounds (the dedup_pagerank oracle
     // pattern): each round = pair count over the current spaced-symbol
@@ -1387,6 +1274,40 @@ FROM dcg CROSS JOIN ideal CROSS JOIN best"""
          |FROM tf JOIN sc ON tf.term = sc.term
          |GROUP BY tf.doc_id ORDER BY tf.doc_id""".stripMargin)
 
+  /** The bm25 CTEs of `text_bm25` and `text_retrieval_ndcg`, mirroring
+    * [[bm25PerDoc]]: the [[OracleSql.termFreq]] table, the posting rows
+    * of the four query terms (`post`), document lengths, corpus stats,
+    * per-(doc, term) scores (`sc`) and the per-doc sum
+    * `perdoc(doc_id, n_hit, score)`. */
+  private def bm25Ctes: String =
+    s"""$termFreq,
+       |post AS MATERIALIZED (SELECT * FROM tf
+       |  WHERE term IN ('dup', 'vector', 'spark', 'merge')),
+       |dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY doc_id),
+       |stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS tot_tok FROM dl),
+       |dfreq AS (SELECT term, COUNT(*) AS df FROM post GROUP BY term),
+       |sc AS (SELECT post.doc_id AS doc_id, post.term AS term,
+       |    ((n_docs - df + CAST(0.5 AS DOUBLE)) / (df + CAST(0.5 AS DOUBLE)))
+       |    * ((CAST(tf AS DOUBLE) * CAST(2.2 AS DOUBLE)
+       |          * CAST(tot_tok AS DOUBLE))
+       |       / (CAST(tf AS DOUBLE) * CAST(tot_tok AS DOUBLE)
+       |          + CAST(1.2 AS DOUBLE)
+       |            * (CAST(0.25 AS DOUBLE) * CAST(tot_tok AS DOUBLE)
+       |               + CAST(0.75 AS DOUBLE)
+       |                 * (CAST(dl AS DOUBLE) * CAST(n_docs AS DOUBLE)))))
+       |      AS s
+       |  FROM post JOIN dfreq ON post.term = dfreq.term
+       |  JOIN dl ON post.doc_id = dl.doc_id CROSS JOIN stats),
+       |perdoc AS (SELECT doc_id, CAST(COUNT(*) AS INT) AS n_hit,
+       |  COALESCE(MAX(CASE WHEN term = 'dup' THEN s END), CAST(0 AS DOUBLE))
+       |  + COALESCE(MAX(CASE WHEN term = 'vector' THEN s END),
+       |      CAST(0 AS DOUBLE))
+       |  + COALESCE(MAX(CASE WHEN term = 'spark' THEN s END),
+       |      CAST(0 AS DOUBLE))
+       |  + COALESCE(MAX(CASE WHEN term = 'merge' THEN s END),
+       |      CAST(0 AS DOUBLE)) AS score
+       |  FROM sc GROUP BY doc_id)""".stripMargin
+
   /** The 5-round unrolled BPE merge chain as DuckDB CTEs (shared by the
     * `text_bpe_train` and `text_bpe_encode` oracles): `tf`/`wf` = the
     * corpus term-frequency dictionary, `w0..w5` carry (term, freq, repr)
@@ -1401,17 +1322,12 @@ FROM dcg CROSS JOIN ideal CROSS JOIN best"""
     * evaluate-once plan the unrolled chain assumes. */
   private def bpeOracleCtes: String = {
     val base =
-      """WITH tf AS MATERIALIZED (SELECT doc_id, term, COUNT(*) AS tf
-        |  FROM (SELECT doc_id,
-        |          unnest(regexp_split_to_array(lower(trim(text)), '\s+'))
-        |            AS term
-        |        FROM documents)
-        |  GROUP BY doc_id, term),
-        |wf AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS freq
-        |  FROM tf GROUP BY term),
-        |w0 AS MATERIALIZED (SELECT term, freq,
-        |  '  ' || regexp_replace(term, '(.)', '\1  ', 'g') AS repr
-        |  FROM wf)""".stripMargin
+      s"""WITH $termFreq,
+         |wf AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS freq
+         |  FROM tf GROUP BY term),
+         |w0 AS MATERIALIZED (SELECT term, freq,
+         |  '  ' || regexp_replace(term, '(.)', '\\1  ', 'g') AS repr
+         |  FROM wf)""".stripMargin
     val rounds = (1 to 5).map { i =>
       s"""p$i AS (SELECT a, b, CAST(SUM(freq) AS BIGINT) AS cnt FROM (
          |    SELECT freq, syms[i] AS a, syms[i+1] AS b FROM (

@@ -315,11 +315,7 @@ class DebeziumScan(
   * archive files arrive with fresh modTimes. A file surfacing with a
   * modTime older than `cutoffMs` (an object-store copy that preserves
   * mtimes after the window passed) is treated as already seen; size the
-  * slack to cover producer clock skew + copy latency.
-  *
-  * A legacy file-set offset (plain JSON array, from a pre-compaction
-  * checkpoint) deserializes as `cutoff = Long.MinValue` with every file
-  * explicit — exact, and compacted away on the next batch. */
+  * slack to cover producer clock skew + copy latency. */
 case class DebeziumCompactedOffset(
     cutoffMs: Long, recent: Seq[(String, Long)])
     extends streaming.Offset {
@@ -367,10 +363,8 @@ class DebeziumMicroBatchStream(scan: DebeziumScan, maxFilesPerTrigger: Int)
     }
     val leftover = unseen.drop(admitted.size)
     val admittedEntries = admitted.map { case (f, _, mt) => (f, mt) }
-    // the watermark driver is the newest REAL modTime among seen files in
-    // the listing — recorded mtimes are not used here, so a legacy
-    // offset's unknown-mtime sentinels can never advance the cutoff and
-    // imply-drop genuinely new files
+    // the watermark driver is the newest modTime among seen files in the
+    // listing
     val seenNames = s.recentNames ++ admittedEntries.map(_._1)
     val maxSeenListed = all
       .collect { case (f, _, mt) if mt <= s.cutoffMs || seenNames(f) => mt }
@@ -381,18 +375,13 @@ class DebeziumMicroBatchStream(scan: DebeziumScan, maxFilesPerTrigger: Int)
       (if (maxSeenListed.isEmpty) Long.MinValue
        else maxSeenListed.max - scan.slackMs) min
         leftover.headOption.map(_._3 - 1).getOrElse(Long.MaxValue))
-    // prior entries refresh their mtime from the listing when present
-    // (lets legacy unknown-mtime entries adopt real times and compact);
-    // vanished files keep the recorded mtime — immutable names make that
-    // exact without a listing. Entries at or below the cutoff are now
+    // prior entries keep their recorded mtime (immutable names make that
+    // exact without a listing). Entries at or below the cutoff are now
     // implied-seen and compact away; this batch's admissions ALWAYS stay
     // explicit (planInputPartitions reconstructs the batch from them,
     // even when a catch-up batch admits files already older than the
     // advancing cutoff).
-    val listedMt = all.map { case (f, _, mt) => (f, mt) }.toMap
-    val keepPrev = s.recent
-      .map { case (f, mt) => (f, listedMt.getOrElse(f, mt)) }
-      .filter(_._2 > newCutoff)
+    val keepPrev = s.recent.filter(_._2 > newCutoff)
     DebeziumCompactedOffset(newCutoff,
       (keepPrev ++ admittedEntries).distinct)
   }
@@ -403,21 +392,12 @@ class DebeziumMicroBatchStream(scan: DebeziumScan, maxFilesPerTrigger: Int)
 
   override def deserializeOffset(json: String): Offset = {
     val node = new ObjectMapper().readTree(json)
-    if (node.isArray) {
-      // legacy file-set offset (pre-compaction checkpoint): every file
-      // explicit, nothing implied; modTime unknown → MaxValue keeps the
-      // entries explicit until the corresponding files age below a real
-      // cutoff computed from a fresh listing
-      DebeziumCompactedOffset(Long.MinValue,
-        (0 until node.size()).map(i => (node.get(i).asText(), Long.MaxValue)))
-    } else {
-      val rec = node.get("recent")
-      DebeziumCompactedOffset(
-        node.get("cutoffMs").asLong(),
-        (0 until rec.size()).map { i =>
-          val e = rec.get(i); (e.get(0).asText(), e.get(1).asLong())
-        })
-    }
+    val rec = node.get("recent")
+    DebeziumCompactedOffset(
+      node.get("cutoffMs").asLong(),
+      (0 until rec.size()).map { i =>
+        val e = rec.get(i); (e.get(0).asText(), e.get(1).asLong())
+      })
   }
 
   override def planInputPartitions(

@@ -40,32 +40,33 @@ final case class KeyState(
 object StatefulCompaction {
 
   /** (lsn, deleted) lexicographic rank — equal-lsn ties prefer the delete
-    * rewrite, matching the batch path's `orderBy(lsn.desc, deleted.desc)`
-    * so batch and streaming materialize identical state even on sources
+    * rewrite, as the batch path [[graft.operators.CdcOps.compactLatest]]
+    * does (it orders by the caller's position, then `__deleted` desc), so
+    * batch and streaming materialize identical state even on sources
     * that can emit position ties (MySQL binlog pos, snapshot rows). */
   private def rank(lsn: Long, deleted: Boolean): (Long, Int) =
     (lsn, if (deleted) 1 else 0)
 
-  /** The winner rule both compaction forms share: `a` outranks the
-    * (lsn, deleted) state. */
-  private[streaming] def newerThan(
-      a: KeyedChange, lsn: Long, deleted: Boolean): Boolean =
+  /** The winner rule: `a` outranks the (lsn, deleted) state. */
+  private def newerThan(a: KeyedChange, lsn: Long, deleted: Boolean): Boolean =
     Ordering[(Long, Int)].gt(rank(a.lsn, a.deleted), rank(lsn, deleted))
+
+  /** One key's compaction step, shared by both state APIs: the batch's
+    * newest event becomes the key's state when it outranks the current
+    * state `cur`; returns the state to store and emit, if any. */
+  private[streaming] def step(key: Long, events: Iterator[KeyedChange],
+      cur: Option[KeyState]): Option[KeyState] =
+    events.reduceOption((a, b) => if (newerThan(a, b.lsn, b.deleted)) a else b)
+      .filter(e => cur.forall(c => newerThan(e, c.lsn, c.deleted)))
+      .map(e => KeyState(key, e.lsn, e.deleted, e.payload))
 
   def update(
       key: Long,
       events: Iterator[KeyedChange],
       state: GroupState[KeyState]): Iterator[KeyState] = {
-    val newest = events.reduceOption((a, b) =>
-      if (newerThan(a, b.lsn, b.deleted)) a else b)
-    newest match {
-      case Some(e)
-          if !state.exists || newerThan(e, state.get.lsn, state.get.deleted) =>
-        val s = KeyState(key, e.lsn, e.deleted, e.payload)
-        state.update(s)
-        Iterator.single(s)
-      case _ => Iterator.empty
-    }
+    val next = step(key, events, state.getOption)
+    next.foreach(state.update)
+    next.iterator
   }
 
   /** Compact a keyed change stream: emits the new current state of every

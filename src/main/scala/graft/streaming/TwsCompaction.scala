@@ -8,9 +8,9 @@ import org.apache.spark.sql.{Dataset, Encoders}
   * ([[StatefulCompaction]]) with typed named state, per-state TTL, and the
   * RocksDB state store (required by this operator), which is what a
   * 100 TB keyed-state deployment runs anyway (state larger than heap,
-  * incremental checkpoints). The winner rule is the legacy form's own
-  * [[StatefulCompaction.newerThan]] — TwsCompactionSpec asserts both
-  * APIs materialize identical state.
+  * incremental checkpoints). Each key's step is the legacy form's own
+  * [[StatefulCompaction.step]] — TwsCompactionSpec asserts both APIs
+  * materialize identical state.
   */
 class CompactionProcessor
     extends StatefulProcessor[Long, KeyedChange, KeyState] {
@@ -25,18 +25,10 @@ class CompactionProcessor
       key: Long,
       rows: Iterator[KeyedChange],
       timers: TimerValues): Iterator[KeyState] = {
-    import StatefulCompaction.newerThan
-    val newest = rows.reduceOption((a, b) =>
-      if (newerThan(a, b.lsn, b.deleted)) a else b)
-    newest match {
-      case Some(e)
-          if !state.exists() ||
-            newerThan(e, state.get().lsn, state.get().deleted) =>
-        val s = KeyState(key, e.lsn, e.deleted, e.payload)
-        state.update(s)
-        Iterator.single(s)
-      case _ => Iterator.empty
-    }
+    val next = StatefulCompaction.step(key, rows,
+      if (state.exists()) Some(state.get()) else None)
+    next.foreach(state.update)
+    next.iterator
   }
 }
 

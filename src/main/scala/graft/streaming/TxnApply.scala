@@ -125,10 +125,12 @@ object TxnApply {
     *   - the engine schedules data-less micro-batches on every trigger
     *     to fire pending timeouts (`FlatMapGroupsWithStateExec
     *     .shouldRunAnotherBatch` is unconditionally true under
-    *     ProcessingTimeTimeout), so use a sane trigger interval — the
-    *     default as-fast-as-possible trigger degenerates to a
-    *     continuous empty-batch loop, and `processAllAvailable()` never
-    *     returns at all (`noNewData` is never signaled);
+    *     ProcessingTimeTimeout): under the default as-fast-as-possible
+    *     trigger that is a continuous empty-batch loop, and
+    *     `processAllAvailable()` never returns. With
+    *     `spark.sql.streaming.noDataMicroBatches.enabled = false` the
+    *     stream runs data batches only, `processAllAvailable()` drains it,
+    *     and a pending timeout fires in the next data batch, not before;
     *   - a redelivery AFTER the window (archive replay) re-applies the
     *     transaction, by design.
     * `None` (default) keeps tombstones forever: exact at-least-once

@@ -343,7 +343,7 @@ class AggContractsSpec extends SparkSpec {
 
   test("agg_equidepth on an empty lineitem fails its row-count guard, " +
       "not on the null bounds") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-empty-li")
+    val dir = tempDir("graft-empty-li")
     Tables.scan(spark, sfDir, "lineitem").limit(0)
       .write.parquet(s"$dir/lineitem.parquet")
     val e = intercept[IllegalArgumentException] {

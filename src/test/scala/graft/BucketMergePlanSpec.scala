@@ -11,7 +11,6 @@ import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationComm
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
@@ -89,7 +88,7 @@ class BucketMergePlanSpec extends SparkSpec {
       s"(AQE ${if (aqe) "on" else "off"})") {
       import spark.implicits._
       withAqe(aqe) {
-        val dir = Files.createTempDirectory("graft_sinkplan").toString + "/t"
+        val dir = tempDir("graft_sinkplan").toString + "/t"
         def batch(lsn: Long) =
           (1L to 40L).map(k => (k, lsn + k, s"v$k")).toDF("k", "lsn", "v")
         Sinks.upsertBatch(batch(0L), 0L, dir, "k", "lsn", 4)
@@ -109,7 +108,7 @@ class BucketMergePlanSpec extends SparkSpec {
     test(s"bucketed join view merge: one exchange above each side's " +
       s"stored-state scan (AQE ${if (aqe) "on" else "off"})") {
       withAqe(aqe) {
-        val dir = Files.createTempDirectory("graft_bjvplan").toString + "/v"
+        val dir = tempDir("graft_bjvplan").toString + "/v"
         val fe = IncrementalJoinView.factEvents(CdcOps.parsedOrders(spark, sfDir))
         val de = IncrementalJoinView.dimEvents(
           CdcOps.parsedCustomerDim(spark, sfDir))

@@ -64,6 +64,23 @@ class CdcOpsSpec extends SparkSpec {
     assert(expected.exceptAll(fromShuffled).count() == 0)
   }
 
+  test("compaction: on a position tie the delete wins in either arrival order") {
+    import spark.implicits._
+    // one key updated and deleted at the same position: the delete
+    // rewrite must win whichever row arrives first, as in the streaming
+    // form's (lsn, deleted) rank
+    val update = (1L, 50L, "false", false, "X")
+    val delete = (1L, 50L, "true", false, "O")
+    for (rows <- Seq(Seq(update, delete), Seq(delete, update))) {
+      val log = rows.toDF("o_orderkey", "_lsn", "__deleted", "_tombstone",
+        "o_orderstatus").coalesce(1)
+      val out = CdcOps.compactLatest(log,
+        keys = Seq("o_orderkey"), ordering = Seq(col("_lsn").desc))
+      assert(out.count() == 0,
+        s"arrival order ${rows.map(_._3).mkString(", ")} kept the key")
+    }
+  }
+
   test("decimal-as-string mode survives round trip exactly") {
     // decimal.handling.mode=string (postgresql-connector.yaml:48): price
     // strings parse back to the exact source decimal

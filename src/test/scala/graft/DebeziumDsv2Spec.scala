@@ -85,7 +85,7 @@ class DebeziumDsv2Spec extends SparkSpec {
   }
 
   test("corrupt lines become _corrupt rows, never crashes or silent drops") {
-    val dir = Files.createTempDirectory("graft-dbz-corrupt")
+    val dir = tempDir("graft-dbz-corrupt")
     val lines = Seq(
       """{"topic":"t.s.orders","key":"{\"o_orderkey\":1}","value":"{\"op\":\"c\",\"ts_ms\":5,\"source\":{\"lsn\":10,\"table\":\"orders\"},\"after\":{\"o_orderkey\":1}}"}""",
       """{"topic":"t.s.orders","key":"{\"o_orderkey\":2}"}""", // tombstone
@@ -107,7 +107,7 @@ class DebeziumDsv2Spec extends SparkSpec {
   }
 
   test("streaming: tailing the archive ingests each new file exactly once") {
-    val dir = Files.createTempDirectory("graft-dbz-tail")
+    val dir = tempDir("graft-dbz-tail")
     def rec(k: Long): String =
       s"""{"topic":"t.s.orders","key":"{\\"o_orderkey\\":$k}","value":"{\\"op\\":\\"c\\",\\"ts_ms\\":$k,\\"source\\":{\\"lsn\\":$k,\\"table\\":\\"orders\\"},\\"after\\":{\\"o_orderkey\\":$k}}"}"""
     def writeFile(name: String, ks: Seq[Long]): Unit =
@@ -138,7 +138,7 @@ class DebeziumDsv2Spec extends SparkSpec {
   }
 
   test("streaming: maxFilesPerTrigger drains a backlog in bounded batches") {
-    val dir = Files.createTempDirectory("graft-dbz-rate")
+    val dir = tempDir("graft-dbz-rate")
     def rec(k: Long): String =
       s"""{"topic":"t.s.orders","key":"{\\"o_orderkey\\":$k}","value":"{\\"op\\":\\"c\\",\\"ts_ms\\":$k,\\"source\\":{\\"lsn\\":$k,\\"table\\":\\"orders\\"},\\"after\\":{\\"o_orderkey\\":$k}}"}"""
     (1 to 3).foreach(i => Files.write(
@@ -160,7 +160,7 @@ class DebeziumDsv2Spec extends SparkSpec {
 
   test("streaming: archive tail composes with the stateful compaction operator") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-dbz-e2e")
+    val dir = tempDir("graft-dbz-e2e")
     def rec(k: Long, lsn: Long, op: String): String = {
       val after = if (op == "d") "null"
         else s"""{\\"o_orderkey\\":$k,\\"o_orderstatus\\":\\"s$lsn\\"}"""
@@ -208,7 +208,7 @@ class DebeziumDsv2Spec extends SparkSpec {
   }
 
   test("streaming: compacted offset stays bounded as the archive grows") {
-    val dir = Files.createTempDirectory("graft-dbz-offsets")
+    val dir = tempDir("graft-dbz-offsets")
     def rec(k: Long): String =
       s"""{"topic":"t.s.orders","key":"{\\"o_orderkey\\":$k}","value":"{\\"op\\":\\"c\\",\\"ts_ms\\":$k,\\"source\\":{\\"lsn\\":$k,\\"table\\":\\"orders\\"},\\"after\\":{\\"o_orderkey\\":$k}}"}"""
     // drive the MicroBatchStream directly: batch-by-batch offset evolution
@@ -250,12 +250,6 @@ class DebeziumDsv2Spec extends SparkSpec {
     val rt = stream.deserializeOffset(off.json())
     val next = stream.latestOffset(rt, stream.getDefaultReadLimit)
     assert(stream.planInputPartitions(rt, next).isEmpty)
-    // legacy file-set offsets (pre-compaction checkpoints) still decode,
-    // and their files count as seen
-    val legacy = stream.deserializeOffset(
-      s"""["${dir.toString}/part-001-1.json"]""")
-    assert(legacy.asInstanceOf[graft.sources.DebeziumCompactedOffset]
-      .isSeen(s"${dir.toString}/part-001-1.json", 123L))
   }
 
   test("streaming: compacted offset property — random arrivals, caps, and " +
@@ -266,7 +260,7 @@ class DebeziumDsv2Spec extends SparkSpec {
     // (deserialize(json) standing in for a restart). Invariant: when the
     // backlog drains, every written file was planned exactly once.
     val rnd = new scala.util.Random(42)
-    val dir = Files.createTempDirectory("graft-dbz-prop")
+    val dir = tempDir("graft-dbz-prop")
     val scan = new graft.sources.DebeziumScanBuilder(
       dir.toString, 128L * 1024 * 1024, -1, 5000L)
       .build().asInstanceOf[graft.sources.DebeziumScan]
@@ -310,7 +304,7 @@ class DebeziumDsv2Spec extends SparkSpec {
   }
 
   test("streaming: a committed file vanishing from the archive fails loudly") {
-    val dir = Files.createTempDirectory("graft-dbz-vanish")
+    val dir = tempDir("graft-dbz-vanish")
     val p = Paths.get(dir.toString, "part-001.json")
     Files.write(p,
       """{"topic":"t","key":"k","value":null}"""

@@ -76,7 +76,7 @@ class EndToEndStreamSpec extends SparkSpec {
       Debezium.parseEnvelope(raw, Debezium.ordersRowSchema))
       .filter(!col("_tombstone"))
       .select("o_orderkey", "_lsn", "o_orderstatus", "__deleted")
-    val dir = java.nio.file.Files.createTempDirectory("graft_e2esink")
+    val dir = tempDir("graft_e2esink")
       .toString + "/orders"
     val q = graft.streaming.Sinks.upsertByKey(
       unwrapped, dir, "o_orderkey", "_lsn", nBuckets = 8).start()
@@ -101,7 +101,7 @@ class EndToEndStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val in = MemoryStream[graft.streaming.KeyedChange]
-    val dir = java.nio.file.Files.createTempDirectory("graft_e2eonce")
+    val dir = tempDir("graft_e2eonce")
       .toString + "/state"
     val q = graft.streaming.Sinks.upsertByKey(
       StatefulCompaction.compact(in.toDS()).toDF(), dir, "key", "lsn",

@@ -89,6 +89,16 @@ class InfraSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("the DuckDB oracle fragments live in OracleSql alone: no other " +
+      "operators file restates the dot, dyadic-code, shingle or word-split " +
+      "text") {
+    val offenders = srcHits("src/main/scala/graft/operators",
+      "list_transform(list_zip(", "2654435761 % 4096",
+      "unnest(CASE WHEN len(w) >=", "regexp_split_to_array(lower(trim(text))")
+      .filterNot(_.startsWith("OracleSql.scala:"))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("SparkEntry.queries hands out each group's own function, unwrapped") {
     Seq("cdc_ivm_view" -> operators.CdcQueries,
         "dedup_exact" -> operators.DedupQueries,

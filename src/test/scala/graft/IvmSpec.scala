@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class IvmSpec extends SparkSpec {
 
   private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("ivm-spec-").toString
+    tempDir("ivm-spec-").toString
 
   private def parsed: DataFrame = CdcOps.parsedOrders(spark, sfDir)
 
@@ -583,7 +583,7 @@ class IvmSpec extends SparkSpec {
     import spark.implicits._
     val src = tmpDir()
     applyBucketedPhases(src, nBuckets = 8)
-    val dst = src + "-wide"
+    val dst = tmpDir() + "/wide"
     // a crashed earlier attempt's staging leftovers are rebuilt, not trusted
     new java.io.File(dst + ".inprogress/A/_bucket=0").mkdirs()
     BucketedJoinView.rebucket(spark, src, dst, newNBuckets = 16)
@@ -830,7 +830,7 @@ class IvmSpec extends SparkSpec {
           batches(0)._1, batches(0)._2, 0L, mig, 4)
         BucketedJoinView.applyBatchEvents(
           batches(1)._1, batches(1)._2, 1L, mig, 4)
-        val mig2 = mig + "-resharded"
+        val mig2 = tmpDir() + "/resharded"
         BucketedJoinView.rebucket(spark, mig, mig2, 7)
         BucketedJoinView.applyBatchEvents(
           batches(2)._1, batches(2)._2, 2L, mig2, 7)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class LayoutSpec extends SparkSpec {
 
   test("partitioned layout prunes partitions at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString + "/ev"
+    val dir = tempDir("graft_part").toString + "/ev"
     Layout.writePartitioned(
       Tables.scan(spark, sfDir, "events"), dir, Seq("event_type"))
     val pruned = spark.read.parquet(dir)
@@ -58,7 +58,7 @@ class LayoutSpec extends SparkSpec {
 
   test("Z-ordered layout clusters a two-dimensional box into fewer files " +
       "than a single-column sort") {
-    val base = java.nio.file.Files.createTempDirectory("graft_z").toString
+    val base = tempDir("graft_z").toString
     val orders = Tables.scan(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"),
         dayofyear(col("o_orderdate")).as("doy"))

@@ -263,8 +263,7 @@ class MediaPipelineSpec extends SparkSpec {
     import graft.multimodal.MediaShardStore
     val media = graft.sources.Tables.scan(spark, sfDir, "documents")
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_shardstore").toString
+    val path = tempDir("graft_shardstore").toString
     MediaShardStore.save(media, path, budgetBytes = 8192L)
     // manifest ⊨ packing contract: offsets tile each shard, fill ≤ budget
     val man = spark.read.parquet(s"$path/manifest").collect()
@@ -328,8 +327,7 @@ class MediaPipelineSpec extends SparkSpec {
         "is not first-ness)")
     assert(man(13L) == (3L, 0L), "90+5 > 64: doc 13 opens the next shard")
     // round trip with the empty payload present
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_shardstore_edge").toString
+    val path = tempDir("graft_shardstore_edge").toString
     MediaShardStore.save(media, path, budgetBytes = 64L)
     val got = MediaShardStore.fetch(spark, path, rows.map(_._1))
       .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap

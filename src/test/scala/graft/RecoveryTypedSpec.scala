@@ -7,7 +7,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import java.nio.file.Files
 
 final case class OrdersRow(
     o_orderkey: Long, o_custkey: Long, o_orderstatus: String,
@@ -21,8 +20,8 @@ class RecoveryTypedSpec extends SparkSpec {
   test("stateful compaction state survives a query restart via checkpoint") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
-    val out = Files.createTempDirectory("graft_recov").toString + "/out"
+    val ckpt = tempDir("graft_ckpt").toString
+    val out = tempDir("graft_recov").toString + "/out"
     val in = MemoryStream[KeyedChange]
     // memory sink cannot recover from a checkpoint; foreachBatch can —
     // append each micro-batch's emitted states to parquet

@@ -6,7 +6,6 @@ import graft.streaming.{Sinks, StreamJoins}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Sink idempotence, streaming joins, and the CdcPipeline builder API. */
@@ -17,7 +16,7 @@ class SinksAndJoinsSpec extends SparkSpec {
   test("upsertByKey sink: replayed batches do not change sink state") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_sink").toString + "/t"
+    val dir = tempDir("graft_sink").toString + "/t"
     val in = MemoryStream[(Long, Long, String)]
     val q = Sinks.upsertByKey(
       in.toDF().toDF("k", "lsn", "v"), dir, "k", "lsn")
@@ -45,7 +44,7 @@ class SinksAndJoinsSpec extends SparkSpec {
     val kA = buckets.keys.min
     val kB = buckets.keys.filter(buckets(_) != buckets(kA)).min
     val (bA, bB) = (buckets(kA), buckets(kB))
-    val dir = Files.createTempDirectory("graft_bsink").toString + "/t"
+    val dir = tempDir("graft_bsink").toString + "/t"
     def bucketFiles(b: Int): Set[String] = {
       val p = new org.apache.hadoop.fs.Path(s"$dir/_bucket=$b")
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -80,7 +79,7 @@ class SinksAndJoinsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val nBuckets = 4
-    val dir = Files.createTempDirectory("graft_swsink").toString + "/t"
+    val dir = tempDir("graft_swsink").toString + "/t"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val in = MemoryStream[(Long, Long, String)]
@@ -118,7 +117,7 @@ class SinksAndJoinsSpec extends SparkSpec {
   test("upsertBatch: on an ordering tie the batch row beats the stored row " +
     "(a delete rewritten at its row's position), and its replay is a no-op") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_tiesink").toString + "/t"
+    val dir = tempDir("graft_tiesink").toString + "/t"
     val keys = 1L to 20L
     def state() = Sinks.readState(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
@@ -135,7 +134,7 @@ class SinksAndJoinsSpec extends SparkSpec {
     "(bucket in trash, missing from live) without losing state") {
     import spark.implicits._
     val nBuckets = 4
-    val dir = Files.createTempDirectory("graft_crsink").toString + "/t"
+    val dir = tempDir("graft_crsink").toString + "/t"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     // batch 0: seed two keys in different buckets
@@ -175,7 +174,7 @@ class SinksAndJoinsSpec extends SparkSpec {
 
   test("upsert sink: mismatched bucket geometry is rejected, and rebucket migrates it") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_rbsink").toString
+    val base = tempDir("graft_rbsink").toString
     val dir = base + "/t"
     def batch(rows: (Long, Long, String)*) =
       rows.toDF("k", "lsn", "v")
@@ -233,7 +232,7 @@ class SinksAndJoinsSpec extends SparkSpec {
     // an explicit file: URI — a java.io.File existence probe would always
     // say "missing", silently dropping prior state on every batch
     val dir = "file://" +
-      Files.createTempDirectory("graft_fsink").toString + "/t"
+      tempDir("graft_fsink").toString + "/t"
     val in = MemoryStream[(Long, Long, String)]
     val q = Sinks.upsertByKey(
       in.toDF().toDF("k", "lsn", "v"), dir, "k", "lsn")

@@ -46,7 +46,7 @@ class SnapshotCommitSpec extends SparkSpec {
       BucketedJoinView.readView(spark, _), _ + "/W"))
 
   private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("snapshot-commit-spec-").toString
+    tempDir("snapshot-commit-spec-").toString
 
   private def snapshot(s: Store, path: String): Set[Row] =
     s.view(path).get.collect().toSet

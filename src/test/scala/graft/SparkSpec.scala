@@ -12,6 +12,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** A fresh temp directory, deleted when the JVM exits (the exit
+    * deletion [[TmpPaths]] registers its scratch with). */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    org.apache.spark.sql.graftshim.Shim.deleteOnExit(d.toFile)
+    d
+  }
+
   override def afterAll(): Unit = {
     // shared across suites in one JVM; don't stop between suites
     super.afterAll()
